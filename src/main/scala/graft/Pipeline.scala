@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.{CompletableFuture, CompletionException, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.{Failure, Success, Try}
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sources.Sinks
@@ -7,10 +13,27 @@ import graft.sources.Sinks
 /** The engine's top-level entry point — the analog of the reference's
   * `python main.py --load_type {full|incremental}` run
   * (`wsm/etl_pipeline/main.py:51-115`, SURVEY §3.1): one call computes
-  * the twelve named analytics reports, loads them as parquet, optionally
-  * writes the DQ fan-out beside them, then appends the one-row run
-  * summary (S6) — so a user of the reference can replace their ETL
-  * invocation with `Pipeline.run(spark, dataDir, outDir)`.
+  * the twelve named analytics reports, loads them as parquet (or into
+  * warehouse tables for a `jdbc:` outDir), optionally writes the DQ
+  * fan-out beside them, then appends the one-row run summary (S6) — so a
+  * user of the reference can replace their ETL invocation with
+  * `Pipeline.run(spark, dataDir, outDir)`.
+  *
+  * Invariants of [[Pipeline.run]]:
+  *  - reports run concurrently: the DQ fan-out and every report that
+  *    reads only the inputs are submitted together to one pool of the
+  *    session's `defaultParallelism` threads, so their short Spark jobs
+  *    share the cores instead of queueing one after another;
+  *  - a report in [[Pipeline.DERIVED_FROM_TRENDS]] starts only after its
+  *    trend source has been written in the same run, and aggregates that
+  *    written output;
+  *  - each report's row count is counted on its own write
+  *    ([[sources.Sinks.counted]]); no output is read back to count it;
+  *  - failure contract: if any report or the DQ fan-out fails, the run
+  *    still waits for every in-flight report, then throws one exception
+  *    naming every output that was not written, appends no summary row,
+  *    and leaves no pool thread alive. Reports that did succeed stay
+  *    written: each report write is atomic, the run is not.
   *
   * Differences from the reference, by design:
   *  - reports are LAZY DataFrame DAGs materialized by their writes (the
@@ -67,9 +90,9 @@ object Pipeline {
     "monthly_trends" -> (("month", "1 month")))
 
   /** Reports that are pure aggregations of a trend report written earlier
-    * in the SAME run: derived from the just-written parquet (calendar-
+    * in the SAME run: derived from the just-written output (calendar-
     * bounded — broadcast-sized at any fact scale) instead of re-scanning
-    * the fact. [[REPORTS]] lists sources before their derivations. */
+    * the fact. Each waits for its source's write ([[run]]). */
   val DERIVED_FROM_TRENDS
       : Map[String, (String, org.apache.spark.sql.DataFrame => DataFrame)] = Map(
     "peak_day_of_week" -> (("daily_trends", ops.Movement.peakFromDaily _)),
@@ -78,11 +101,12 @@ object Pipeline {
   /** Run the full pipeline; returns rows written per report (empty map =
     * incremental short-circuit fired). Each report lands at
     * `<outDir>/<name>`; the run summary appends to
-    * `<outDir>/analytics_daily_summary` (S6/S7). Incremental caller
-    * contract: `incrementalSince` is the checkpoint the PREVIOUS run
-    * covered (its reports hold exactly the events ≤ that timestamp) and
-    * the event ledger is append-only — then the trend delta path is
-    * exact (see [[ops.Movement.trendDelta]]). */
+    * `<outDir>/analytics_daily_summary` (S6/S7). Concurrency, counting
+    * and the failure contract are the object's invariants (above).
+    * Incremental caller contract: `incrementalSince` is the checkpoint
+    * the PREVIOUS run covered (its reports hold exactly the events ≤
+    * that timestamp) and the event ledger is append-only — then the
+    * trend delta path is exact (see [[ops.Movement.trendDelta]]). */
   def run(
       spark: SparkSession,
       dataDir: String,
@@ -99,55 +123,92 @@ object Pipeline {
     // Postgres). The trend delta path stays parquet-only (it re-reads its
     // own previous output; a warehouse-side merge is the warehouse's job).
     val jdbcOut = outDir.startsWith("jdbc:")
-    lazy val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     def written(name: String): DataFrame =
       if (jdbcOut) Tables(spark, outDir, name)
       else spark.read.parquet(s"$outDir/$name")
-    def exists(name: String): Boolean =
-      !jdbcOut && fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/$name"))
-
-    if (dqFanout) {
-      val tagged = ops.Quality.tagged(spark, dataDir)
-      if (jdbcOut) Sinks.writeJdbc(tagged, outDir, "dq_events")
-      else Sinks.writeDqFanout(tagged, s"$outDir/dq_events")
+    // the trend reports that merge into their previous output, decided
+    // before this run writes anything
+    val deltas: Set[String] = incrementalSince match {
+      case Some(_) if !jdbcOut =>
+        val fs = new Path(outDir).getFileSystem(
+          spark.sparkContext.hadoopConfiguration)
+        TREND_REPORTS.keySet.filter(name => fs.exists(new Path(s"$outDir/$name")))
+      case _ => Set.empty
     }
 
-    var deltasTaken = 0
-    val counts = REPORTS.map { case (name, fn) =>
-      val deltaSpec = incrementalSince.flatMap(since =>
-        TREND_REPORTS.get(name).filter(_ => exists(name)).map((since, _)))
-      val derivedSrc = DERIVED_FROM_TRENDS.get(name).filter { case (src, _) =>
-        jdbcOut || exists(src)
+    /** Computes and writes report `name`; returns the rows written. */
+    def report(name: String, fn: (SparkSession, String) => DataFrame): Long = {
+      val df = (DERIVED_FROM_TRENDS.get(name), incrementalSince) match {
+        case (Some((src, derive)), _) => derive(written(src))
+        case (None, Some(since)) if deltas(name) =>
+          // row-subset path: stored report ⊎ post-checkpoint buckets
+          val (unit, step) = TREND_REPORTS(name)
+          ops.Movement.trendDelta(spark, dataDir, unit, step, since,
+            written(name))
+        case _ => fn(spark, dataDir)
       }
-      (deltaSpec, derivedSrc) match {
-        case (Some((since, (unit, step))), _) =>
-          // row-subset path: stored report ⊎ post-checkpoint buckets;
-          // staging swap because the merge reads the path it replaces
-          Sinks.overwriteInPlace(
-            ops.Movement.trendDelta(spark, dataDir, unit, step, since,
-              written(name)), s"$outDir/$name")
-          deltasTaken += 1
-        case (None, Some((src, derive))) =>
-          // aggregate the trend report this run just wrote — no fact scan
-          val df = derive(written(src))
-          if (jdbcOut) Sinks.writeJdbc(df, outDir, name)
-          else Sinks.writeParquet(df, s"$outDir/$name")
-        case _ =>
-          val df = fn(spark, dataDir)
-          if (jdbcOut) Sinks.writeJdbc(df, outDir, name)
-          else Sinks.writeParquet(df, s"$outDir/$name")
+      val (counted, rows) = Sinks.counted(df)
+      // the delta path reads the path it replaces: staging swap
+      if (deltas(name)) Sinks.overwriteInPlace(counted, s"$outDir/$name")
+      else if (jdbcOut) Sinks.writeJdbc(counted, outDir, name)
+      else Sinks.writeParquet(counted, s"$outDir/$name")
+      rows.value
+    }
+
+    val outputs: Seq[(String, () => Long)] =
+      Option.when(dqFanout)("dq_events" -> { () =>
+        val tagged = ops.Quality.tagged(spark, dataDir)
+        if (jdbcOut) Sinks.writeJdbc(tagged, outDir, "dq_events")
+        else Sinks.writeDqFanout(tagged, s"$outDir/dq_events")
+        0L // not a report: no count
+      }).toSeq ++ REPORTS.map { case (name, fn) =>
+        name -> (() => report(name, fn)) }
+    val pool = Executors.newFixedThreadPool(
+      math.min(outputs.size, spark.sparkContext.defaultParallelism),
+      poolThreads)
+    val outcomes = try {
+      // REPORTS lists every trend source before the reports derived from it
+      val started = outputs.foldLeft(Map.empty[String, CompletableFuture[Long]]) {
+        case (sofar, (name, work)) =>
+          sofar + (name -> DERIVED_FROM_TRENDS.get(name).fold(
+            CompletableFuture.supplyAsync(() => work(), pool)) {
+            case (src, _) =>
+              sofar(src).thenApplyAsync((_: Long) => work(), pool)
+          })
       }
-      // count what actually landed (reading the written output back is the
-      // honest number and avoids a second computation of the report DAG)
-      name -> written(name).count()
+      // every future completes — a task's Throwable completes it
+      // exceptionally, a derived report whose source failed completes
+      // without running — and join ignores interrupts: this waits for all
+      outputs.map { case (name, _) => name -> Try(started(name).join()) }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+
+    val failed = outcomes.collect { case (name, Failure(e)) =>
+      name -> (e match {
+        case c: CompletionException if c.getCause != null => c.getCause
+        case _ => e
+      })
+    }
+    if (failed.nonEmpty) {
+      val causes = failed.map(_._2).distinct
+      val err = new RuntimeException(
+        s"Pipeline.run: ${failed.size} of ${outputs.size} outputs not " +
+          s"written (${failed.map(_._1).mkString(", ")}); no run summary " +
+          "appended", causes.head)
+      causes.tail.foreach(err.addSuppressed)
+      throw err
+    }
+    val counts = outcomes.collect {
+      case (name, Success(rows)) if name != "dq_events" => name -> rows
     }.toMap
 
     Sinks.appendSummary(
       Sinks.liftSummary(spark, Seq(
         // the label claims exactly what happened — see class doc
         "load_type" -> incrementalSince.fold("full")(_ =>
-          if (deltasTaken > 0) "incremental_delta"
+          if (deltas.nonEmpty) "incremental_delta"
           else "incremental_recompute"),
         "n_reports" -> counts.size.toLong,
         "total_rows" -> counts.values.sum)),
@@ -155,6 +216,17 @@ object Pipeline {
       // analytics_daily_summary; parquet: the usual subdirectory
       if (jdbcOut) outDir else s"$outDir/analytics_daily_summary")
     counts
+  }
+
+  /** Daemon threads named `graft-pipeline-<n>`: a run's pool can never
+    * keep the JVM alive, and its threads are recognisable by name. */
+  private val poolThreads: ThreadFactory = {
+    val n = new AtomicInteger
+    (r: Runnable) => {
+      val t = new Thread(r, s"graft-pipeline-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
   }
 
   /** S9: render the reference's HTML report document from the WRITTEN

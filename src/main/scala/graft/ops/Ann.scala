@@ -2132,20 +2132,10 @@ object Ann {
   def pqRecall(spark: SparkSession, dir: String): DataFrame =
     recallAgainstBrute(spark, dir, pqTopK(spark, dir))
 
-  /** [[pqRecall]] with the round-13 seeded codebook — the baseline the
-    * trained recall is measured against (SCALING.md); not registered. */
-  private[graft] def pqRecallSeeded(spark: SparkSession,
-      dir: String): DataFrame =
-    recallAgainstBrute(spark, dir, pqTopK(spark, dir, trained = false))
-
   /** q164: recall@k of the q158 IVF+PQ composed serve (coarse pruning ×
     * ADC screen — the two approximation legs evaluated together). */
   def ivfPqRecall(spark: SparkSession, dir: String): DataFrame =
     recallAgainstBrute(spark, dir, ivfPqTopK(spark, dir))
-
-  private[graft] def ivfPqRecallSeeded(spark: SparkSession,
-      dir: String): DataFrame =
-    recallAgainstBrute(spark, dir, ivfPqTopK(spark, dir, trained = false))
 
   private def quantRecallOracle(approxSql: String): String =
     s"""WITH bf AS ($bruteForceOracle),
@@ -2369,21 +2359,19 @@ object Ann {
         dotDec("c_sub", "c_sub").as("c_nrm"))
   }
 
-  /** Per-subspace codebook for `dir`. `trained = true` (the serve
-    * default, round-14) runs [[PQ_ITERS]] per-subspace Lloyd rounds —
-    * [[ivfKmeans]]'s machinery applied to each dim/M slice — from the
-    * [[PQ_K]] seed subvectors (`vec_id ∈ [NQUERIES, NQUERIES+PQ_K)`,
-    * the IVF seed convention; code id = seed vec_id survives training).
-    * Each round's M×K result is collected (tiny, the [[trainedCache]]
-    * precedent) so lineage stays flat; the driver oracle replays the
-    * rounds in SQL, so the TRAINED construction keeps the exact
-    * cross-engine proof. `trained = false` is the round-13 seeded
-    * baseline, kept so the q163/q164 recall harnesses can measure what
-    * training buys. */
-  /** The training body over an arbitrary training corpus `src` — shared
-    * by the full-corpus [[pqCodebook]] and q166's base-only codebook
-    * (the T1 deploy shape: codebooks are a versioned artifact trained on
-    * the corpus-so-far; arriving batches are ENCODED, not retrained). */
+  /** Per-subspace codebook rows trained on the corpus `src`: [[PQ_ITERS]]
+    * per-subspace Lloyd rounds — [[ivfKmeans]]'s machinery applied to
+    * each dim/M slice — from the `k` seed subvectors
+    * (`vec_id ∈ [NQUERIES, NQUERIES+k)`, the IVF seed convention; code
+    * id = seed vec_id survives training). Each round's M×K result is
+    * collected (tiny, the [[trainedCache]] precedent) so lineage stays
+    * flat; the driver oracle replays the rounds in SQL, so the trained
+    * construction keeps the exact cross-engine proof. `trained = false`
+    * returns the untrained seeds, the baseline [[pqDistortion]] measures
+    * training against. Shared by the full-corpus [[pqCodebook]] and
+    * q166's base-only codebook (codebooks are a versioned artifact
+    * trained on the corpus-so-far; arriving batches are ENCODED, not
+    * retrained). */
   private def pqTrainRows(spark: SparkSession, src: DataFrame,
       dim: Int, trained: Boolean,
       k: Int = PQ_K): Array[org.apache.spark.sql.Row] = {
@@ -2516,13 +2504,13 @@ object Ann {
   }
 
   def pqTopK(spark: SparkSession, dir: String,
-      dim: Int = EMBED_DIM, trained: Boolean = true,
-      k: Int = PQ_K, cand: Int = SQ_CAND): DataFrame = {
+      dim: Int = EMBED_DIM, k: Int = PQ_K,
+      cand: Int = SQ_CAND): DataFrame = {
     import spark.implicits._
     require(dim % PQ_M == 0, s"dim $dim must split into $PQ_M subspaces")
     val base = graft.Caches.track(s"ann.pq_base:$dir",
       withNorm(spark, dir))
-    val cb = pqCodebook(spark, dir, dim, trained, k)
+    val cb = pqCodebook(spark, dir, dim, k = k)
     val codes = pqCodes(base, cb, dim)
     val lut = pqLut(base, cb, dim)
     // ADC: sum of M lookups per (query, candidate) — decimal, order-free
@@ -2545,7 +2533,7 @@ object Ann {
   private[graft] def pqRecallGeom(spark: SparkSession, dir: String,
       k: Int, cand: Int): DataFrame =
     recallAgainstBrute(spark, dir,
-      pqTopK(spark, dir, EMBED_DIM, trained = true, k = k, cand = cand))
+      pqTopK(spark, dir, EMBED_DIM, k = k, cand = cand))
 
   /** One per-subspace Lloyd round as CTEs (`pqcb$n` → `pqcb${n+1}`) —
     * [[kmeansRoundSql]] one level down: the argmin partitions by
@@ -2691,7 +2679,7 @@ object Ann {
     * and the [[IVF_NCENTROIDS]] coarse seeds are the same id range —
     * deterministic and replayed verbatim by the oracle. */
   def ivfPqTopK(spark: SparkSession, dir: String,
-      dim: Int = EMBED_DIM, trained: Boolean = true,
+      dim: Int = EMBED_DIM,
       /** Serve-side trade knobs (round-16 verdict item 8): probe width,
         * codebook size, exact-rerank candidate depth. Defaults = the
         * registered q158/q164 fixture geometry (oracle-replayed); the
@@ -2727,7 +2715,7 @@ object Ann {
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id")
     // the q154 back half: ADC over the PRUNED candidates, exact rerank
-    val cb = pqCodebook(spark, dir, dim, trained, k)
+    val cb = pqCodebook(spark, dir, dim, k = k)
     val codes = pqCodes(base, cb, dim)
     val lut = pqLut(base, cb, dim)
     val adc = candidates.join(codes, "vec_id")
@@ -2748,7 +2736,7 @@ object Ann {
   private[graft] def ivfPqRecallGeom(spark: SparkSession, dir: String,
       nprobe: Int, cand: Int, k: Int = PQ_K): DataFrame =
     recallAgainstBrute(spark, dir,
-      ivfPqTopK(spark, dir, EMBED_DIM, trained = true,
+      ivfPqTopK(spark, dir, EMBED_DIM,
         nprobe = nprobe, k = k, cand = cand))
 
   private def ivfPqOracle(dim: Int): String = {

@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, current_timestamp, lit, pmod, struct, to_date, to_json, xxhash64}
+import org.apache.spark.sql.functions.{col, current_timestamp, lit, pmod, struct, to_date, to_json, udf, xxhash64}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
 
 /** Output surface — the reference's load stage re-expressed as Spark
   * writers (`wsm/etl_pipeline/load/data_loader.py:33-94` and the
@@ -27,6 +28,20 @@ object Sinks {
   /** S3: one parquet report per path. */
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
+
+  /** `df` with a row counter in front of whatever sink writes it: once
+    * the write returns, the accumulator holds the rows it wrote — the
+    * count is taken ON the write, with no read-back job. The counter is a
+    * pass-through filter at the plan's root, so it runs in the write's
+    * final (result) stage, whose per-partition updates Spark merges once
+    * (retried and speculative attempts included); it is merged before
+    * the action returns, so there is no metric to wait for. Count one
+    * write per returned frame. */
+  def counted(df: DataFrame): (DataFrame, LongAccumulator) = {
+    val rows = df.sparkSession.sparkContext.longAccumulator
+    val tick = udf { () => rows.add(1L); true }.asNondeterministic()
+    (df.filter(tick()), rows)
+  }
 
   /** S4: CSV with header — the reference's alternate report format. */
   def writeCsv(df: DataFrame, path: String): Unit =

@@ -3,8 +3,30 @@ package graft
 /** End-to-end pipeline run over the smallest testdata: all twelve
   * reference reports land with rows, the run summary appends once per
   * run, and the incremental short-circuit writes nothing — the §3.1
-  * lifecycle as one call. */
+  * lifecycle as one call. The concurrent run's own invariants are pinned
+  * too: counts taken on the write equal what landed, every written report
+  * equals its constructor's output, and a failed run waits, names the
+  * failures and appends no summary. */
 class PipelineSpec extends SparkSpec {
+  import scala.jdk.CollectionConverters._
+
+  private val src = "/root/testdata/sf0.001"
+
+  private def poolThreads(): Set[String] =
+    Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+      .filter(_.startsWith("graft-pipeline-")).toSet
+
+  /** A DataFrame's rows as a sorted multiset. */
+  private def rowBag(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toString).sorted
+
+  /** `run` on another thread, failing the test instead of hanging if it
+    * ever blocks. */
+  private def bounded[T](run: => T): T = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    Await.result(Future(run)(ExecutionContext.global), 10.minutes)
+  }
 
   test("full run writes all 12 reports + appends the run summary") {
     val out = java.nio.file.Files.createTempDirectory("graft-pipe").toString
@@ -134,4 +156,113 @@ class PipelineSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$out/analytics_daily_summary")))
   }
+
+  test("counts come from the write: each equals the read-back count, parquet and jdbc") {
+    val out = java.nio.file.Files.createTempDirectory("graft-pipe-counts").toString
+    val counts = bounded(Pipeline.run(spark, src, out))
+    assert(counts.keySet == Pipeline.REPORTS.map(_._1).toSet)
+    counts.foreach { case (name, n) =>
+      assert(spark.read.parquet(s"$out/$name").count() == n, name)
+    }
+    val summary = spark.read.parquet(s"$out/analytics_daily_summary")
+      .select("n_reports", "total_rows").head()
+    assert(summary.getLong(0) == 12L)
+    assert(summary.getLong(1) == counts.values.sum)
+    // the warehouse sink: the count must arrive through the JDBC writer
+    // too, and the bounded wait turns a metric that never arrives into a
+    // failure rather than a hung run
+    val url = "jdbc:derby:memory:graftcounts;create=true"
+    val jdbcCounts = bounded(Pipeline.run(spark, src, url))
+    assert(jdbcCounts == counts)
+    jdbcCounts.foreach { case (name, n) =>
+      assert(Tables(spark, url, name).count() == n, name)
+    }
+    val jdbcSummary = Tables(spark, url, "analytics_daily_summary")
+      .select("total_rows").collect().map(_.getLong(0)).toSeq
+    assert(jdbcSummary == Seq(jdbcCounts.values.sum))
+    assert(poolThreads().isEmpty, poolThreads())
+  }
+
+  test("every written report equals its constructor's output; peak_* waits for its source") {
+    import org.apache.spark.sql.functions.{lit, to_timestamp}
+    import spark.implicits._
+    // the output dir first holds a run over an older ledger, so a peak_*
+    // report that read its trend source before this run rewrote it would
+    // aggregate the stale calendar and differ from its constructor
+    val stale = fixtureDir(
+      "lineitem" -> Tables(spark, src, "lineitem"),
+      "events" -> Tables(spark, src, "events")
+        .filter($"ts" <= to_timestamp(lit("2024-01-15 00:00:00"))))
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.stallfs.impl", classOf[StallFs].getName)
+    val out = "stallfs://" +
+      java.nio.file.Files.createTempDirectory("graft-pipe-eq").toString
+    Pipeline.run(spark, stale, out)
+    val stalePeaks = Pipeline.DERIVED_FROM_TRENDS.keys.map(name =>
+      name -> rowBag(spark.read.parquet(s"$out/$name"))).toMap
+    // rewriting daily_trends now stalls until peak_month starts writing:
+    // every report ahead of peak_month in the pool's queue, including a
+    // peak_day_of_week that did not wait for its source, runs against
+    // the stale daily_trends
+    StallFs.arm()
+    Pipeline.run(spark, src, out)
+    Pipeline.REPORTS.foreach { case (name, fn) =>
+      val expected = fn(spark, src)
+      val got = spark.read.parquet(s"$out/$name")
+      assert(got.columns.toSeq == expected.columns.toSeq, name)
+      assert(rowBag(got) == rowBag(expected), s"$name != its constructor")
+    }
+    // the stale run really was different, so the check above could fail
+    stalePeaks.foreach { case (name, rows) =>
+      assert(rows != rowBag(spark.read.parquet(s"$out/$name")), name)
+    }
+  }
+
+  test("a failed run waits for in-flight reports, names the failures, appends no summary") {
+    // no events table: the trend, peak and io reports and the DQ fan-out
+    // fail; the lineitem reports are in flight when the first failure lands
+    val dir = fixtureDir("lineitem" -> Tables(spark, src, "lineitem"))
+    val out = java.nio.file.Files.createTempDirectory("graft-pipe-fail").toString
+    val err = intercept[RuntimeException](
+      bounded(Pipeline.run(spark, dir, out, dqFanout = true)))
+    val failed = Seq("dq_events", "daily_trends", "weekly_trends",
+      "monthly_trends", "peak_day_of_week", "peak_month",
+      "warehouse_io_summary")
+    val fine = Pipeline.REPORTS.map(_._1).filterNot(failed.contains)
+    failed.foreach(name => assert(err.getMessage.contains(name), err.getMessage))
+    fine.foreach(name => assert(!err.getMessage.contains(name), err.getMessage))
+    assert(err.getCause != null &&
+      err.getCause.getMessage.contains("events.parquet"), err.getCause)
+    // every report that could succeed had finished before the throw
+    fine.foreach(name => assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$out/$name/_SUCCESS")), name))
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$out/analytics_daily_summary")))
+    assert(poolThreads().isEmpty, poolThreads())
+  }
+}
+
+/** The local filesystem under the `stallfs:` scheme, with one stall: the
+  * delete an overwrite of a `daily_trends` directory starts with waits
+  * until a `peak_month` directory is created (or a minute passes) once
+  * [[StallFs.arm]] has been called. */
+class StallFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.permission.FsPermission
+  override def getScheme: String = "stallfs"
+  override def getUri: java.net.URI = java.net.URI.create("stallfs:///")
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    if (p.getName == "daily_trends")
+      StallFs.gate.await(1, java.util.concurrent.TimeUnit.MINUTES)
+    super.delete(p, recursive)
+  }
+  override def mkdirs(p: Path, perm: FsPermission): Boolean = {
+    if (p.toUri.getPath.contains("/peak_month/")) StallFs.gate.countDown()
+    super.mkdirs(p, perm)
+  }
+}
+
+object StallFs {
+  @volatile private[graft] var gate = new java.util.concurrent.CountDownLatch(0)
+  def arm(): Unit = gate = new java.util.concurrent.CountDownLatch(1)
 }

@@ -110,6 +110,21 @@ class SinksSpec extends SparkSpec {
       .map(_.getLong(0)).toSet == Set(1L, 2L))
   }
 
+  test("counted: a write's rows are counted on the write, across partitions") {
+    // a shuffle below the counter and several output partitions: the
+    // count still equals what landed, and an empty write counts zero
+    val df = spark.range(0, 1000, 1, 7).toDF("id")
+      .repartition(5, $"id").filter($"id" % 3 =!= 0)
+    val (counted, rows) = Sinks.counted(df)
+    val p = tmp() + "/counted"
+    Sinks.writeParquet(counted, p)
+    assert(rows.value == 666L)
+    assert(spark.read.parquet(p).count() == rows.value)
+    val (none, zero) = Sinks.counted(df.filter($"id" < 0))
+    Sinks.writeParquet(none, tmp() + "/empty")
+    assert(zero.value == 0L)
+  }
+
   test("append summary sink accumulates one row per run") {
     val p = tmp() + "/summary"
     Sinks.appendSummary(Sinks.liftSummary(spark,
