@@ -123,9 +123,6 @@ object Pipeline {
     // Postgres). The trend delta path stays parquet-only (it re-reads its
     // own previous output; a warehouse-side merge is the warehouse's job).
     val jdbcOut = outDir.startsWith("jdbc:")
-    def written(name: String): DataFrame =
-      if (jdbcOut) Tables(spark, outDir, name)
-      else spark.read.parquet(s"$outDir/$name")
     // the trend reports that merge into their previous output, decided
     // before this run writes anything
     val deltas: Set[String] = incrementalSince match {
@@ -139,12 +136,12 @@ object Pipeline {
     /** Computes and writes report `name`; returns the rows written. */
     def report(name: String, fn: (SparkSession, String) => DataFrame): Long = {
       val df = (DERIVED_FROM_TRENDS.get(name), incrementalSince) match {
-        case (Some((src, derive)), _) => derive(written(src))
+        case (Some((src, derive)), _) => derive(written(spark, outDir, src))
         case (None, Some(since)) if deltas(name) =>
           // row-subset path: stored report ⊎ post-checkpoint buckets
           val (unit, step) = TREND_REPORTS(name)
           ops.Movement.trendDelta(spark, dataDir, unit, step, since,
-            written(name))
+            written(spark, outDir, name))
         case _ => fn(spark, dataDir)
       }
       val (counted, rows) = Sinks.counted(df)
@@ -242,17 +239,14 @@ object Pipeline {
     * is a best-effort try/except). */
   def htmlReport(spark: SparkSession, outDir: String, runDate: String,
       path: Option[String] = None, withCharts: Boolean = true): String = {
-    def written(name: String): DataFrame =
-      if (outDir.startsWith("jdbc:")) Tables(spark, outDir, name)
-      else spark.read.parquet(s"$outDir/$name")
     def writtenOpt(name: String): Option[DataFrame] =
-      try Some(written(name)) catch {
+      try Some(written(spark, outDir, name)) catch {
         case _: org.apache.spark.sql.AnalysisException => None
       }
     Sinks.writeHtmlReport(
       charts =
         if (withCharts) sources.Charts.chartsFor(writtenOpt) else Nil,
-      sections = reportSections(written),
+      sections = reportSections(written(spark, outDir, _)),
       title = "Warehouse Report",
       runDate = runDate,
       path = path)
@@ -263,13 +257,16 @@ object Pipeline {
     * list and caps as [[htmlReport]], written by the stdlib PDF writer
     * ([[sources.Pdf]]). */
   def pdfReport(spark: SparkSession, outDir: String, runDate: String,
-      path: Option[String] = None): Array[Byte] = {
-    def written(name: String): DataFrame =
-      if (outDir.startsWith("jdbc:")) Tables(spark, outDir, name)
-      else spark.read.parquet(s"$outDir/$name")
-    sources.Pdf.writeReport(reportSections(written),
+      path: Option[String] = None): Array[Byte] =
+    sources.Pdf.writeReport(reportSections(written(spark, outDir, _)),
       title = "Warehouse Report", runDate = runDate, path = path)
-  }
+
+  /** Report `name` as a previous write left it: the warehouse table for a
+    * `jdbc:` outDir, else the parquet dir `<outDir>/<name>`. */
+  private def written(spark: SparkSession, outDir: String,
+      name: String): DataFrame =
+    if (outDir.startsWith("jdbc:")) Tables(spark, outDir, name)
+    else spark.read.parquet(s"$outDir/$name")
 
   /** The report document's five sections over the WRITTEN reports —
     * shared by the HTML and PDF renderings so the two documents agree

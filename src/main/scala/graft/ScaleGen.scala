@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-proof dataset writer (round-7 verdict item 1): synthesizes a
   * FIXTURE-SCHEMA dir (`lineitem events documents embeddings` +
   * `part supplier` dims) at any multiple of the sf0.1 shape using the
@@ -58,13 +56,7 @@ object ScaleGen {
     val wanted = if (args.length > 2)
       args(2).split(',').map(_.trim).filter(_.nonEmpty).toSet
     else Set.empty[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val nOrders = (200000 * mult).toLong

@@ -1,7 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** The harness mains' shared session contract ([[Bench]], [[HashCheck]]):
+/** The one session contract every main builds through ([[Verify]],
+  * [[Bench]], [[Explain]], [[ProfileQuery]], [[HashCheck]], [[ScaleGen]]):
   * master from `SPARK_GRAFT_MASTER` (default `local[SPARK_GRAFT_CPUS]`),
   * shuffle partitions = worker threads, UTC session time, no UI, graft
   * extensions registered — and for `local-cluster` masters the packaged

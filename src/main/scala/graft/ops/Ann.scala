@@ -499,56 +499,6 @@ object Ann {
     rerankPairs(delegatePairs.unionByName(chainPairs), threshold, dim)
   }
 
-  /** Scale-driver diagnostic for the SRP near-dup family (round-9
-    * curvature analysis): the CANDIDATE-PAIR volume of
-    * [[embeddingNearDupAuto]]'s bucket join — own bucket + every 1-bit
-    * probe — computed from bucket OCCUPANCY alone (an occupancy table is
-    * ≤ 2^nplanes rows; no dot products, no rerank), so the scaling
-    * artifact can report wall time AGAINST the operator's documented
-    * cost driver instead of against corpus rows. Same-bucket pairs count
-    * occ·(occ−1)/2; neighbor-bucket pairs occ(B)·occ(B^bit) once per
-    * unordered bucket pair — exactly the (a < b) join cardinality the
-    * rerank pays. The `capped_pairs` column replays the same arithmetic
-    * under [[embeddingNearDupCapped]]'s budget: delegate occupancy
-    * c = min(occ, occCap) in both the same-bucket and cross-bucket
-    * terms, plus max(occ−occCap, 0)·chainW chain edges — the pair
-    * volume the capped operator actually reranks. Returns one row:
-    * `(n, nplanes, n_buckets, max_occ, cand_pairs, capped_pairs)`. */
-  def candidateStats(spark: SparkSession, dir: String,
-      targetBucket: Long = 8,
-      occCap: Int = OCC_CAP, chainW: Int = CHAIN_W): DataFrame = {
-    import spark.implicits._
-    val n = embeddings(spark, dir).select("vec_id").count()
-    val np = planesFor(n, targetBucket)
-    val occ = embeddings(spark, dir)
-      .withColumn("bucket", bucketCol(EMBED_DIM, np))
-      .groupBy($"bucket").agg(count(lit(1)).as("occ"))
-      .withColumn("del", least($"occ", lit(occCap.toLong)))
-      .persist()
-    val (nBuckets, maxOcc, samePairs, cappedSame) = {
-      val r = occ.agg(count(lit(1)), max($"occ"),
-        sum(($"occ" * ($"occ" - 1) / 2).cast("long")),
-        sum(($"del" * ($"del" - 1) / 2 +
-          greatest($"occ" - occCap, lit(0L)) * chainW).cast("long"))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-    }
-    val crossRow = occ
-      .select($"bucket", $"occ", $"del", explode(array(
-        (0 until np).map(p => $"bucket".bitwiseXOR(lit(1L << p))): _*))
-        .as("nbr"))
-      .filter($"bucket" < $"nbr")
-      .join(occ.select($"bucket".as("nbr"), $"occ".as("occ_b"),
-        $"del".as("del_b")), Seq("nbr"))
-      .agg(coalesce(sum($"occ" * $"occ_b"), lit(0L)),
-        coalesce(sum($"del" * $"del_b"), lit(0L))).head()
-    val (crossPairs, cappedCross) = (crossRow.getLong(0), crossRow.getLong(1))
-    occ.unpersist()
-    Seq((n, np, nBuckets, maxOcc, samePairs + crossPairs,
-      cappedSame + cappedCross))
-      .toDF("n", "nplanes", "n_buckets", "max_occ", "cand_pairs",
-        "capped_pairs")
-  }
-
   /** [[embeddingNearDup]] with the plane count SIZED BY THE SIZING RULE:
     * `planesFor(n, targetBucket)` from the corpus row count, so bucket
     * occupancy — and with it the bucket join's O(occupancy²) rerank —
@@ -2361,8 +2311,8 @@ object Ann {
 
   /** Per-subspace codebook rows trained on the corpus `src`: [[PQ_ITERS]]
     * per-subspace Lloyd rounds — [[ivfKmeans]]'s machinery applied to
-    * each dim/M slice — from the `k` seed subvectors
-    * (`vec_id ∈ [NQUERIES, NQUERIES+k)`, the IVF seed convention; code
+    * each dim/M slice — from the [[PQ_K]] seed subvectors
+    * (`vec_id ∈ [NQUERIES, NQUERIES+PQ_K)`, the IVF seed convention; code
     * id = seed vec_id survives training). Each round's M×K result is
     * collected (tiny, the [[trainedCache]] precedent) so lineage stays
     * flat; the driver oracle replays the rounds in SQL, so the trained
@@ -2373,11 +2323,10 @@ object Ann {
     * trained on the corpus-so-far; arriving batches are ENCODED, not
     * retrained). */
   private def pqTrainRows(spark: SparkSession, src: DataFrame,
-      dim: Int, trained: Boolean,
-      k: Int = PQ_K): Array[org.apache.spark.sql.Row] = {
+      dim: Int, trained: Boolean): Array[org.apache.spark.sql.Row] = {
     import spark.implicits._
     val seeds = pqSubvectors(
-      src.filter($"vec_id" >= NQUERIES && $"vec_id" < NQUERIES + k),
+      src.filter($"vec_id" >= NQUERIES && $"vec_id" < NQUERIES + PQ_K),
       dim)
       .select($"m".cast("int"),
         $"vec_id".cast("long").as("code"),
@@ -2416,13 +2365,10 @@ object Ann {
   }
 
   private def pqCodebook(spark: SparkSession, dir: String,
-      dim: Int, trained: Boolean = true, k: Int = PQ_K): DataFrame = {
-    import spark.implicits._
-    val key = s"$dir#dim=$dim" +
-      (if (trained) s"#iters=$PQ_ITERS" else "") +
-      (if (k != PQ_K) s"#k=$k" else "")
+      dim: Int, trained: Boolean = true): DataFrame = {
+    val key = s"$dir#dim=$dim" + (if (trained) s"#iters=$PQ_ITERS" else "")
     val rows = pqCodebookCache.computeIfAbsent(key,
-      _ => pqTrainRows(spark, embeddings(spark, dir), dim, trained, k))
+      _ => pqTrainRows(spark, embeddings(spark, dir), dim, trained))
     spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), pqCbSchema)
   }
@@ -2504,13 +2450,12 @@ object Ann {
   }
 
   def pqTopK(spark: SparkSession, dir: String,
-      dim: Int = EMBED_DIM, k: Int = PQ_K,
-      cand: Int = SQ_CAND): DataFrame = {
+      dim: Int = EMBED_DIM): DataFrame = {
     import spark.implicits._
     require(dim % PQ_M == 0, s"dim $dim must split into $PQ_M subspaces")
     val base = graft.Caches.track(s"ann.pq_base:$dir",
       withNorm(spark, dir))
-    val cb = pqCodebook(spark, dir, dim, k = k)
+    val cb = pqCodebook(spark, dir, dim)
     val codes = pqCodes(base, cb, dim)
     val lut = pqLut(base, cb, dim)
     // ADC: sum of M lookups per (query, candidate) — decimal, order-free
@@ -2519,21 +2464,8 @@ object Ann {
       .groupBy($"query_id", $"vec_id")
       .agg(sum($"dd").cast(
         org.apache.spark.sql.types.DecimalType(38, 15)).as("adc_dec"))
-    pqRankTail(adc, base, cand)
+    pqRankTail(adc, base)
   }
-
-  /** [[pqRecall]] at an arbitrary (codebook size k, rerank candidate
-    * depth cand) geometry — the measurement hook behind SCALING.md's
-    * production-geometry trade table (round-14 verdict item 3: the
-    * M=8/K=16 fixture's 100× recall was 0.3375 and the "production
-    * raises K and SQ_CAND" claim was asserted, not measured). Not a
-    * registered query: the fixture geometry keeps the exact SQL-replay
-    * oracle tractable; this hook exists so the production claim carries
-    * a NUMBER. */
-  private[graft] def pqRecallGeom(spark: SparkSession, dir: String,
-      k: Int, cand: Int): DataFrame =
-    recallAgainstBrute(spark, dir,
-      pqTopK(spark, dir, EMBED_DIM, k = k, cand = cand))
 
   /** One per-subspace Lloyd round as CTEs (`pqcb$n` → `pqcb${n+1}`) —
     * [[kmeansRoundSql]] one level down: the argmin partitions by
@@ -2679,19 +2611,10 @@ object Ann {
     * and the [[IVF_NCENTROIDS]] coarse seeds are the same id range —
     * deterministic and replayed verbatim by the oracle. */
   def ivfPqTopK(spark: SparkSession, dir: String,
-      dim: Int = EMBED_DIM,
-      /** Serve-side trade knobs (round-16 verdict item 8): probe width,
-        * codebook size, exact-rerank candidate depth. Defaults = the
-        * registered q158/q164 fixture geometry (oracle-replayed); the
-        * [[ivfPqRecallGeom]] sweep varies them for the SCALING.md
-        * serve-side trade table. */
-      nprobe: Int = IVF_NPROBE, k: Int = PQ_K,
-      cand: Int = SQ_CAND): DataFrame = {
+      dim: Int = EMBED_DIM): DataFrame = {
     import spark.implicits._
     import graft.functions.DotProduct
     require(dim % PQ_M == 0, s"dim $dim must split into $PQ_M subspaces")
-    require(nprobe >= 1 && nprobe <= IVF_NCENTROIDS,
-      s"nprobe $nprobe out of [1, $IVF_NCENTROIDS]")
     val base = graft.Caches.track(s"ann.pq_base:$dir",
       withNorm(spark, dir))
     val cents = base
@@ -2709,13 +2632,13 @@ object Ann {
       .orderBy($"aff".desc, $"cent_id".asc)
     val probes = aff.filter($"vec_id" < NQUERIES)
       .withColumn("arn", row_number().over(byAff))
-      .filter($"arn" <= nprobe)
+      .filter($"arn" <= IVF_NPROBE)
       .select($"vec_id".as("query_id"), $"cent_id")
     val candidates = assigned.join(broadcast(probes), Seq("cent_id"))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id")
     // the q154 back half: ADC over the PRUNED candidates, exact rerank
-    val cb = pqCodebook(spark, dir, dim, k = k)
+    val cb = pqCodebook(spark, dir, dim)
     val codes = pqCodes(base, cb, dim)
     val lut = pqLut(base, cb, dim)
     val adc = candidates.join(codes, "vec_id")
@@ -2723,21 +2646,8 @@ object Ann {
       .groupBy($"query_id", $"vec_id")
       .agg(sum($"dd").cast(
         org.apache.spark.sql.types.DecimalType(38, 15)).as("adc_dec"))
-    pqRankTail(adc, base, cand)
+    pqRankTail(adc, base)
   }
-
-  /** [[ivfPqRecall]] at an arbitrary (nprobe, rerank depth, codebook
-    * size) serve geometry — the IVF+PQ sibling of [[pqRecallGeom]]
-    * (round-16 verdict item 8: the PQ knobs have a measured trade curve;
-    * the composed serve rode fixture nprobe). Not a registered query for
-    * the same reason: the fixture geometry keeps the exact SQL-replay
-    * oracle tractable; this hook exists so the serve-side trade table
-    * carries numbers. */
-  private[graft] def ivfPqRecallGeom(spark: SparkSession, dir: String,
-      nprobe: Int, cand: Int, k: Int = PQ_K): DataFrame =
-    recallAgainstBrute(spark, dir,
-      ivfPqTopK(spark, dir, EMBED_DIM,
-        nprobe = nprobe, k = k, cand = cand))
 
   private def ivfPqOracle(dim: Int): String = {
     val sub = dim / PQ_M
@@ -2837,8 +2747,7 @@ object Ann {
     * decimal-cosine rerank from `payload` (vec_id, embedding, nrm_dec) —
     * the corpus projection for the in-plan serves, the INDEX's own rows
     * for q165/q166 (so the index serve never rejoins the source table). */
-  private def pqRankTail(adc: DataFrame, payload: DataFrame,
-      cand: Int = SQ_CAND): DataFrame = {
+  private def pqRankTail(adc: DataFrame, payload: DataFrame): DataFrame = {
     import adc.sparkSession.implicits._
     val wCand = Window.partitionBy($"query_id")
       .orderBy($"adc_dec".desc, $"vec_id".asc)
@@ -2849,7 +2758,7 @@ object Ann {
       .filter($"query_id" < NQUERIES)
     adc
       .withColumn("crnk", row_number().over(wCand))
-      .filter($"crnk" <= cand)
+      .filter($"crnk" <= SQ_CAND)
       .join(payload, "vec_id")
       .join(broadcast(queries), Seq("query_id"))
       .withColumn("cosine",

@@ -810,40 +810,6 @@ object TextPipeline {
     * boilerplate unit test instead. */
   val MAX_SHINGLE_DF = 64
 
-  /** Scale-driver diagnostic for the shingle near-dup family (round-9
-    * curvature analysis): `posting_pairs` is the FULL df-bounded index's
-    * pair volume — Σ over shingles with df ≤ `maxDf` of df·(df−1)/2, the
-    * round-9 uncapped driver, kept for cross-round comparison —
-    * while `cand_pairs`/`rerank_rows` measure the SKETCHED operator q27
-    * actually ships since round 10 (distinct sketch-met pairs, and the
-    * full-set top-up volume Σ|sh(doc_a)| those pairs pay). Computed from
-    * histograms/sketches alone — no Jaccard executed. Returns one row:
-    * `(n_docs, rare_shingles, posting_pairs, cand_pairs, rerank_rows)`. */
-  def postingStats(spark: SparkSession, dir: String,
-      maxDf: Int = MAX_SHINGLE_DF): DataFrame = {
-    import spark.implicits._
-    val nDocs = docs(spark, dir).count()
-    val sh = shingles(spark, dir).persist()
-    val r = sh
-      .groupBy($"sh").agg(count(lit(1)).as("df"))
-      .filter($"df" <= maxDf)
-      .agg(count(lit(1)),
-        coalesce(sum(($"df" * ($"df" - 1) / 2).cast("long")), lit(0L))).head()
-    // DISTINCT candidate pairs and the rerank's first-join cardinality
-    // (Σ over candidates of |sh(doc_a)|) — the two volumes between the
-    // posting pairs and the Jaccard output.
-    val nSh = sh.groupBy($"doc_id").agg(count(lit(1)).as("n_sh"))
-    val cand = shingleCandidates(sh, maxDf).persist()
-    val nCand = cand.count()
-    val rerankRows = cand
-      .join(nSh.select($"doc_id".as("doc_a"), $"n_sh"), Seq("doc_a"))
-      .agg(coalesce(sum($"n_sh"), lit(0L))).head().getLong(0)
-    cand.unpersist(); sh.unpersist()
-    Seq((nDocs, r.getLong(0), r.getLong(1), nCand, rerankRows))
-      .toDF("n_docs", "rare_shingles", "posting_pairs", "cand_pairs",
-        "rerank_rows")
-  }
-
   /** Scale drivers for the MOSTLY-HOT FALLBACK under adversarial skew
     * (round-14 verdict item 8 — the planted-mega-cluster probe): from
     * the hot-probe posting HISTOGRAM alone, no pair join executed,
@@ -864,8 +830,7 @@ object TextPipeline {
     * `capped_pairs` (round-16) replays the same arithmetic under
     * [[shingleEvidence]]'s budget — per bucket
     * C(min(occ,cap),2) + max(occ−cap,0)·chainW — the candidate volume
-    * the COMPONENTS family actually joins on a mega-cluster corpus
-    * (the [[graft.ops.Ann.candidateStats]] capped_pairs precedent). */
+    * the COMPONENTS family actually joins on a mega-cluster corpus. */
   def hotFallbackStats(spark: SparkSession, dir: String,
       maxDf: Int = MAX_SHINGLE_DF,
       occCap: Int = HOT_OCC_CAP, chainW: Int = HOT_CHAIN_W): DataFrame = {
@@ -1074,14 +1039,6 @@ object TextPipeline {
   private val gateLogged =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Drop the cached per-dir corpus counts (and their one-shot gate-log
-    * dedup keys) — for a long-lived session whose corpus dir was
-    * regenerated in place; the same invalidation contract as
-    * [[Ann.clearTrainedCache]]. */
-  private[graft] def clearGateCaches(): Unit = {
-    docCountCache.clear()
-    gateLogged.clear()
-  }
   private def gateDocCount(spark: SparkSession, dir: String): Long =
     docCountCache.computeIfAbsent(
       dir, d => java.lang.Long.valueOf(docs(spark, d).count())).longValue()

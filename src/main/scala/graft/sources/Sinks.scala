@@ -234,9 +234,6 @@ object Sinks {
   def writeSnapshot(df: DataFrame, path: String): Unit =
     writeParquet(withUpdatedAt(df), path)
 
-  /** S7: summary dict → one-row DataFrame (`data_loader.py:44-46`), with
-    * the schema derived from the value types. Supported value types:
-    * Long/Int, Double, String, Boolean, java.sql.Timestamp. */
   /** S9 — the HTML report sink (`etl_pipeline/load/report_generator.py:
     * 146-201`: summary scalars + per-report `to_html` tables rendered into
     * one document; its charts are matplotlib and its narrative is an
@@ -417,6 +414,9 @@ object Sinks {
     } finally zip.close()
   }
 
+  /** S7: summary dict → one-row DataFrame (`data_loader.py:44-46`), with
+    * the schema derived from the value types. Supported value types:
+    * Long/Int, Double, String, Boolean, java.sql.Timestamp. */
   def liftSummary(spark: SparkSession, values: Seq[(String, Any)]): DataFrame = {
     val fields = values.map { case (name, v) =>
       val dt = v match {
