@@ -48,6 +48,22 @@ object Ann {
        |  CAST(0 AS DECIMAL(38,15)),
        |  (acc, z) -> CAST(acc + z AS DECIMAL(38,15)))""".stripMargin)
 
+  /** Operand type of the exact decimal metrics. Operands are bounded to
+    * DECIMAL(24,15) BEFORE the arithmetic: at (38,15) inputs Spark's
+    * result-type capping would shrink the scale below the 1e-12 quantum
+    * and silently round the metric; at (24,15) the 2·dot product types as
+    * (35,15) and the subtraction as (36,15) — no cap, every step exact
+    * (all values are 1e-12 multiples ≪ 10⁹). */
+  private val d24 = org.apache.spark.sql.types.DecimalType(24, 15)
+
+  /** The exact assignment metric ‖c‖² − 2·a·b as DECIMAL(38,15): the
+    * squared distance less the vector's own norm, which orders every
+    * centroid (or code) for a fixed vector. `nrm` is the centroid's
+    * decimal squared norm column. */
+  private def decMetric(nrm: String, a: String, b: String): Column =
+    (col(nrm).cast(d24) - lit(2) * dotDec(a, b).cast(d24))
+      .cast(org.apache.spark.sql.types.DecimalType(38, 15))
+
   private def embeddings(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "embeddings")
 
@@ -85,21 +101,27 @@ object Ann {
   private val prodDec =
     "CAST(floor(CAST(%s AS DOUBLE) * CAST(%s AS DOUBLE) * 1e12 + 0.5) / 1e12 AS DECIMAL(38,15))"
 
-  private val bruteForceOracle =
-    s"""WITH el AS (
-       |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |         unnest(embedding) AS x
-       |  FROM embeddings),
-       |norms AS (
+  /** Oracle CTE `el` (vec_id, i, x): one row per embedding element,
+    * `i` 1-based. */
+  private val elCte =
+    """el AS (
+      |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
+      |         unnest(embedding) AS x
+      |  FROM embeddings)""".stripMargin
+
+  /** Oracle CTE `norms` (vec_id, nrm): the decimal squared norm over `el`. */
+  private val normsCte =
+    s"""norms AS (
        |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
-       |  FROM el GROUP BY 1),
-       |dots AS (
-       |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-       |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
-       |  FROM el q JOIN el e ON q.i = e.i AND q.vec_id <> e.vec_id
-       |  WHERE q.vec_id < $NQUERIES
-       |  GROUP BY 1, 2),
-       |cos AS (
+       |  FROM el GROUP BY 1)""".stripMargin
+
+  private val elNormsCtes = s"$elCte,\n$normsCte"
+
+  /** Oracle tail shared by every exact serve: decimal cosine of each
+    * `dots` (query_id, neighbor_id, dot) pair over `norms`, then the
+    * per-query top-[[TOPK]] by (cosine DESC, neighbor_id). */
+  private val cosTopKSql =
+    s"""cos AS (
        |  SELECT query_id, neighbor_id,
        |         CAST(dot AS DOUBLE)
        |           / (sqrt(CAST(nq.nrm AS DOUBLE)) * sqrt(CAST(nn.nrm AS DOUBLE))) AS cosine
@@ -110,6 +132,28 @@ object Ann {
        |              ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
        |  FROM cos)
        |WHERE rnk <= $TOPK ORDER BY query_id, rnk""".stripMargin
+
+  /** [[cosTopKSql]] over the decimal dots of the `cand` (query_id,
+    * neighbor_id) pairs only — the candidate-bounded rerank. */
+  private val candRerankSql =
+    s"""dots AS (
+       |  SELECT c.query_id, c.neighbor_id,
+       |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
+       |  FROM cand c
+       |  JOIN el q ON q.vec_id = c.query_id
+       |  JOIN el e ON e.vec_id = c.neighbor_id AND e.i = q.i
+       |  GROUP BY 1, 2),
+       |$cosTopKSql""".stripMargin
+
+  private val bruteForceOracle =
+    s"""WITH $elNormsCtes,
+       |dots AS (
+       |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+       |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
+       |  FROM el q JOIN el e ON q.i = e.i AND q.vec_id <> e.vec_id
+       |  WHERE q.vec_id < $NQUERIES
+       |  GROUP BY 1, 2),
+       |$cosTopKSql""".stripMargin
 
   // ---------------------------------------------------------------- q30
 
@@ -246,7 +290,21 @@ object Ann {
     * order as doubles (bit-equal to the codegen'd DotProduct loop);
     * buckets, XOR probes, candidate join and decimal rerank mirror the
     * Spark plan 1:1. */
-  private def lshOracle(dim: Int): String = {
+  private def lshOracle(dim: Int): String =
+    s"""WITH $elNormsCtes,
+       |${bucketsCte(dim)},
+       |probes AS (
+       |  SELECT vec_id AS query_id, unnest($probeListSql) AS bucket
+       |  FROM b WHERE vec_id < $NQUERIES),
+       |cand AS (
+       |  SELECT p.query_id, e.vec_id AS neighbor_id
+       |  FROM probes p JOIN b e USING (bucket)
+       |  WHERE e.vec_id <> p.query_id),
+       |$candRerankSql""".stripMargin
+
+  /** Oracle CTE `b` (vec_id, bucket): [[bucketCol]] over
+    * [[NPLANES]] literal planes. */
+  private def bucketsCte(dim: Int): String = {
     val planes = planeSigns(dim)
     def projSql(p: Int): String = {
       val lits = planes(p).map(s => s"$s.0").mkString(", ")
@@ -256,44 +314,14 @@ object Ann {
     val bucketExpr = (0 until NPLANES)
       .map(p => s"(CASE WHEN ${projSql(p)} > 0 THEN ${1L << p} ELSE 0 END)")
       .mkString(" + ")
-    val probeList =
-      ("bucket" +: (0 until NPLANES).map(p => s"xor(bucket, ${1L << p})"))
-        .mkString("[", ", ", "]")
-    s"""WITH el AS (
-       |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |         unnest(embedding) AS x
-       |  FROM embeddings),
-       |norms AS (
-       |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
-       |  FROM el GROUP BY 1),
-       |b AS (
-       |  SELECT vec_id, $bucketExpr AS bucket FROM embeddings),
-       |probes AS (
-       |  SELECT vec_id AS query_id, unnest($probeList) AS bucket
-       |  FROM b WHERE vec_id < $NQUERIES),
-       |cand AS (
-       |  SELECT p.query_id, e.vec_id AS neighbor_id
-       |  FROM probes p JOIN b e USING (bucket)
-       |  WHERE e.vec_id <> p.query_id),
-       |dots AS (
-       |  SELECT c.query_id, c.neighbor_id,
-       |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
-       |  FROM cand c
-       |  JOIN el q ON q.vec_id = c.query_id
-       |  JOIN el e ON e.vec_id = c.neighbor_id AND e.i = q.i
-       |  GROUP BY 1, 2),
-       |cos AS (
-       |  SELECT query_id, neighbor_id,
-       |         CAST(dot AS DOUBLE)
-       |           / (sqrt(CAST(nq.nrm AS DOUBLE)) * sqrt(CAST(nn.nrm AS DOUBLE))) AS cosine
-       |  FROM dots JOIN norms nq ON nq.vec_id = query_id
-       |            JOIN norms nn ON nn.vec_id = neighbor_id)
-       |SELECT query_id, neighbor_id, cosine, rnk FROM (
-       |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |              ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-       |  FROM cos)
-       |WHERE rnk <= $TOPK ORDER BY query_id, rnk""".stripMargin
+    s"""b AS (
+       |  SELECT vec_id, $bucketExpr AS bucket FROM embeddings)""".stripMargin
   }
+
+  /** A row's own `bucket` plus every 1-bit flip: the multi-probe set. */
+  private val probeListSql =
+    ("bucket" +: (0 until NPLANES).map(p => s"xor(bucket, ${1L << p})"))
+      .mkString("[", ", ", "]")
 
   // ---------------------------------------------------------------- q47
 
@@ -534,30 +562,11 @@ object Ann {
 
   /** DuckDB replay of [[embeddingNearDup]] (same literal planes / XOR
     * probe / decimal-cosine machinery as [[lshOracle]]). */
-  private[ops] def nearDupOracle(threshold: Double, dim: Int): String = {
-    val planes = planeSigns(dim)
-    def projSql(p: Int): String = {
-      val lits = planes(p).map(s => s"$s.0").mkString(", ")
-      s"list_sum(list_transform(range(1, ${dim + 1}), " +
-        s"i -> CAST(embedding[i] AS DOUBLE) * ([$lits])[i]))"
-    }
-    val bucketExpr = (0 until NPLANES)
-      .map(p => s"(CASE WHEN ${projSql(p)} > 0 THEN ${1L << p} ELSE 0 END)")
-      .mkString(" + ")
-    val probeList =
-      ("bucket" +: (0 until NPLANES).map(p => s"xor(bucket, ${1L << p})"))
-        .mkString("[", ", ", "]")
-    s"""WITH el AS (
-       |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |         unnest(embedding) AS x
-       |  FROM embeddings),
-       |norms AS (
-       |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
-       |  FROM el GROUP BY 1),
-       |b AS (
-       |  SELECT vec_id, $bucketExpr AS bucket FROM embeddings),
+  private[ops] def nearDupOracle(threshold: Double, dim: Int): String =
+    s"""WITH $elNormsCtes,
+       |${bucketsCte(dim)},
        |pr AS (
-       |  SELECT vec_id, unnest($probeList) AS bucket FROM b),
+       |  SELECT vec_id, unnest($probeListSql) AS bucket FROM b),
        |pairs AS (
        |  SELECT pr.vec_id AS vec_a, e.vec_id AS vec_b
        |  FROM pr JOIN b e USING (bucket)
@@ -576,7 +585,6 @@ object Ann {
        |WHERE CAST(dot AS DOUBLE)
        |        / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE))) >= $threshold
        |ORDER BY vec_a, vec_b""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q48
 
@@ -668,14 +676,16 @@ object Ann {
     * the affinity argmax (bit-equal to the DotProduct loop), decimal
     * rerank identical to the brute-force oracle. */
   private def ivfOracle(dim: Int): String =
-    s"""WITH el AS (
-       |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |         unnest(embedding) AS x
-       |  FROM embeddings),
-       |norms AS (
-       |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
-       |  FROM el GROUP BY 1),
-       |cents AS (
+    s"""WITH $elNormsCtes,
+       |${seedAffCtes(dim)},
+       |$ivfProbeCtes,
+       |${probedRerankSql("assigned")}""".stripMargin
+
+  /** Oracle CTEs `cents` (the [[IVF_NCENTROIDS]] seed cells) and `aff`
+    * (vec_id, cent_id, aff): [[ivfServe]]'s affinity over the seed cells,
+    * as index-ordered double dots. Needs `norms`. */
+  private def seedAffCtes(dim: Int): String =
+    s"""cents AS (
        |  SELECT vec_id AS cent_id, embedding AS c_emb
        |  FROM embeddings
        |  WHERE vec_id >= $NQUERIES AND vec_id < ${NQUERIES + IVF_NCENTROIDS}),
@@ -686,8 +696,13 @@ object Ann {
        |           / sqrt(CAST(nc.nrm AS DOUBLE)) AS aff
        |  FROM embeddings e
        |  CROSS JOIN cents c
-       |  JOIN norms nc ON nc.vec_id = c.cent_id),
-       |ranked AS (
+       |  JOIN norms nc ON nc.vec_id = c.cent_id)""".stripMargin
+
+  /** Oracle CTEs over `aff`: `assigned` (each vector's argmax cell) and
+    * `probes` (each query's top-[[IVF_NPROBE]] cells), ties to the lower
+    * cent_id. */
+  private val ivfProbeCtes =
+    s"""ranked AS (
        |  SELECT vec_id, cent_id,
        |         ROW_NUMBER() OVER (PARTITION BY vec_id
        |           ORDER BY aff DESC, cent_id) AS arn
@@ -696,29 +711,16 @@ object Ann {
        |  SELECT vec_id, cent_id FROM ranked WHERE arn = 1),
        |probes AS (
        |  SELECT vec_id AS query_id, cent_id FROM ranked
-       |  WHERE vec_id < $NQUERIES AND arn <= $IVF_NPROBE),
-       |cand AS (
+       |  WHERE vec_id < $NQUERIES AND arn <= $IVF_NPROBE)""".stripMargin
+
+  /** [[candRerankSql]] over the vectors the `assigned` (vec_id, cent_id)
+    * CTE puts in a query's `probes` cells. */
+  private def probedRerankSql(assigned: String): String =
+    s"""cand AS (
        |  SELECT p.query_id, a.vec_id AS neighbor_id
-       |  FROM probes p JOIN assigned a USING (cent_id)
+       |  FROM probes p JOIN $assigned a USING (cent_id)
        |  WHERE a.vec_id <> p.query_id),
-       |dots AS (
-       |  SELECT c.query_id, c.neighbor_id,
-       |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
-       |  FROM cand c
-       |  JOIN el q ON q.vec_id = c.query_id
-       |  JOIN el e ON e.vec_id = c.neighbor_id AND e.i = q.i
-       |  GROUP BY 1, 2),
-       |cos AS (
-       |  SELECT query_id, neighbor_id,
-       |         CAST(dot AS DOUBLE)
-       |           / (sqrt(CAST(nq.nrm AS DOUBLE)) * sqrt(CAST(nn.nrm AS DOUBLE))) AS cosine
-       |  FROM dots JOIN norms nq ON nq.vec_id = query_id
-       |            JOIN norms nn ON nn.vec_id = neighbor_id)
-       |SELECT query_id, neighbor_id, cosine, rnk FROM (
-       |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |              ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-       |  FROM cos)
-       |WHERE rnk <= $TOPK ORDER BY query_id, rnk""".stripMargin
+       |$candRerankSql""".stripMargin
 
   // ---------------------------------------------------------------- q83
 
@@ -783,16 +785,8 @@ object Ann {
   private def assignCells(vectors: DataFrame, cents: DataFrame,
       exactMetric: Boolean): DataFrame = {
     import vectors.sparkSession.implicits._
-    // Operands are bounded to DECIMAL(24,15) BEFORE the arithmetic: at
-    // (38,15) inputs Spark's result-type capping would shrink the scale
-    // below the 1e-12 quantum and silently round the metric; at (24,15)
-    // the 2·dot product types as (35,15) and the subtraction as (36,15) —
-    // no cap, every step exact (all values are 1e-12 multiples ≪ 10⁹).
-    val d24 = org.apache.spark.sql.types.DecimalType(24, 15)
     val m =
-      if (exactMetric)
-        ($"c_nrm_dec".cast(d24) - lit(2) * dotDec("embedding", "c_emb").cast(d24))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 15))
+      if (exactMetric) decMetric("c_nrm_dec", "embedding", "c_emb")
       else
         $"c_nrm_dec".cast("double") - lit(2.0) * dotDbl("embedding", "c_emb")
     vectors.join(broadcast(cents)).withColumn("m_dec", m)
@@ -843,11 +837,8 @@ object Ann {
       .withColumn("crn", row_number().over(wc)).filter($"crn" <= nc)
       .select($"cent_id".as("coarse_id"), $"c_emb".as("co_emb"),
         $"c_nrm_dec".as("co_nrm"))
-    val d24 = org.apache.spark.sql.types.DecimalType(24, 15)
     def metric(coEmb: String, vEmb: String) =
-      if (exactMetric)
-        ($"co_nrm".cast(d24) - lit(2) * dotDec(vEmb, coEmb).cast(d24))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 15))
+      if (exactMetric) decMetric("co_nrm", vEmb, coEmb)
       else $"co_nrm".cast("double") - lit(2.0) * dotDbl(vEmb, coEmb)
     // parent: each centroid's nearest coarse (k×√k — tiny, broadcast)
     val parent = cents.join(broadcast(coarse))
@@ -868,10 +859,7 @@ object Ann {
     // stage 2: argmin over the winning parent's children (n×~k/√k)
     vCoarse.join(broadcast(children), "coarse_id")
       .withColumn("m_dec",
-        if (exactMetric)
-          ($"c_nrm_dec".cast(d24) -
-            lit(2) * dotDec("embedding", "c_emb").cast(d24))
-            .cast(org.apache.spark.sql.types.DecimalType(38, 15))
+        if (exactMetric) decMetric("c_nrm_dec", "embedding", "c_emb")
         else
           $"c_nrm_dec".cast("double") -
             lit(2.0) * dotDbl("embedding", "c_emb"))
@@ -1094,18 +1082,24 @@ object Ann {
        |  FROM asn$n a JOIN el e USING (vec_id)
        |  GROUP BY 1, 2)""".stripMargin
 
-  /** Shared training prefix: element table + seed cells + both rounds.
-    * `seedEnd` is the exclusive upper bound of the seed id range as a
-    * SQL expression — a literal for the fixture-k queries, a sizing-rule
-    * subquery for the sized-k q101. */
-  private def kmeansCtesSqlSeed(seedEnd: String): String =
+  /** Oracle CTEs `el` (vec_id, i, x as double) and `cel0` (cent_id, i,
+    * x): the seed cells, vectors [[NQUERIES]] until `seedEnd` (a SQL
+    * expression). */
+  private def seedCellCtes(seedEnd: String): String =
     s"""el AS (
        |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
        |         CAST(unnest(embedding) AS DOUBLE) AS x
        |  FROM embeddings),
        |cel0 AS (
        |  SELECT vec_id AS cent_id, i, x FROM el
-       |  WHERE vec_id >= $NQUERIES AND vec_id < $seedEnd),
+       |  WHERE vec_id >= $NQUERIES AND vec_id < $seedEnd)""".stripMargin
+
+  /** Shared training prefix: element table + seed cells + both rounds.
+    * `seedEnd` is the exclusive upper bound of the seed id range as a
+    * SQL expression — a literal for the fixture-k queries, a sizing-rule
+    * subquery for the sized-k q101. */
+  private def kmeansCtesSqlSeed(seedEnd: String): String =
+    s"""${seedCellCtes(seedEnd)},
        |${kmeansRoundSql(0, "cel0")},
        |${kmeansRoundSql(1, "cel1")}""".stripMargin
 
@@ -1179,13 +1173,7 @@ object Ann {
   /** [[kmeansCtesSqlSeed]] with BOTH training rounds hierarchical —
     * q101's training replay. */
   private def kmeansCtesSqlSeedHier(seedEnd: String): String =
-    s"""el AS (
-       |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |         CAST(unnest(embedding) AS DOUBLE) AS x
-       |  FROM embeddings),
-       |cel0 AS (
-       |  SELECT vec_id AS cent_id, i, x FROM el
-       |  WHERE vec_id >= $NQUERIES AND vec_id < $seedEnd),
+    s"""${seedCellCtes(seedEnd)},
        |${hierKmeansRoundSql(0)},
        |${hierKmeansRoundSql(1)}""".stripMargin
 
@@ -1223,13 +1211,7 @@ object Ann {
   }
 
   private def assignmentOracle: String =
-    s"""WITH el AS (
-       |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |         CAST(unnest(embedding) AS DOUBLE) AS x
-       |  FROM embeddings),
-       |cel0 AS (
-       |  SELECT vec_id AS cent_id, i, x FROM el
-       |  WHERE vec_id >= $NQUERIES AND vec_id < ${NQUERIES + IVF_NCENTROIDS}),
+    s"""WITH ${seedCellCtes((NQUERIES + IVF_NCENTROIDS).toString)},
        |${kmeansRoundSql(0, "cel0")}
        |SELECT CAST(vec_id AS BIGINT) AS vec_id,
        |       CAST(cent_id AS BIGINT) AS cent_id
@@ -1268,7 +1250,6 @@ object Ann {
     * (WindowGroupLimit — the q139 pin covers the rewrite pattern). */
   def cellDiversityCap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val d24 = org.apache.spark.sql.types.DecimalType(24, 15)
     val vecs = embeddings(spark, dir).select($"vec_id",
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
     val cents = vecs
@@ -1276,9 +1257,7 @@ object Ann {
       .select($"vec_id".as("cent_id"), $"embedding".as("c_emb"))
       .withColumn("c_nrm_dec", dotDec("c_emb", "c_emb"))
     val assigned = vecs.join(broadcast(cents))
-      .withColumn("m_dec",
-        ($"c_nrm_dec".cast(d24) - lit(2) * dotDec("embedding", "c_emb").cast(d24))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 15)))
+      .withColumn("m_dec", decMetric("c_nrm_dec", "embedding", "c_emb"))
       .groupBy($"vec_id")
       .agg(first($"embedding").as("embedding"),
         min_by($"cent_id", struct($"m_dec", $"cent_id")).as("cent_id"),
@@ -1294,13 +1273,7 @@ object Ann {
   }
 
   private def cellCapOracle: String =
-    s"""WITH el AS (
-       |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |         CAST(unnest(embedding) AS DOUBLE) AS x
-       |  FROM embeddings),
-       |cel0 AS (
-       |  SELECT vec_id AS cent_id, i, x FROM el
-       |  WHERE vec_id >= $NQUERIES AND vec_id < ${NQUERIES + IVF_NCENTROIDS}),
+    s"""WITH ${seedCellCtes((NQUERIES + IVF_NCENTROIDS).toString)},
        |cnrm AS (
        |  SELECT cent_id, SUM(${prodDec.format("x", "x")}) AS nrm
        |  FROM cel0 GROUP BY 1),
@@ -1500,9 +1473,7 @@ object Ann {
        |cnrm AS (
        |  SELECT cent_id, SUM(${prodDec.format("x", "x")}) AS nrm
        |  FROM cel2 GROUP BY 1),
-       |norms AS (
-       |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
-       |  FROM el GROUP BY 1),
+       |$normsCte,
        |aff AS (
        |  SELECT e.vec_id, c.cent_id,
        |         list_sum(list_transform(range(1, ${dim + 1}),
@@ -1511,38 +1482,8 @@ object Ann {
        |  FROM embeddings e
        |  CROSS JOIN carr c
        |  JOIN cnrm nc ON nc.cent_id = c.cent_id),
-       |ranked AS (
-       |  SELECT vec_id, cent_id,
-       |         ROW_NUMBER() OVER (PARTITION BY vec_id
-       |           ORDER BY aff DESC, cent_id) AS arn
-       |  FROM aff),
-       |assigned AS (
-       |  SELECT vec_id, cent_id FROM ranked WHERE arn = 1),
-       |probes AS (
-       |  SELECT vec_id AS query_id, cent_id FROM ranked
-       |  WHERE vec_id < $NQUERIES AND arn <= $IVF_NPROBE),
-       |cand AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id
-       |  FROM probes p JOIN assigned a USING (cent_id)
-       |  WHERE a.vec_id <> p.query_id),
-       |dots AS (
-       |  SELECT c.query_id, c.neighbor_id,
-       |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
-       |  FROM cand c
-       |  JOIN el q ON q.vec_id = c.query_id
-       |  JOIN el e ON e.vec_id = c.neighbor_id AND e.i = q.i
-       |  GROUP BY 1, 2),
-       |cos AS (
-       |  SELECT query_id, neighbor_id,
-       |         CAST(dot AS DOUBLE)
-       |           / (sqrt(CAST(nq.nrm AS DOUBLE)) * sqrt(CAST(nn.nrm AS DOUBLE))) AS cosine
-       |  FROM dots JOIN norms nq ON nq.vec_id = query_id
-       |            JOIN norms nn ON nn.vec_id = neighbor_id)
-       |SELECT query_id, neighbor_id, cosine, rnk FROM (
-       |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |              ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-       |  FROM cos)
-       |WHERE rnk <= $TOPK ORDER BY query_id, rnk""".stripMargin
+       |$ivfProbeCtes,
+       |${probedRerankSql("assigned")}""".stripMargin
 
   // ---------------------------------------------------------------- q91
 
@@ -1572,37 +1513,10 @@ object Ann {
     * vector to its cell partition; serve reads nprobe directories and
     * reranks |cells probed| candidates. The ≤|Q|·nprobe-row cell list is
     * a planning input (the q60 fixpoint-count class of driver read). */
-  /** q91's scratch index dir, bounded to ONE live dir per JVM: every
-    * invocation writes a fresh index (the write IS the operator — the
-    * bench times it deliberately), but the previous invocation's dir is
-    * deleted on the next call and the last one on JVM exit, so repeated
-    * runs (bench ×3 + warm-up + oracle compare + Explain) no longer
-    * accumulate full index copies under /tmp (round-9 ADVICE). A
-    * DataFrame returned by an EARLIER invocation must therefore be fully
-    * consumed before the next invocation — which is how every driver
-    * (Verify/Bench/Explain) uses it. */
-  private val liveIndexDir =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private lazy val indexDirReaper: Unit = {
-    sys.addShutdownHook(Option(liveIndexDir.get).foreach(deleteLocalDir))
-    ()
-  }
-  private def deleteLocalDir(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-  private def nextIndexDir(): String = {
-    indexDirReaper
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_q91_index").toString
-    Option(liveIndexDir.getAndSet(dir)).foreach(deleteLocalDir)
-    dir
-  }
+  /** q91's scratch index dir, one live dir per JVM: every invocation
+    * writes a fresh index (the write IS the operator — the bench times
+    * it deliberately). */
+  private val liveIndexDir = new graft.LiveDirSlot("graft_q91_index")
 
   def ivfServeFromIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1615,18 +1529,15 @@ object Ann {
     // of re-running training per subtree (the pre-round-12 shape needed
     // a localCheckpoint for exactly that).
     val trained = trainedCents(spark, dir, vecs)
-    val indexDir = nextIndexDir()
+    val indexDir = liveIndexDir.next()
     graft.streaming.StreamingAnn
       .indexBatch(embeddings(spark, dir), trained, exactMetric = true)
       .write.mode("overwrite").partitionBy("cent_id").parquet(indexDir)
-    val d24 = org.apache.spark.sql.types.DecimalType(24, 15)
     val probes = vecs.filter($"vec_id" < NQUERIES)
       .join(broadcast(trained))
       // the index's own metric (assignCells exactMetric=true), ranked
-      // per query for nprobe cells — same d24 bounding, same tie-break
-      .withColumn("m_dec",
-        ($"c_nrm_dec".cast(d24) - lit(2) * dotDec("embedding", "c_emb").cast(d24))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 15)))
+      // per query for nprobe cells — same tie-break
+      .withColumn("m_dec", decMetric("c_nrm_dec", "embedding", "c_emb"))
       .withColumn("arn", row_number().over(
         Window.partitionBy($"vec_id").orderBy($"m_dec", $"cent_id")))
       .filter($"arn" <= IVF_NPROBE)
@@ -1656,9 +1567,7 @@ object Ann {
   private def indexServeOracle(dim: Int): String =
     s"""WITH $kmeansCtesSql,
        |${kmeansRoundSql(2, "cel2")},
-       |norms AS (
-       |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
-       |  FROM el GROUP BY 1),
+       |$normsCte,
        |pranked AS (
        |  SELECT vec_id, cent_id,
        |         ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -1667,28 +1576,7 @@ object Ann {
        |probes AS (
        |  SELECT vec_id AS query_id, cent_id FROM pranked
        |  WHERE vec_id < $NQUERIES AND arn <= $IVF_NPROBE),
-       |cand AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id
-       |  FROM probes p JOIN asn2 a USING (cent_id)
-       |  WHERE a.vec_id <> p.query_id),
-       |dots AS (
-       |  SELECT c.query_id, c.neighbor_id,
-       |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
-       |  FROM cand c
-       |  JOIN el q ON q.vec_id = c.query_id
-       |  JOIN el e ON e.vec_id = c.neighbor_id AND e.i = q.i
-       |  GROUP BY 1, 2),
-       |cos AS (
-       |  SELECT query_id, neighbor_id,
-       |         CAST(dot AS DOUBLE)
-       |           / (sqrt(CAST(nq.nrm AS DOUBLE)) * sqrt(CAST(nn.nrm AS DOUBLE))) AS cosine
-       |  FROM dots JOIN norms nq ON nq.vec_id = query_id
-       |            JOIN norms nn ON nn.vec_id = neighbor_id)
-       |SELECT query_id, neighbor_id, cosine, rnk FROM (
-       |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |              ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-       |  FROM cos)
-       |WHERE rnk <= $TOPK ORDER BY query_id, rnk""".stripMargin
+       |${probedRerankSql("asn2")}""".stripMargin
 
   // ---------------------------------------------------------------- q100
 
@@ -2028,17 +1916,6 @@ object Ann {
       .select($"query_id", $"n_exact", $"n_hit", $"recall")
   }
 
-  private def annRecallOracle: String =
-    s"""WITH bf AS ($bruteForceOracle),
-       |ap AS (${lshOracle(EMBED_DIM)})
-       |SELECT b.query_id,
-       |       CAST(COUNT(*) AS BIGINT) AS n_exact,
-       |       CAST(COUNT(a.neighbor_id) AS BIGINT) AS n_hit,
-       |       CAST(COUNT(a.neighbor_id) AS DOUBLE) / COUNT(*) AS recall
-       |FROM bf b LEFT JOIN ap a
-       |  ON a.query_id = b.query_id AND a.neighbor_id = b.neighbor_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-
   // ------------------------------------------------- q162 / q163 / q164
 
   /** Per-query recall@[[TOPK]] of an approximate serve against
@@ -2087,7 +1964,9 @@ object Ann {
   def ivfPqRecall(spark: SparkSession, dir: String): DataFrame =
     recallAgainstBrute(spark, dir, ivfPqTopK(spark, dir))
 
-  private def quantRecallOracle(approxSql: String): String =
+  /** Oracle of per-query recall@[[TOPK]]: `approxSql`'s (query_id,
+    * neighbor_id) rows against [[bruteForceOracle]]'s (q103, q162–q164). */
+  private def recallOracle(approxSql: String): String =
     s"""WITH bf AS ($bruteForceOracle),
        |ap AS ($approxSql)
        |SELECT b.query_id,
@@ -2188,13 +2067,7 @@ object Ann {
   }
 
   private val sqOracle =
-    s"""WITH el AS (
-       |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |         unnest(embedding) AS x
-       |  FROM embeddings),
-       |norms AS (
-       |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
-       |  FROM el GROUP BY 1),
+    s"""WITH $elNormsCtes,
        |qel AS (
        |  SELECT el.vec_id, el.i,
        |         CASE WHEN CAST(n.nrm AS DOUBLE) > 0.0 THEN
@@ -2288,11 +2161,8 @@ object Ann {
     * [[ivfKmeans]] documents, one level down. */
   private def pqLloydRound(subs: DataFrame, cb: DataFrame): DataFrame = {
     import subs.sparkSession.implicits._
-    val d24 = org.apache.spark.sql.types.DecimalType(24, 15)
     val asn = subs.join(broadcast(cb), Seq("m"))
-      .withColumn("mdec",
-        ($"c_nrm".cast(d24) - lit(2) * dotDec("sub", "c_sub").cast(d24))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 15)))
+      .withColumn("mdec", decMetric("c_nrm", "sub", "c_sub"))
       .groupBy($"vec_id", $"m")
       // every row of a (vec_id, m) group carries the same sub (the join
       // fanned it out over codes), so first() is deterministic here
@@ -2382,13 +2252,10 @@ object Ann {
   private[graft] def pqDistortion(spark: SparkSession, dir: String,
       dim: Int, trained: Boolean): Double = {
     import spark.implicits._
-    val d24 = org.apache.spark.sql.types.DecimalType(24, 15)
     val cb = pqCodebook(spark, dir, dim, trained)
     pqSubvectors(embeddings(spark, dir), dim)
       .join(broadcast(cb), Seq("m"))
-      .withColumn("mdec",
-        ($"c_nrm".cast(d24) - lit(2) * dotDec("sub", "c_sub").cast(d24))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 15)))
+      .withColumn("mdec", decMetric("c_nrm", "sub", "c_sub"))
       .groupBy($"vec_id", $"m")
       .agg(min($"mdec").as("m_min"),
         first(dotDec("sub", "sub")).as("s_nrm"))
@@ -2427,12 +2294,9 @@ object Ann {
   private def pqCodes(base: DataFrame, cb: DataFrame,
       dim: Int): DataFrame = {
     import base.sparkSession.implicits._
-    val d24 = org.apache.spark.sql.types.DecimalType(24, 15)
     pqSubvectors(base, dim)
       .join(broadcast(cb), Seq("m"))
-      .withColumn("mdec",
-        ($"c_nrm".cast(d24) - lit(2) * dotDec("sub", "c_sub").cast(d24))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 15)))
+      .withColumn("mdec", decMetric("c_nrm", "sub", "c_sub"))
       .groupBy($"vec_id", $"m")
       .agg(min_by($"code", struct($"mdec", $"code")).as("code"))
   }
@@ -2508,18 +2372,19 @@ object Ann {
        |  SELECT m, code, SUM(${prodDec.format("x", "x")}) AS c_nrm
        |  FROM cb GROUP BY 1, 2)""".stripMargin
 
-  private def pqServeOracle(trainCtes: String): String = {
-    val sub = EMBED_DIM / PQ_M
-    s"""WITH el AS (
-       |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |         unnest(embedding) AS x
-       |  FROM embeddings),
-       |se AS (
+  /** Oracle CTE `se` (vec_id, m, j, x): `el` split into [[PQ_M]]
+    * subspaces of `sub` elements. */
+  private def subspaceCte(sub: Int): String =
+    s"""se AS (
        |  SELECT vec_id, CAST((i - 1) // $sub AS INT) AS m,
        |         CAST((i - 1) % $sub AS INT) AS j, x
-       |  FROM el),
-       |$trainCtes,
-       |enc AS (
+       |  FROM el)""".stripMargin
+
+  /** Oracle CTEs over `se` and the trained `cb`/`cbn`: `codes` (each
+    * subvector's nearest code by the decimal metric) and `lut`
+    * (query_id, m, code, dd), the ADC lookup table. */
+  private def pqEncodeLutCtes: String =
+    s"""enc AS (
        |  SELECT s.vec_id, s.m, c.code,
        |         CAST(n.c_nrm - 2 * SUM(${prodDec.format("s.x", "c.x")})
        |              AS DECIMAL(38,15)) AS mdec
@@ -2537,23 +2402,22 @@ object Ann {
        |         SUM(${prodDec.format("q.x", "c.x")}) AS dd
        |  FROM se q JOIN cb c ON c.m = q.m AND c.j = q.j
        |  WHERE q.vec_id < $NQUERIES
-       |  GROUP BY 1, 2, 3),
-       |adc AS (
-       |  SELECT l.query_id, k.vec_id,
-       |         CAST(SUM(l.dd) AS DECIMAL(38,15)) AS adc_dec
-       |  FROM codes k JOIN lut l ON l.m = k.m AND l.code = k.code
-       |  WHERE k.vec_id <> l.query_id
-       |  GROUP BY 1, 2),
-       |cand AS (
+       |  GROUP BY 1, 2, 3)""".stripMargin
+
+  /** Oracle CTE `cand`: each query's top-[[SQ_CAND]] vectors by the
+    * `adc` (query_id, vec_id, adc_dec) screen. */
+  private def pqCandCte: String =
+    s"""cand AS (
        |  SELECT query_id, vec_id AS neighbor_id, adc_dec FROM (
        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
        |             ORDER BY adc_dec DESC, vec_id) AS crnk
        |    FROM adc)
-       |  WHERE crnk <= $SQ_CAND),
-       |norms AS (
-       |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
-       |  FROM el GROUP BY 1),
-       |dots AS (
+       |  WHERE crnk <= $SQ_CAND)""".stripMargin
+
+  /** The oracle tail of [[pqRankTail]]: exact decimal-cosine top-[[TOPK]]
+    * of `cand`, carrying each candidate's ADC score. Needs `el`, `norms`. */
+  private def pqRerankSql: String =
+    s"""dots AS (
        |  SELECT c.query_id, c.neighbor_id, c.adc_dec,
        |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
        |  FROM cand c
@@ -2572,7 +2436,21 @@ object Ann {
        |              ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
        |  FROM cos)
        |WHERE rnk <= $TOPK ORDER BY query_id, rnk""".stripMargin
-  }
+
+  private def pqServeOracle(trainCtes: String): String =
+    s"""WITH $elCte,
+       |${subspaceCte(EMBED_DIM / PQ_M)},
+       |$trainCtes,
+       |$pqEncodeLutCtes,
+       |adc AS (
+       |  SELECT l.query_id, k.vec_id,
+       |         CAST(SUM(l.dd) AS DECIMAL(38,15)) AS adc_dec
+       |  FROM codes k JOIN lut l ON l.m = k.m AND l.code = k.code
+       |  WHERE k.vec_id <> l.query_id
+       |  GROUP BY 1, 2),
+       |$pqCandCte,
+       |$normsCte,
+       |$pqRerankSql""".stripMargin
 
   private lazy val pqOracle = pqServeOracle(pqTrainSql())
 
@@ -2649,65 +2527,17 @@ object Ann {
     pqRankTail(adc, base)
   }
 
-  private def ivfPqOracle(dim: Int): String = {
-    val sub = dim / PQ_M
-    s"""WITH el AS (
-       |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-       |         unnest(embedding) AS x
-       |  FROM embeddings),
-       |norms AS (
-       |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
-       |  FROM el GROUP BY 1),
-       |cents AS (
-       |  SELECT vec_id AS cent_id, embedding AS c_emb
-       |  FROM embeddings
-       |  WHERE vec_id >= $NQUERIES AND vec_id < ${NQUERIES + IVF_NCENTROIDS}),
-       |aff AS (
-       |  SELECT e.vec_id, c.cent_id,
-       |         list_sum(list_transform(range(1, ${dim + 1}),
-       |           i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.c_emb[i] AS DOUBLE)))
-       |           / sqrt(CAST(nc.nrm AS DOUBLE)) AS aff
-       |  FROM embeddings e
-       |  CROSS JOIN cents c
-       |  JOIN norms nc ON nc.vec_id = c.cent_id),
-       |ranked AS (
-       |  SELECT vec_id, cent_id,
-       |         ROW_NUMBER() OVER (PARTITION BY vec_id
-       |           ORDER BY aff DESC, cent_id) AS arn
-       |  FROM aff),
-       |assigned AS (
-       |  SELECT vec_id, cent_id FROM ranked WHERE arn = 1),
-       |probes AS (
-       |  SELECT vec_id AS query_id, cent_id FROM ranked
-       |  WHERE vec_id < $NQUERIES AND arn <= $IVF_NPROBE),
+  private def ivfPqOracle(dim: Int): String =
+    s"""WITH $elNormsCtes,
+       |${seedAffCtes(dim)},
+       |$ivfProbeCtes,
        |cand0 AS (
        |  SELECT p.query_id, a.vec_id
        |  FROM probes p JOIN assigned a USING (cent_id)
        |  WHERE a.vec_id <> p.query_id),
-       |se AS (
-       |  SELECT vec_id, CAST((i - 1) // $sub AS INT) AS m,
-       |         CAST((i - 1) % $sub AS INT) AS j, x
-       |  FROM el),
+       |${subspaceCte(dim / PQ_M)},
        |${pqTrainSql()},
-       |enc AS (
-       |  SELECT s.vec_id, s.m, c.code,
-       |         CAST(n.c_nrm - 2 * SUM(${prodDec.format("s.x", "c.x")})
-       |              AS DECIMAL(38,15)) AS mdec
-       |  FROM se s
-       |  JOIN cb c ON c.m = s.m AND c.j = s.j
-       |  JOIN cbn n ON n.m = c.m AND n.code = c.code
-       |  GROUP BY s.vec_id, s.m, c.code, n.c_nrm),
-       |codes AS (
-       |  SELECT vec_id, m, code FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
-       |             ORDER BY mdec, code) AS rn
-       |    FROM enc) WHERE rn = 1),
-       |lut AS (
-       |  SELECT q.vec_id AS query_id, q.m, c.code,
-       |         SUM(${prodDec.format("q.x", "c.x")}) AS dd
-       |  FROM se q JOIN cb c ON c.m = q.m AND c.j = q.j
-       |  WHERE q.vec_id < $NQUERIES
-       |  GROUP BY 1, 2, 3),
+       |$pqEncodeLutCtes,
        |adc AS (
        |  SELECT c0.query_id, c0.vec_id,
        |         CAST(SUM(l.dd) AS DECIMAL(38,15)) AS adc_dec
@@ -2716,32 +2546,8 @@ object Ann {
        |  JOIN lut l ON l.query_id = c0.query_id
        |    AND l.m = k.m AND l.code = k.code
        |  GROUP BY 1, 2),
-       |cand AS (
-       |  SELECT query_id, vec_id AS neighbor_id, adc_dec FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |             ORDER BY adc_dec DESC, vec_id) AS crnk
-       |    FROM adc)
-       |  WHERE crnk <= $SQ_CAND),
-       |dots AS (
-       |  SELECT c.query_id, c.neighbor_id, c.adc_dec,
-       |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
-       |  FROM cand c
-       |       JOIN el q ON q.vec_id = c.query_id
-       |       JOIN el e ON e.vec_id = c.neighbor_id AND q.i = e.i
-       |  GROUP BY 1, 2, 3),
-       |cos AS (
-       |  SELECT query_id, neighbor_id,
-       |         CAST(adc_dec AS DOUBLE) AS adc,
-       |         CAST(dot AS DOUBLE)
-       |           / (sqrt(CAST(nq.nrm AS DOUBLE)) * sqrt(CAST(nn.nrm AS DOUBLE))) AS cosine
-       |  FROM dots JOIN norms nq ON nq.vec_id = query_id
-       |            JOIN norms nn ON nn.vec_id = neighbor_id)
-       |SELECT query_id, neighbor_id, adc, cosine, rnk FROM (
-       |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |              ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-       |  FROM cos)
-       |WHERE rnk <= $TOPK ORDER BY query_id, rnk""".stripMargin
-  }
+       |$pqCandCte,
+       |$pqRerankSql""".stripMargin
 
   /** Shared PQ serve tail: rank ADC candidates, keep [[SQ_CAND]], exact
     * decimal-cosine rerank from `payload` (vec_id, embedding, nrm_dec) —
@@ -2774,28 +2580,10 @@ object Ann {
 
   // --------------------------------------------------------- q165 / q166
 
-  /** One live scratch-dir slot — the q91 one-live-dir reaper (see
-    * [[liveIndexDir]] for the contract). ONE SLOT PER OPERATOR (the
-    * liveIndexDir/liveNbModelDir precedent): q165 and q166 briefly
-    * shared a single slot, so running one after the other deleted the
-    * first's index out from under its still-lazy serve DataFrame
-    * (round-14 ADVICE). */
-  private final class LiveDirSlot(prefix: String) {
-    private val ref =
-      new java.util.concurrent.atomic.AtomicReference[String](null)
-    private lazy val reaper: Unit = {
-      sys.addShutdownHook(Option(ref.get).foreach(deleteLocalDir))
-      ()
-    }
-    def next(): String = {
-      reaper
-      val dir = java.nio.file.Files.createTempDirectory(prefix).toString
-      Option(ref.getAndSet(dir)).foreach(deleteLocalDir)
-      dir
-    }
-  }
-  private val livePqIndexDir = new LiveDirSlot("graft_q165_pq_index")
-  private val livePqIncrementDir = new LiveDirSlot("graft_q166_pq_index")
+  // one slot each: a shared slot would delete one operator's index
+  // under the other's still-lazy serve DataFrame
+  private val livePqIndexDir = new graft.LiveDirSlot("graft_q165_pq_index")
+  private val livePqIncrementDir = new graft.LiveDirSlot("graft_q166_pq_index")
 
   /** Encode `base` under `cb` into SELF-CONTAINED index rows:
     * `(vec_id, codes[M], embedding, nrm_dec)` — codes packed to one
@@ -3080,7 +2868,7 @@ object Ann {
     Query("q103_ann_recall",
       "recall@k evaluation of the SRP-LSH path against exact brute force — the ANN quality harness, exact oracle",
       (s, d) => annRecall(s, d).orderBy("query_id"),
-      Some(annRecallOracle), headline = false,
+      Some(recallOracle(lshOracle(EMBED_DIM))), headline = false,
       benchFn = Some(annRecall)),
     Query("q132_ann_quantized",
       "scalar-quantized (int8) ANN: per-dim affine quantization, integer dot-product screen, exact decimal rerank of 4k candidates",
@@ -3103,17 +2891,17 @@ object Ann {
     Query("q162_sq_recall",
       "recall@k of the int8 scalar-quantized screen (q132) vs exact brute force — quantized retrieval quality, exact oracle",
       (s, d) => sqRecall(s, d).orderBy("query_id"),
-      Some(quantRecallOracle(sqOracle)), headline = false,
+      Some(recallOracle(sqOracle)), headline = false,
       benchFn = Some(sqRecall)),
     Query("q163_pq_recall",
       "recall@k of the Lloyd-trained PQ ADC screen (q154) vs exact brute force — what codebook training buys, exact oracle",
       (s, d) => pqRecall(s, d).orderBy("query_id"),
-      Some(quantRecallOracle(pqOracle)), headline = false,
+      Some(recallOracle(pqOracle)), headline = false,
       benchFn = Some(pqRecall)),
     Query("q164_ivfpq_recall",
       "recall@k of the composed IVF+PQ serve (q158) vs exact brute force — both pruning legs evaluated together, exact oracle",
       (s, d) => ivfPqRecall(s, d).orderBy("query_id"),
-      Some(quantRecallOracle(ivfPqOracle(EMBED_DIM))), headline = false,
+      Some(recallOracle(ivfPqOracle(EMBED_DIM))), headline = false,
       benchFn = Some(ivfPqRecall)),
     Query("q141_cell_diversity_cap",
       "cell-capped diversity selection: top-16 nearest per IVF cell by exact decimal distance — semantic-space source capping",

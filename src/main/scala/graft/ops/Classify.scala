@@ -317,8 +317,7 @@ object Classify {
 
   // ---------------------------------------------------------------- q157
 
-  private val liveNbModelDir =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
+  private val liveNbModelDir = new graft.LiveDirSlot("graft_q157_model")
 
   /** T1 for the q149 classifier: incremental MODEL maintenance — the
     * q148 discipline applied to the NB artifact. Both halves of the
@@ -344,16 +343,7 @@ object Classify {
     import spark.implicits._
     val corpus = docs(spark, dir)
     val cut = corpus.agg(expr("max(doc_id) * 4 div 5")).head().getLong(0)
-    val sk = java.nio.file.Files
-      .createTempDirectory("graft_q157_model").toString
-    Option(liveNbModelDir.getAndSet(sk)).foreach { old =>
-      val p = java.nio.file.Paths.get(old)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    val sk = liveNbModelDir.next()
     // setup: the stored artifacts, as a prior load would have left them
     nbTermCounts(corpus.filter($"doc_id" < cut))
       .write.mode("overwrite").parquet(s"$sk/q157_terms")

@@ -78,8 +78,10 @@ object Financial {
     abcCore(spark, dir).orderBy($"part_id")
   }
 
-  private val abcOracle =
-    s"""WITH rev AS (
+  /** Oracle CTEs `rev` (part_id, rev_dec) and `w` (adds the exact
+    * decimal cumsum `cum_dec` by revenue rank and the total `tot_dec`). */
+  private val abcCtes =
+    s"""rev AS (
        |  SELECT l_partkey AS part_id,
        |         SUM(CAST(($REV) AS DECIMAL(30,6))) AS rev_dec
        |  FROM lineitem GROUP BY 1
@@ -89,15 +91,22 @@ object Financial {
        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_dec,
        |         SUM(rev_dec) OVER () AS tot_dec
        |  FROM rev
-       |)
+       |)""".stripMargin
+
+  /** [[abcCore]]'s class cut over `w`'s cumulative share. */
+  private val abcClassSql =
+    """CASE WHEN CAST(cum_dec AS DOUBLE) / CAST(tot_dec AS DOUBLE) <= 0.80 THEN 'A'
+      |            WHEN CAST(cum_dec AS DOUBLE) / CAST(tot_dec AS DOUBLE) <= 0.95 THEN 'B'
+      |            ELSE 'C' END AS abc_class""".stripMargin
+
+  private val abcOracle =
+    s"""WITH $abcCtes
        |SELECT part_id,
        |       CAST(rev_dec AS DOUBLE) AS revenue,
        |       CAST(cum_dec AS DOUBLE) AS revenue_cumsum,
        |       CAST(tot_dec AS DOUBLE) AS total_revenue,
        |       CAST(cum_dec AS DOUBLE) / CAST(tot_dec AS DOUBLE) AS revenue_percent,
-       |       CASE WHEN CAST(cum_dec AS DOUBLE) / CAST(tot_dec AS DOUBLE) <= 0.80 THEN 'A'
-       |            WHEN CAST(cum_dec AS DOUBLE) / CAST(tot_dec AS DOUBLE) <= 0.95 THEN 'B'
-       |            ELSE 'C' END AS abc_class
+       |       $abcClassSql
        |FROM w ORDER BY part_id""".stripMargin
 
   /** ABC class counts (A6). */
@@ -110,20 +119,8 @@ object Financial {
   }
 
   private val abcCountsOracle =
-    s"""WITH rev AS (
-       |  SELECT l_partkey AS part_id,
-       |         SUM(CAST(($REV) AS DECIMAL(30,6))) AS rev_dec
-       |  FROM lineitem GROUP BY 1
-       |), w AS (
-       |  SELECT part_id, rev_dec,
-       |         SUM(rev_dec) OVER (ORDER BY rev_dec DESC, part_id
-       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_dec,
-       |         SUM(rev_dec) OVER () AS tot_dec
-       |  FROM rev
-       |)
-       |SELECT CASE WHEN CAST(cum_dec AS DOUBLE) / CAST(tot_dec AS DOUBLE) <= 0.80 THEN 'A'
-       |            WHEN CAST(cum_dec AS DOUBLE) / CAST(tot_dec AS DOUBLE) <= 0.95 THEN 'B'
-       |            ELSE 'C' END AS abc_class,
+    s"""WITH $abcCtes
+       |SELECT $abcClassSql,
        |       CAST(COUNT(*) AS BIGINT) AS n_parts
        |FROM w GROUP BY 1 ORDER BY 1""".stripMargin
 

@@ -710,17 +710,24 @@ object Generator {
       .orderBy($"dq_issue")
   }
 
-  private val generatedDqOracle = {
-    val x = Mix.x("i"); val y = Mix.y("i"); val z = Mix.z("i")
-    s"""WITH mv AS (
-       |  SELECT i,
-       |         CASE WHEN $y % 100 < 45 THEN 'IN'
+  /** Oracle select items `movement_type` and `quantity` of the fixture
+    * movement at row `i`, as [[movements]] draws them. */
+  private val movementTypeQtySql = {
+    val x = Mix.x("i"); val y = Mix.y("i")
+    s"""CASE WHEN $y % 100 < 45 THEN 'IN'
        |              WHEN $y % 100 < 80 THEN 'OUT'
        |              WHEN $y % 100 < 90 THEN 'TRANSFER'
        |              WHEN $y % 100 < 95 THEN 'ADJUSTMENT'
        |              ELSE 'RETURN' END AS movement_type,
        |         CASE WHEN $y % 100 >= 45 AND $y % 100 < 80
-       |              THEN -(($x % 50) + 1) ELSE ($x % 50) + 1 END AS quantity,
+       |              THEN -(($x % 50) + 1) ELSE ($x % 50) + 1 END AS quantity""".stripMargin
+  }
+
+  private val generatedDqOracle = {
+    val x = Mix.x("i"); val z = Mix.z("i")
+    s"""WITH mv AS (
+       |  SELECT i,
+       |         $movementTypeQtySql,
        |         DATE '2022-01-01' + CAST((($x % 365) + ($z % 366)) AS INT)
        |           AS movement_date,
        |         CASE WHEN $z % 20 = 0 THEN 9999999
@@ -858,16 +865,10 @@ object Generator {
   }
 
   private val summaryOracle = {
-    val x = Mix.x("i"); val y = Mix.y("i"); val z = Mix.z("i")
+    val x = Mix.x("i"); val z = Mix.z("i")
     s"""WITH g AS (
        |  SELECT i,
-       |         CASE WHEN $y % 100 < 45 THEN 'IN'
-       |              WHEN $y % 100 < 80 THEN 'OUT'
-       |              WHEN $y % 100 < 90 THEN 'TRANSFER'
-       |              WHEN $y % 100 < 95 THEN 'ADJUSTMENT'
-       |              ELSE 'RETURN' END AS movement_type,
-       |         CASE WHEN $y % 100 >= 45 AND $y % 100 < 80
-       |              THEN -(($x % 50) + 1) ELSE ($x % 50) + 1 END AS quantity,
+       |         $movementTypeQtySql,
        |         DATE '2022-01-01' + CAST((($x % 365) + ($z % 366)) AS INT) AS movement_date,
        |         CASE WHEN $z % 20 = 0 THEN 9999999
        |              ELSE $x % 100000 END AS reference_id

@@ -217,15 +217,22 @@ object Retrieval {
       .orderBy($"query_id", $"rnk")
   }
 
-  private val bm25BatchOracle = {
-    val allTerms = QUERY_BATCH.flatMap(_._2).distinct.sorted
+  /** The union of [[QUERY_BATCH]]'s terms, as the batch oracles scan them. */
+  private val batchTerms = QUERY_BATCH.flatMap(_._2).distinct.sorted
+
+  /** Oracle CTE `qt` (query_id, term): [[QUERY_BATCH]] as rows. */
+  private val batchQtCte = {
     val values = QUERY_BATCH
       .flatMap { case (qid, ts) => ts.map(t => s"($qid, '$t')") }
       .mkString(", ")
-    s"""${bm25Sql(allTerms)}, qt AS (
+    s"""qt AS (
        |  SELECT CAST(query_id AS BIGINT) AS query_id, term
        |  FROM (VALUES $values) AS v(query_id, term)
-       |), byq AS (
+       |)""".stripMargin
+  }
+
+  private val bm25BatchOracle =
+    s"""${bm25Sql(batchTerms)}, $batchQtCte, byq AS (
        |  SELECT qt.query_id, scored.doc_id, scored.dl,
        |         CAST(COUNT(*) AS BIGINT) AS n_hits,
        |         CAST(SUM(CAST(scored.rscore AS DECIMAL(30,6))) AS DOUBLE)
@@ -240,7 +247,6 @@ object Retrieval {
        |FROM byq
        |QUALIFY rnk <= $BATCH_TOP_K
        |ORDER BY query_id, rnk""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q161
 
@@ -282,15 +288,11 @@ object Retrieval {
       .orderBy($"query_id", $"ctx_pos")
   }
 
-  private val ragContextOracle = {
-    val allTerms = QUERY_BATCH.flatMap(_._2).distinct.sorted
-    val values = QUERY_BATCH
-      .flatMap { case (qid, ts) => ts.map(t => s"($qid, '$t')") }
-      .mkString(", ")
-    s"""${bm25Sql(allTerms)}, qt AS (
-       |  SELECT CAST(query_id AS BIGINT) AS query_id, term
-       |  FROM (VALUES $values) AS v(query_id, term)
-       |), byq AS (
+  /** RAG oracle CTEs after [[bm25Sql]]: [[batchQtCte]], `byq` (each
+    * query's decimal-summed score per doc) and `ranked` (adds ctx_pos,
+    * the doc's context position in score order). */
+  private val ragRankedCtes =
+    s"""$batchQtCte, byq AS (
        |  SELECT qt.query_id, scored.doc_id, scored.dl,
        |         CAST(SUM(CAST(scored.rscore AS DECIMAL(30,6))) AS DOUBLE)
        |           AS score
@@ -302,7 +304,10 @@ object Retrieval {
        |           AS BIGINT) AS ctx_pos,
        |         doc_id, dl, score
        |  FROM byq
-       |), packed AS (
+       |)""".stripMargin
+
+  private val ragContextOracle =
+    s"""${bm25Sql(batchTerms)}, $ragRankedCtes, packed AS (
        |  SELECT query_id, ctx_pos, doc_id, dl, score,
        |         CAST(SUM(dl) OVER (PARTITION BY query_id ORDER BY ctx_pos
        |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -312,7 +317,6 @@ object Retrieval {
        |SELECT query_id, ctx_pos, doc_id, dl, cum_tokens, score
        |FROM packed WHERE cum_tokens <= $RAG_BUDGET
        |ORDER BY query_id, ctx_pos""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q167
 
@@ -391,27 +395,8 @@ object Retrieval {
       .orderBy($"query_id", $"ctx_pos")
   }
 
-  private val ragContextBpeOracle = {
-    val allTerms = QUERY_BATCH.flatMap(_._2).distinct.sorted
-    val values = QUERY_BATCH
-      .flatMap { case (qid, ts) => ts.map(t => s"($qid, '$t')") }
-      .mkString(", ")
-    s"""${bm25Sql(allTerms)}, ${Terms.bpeDocCountCtes}, qt AS (
-       |  SELECT CAST(query_id AS BIGINT) AS query_id, term
-       |  FROM (VALUES $values) AS v(query_id, term)
-       |), byq AS (
-       |  SELECT qt.query_id, scored.doc_id, scored.dl,
-       |         CAST(SUM(CAST(scored.rscore AS DECIMAL(30,6))) AS DOUBLE)
-       |           AS score
-       |  FROM scored JOIN qt ON scored.term = qt.term
-       |  GROUP BY 1, 2, 3
-       |), ranked AS (
-       |  SELECT query_id, CAST(ROW_NUMBER() OVER (
-       |           PARTITION BY query_id ORDER BY score DESC, doc_id ASC)
-       |           AS BIGINT) AS ctx_pos,
-       |         doc_id, dl, score
-       |  FROM byq
-       |), packed AS (
+  private val ragContextBpeOracle =
+    s"""${bm25Sql(batchTerms)}, ${Terms.bpeDocCountCtes}, $ragRankedCtes, packed AS (
        |  SELECT r.query_id, r.ctx_pos, r.doc_id, r.dl,
        |         d.n_tokens_bpe AS n_tokens, r.score,
        |         CAST(SUM(d.n_tokens_bpe) OVER (
@@ -424,7 +409,6 @@ object Retrieval {
        |SELECT query_id, ctx_pos, doc_id, dl, n_tokens, cum_tokens, score
        |FROM packed WHERE cum_tokens <= $RAG_BUDGET_BPE
        |ORDER BY query_id, ctx_pos""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q125
 
@@ -446,32 +430,8 @@ object Retrieval {
     java.lang.Long.parseLong(hex.take(8), 16) % N_BUCKETS
   }
 
-  /** One live temp index dir per JVM (the q91/q104 lifecycle: previous
-    * dir deleted on the next invocation, last one on JVM exit; a
-    * DataFrame returned by an earlier invocation must be fully consumed
-    * before the next — how every driver uses it). */
-  private val liveIdxDir =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private lazy val idxReaper: Unit = {
-    sys.addShutdownHook(Option(liveIdxDir.get).foreach(deleteLocalDir))
-    ()
-  }
-  private def deleteLocalDir(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-  private def nextIdxDir(): String = {
-    idxReaper
-    val d = java.nio.file.Files
-      .createTempDirectory("graft_q125_index").toString
-    Option(liveIdxDir.getAndSet(d)).foreach(deleteLocalDir)
-    d
-  }
+  private val liveIdxDir = new graft.LiveDirSlot("graft_q125_index")
+  private val liveIncrementDir = new graft.LiveDirSlot("graft_q126_index")
 
   /** Build the FULL inverted index from a (doc_id, text) frame into
     * `idx`: postings (doc_id, dl, term, tf) partitioned by the term-hash
@@ -526,7 +486,7 @@ object Retrieval {
     * scan result exactly (same [[rankTopK]] tail, same inputs by
     * construction). */
   def bm25ServeIndex(spark: SparkSession, dir: String): DataFrame = {
-    val idx = nextIdxDir()
+    val idx = liveIdxDir.next()
     writeIndexOf(docs(spark, dir), idx)
     serveFrom(spark, idx, QUERY_TERMS)
   }
@@ -546,7 +506,7 @@ object Retrieval {
     import spark.implicits._
     val corpus = docs(spark, dir)
     val cut = corpus.agg(expr("max(doc_id) * 4 div 5")).head().getLong(0)
-    val idx = nextIdxDir()
+    val idx = liveIncrementDir.next()
     writeIndexOf(corpus.filter($"doc_id" < cut), idx)
     // the increment: one batch scan → posting append + stats merge
     val batch = corpus.filter($"doc_id" >= cut)

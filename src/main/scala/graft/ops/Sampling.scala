@@ -722,8 +722,7 @@ object Sampling {
 
   // ---------------------------------------------------------------- q159
 
-  private val liveReservoirDir =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
+  private val liveReservoirDir = new graft.LiveDirSlot("graft_q159_reservoir")
 
   /** T1 for the q155 reservoir — the q142 rank-cap merge identity with a
     * ROW-INTRINSIC key, which makes it exact rather than conditional:
@@ -762,16 +761,7 @@ object Sampling {
     import spark.implicits._
     val corpus = docs(spark, dir).select($"doc_id", $"lang", $"n_chars")
     val cut = corpus.agg(expr("max(doc_id) * 4 div 5")).head().getLong(0)
-    val rp = java.nio.file.Files
-      .createTempDirectory("graft_q159_reservoir").toString
-    Option(liveReservoirDir.getAndSet(rp)).foreach { old =>
-      val p = java.nio.file.Paths.get(old)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    val rp = liveReservoirDir.next()
     // stored state: the prefix corpus's reservoir, ranks dropped (they
     // recompute on merge)
     reservoirRank(reservoirKeyed(corpus.filter($"doc_id" < cut)))
@@ -909,10 +899,7 @@ object Sampling {
 
   // ---------------------------------------------------------------- q142
 
-  /** One live stored-keep-list dir per JVM (the q125/q134 reaper
-    * pattern: each run replaces the previous run's scratch). */
-  private val liveCapDir =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
+  private val liveCapDir = new graft.LiveDirSlot("graft_q142_keep")
 
   /** q142: T1 for the per-source cap — incremental maintenance of the
     * q139 keep list. A rank cap is a MERGEABLE summary: because the
@@ -958,16 +945,7 @@ object Sampling {
     import spark.implicits._
     val corpus = docs(spark, dir).select($"doc_id", $"source", $"n_chars")
     val cut = corpus.agg(expr("max(doc_id) * 4 div 5")).head().getLong(0)
-    val kp = java.nio.file.Files
-      .createTempDirectory("graft_q142_keep").toString
-    Option(liveCapDir.getAndSet(kp)).foreach { old =>
-      val p = java.nio.file.Paths.get(old)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    val kp = liveCapDir.next()
     val byQuality = Window.partitionBy($"source")
       .orderBy($"n_chars".desc, $"doc_id")
     // stored state: the prefix corpus's keep list, ranks dropped (they

@@ -128,11 +128,14 @@ object Scrub {
         ($"n_eval_hits".isNull).as("clean"))
   }
 
-  private val decontaminateOracle = {
+  /** Oracle CTEs `tagged` (`cols` plus is_eval, the salted-hash eval
+    * tag), `t` and `s` (doc_id, is_eval, sh): each doc's distinct 3-token
+    * shingles. */
+  private def evalShingleCtes(cols: String): String = {
     val key = Dx.sqlHex2Long(
       s"md5('$EVAL_SALT' || CAST(doc_id AS VARCHAR))", 8)
-    s"""WITH tagged AS (
-       |  SELECT doc_id, lang, source, text,
+    s"""tagged AS (
+       |  SELECT $cols,
        |         CASE WHEN $key < $EVAL_THRESHOLD THEN 1 ELSE 0 END AS is_eval
        |  FROM documents
        |), t AS (SELECT doc_id, is_eval, string_split(text, ' ') AS ws
@@ -141,7 +144,11 @@ object Scrub {
        |        SELECT doc_id, is_eval,
        |               unnest(list_transform(range(1, len(ws) - 1),
        |                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-       |        FROM t WHERE len(ws) >= 3)),
+       |        FROM t WHERE len(ws) >= 3))""".stripMargin
+  }
+
+  private val decontaminateOracle =
+    s"""WITH ${evalShingleCtes("doc_id, lang, source, text")},
        |marked AS (
        |  SELECT doc_id, is_eval,
        |         MAX(is_eval) OVER (PARTITION BY sh) AS has_eval
@@ -155,7 +162,6 @@ object Scrub {
        |FROM tagged d LEFT JOIN hits h ON d.doc_id = h.doc_id
        |WHERE d.is_eval = 0
        |ORDER BY d.doc_id""".stripMargin
-  }
 
   // ---------------------------------------------------------------- q81
 
@@ -352,20 +358,8 @@ object Scrub {
       .orderBy($"doc_id", $"eval_id")
   }
 
-  private val provenanceOracle = {
-    val key = Dx.sqlHex2Long(
-      s"md5('$EVAL_SALT' || CAST(doc_id AS VARCHAR))", 8)
-    s"""WITH tagged AS (
-       |  SELECT doc_id, text,
-       |         CASE WHEN $key < $EVAL_THRESHOLD THEN 1 ELSE 0 END AS is_eval
-       |  FROM documents
-       |), t AS (SELECT doc_id, is_eval, string_split(text, ' ') AS ws
-       |         FROM tagged),
-       |s AS (SELECT DISTINCT doc_id, is_eval, sh FROM (
-       |        SELECT doc_id, is_eval,
-       |               unnest(list_transform(range(1, len(ws) - 1),
-       |                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-       |        FROM t WHERE len(ws) >= 3)),
+  private val provenanceOracle =
+    s"""WITH ${evalShingleCtes("doc_id, text")},
        |e AS (
        |  SELECT doc_id AS eval_id, sh,
        |         CAST(COUNT(*) OVER (PARTITION BY doc_id) AS BIGINT) AS eval_n
@@ -380,7 +374,6 @@ object Scrub {
        |       CAST(n_shared AS DOUBLE) / CAST(eval_n AS DOUBLE)
        |         AS containment
        |FROM p ORDER BY doc_id, eval_id""".stripMargin
-  }
 
   val all: Seq[Query] = Seq(
     Query("q75_decontamination",

@@ -169,9 +169,7 @@ object Sketch {
       .withColumn("est", lit(EST_NUM) / col("z_scaled").cast("double"))
       .select(col("n_regs"), col("z_scaled"), col("est"))
 
-  /** One live stored-sketch dir per JVM (the q125 reaper pattern). */
-  private val liveSkDir =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
+  private val liveSkDir = new graft.LiveDirSlot("graft_q134_sketch")
 
   /** q134: T1 for the cardinality sketch — the register table IS the
     * mergeable artifact HLL exists for, so incremental maintenance is:
@@ -191,16 +189,7 @@ object Sketch {
     import spark.implicits._
     val corpus = docs(spark, dir)
     val cut = corpus.agg(expr("max(doc_id) * 4 div 5")).head().getLong(0)
-    val sk = java.nio.file.Files
-      .createTempDirectory("graft_q134_sketch").toString
-    Option(liveSkDir.getAndSet(sk)).foreach { old =>
-      val p = java.nio.file.Paths.get(old)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    val sk = liveSkDir.next()
     hllRegs(corpus.filter($"doc_id" < cut)).write
       .mode("overwrite").parquet(s"$sk/q134_registers")
     val batchRegs = hllRegs(corpus.filter($"doc_id" >= cut))

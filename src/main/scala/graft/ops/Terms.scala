@@ -660,7 +660,28 @@ object Terms {
     * CROSS-MODULE oracles (q167 composes it with the BM25 CTEs; the
     * CTE names — w0, pN, bN, wN, tok, bpedoc — are disjoint from
     * [[Retrieval]]'s). */
-  private[ops] def bpeDocCountCtes: String = {
+  private[ops] def bpeDocCountCtes: String =
+    s"""${bpeRuleCtes()},
+       |tok AS (
+       |  SELECT doc_id,
+       |         CAST(len(string_split($bpeAppliedSql, '  ')) - 2 AS BIGINT)
+       |           AS w_tokens
+       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+       |        FROM documents),
+       |       $bpeRuleJoin
+       |  WHERE length(w) > 0
+       |),
+       |bpedoc AS (
+       |  SELECT doc_id, CAST(SUM(w_tokens) AS BIGINT) AS n_tokens_bpe
+       |  FROM tok GROUP BY doc_id
+       |)""".stripMargin
+
+  /** The trained BPE rules replayed as oracle CTEs: `w0` (the char-split
+    * word vocabulary), then per round `pN` (pair counts), `bN` (the
+    * winning pair, columns `bCols(N)`) and `wN` (the vocabulary after
+    * that merge). */
+  private def bpeRuleCtes(
+      bCols: Int => String = _ => "lft, rgt, lft || rgt AS merged"): String = {
     val rounds = (1 to BPE_ROUNDS).map { i =>
       s"""p$i AS (
          |  SELECT l[i] AS lft, l[i + 1] AS rgt,
@@ -669,7 +690,7 @@ object Terms {
          |       unnest(range(2, len(l) - 1)) AS u(i)
          |  GROUP BY 1, 2
          |), b$i AS (
-         |  SELECT lft, rgt, lft || rgt AS merged
+         |  SELECT ${bCols(i)}
          |  FROM p$i ORDER BY cnt DESC, lft, rgt LIMIT 1
          |), w$i AS (
          |  SELECT replace(sym, ' ' || b$i.lft || '  ' || b$i.rgt || ' ',
@@ -677,13 +698,6 @@ object Terms {
          |  FROM w${i - 1}, b$i
          |)""".stripMargin
     }.mkString(",\n")
-    val appliedSql = (1 to BPE_ROUNDS).foldLeft(
-      """'  ' || array_to_string(list_transform(range(1, length(w) + 1),
-        |                        i -> substr(w, i, 1)), '  ') || '  '"""
-        .stripMargin) { (acc, i) =>
-      s"replace($acc, ' ' || b$i.lft || '  ' || b$i.rgt || ' ', ' ' || b$i.merged || ' ')"
-    }
-    val bJoin = (1 to BPE_ROUNDS).map(i => s"b$i").mkString(", ")
     s"""w0 AS (
        |  SELECT '  ' || array_to_string(
        |           list_transform(range(1, length(w) + 1),
@@ -693,65 +707,32 @@ object Terms {
        |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
        |  WHERE length(w) > 0 GROUP BY 1
        |),
-       |$rounds,
-       |tok AS (
-       |  SELECT doc_id,
-       |         CAST(len(string_split($appliedSql, '  ')) - 2 AS BIGINT)
-       |           AS w_tokens
-       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-       |        FROM documents),
-       |       $bJoin
-       |  WHERE length(w) > 0
-       |),
-       |bpedoc AS (
-       |  SELECT doc_id, CAST(SUM(w_tokens) AS BIGINT) AS n_tokens_bpe
-       |  FROM tok GROUP BY doc_id
-       |)""".stripMargin
+       |$rounds""".stripMargin
   }
 
-  private val bpeTokenizeOracle = {
-    // the trained rules replayed as the q120 CTE chain, then applied as a
-    // 6-deep replace over each word's char-split symbol string
-    val rounds = (1 to BPE_ROUNDS).map { i =>
-      s"""p$i AS (
-         |  SELECT l[i] AS lft, l[i + 1] AS rgt,
-         |         CAST(SUM(freq) AS BIGINT) AS cnt
-         |  FROM (SELECT string_split(sym, '  ') AS l, freq FROM w${i - 1}),
-         |       unnest(range(2, len(l) - 1)) AS u(i)
-         |  GROUP BY 1, 2
-         |), b$i AS (
-         |  SELECT lft, rgt, lft || rgt AS merged
-         |  FROM p$i ORDER BY cnt DESC, lft, rgt LIMIT 1
-         |), w$i AS (
-         |  SELECT replace(sym, ' ' || b$i.lft || '  ' || b$i.rgt || ' ',
-         |                 ' ' || b$i.merged || ' ') AS sym, freq
-         |  FROM w${i - 1}, b$i
-         |)""".stripMargin
-    }.mkString(",\n")
-    val appliedSql = (1 to BPE_ROUNDS).foldLeft(
-      """'  ' || array_to_string(list_transform(range(1, length(w) + 1),
-        |                        i -> substr(w, i, 1)), '  ') || '  '"""
-        .stripMargin) { (acc, i) =>
-      s"replace($acc, ' ' || b$i.lft || '  ' || b$i.rgt || ' ', ' ' || b$i.merged || ' ')"
-    }
-    val bJoin = (1 to BPE_ROUNDS).map(i => s"b$i").mkString(", ")
-    s"""WITH w0 AS (
-       |  SELECT '  ' || array_to_string(
-       |           list_transform(range(1, length(w) + 1),
-       |                          i -> substr(w, i, 1)), '  ') || '  '
-       |           AS sym,
-       |         CAST(COUNT(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-       |  WHERE length(w) > 0 GROUP BY 1
-       |),
-       |$rounds,
+  /** A word `w`'s symbol string with every rule of [[bpeRuleCtes]]
+    * applied in order: a [[BPE_ROUNDS]]-deep replace over its char split,
+    * reading the `bN` CTEs cross-joined as [[bpeRuleJoin]]. */
+  private val bpeAppliedSql = (1 to BPE_ROUNDS).foldLeft(
+    """'  ' || array_to_string(list_transform(range(1, length(w) + 1),
+      |                        i -> substr(w, i, 1)), '  ') || '  '"""
+      .stripMargin) { (acc, i) =>
+    s"replace($acc, ' ' || b$i.lft || '  ' || b$i.rgt || ' ', ' ' || b$i.merged || ' ')"
+  }
+
+  private val bpeRuleJoin = (1 to BPE_ROUNDS).map(i => s"b$i").mkString(", ")
+
+  // the trained rules replayed as the q120 CTE chain, then applied as a
+  // 6-deep replace over each word's char-split symbol string
+  private val bpeTokenizeOracle =
+    s"""WITH ${bpeRuleCtes()},
        |tok AS (
        |  SELECT doc_id, n_chars,
-       |         CAST(len(string_split($appliedSql, '  ')) - 2 AS BIGINT)
+       |         CAST(len(string_split($bpeAppliedSql, '  ')) - 2 AS BIGINT)
        |           AS w_tokens
        |  FROM (SELECT doc_id, n_chars, unnest(string_split(text, ' ')) AS w
        |        FROM documents),
-       |       $bJoin
+       |       $bpeRuleJoin
        |  WHERE length(w) > 0
        |)
        |SELECT doc_id, CAST(MAX(n_chars) AS BIGINT) AS n_chars,
@@ -760,52 +741,19 @@ object Terms {
        |       CAST(MAX(n_chars) AS DOUBLE) / SUM(w_tokens)
        |         AS chars_per_token
        |FROM tok GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
 
-  private val bpeFertilityOracle = {
-    // the q121 scaffolding (trained rules replayed as CTEs, K-replace
-    // apply) with lang carried, doc-grain rollup, then the lang rollup
-    val rounds = (1 to BPE_ROUNDS).map { i =>
-      s"""p$i AS (
-         |  SELECT l[i] AS lft, l[i + 1] AS rgt,
-         |         CAST(SUM(freq) AS BIGINT) AS cnt
-         |  FROM (SELECT string_split(sym, '  ') AS l, freq FROM w${i - 1}),
-         |       unnest(range(2, len(l) - 1)) AS u(i)
-         |  GROUP BY 1, 2
-         |), b$i AS (
-         |  SELECT lft, rgt, lft || rgt AS merged
-         |  FROM p$i ORDER BY cnt DESC, lft, rgt LIMIT 1
-         |), w$i AS (
-         |  SELECT replace(sym, ' ' || b$i.lft || '  ' || b$i.rgt || ' ',
-         |                 ' ' || b$i.merged || ' ') AS sym, freq
-         |  FROM w${i - 1}, b$i
-         |)""".stripMargin
-    }.mkString(",\n")
-    val appliedSql = (1 to BPE_ROUNDS).foldLeft(
-      """'  ' || array_to_string(list_transform(range(1, length(w) + 1),
-        |                        i -> substr(w, i, 1)), '  ') || '  '"""
-        .stripMargin) { (acc, i) =>
-      s"replace($acc, ' ' || b$i.lft || '  ' || b$i.rgt || ' ', ' ' || b$i.merged || ' ')"
-    }
-    val bJoin = (1 to BPE_ROUNDS).map(i => s"b$i").mkString(", ")
-    s"""WITH w0 AS (
-       |  SELECT '  ' || array_to_string(
-       |           list_transform(range(1, length(w) + 1),
-       |                          i -> substr(w, i, 1)), '  ') || '  '
-       |           AS sym,
-       |         CAST(COUNT(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-       |  WHERE length(w) > 0 GROUP BY 1
-       |),
-       |$rounds,
+  // the q121 scaffolding (trained rules replayed as CTEs, K-replace
+  // apply) with lang carried, doc-grain rollup, then the lang rollup
+  private val bpeFertilityOracle =
+    s"""WITH ${bpeRuleCtes()},
        |tok AS (
        |  SELECT doc_id, lang, n_chars,
-       |         CAST(len(string_split($appliedSql, '  ')) - 2 AS BIGINT)
+       |         CAST(len(string_split($bpeAppliedSql, '  ')) - 2 AS BIGINT)
        |           AS w_tokens
        |  FROM (SELECT doc_id, lang, n_chars,
        |               unnest(string_split(text, ' ')) AS w
        |        FROM documents),
-       |       $bJoin
+       |       $bpeRuleJoin
        |  WHERE length(w) > 0
        |), perdoc AS (
        |  SELECT doc_id, lang, CAST(MAX(n_chars) AS BIGINT) AS n_chars,
@@ -822,40 +770,15 @@ object Terms {
        |       CAST(SUM(n_tokens_bpe) AS DOUBLE) / CAST(SUM(n_words) AS DOUBLE)
        |         AS fertility
        |FROM perdoc GROUP BY lang ORDER BY lang""".stripMargin
-  }
 
+  // the same loop as chained CTEs: w0 = char-split vocab, each round
+  // picks its best pair and rewrites the words for the next
   private val bpeOracle = {
-    // the same loop as chained CTEs: w0 = char-split vocab, each round
-    // picks its best pair and rewrites the words for the next
-    val rounds = (1 to BPE_ROUNDS).map { i =>
-      s"""p$i AS (
-         |  SELECT l[i] AS lft, l[i + 1] AS rgt,
-         |         CAST(SUM(freq) AS BIGINT) AS cnt
-         |  FROM (SELECT string_split(sym, '  ') AS l, freq FROM w${i - 1}),
-         |       unnest(range(2, len(l) - 1)) AS u(i)
-         |  GROUP BY 1, 2
-         |), b$i AS (
-         |  SELECT CAST($i AS BIGINT) AS merge_rank, lft, rgt,
-         |         lft || rgt AS merged, cnt
-         |  FROM p$i ORDER BY cnt DESC, lft, rgt LIMIT 1
-         |), w$i AS (
-         |  SELECT replace(sym, ' ' || b$i.lft || '  ' || b$i.rgt || ' ',
-         |                 ' ' || b$i.merged || ' ') AS sym, freq
-         |  FROM w${i - 1}, b$i
-         |)""".stripMargin
-    }.mkString(",\n")
     val unions = (1 to BPE_ROUNDS)
       .map(i => s"SELECT * FROM b$i").mkString("\nUNION ALL ")
-    s"""WITH w0 AS (
-       |  SELECT '  ' || array_to_string(
-       |           list_transform(range(1, length(w) + 1),
-       |                          i -> substr(w, i, 1)), '  ') || '  '
-       |           AS sym,
-       |         CAST(COUNT(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-       |  WHERE length(w) > 0 GROUP BY 1
-       |),
-       |$rounds
+    val ranked = bpeRuleCtes(i =>
+      s"CAST($i AS BIGINT) AS merge_rank, lft, rgt,\n         lft || rgt AS merged, cnt")
+    s"""WITH $ranked
        |SELECT merge_rank, lft AS "left", rgt AS "right", merged, cnt AS pair_count
        |FROM ($unions)
        |ORDER BY merge_rank""".stripMargin
@@ -1074,12 +997,15 @@ object Terms {
       .orderBy($"doc_id")
   }
 
-  private val perplexityOracle =
-    s"""WITH t AS (
+  /** Oracle CTEs of the add-one bigram model: `bg` (doc_id, `bgCols`
+    * over the occurrence struct `b`), `model` (w1, w2, c2), `m2` (adds
+    * c1, the w1 count) and `v` (the vocabulary size). */
+  private def bigramModelCtes(bgCols: String): String =
+    s"""t AS (
        |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
        |  WHERE len(string_split(text, ' ')) >= 2
        |), bg AS (
-       |  SELECT doc_id, b.pos AS pos, b.w1 AS w1, b.w2 AS w2
+       |  SELECT doc_id, $bgCols
        |  FROM (SELECT doc_id, unnest(list_transform(range(1, len(ws)),
        |          i -> {'pos': i, 'w1': ws[i], 'w2': ws[i + 1]})) AS b
        |        FROM t)
@@ -1093,7 +1019,10 @@ object Terms {
        |), v AS (
        |  SELECT CAST(COUNT(DISTINCT w) AS BIGINT) AS v FROM
        |    (SELECT w1 AS w FROM model UNION SELECT w2 AS w FROM model)
-       |), m3 AS (
+       |)""".stripMargin
+
+  private val perplexityOracle =
+    s"""WITH ${bigramModelCtes("b.pos AS pos, b.w1 AS w1, b.w2 AS w2")}, m3 AS (
        |  SELECT w1, w2, c2, CAST(c2 + 1 AS BIGINT) AS la,
        |         CAST(c1 + v.v AS BIGINT) AS lb
        |  FROM m2 CROSS JOIN v
@@ -1118,8 +1047,7 @@ object Terms {
 
   // ---------------------------------------------------------------- q148
 
-  private val liveModelDir =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
+  private val liveModelDir = new graft.LiveDirSlot("graft_q148_model")
 
   /** T1 for the q145 LM: incremental MODEL maintenance. Bigram counts
     * are a SUM-MERGEABLE summary — counts(A∪B) = key-merge of summed
@@ -1145,16 +1073,7 @@ object Terms {
     import spark.implicits._
     val corpus = docs(spark, dir)
     val cut = corpus.agg(expr("max(doc_id) * 4 div 5")).head().getLong(0)
-    val sk = java.nio.file.Files
-      .createTempDirectory("graft_q148_model").toString
-    Option(liveModelDir.getAndSet(sk)).foreach { old =>
-      val p = java.nio.file.Paths.get(old)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    val sk = liveModelDir.next()
     // setup: the stored model artifact, as a prior load would have left it
     bigramCounts(bigramFrame(corpus.filter($"doc_id" < cut)))
       .write.mode("overwrite").parquet(s"$sk/q148_model")
@@ -1171,25 +1090,7 @@ object Terms {
   /** Oracle = the FULL-CORPUS model recompute: stored ⊎ batch merge must
     * be indistinguishable from never having split the corpus. */
   private val modelIncrementOracle =
-    s"""WITH t AS (
-       |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-       |  WHERE len(string_split(text, ' ')) >= 2
-       |), bg AS (
-       |  SELECT doc_id, b.w1 AS w1, b.w2 AS w2
-       |  FROM (SELECT doc_id, unnest(list_transform(range(1, len(ws)),
-       |          i -> {'pos': i, 'w1': ws[i], 'w2': ws[i + 1]})) AS b
-       |        FROM t)
-       |), model AS (
-       |  SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c2
-       |  FROM bg GROUP BY 1, 2
-       |), m2 AS (
-       |  SELECT w1, w2, c2,
-       |         CAST(SUM(c2) OVER (PARTITION BY w1) AS BIGINT) AS c1
-       |  FROM model
-       |), v AS (
-       |  SELECT CAST(COUNT(DISTINCT w) AS BIGINT) AS v FROM
-       |    (SELECT w1 AS w FROM model UNION SELECT w2 AS w FROM model)
-       |), m3 AS (
+    s"""WITH ${bigramModelCtes("b.w1 AS w1, b.w2 AS w2")}, m3 AS (
        |  SELECT w1, w2, c2, c1, CAST(c2 + 1 AS BIGINT) AS la,
        |         CAST(c1 + v.v AS BIGINT) AS lb
        |  FROM m2 CROSS JOIN v

@@ -428,6 +428,23 @@ object TextPipeline {
   def winnowFingerprintsMd5(spark: SparkSession, dir: String): DataFrame =
     winnowSummary(winnowSets(docs(spark, dir)))
 
+  /** Winnow oracle tail over `hs` (doc_id, hs: the k-gram hashes): the
+    * window-minimum fingerprint set and [[winnowSummary]]'s columns. */
+  private def winnowSummarySql: String =
+    s"""fps AS (
+       |  SELECT doc_id, hs,
+       |         list_distinct(list_transform(range(1, len(hs) - $WINNOW_W + 2),
+       |                       j -> list_min(hs[j:j+${WINNOW_W - 1}]))) AS fps
+       |  FROM hs
+       |)
+       |SELECT doc_id,
+       |       CAST(len(hs) AS BIGINT) AS n_kgrams,
+       |       CAST(len(fps) AS BIGINT) AS n_fingerprints,
+       |       CAST(list_min(fps) AS BIGINT) AS min_fp,
+       |       CAST(list_max(fps) AS BIGINT) AS max_fp,
+       |       CAST(list_sum(fps) AS BIGINT) AS fp_sum
+       |FROM fps ORDER BY doc_id""".stripMargin
+
   /** DuckDB replay of [[winnowSetsPoly]]: the k-gram polynomial is a
     * HUGEINT power-sum `Σ code[i+j]·B^(K−1−j) mod M` — identical to
     * Spark's incremental `(acc·B + c) mod M` fold by modular identity. */
@@ -446,19 +463,7 @@ object TextPipeline {
        |         list_transform(range(1, len(codes) - $WINNOW_K + 2),
        |                        i -> CAST(($terms) % $POLY_M AS BIGINT)) AS hs
        |  FROM cs
-       |), fps AS (
-       |  SELECT doc_id, hs,
-       |         list_distinct(list_transform(range(1, len(hs) - $WINNOW_W + 2),
-       |                       j -> list_min(hs[j:j+${WINNOW_W - 1}]))) AS fps
-       |  FROM hs
-       |)
-       |SELECT doc_id,
-       |       CAST(len(hs) AS BIGINT) AS n_kgrams,
-       |       CAST(len(fps) AS BIGINT) AS n_fingerprints,
-       |       CAST(list_min(fps) AS BIGINT) AS min_fp,
-       |       CAST(list_max(fps) AS BIGINT) AS max_fp,
-       |       CAST(list_sum(fps) AS BIGINT) AS fp_sum
-       |FROM fps ORDER BY doc_id""".stripMargin
+       |), $winnowSummarySql""".stripMargin
   }
 
   private val winnowOracle = {
@@ -468,19 +473,7 @@ object TextPipeline {
        |         list_transform(range(1, len(text) - $WINNOW_K + 2),
        |                        i -> $h) AS hs
        |  FROM documents WHERE len(text) >= ${WINNOW_K + WINNOW_W - 1}
-       |), fps AS (
-       |  SELECT doc_id, hs,
-       |         list_distinct(list_transform(range(1, len(hs) - $WINNOW_W + 2),
-       |                       j -> list_min(hs[j:j+${WINNOW_W - 1}]))) AS fps
-       |  FROM hs
-       |)
-       |SELECT doc_id,
-       |       CAST(len(hs) AS BIGINT) AS n_kgrams,
-       |       CAST(len(fps) AS BIGINT) AS n_fingerprints,
-       |       CAST(list_min(fps) AS BIGINT) AS min_fp,
-       |       CAST(list_max(fps) AS BIGINT) AS max_fp,
-       |       CAST(list_sum(fps) AS BIGINT) AS fp_sum
-       |FROM fps ORDER BY doc_id""".stripMargin
+       |), $winnowSummarySql""".stripMargin
   }
 
   // ---------------------------------------------------------------- q26
@@ -671,14 +664,7 @@ object TextPipeline {
   }
 
   private def curationFunnelOracle =
-    s"""WITH exact_drop AS (
-       |  SELECT doc_id FROM (
-       |    SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY md5(text)
-       |                                      ORDER BY doc_id) AS rn
-       |    FROM documents) WHERE rn > 1
-       |), near AS (${bruteForceNearDupSql(NEARDUP_THRESHOLD)
-         .replace("ORDER BY doc_a, doc_b", "")}
-       |), drops AS (
+    s"""WITH $dropEvidenceCtes, drops AS (
        |  SELECT doc_id FROM exact_drop
        |  UNION SELECT doc_b AS doc_id FROM near
        |), f AS (
@@ -718,14 +704,7 @@ object TextPipeline {
        |FROM m ORDER BY stage_idx""".stripMargin
 
   private def curationVerdictOracle =
-    s"""WITH exact_drop AS (
-       |  SELECT doc_id FROM (
-       |    SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY md5(text)
-       |                                      ORDER BY doc_id) AS rn
-       |    FROM documents) WHERE rn > 1
-       |), near AS (${bruteForceNearDupSql(NEARDUP_THRESHOLD)
-         .replace("ORDER BY doc_a, doc_b", "")}
-       |), drops AS (
+    s"""WITH $dropEvidenceCtes, drops AS (
        |  SELECT doc_id FROM exact_drop
        |  UNION SELECT doc_b AS doc_id FROM near
        |), q AS (
@@ -996,32 +975,11 @@ object TextPipeline {
     * scale fixtures (50k/500k docs) stay on the sketch path, so the 100×
     * curve is unchanged. The decision input is one parquet-footer
     * count-star — O(files), not O(rows), noise at any scale (the same
-    * class of runtime statistic AQE replans on). Override with system
-    * property `graft.sketch.minDocs` or env `SPARK_GRAFT_SKETCH_MIN_DOCS`
-    * (0 forces the sketch everywhere — how the equivalence unit test
-    * pins both paths to identical output on one fixture). */
+    * class of runtime statistic AQE replans on). [[shingleNearDup]]'s
+    * `sketchGate` overrides it per call (0 forces the sketch everywhere —
+    * how the equivalence unit test pins both paths to identical output
+    * on one fixture). */
   val SKETCH_MIN_DOCS: Long = 20000L
-
-  /** The deploy override, parsed defensively (round-11 verdict item 6 /
-    * ADVICE): this knob is documented as the operator's production
-    * control, so a malformed value ("20k") must fail with a diagnosis
-    * naming the knob — not a bare NumberFormatException from inside
-    * candidate planning. */
-  private[graft] def sketchMinDocs: Long = {
-    def parse(src: String, v: String): Long =
-      try v.trim.toLong
-      catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$src = '$v' is not a whole doc count; the shingleNearDup " +
-            s"sketch gate needs a plain long (default $SKETCH_MIN_DOCS; " +
-            "0 forces the sketch path everywhere)")
-      }
-    sys.props.get("graft.sketch.minDocs")
-      .map(parse("system property graft.sketch.minDocs", _))
-      .orElse(sys.env.get("SPARK_GRAFT_SKETCH_MIN_DOCS")
-        .map(parse("environment variable SPARK_GRAFT_SKETCH_MIN_DOCS", _)))
-      .getOrElse(SKETCH_MIN_DOCS)
-  }
 
   /** Session-lifetime cache behind the size gate's corpus count
     * (ADVICE round 11): without it every [[shingleNearDup]] CALL — and
@@ -1078,7 +1036,7 @@ object TextPipeline {
     *    MEETS, never a met pair's score; `shared_rare` comes from a
     *    candidate-bounded top-up join instead.
     * TextPipelineSpec pins the two paths to identical output on a mixed
-    * fixture (forced via `graft.sketch.minDocs`).
+    * fixture (forced via the `sketchGate` parameter).
     *
     * MOSTLY-HOT FALLBACK (round-4 advice; widened round 6): a cluster
     * duplicated more than maxDf times makes EVERY one of its shingles
@@ -1106,9 +1064,8 @@ object TextPipeline {
     * joins then complete the exact intersection for whoever met. */
   def shingleNearDup(spark: SparkSession, dir: String,
       maxDf: Int = MAX_SHINGLE_DF,
-      /** Explicit gate override for callers/tests (ADVICE round 11:
-        * toggling the global system property is not parallel-safe);
-        * None = the deploy default ([[sketchMinDocs]]). */
+      /** Gate override for callers and tests; None = the default
+        * gate, [[SKETCH_MIN_DOCS]]. */
       sketchGate: Option[Long] = None,
       /** Per-probe-bucket delegate budget for the hot-fallback candidate
         * join (round-16: the megadup sub-quadratic demand). The default
@@ -1146,7 +1103,7 @@ object TextPipeline {
     // out of it in passing and the rare top-up join never runs. The
     // decision input is a parquet-footer count-star: O(files), the same
     // runtime-statistic class AQE replans on.
-    val gateVal = sketchGate.getOrElse(sketchMinDocs)
+    val gateVal = sketchGate.getOrElse(SKETCH_MIN_DOCS)
     val nDocs = gateDocCount(spark, dir)
     val useSketch = nDocs >= gateVal
     // one decision log per (dir, gate): the SCALING artifacts record
@@ -1431,14 +1388,7 @@ object TextPipeline {
   }
 
   private def dedupKeepMultimodalOracle =
-    s"""WITH exact_drop AS (
-       |  SELECT doc_id FROM (
-       |    SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY md5(text)
-       |                                      ORDER BY doc_id) AS rn
-       |    FROM documents) WHERE rn > 1
-       |), near AS (${bruteForceNearDupSql(NEARDUP_THRESHOLD)
-         .replace("ORDER BY doc_a, doc_b", "")}
-       |), emb AS (
+    s"""WITH $dropEvidenceCtes, emb AS (
        |  SELECT vec_b FROM (${Ann
            .nearDupOracle(Ann.FIXTURE_NEARDUP_COS, Ann.EMBED_DIM)
            .replace("ORDER BY vec_a, vec_b", "")})
@@ -1452,14 +1402,7 @@ object TextPipeline {
        |ORDER BY doc_id""".stripMargin
 
   private val dedupKeepOracle =
-    s"""WITH exact_drop AS (
-       |  SELECT doc_id FROM (
-       |    SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY md5(text)
-       |                                      ORDER BY doc_id) AS rn
-       |    FROM documents) WHERE rn > 1
-       |), near AS (${bruteForceNearDupSql(NEARDUP_THRESHOLD)
-         .replace("ORDER BY doc_a, doc_b", "")}
-       |), drops AS (
+    s"""WITH $dropEvidenceCtes, drops AS (
        |  SELECT doc_id FROM exact_drop
        |  UNION SELECT doc_b AS doc_id FROM near
        |)
@@ -1527,25 +1470,7 @@ object TextPipeline {
     * comp(node) = min(node, reachable minimum) — ANSI-exact transitive
     * closure over the same evidence edges. */
   private def dedupComponentsOracle =
-    s"""WITH RECURSIVE exact_edges AS (
-       |  SELECT m AS a, doc_id AS b FROM (
-       |    SELECT doc_id, MIN(doc_id) OVER (PARTITION BY md5(text)) AS m
-       |    FROM documents) WHERE doc_id <> m
-       |), near AS (${bruteForceNearDupSql(NEARDUP_THRESHOLD)
-         .replace("ORDER BY doc_a, doc_b", "")}
-       |), edges AS (
-       |  SELECT a, b FROM exact_edges
-       |  UNION SELECT doc_a, doc_b FROM near
-       |  UNION SELECT b, a FROM exact_edges
-       |  UNION SELECT doc_b, doc_a FROM near
-       |), reach(node, anc) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.node, e.b FROM reach r JOIN edges e ON r.anc = e.a
-       |), comp AS (
-       |  SELECT node, LEAST(node, MIN(anc)) AS comp
-       |  FROM reach GROUP BY node
-       |)
+    s"""WITH RECURSIVE $componentCtes
        |SELECT doc_id, lang, source, n_chars FROM documents
        |WHERE doc_id NOT IN (SELECT node FROM comp WHERE comp < node)
        |ORDER BY doc_id""".stripMargin
@@ -1596,25 +1521,7 @@ object TextPipeline {
     * (n_chars DESC, doc_id) election per component over all documents
     * (untouched docs label themselves). */
   private def componentRepresentativesOracle =
-    s"""WITH RECURSIVE exact_edges AS (
-       |  SELECT m AS a, doc_id AS b FROM (
-       |    SELECT doc_id, MIN(doc_id) OVER (PARTITION BY md5(text)) AS m
-       |    FROM documents) WHERE doc_id <> m
-       |), near AS (${bruteForceNearDupSql(NEARDUP_THRESHOLD)
-         .replace("ORDER BY doc_a, doc_b", "")}
-       |), edges AS (
-       |  SELECT a, b FROM exact_edges
-       |  UNION SELECT doc_a, doc_b FROM near
-       |  UNION SELECT b, a FROM exact_edges
-       |  UNION SELECT doc_b, doc_a FROM near
-       |), reach(node, anc) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.node, e.b FROM reach r JOIN edges e ON r.anc = e.a
-       |), comp AS (
-       |  SELECT node, LEAST(node, MIN(anc)) AS comp
-       |  FROM reach GROUP BY node
-       |), lab AS (
+    s"""WITH RECURSIVE $componentCtes, lab AS (
        |  SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS comp,
        |         d.lang, d.source, d.n_chars
        |  FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
@@ -1773,20 +1680,22 @@ object TextPipeline {
         $"cleaned_text")
   }
 
-  private def spanScrubOracle =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+  /** Span-scrub oracle CTEs: `t` (doc_id, ws) and `tok` (doc_id, pos,
+    * tok, sh), sh being the [[SPAN_K]]-gram starting at pos (NULL in the
+    * tail). */
+  private def spanTokCtes: String =
+    s"""t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
        |tok AS (
        |  SELECT doc_id, i - 1 AS pos, ws[i] AS tok,
        |         CASE WHEN i + ${SPAN_K - 1} <= len(ws)
        |              THEN array_to_string(ws[i:i+${SPAN_K - 1}], ' ') END AS sh
-       |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws) + 1)) AS i FROM t)),
-       |df AS (SELECT sh, COUNT(DISTINCT doc_id) AS sdf
-       |       FROM tok WHERE sh IS NOT NULL GROUP BY 1),
-       |m AS (SELECT k.doc_id, k.pos, k.tok,
-       |             CASE WHEN d.sdf >= $SPAN_MIN_DOCS THEN 1 ELSE 0 END
-       |               AS dup_start
-       |      FROM tok k LEFT JOIN df d ON d.sh = k.sh),
-       |c AS (SELECT doc_id, pos, tok,
+       |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws) + 1)) AS i FROM t))""".stripMargin
+
+  /** Span-scrub oracle tail over `m` (doc_id, pos, tok, dup_start): a
+    * token is covered when a duplicated gram starts within the
+    * [[SPAN_K]] positions up to it; the rest is the cleaned text. */
+  private def spanCoverSql: String =
+    s"""c AS (SELECT doc_id, pos, tok,
        |             MAX(dup_start) OVER (PARTITION BY doc_id ORDER BY pos
        |               ROWS BETWEEN ${SPAN_K - 1} PRECEDING AND CURRENT ROW)
        |               AS covered
@@ -1798,6 +1707,16 @@ object TextPipeline {
        |       COALESCE(string_agg(tok, ' ' ORDER BY pos)
        |                  FILTER (WHERE covered = 0), '') AS cleaned_text
        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin
+
+  private def spanScrubOracle =
+    s"""WITH $spanTokCtes,
+       |df AS (SELECT sh, COUNT(DISTINCT doc_id) AS sdf
+       |       FROM tok WHERE sh IS NOT NULL GROUP BY 1),
+       |m AS (SELECT k.doc_id, k.pos, k.tok,
+       |             CASE WHEN d.sdf >= $SPAN_MIN_DOCS THEN 1 ELSE 0 END
+       |               AS dup_start
+       |      FROM tok k LEFT JOIN df d ON d.sh = k.sh),
+       |$spanCoverSql""".stripMargin
 
   // ---------------------------------------------------------------- q102
 
@@ -1856,30 +1775,14 @@ object TextPipeline {
   }
 
   private def spanScrubWithinOracle =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-       |tok AS (
-       |  SELECT doc_id, i - 1 AS pos, ws[i] AS tok,
-       |         CASE WHEN i + ${SPAN_K - 1} <= len(ws)
-       |              THEN array_to_string(ws[i:i+${SPAN_K - 1}], ' ') END AS sh
-       |  FROM (SELECT doc_id, ws, unnest(range(1, len(ws) + 1)) AS i FROM t)),
+    s"""WITH $spanTokCtes,
        |m AS (SELECT doc_id, pos, tok,
        |             CASE WHEN sh IS NOT NULL AND
        |                       ROW_NUMBER() OVER (PARTITION BY doc_id, sh
        |                                          ORDER BY pos) >= 2
        |                  THEN 1 ELSE 0 END AS dup_start
        |      FROM tok),
-       |c AS (SELECT doc_id, pos, tok,
-       |             MAX(dup_start) OVER (PARTITION BY doc_id ORDER BY pos
-       |               ROWS BETWEEN ${SPAN_K - 1} PRECEDING AND CURRENT ROW)
-       |               AS covered
-       |      FROM m)
-       |SELECT doc_id,
-       |       CAST(COUNT(*) AS BIGINT) AS n_tokens,
-       |       CAST(SUM(covered) AS BIGINT) AS n_covered,
-       |       CAST(SUM(covered) AS DOUBLE) / COUNT(*) AS cover_frac,
-       |       COALESCE(string_agg(tok, ' ' ORDER BY pos)
-       |                  FILTER (WHERE covered = 0), '') AS cleaned_text
-       |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin
+       |$spanCoverSql""".stripMargin
 
   // ---------------------------------------------------------------- q135
 
@@ -2170,25 +2073,7 @@ object TextPipeline {
   /** DuckDB oracle for q138: q60's closure CTEs, aggregated to the
     * impact histogram instead of the keep list. */
   private def dedupImpactOracle =
-    s"""WITH RECURSIVE exact_edges AS (
-       |  SELECT m AS a, doc_id AS b FROM (
-       |    SELECT doc_id, MIN(doc_id) OVER (PARTITION BY md5(text)) AS m
-       |    FROM documents) WHERE doc_id <> m
-       |), near AS (${bruteForceNearDupSql(NEARDUP_THRESHOLD)
-         .replace("ORDER BY doc_a, doc_b", "")}
-       |), edges AS (
-       |  SELECT a, b FROM exact_edges
-       |  UNION SELECT doc_a, doc_b FROM near
-       |  UNION SELECT b, a FROM exact_edges
-       |  UNION SELECT doc_b, doc_a FROM near
-       |), reach(node, anc) AS (
-       |  SELECT a, b FROM edges
-       |  UNION
-       |  SELECT r.node, e.b FROM reach r JOIN edges e ON r.anc = e.a
-       |), comp AS (
-       |  SELECT node, LEAST(node, MIN(anc)) AS comp
-       |  FROM reach GROUP BY node
-       |), drops AS (
+    s"""WITH RECURSIVE $componentCtes, drops AS (
        |  SELECT node AS doc_id, comp FROM comp WHERE comp < node
        |), clusters AS (
        |  SELECT dr.comp,
@@ -2288,8 +2173,11 @@ object TextPipeline {
       .select($"doc_a", $"doc_b", $"shared", $"na", $"nb", $"containment")
   }
 
-  private def containmentOracle =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+  /** q99's oracle after its `WITH`, less the ORDER BY: the rare-shingle
+    * (df ≤ [[MAX_SHINGLE_DF]]) pairs whose shared count passes the exact
+    * [[CONTAIN_NUM]]/[[CONTAIN_DEN]] containment test. */
+  private def containmentPairsSql: String =
+    s"""t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
        |s AS (SELECT DISTINCT doc_id, sh FROM (
        |        SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1),
        |                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
@@ -2307,7 +2195,10 @@ object TextPipeline {
        |FROM p
        |JOIN n na ON na.doc_id = p.doc_a
        |JOIN n nb ON nb.doc_id = p.doc_b
-       |WHERE $CONTAIN_DEN * shared >= $CONTAIN_NUM * LEAST(na.nsh, nb.nsh)
+       |WHERE $CONTAIN_DEN * shared >= $CONTAIN_NUM * LEAST(na.nsh, nb.nsh)""".stripMargin
+
+  private def containmentOracle =
+    s"""WITH $containmentPairsSql
        |ORDER BY doc_a, doc_b""".stripMargin
 
   // ---------------------------------------------------------------- q70
@@ -2372,14 +2263,7 @@ object TextPipeline {
     * convenience. */
   private def dedupIncrementOracle =
     s"""WITH split AS (SELECT MAX(doc_id) * 4 // 5 AS split_id FROM documents),
-       |exact_drop AS (
-       |  SELECT doc_id FROM (
-       |    SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY md5(text)
-       |                                      ORDER BY doc_id) AS rn
-       |    FROM documents) WHERE rn > 1
-       |), near AS (${bruteForceNearDupSql(NEARDUP_THRESHOLD)
-         .replace("ORDER BY doc_a, doc_b", "")}
-       |)
+       |$dropEvidenceCtes
        |SELECT doc_id, lang, source, n_chars,
        |       CASE WHEN is_exact THEN 'exact_dup'
        |            WHEN is_near THEN 'near_dup' END AS drop_reason,
@@ -2390,6 +2274,44 @@ object TextPipeline {
        |         d.doc_id IN (SELECT doc_b FROM near) AS is_near
        |  FROM documents d, split s WHERE d.doc_id >= s.split_id)
        |ORDER BY doc_id""".stripMargin
+
+  /** Oracle CTE `near` (doc_a, doc_b, jaccard): q57's near-dup pairs. */
+  private def nearCte: String =
+    s"""near AS (${bruteForceNearDupSql(NEARDUP_THRESHOLD)
+      .replace("ORDER BY doc_a, doc_b", "")}
+       |)""".stripMargin
+
+  /** q57's drop evidence as oracle CTEs: `exact_drop` (doc_id, every md5
+    * copy but the lowest id) and [[nearCte]]. */
+  private def dropEvidenceCtes: String =
+    s"""exact_drop AS (
+       |  SELECT doc_id FROM (
+       |    SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY md5(text)
+       |                                      ORDER BY doc_id) AS rn
+       |    FROM documents) WHERE rn > 1
+       |), $nearCte""".stripMargin
+
+  /** q60's closure as oracle CTEs, after a `WITH RECURSIVE`: the exact
+    * and near-dup evidence edges, their reachability by recursive CTE,
+    * and `comp` (node, comp) = min(node, reachable minimum). */
+  private def componentCtes: String =
+    s"""exact_edges AS (
+       |  SELECT m AS a, doc_id AS b FROM (
+       |    SELECT doc_id, MIN(doc_id) OVER (PARTITION BY md5(text)) AS m
+       |    FROM documents) WHERE doc_id <> m
+       |), $nearCte, edges AS (
+       |  SELECT a, b FROM exact_edges
+       |  UNION SELECT doc_a, doc_b FROM near
+       |  UNION SELECT b, a FROM exact_edges
+       |  UNION SELECT doc_b, doc_a FROM near
+       |), reach(node, anc) AS (
+       |  SELECT a, b FROM edges
+       |  UNION
+       |  SELECT r.node, e.b FROM reach r JOIN edges e ON r.anc = e.a
+       |), comp AS (
+       |  SELECT node, LEAST(node, MIN(anc)) AS comp
+       |  FROM reach GROUP BY node
+       |)""".stripMargin
 
   private def bruteForceNearDupSql(threshold: Double): String =
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -2409,30 +2331,7 @@ object TextPipeline {
 
   // ---------------------------------------------------------------- q104
 
-  /** One live temp index dir per JVM (the q91 lifecycle: previous dir
-    * deleted on the next invocation, last one on JVM exit). */
-  private val liveIdxDir =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private lazy val idxReaper: Unit = {
-    sys.addShutdownHook(Option(liveIdxDir.get).foreach(deleteLocalDir))
-    ()
-  }
-  private def deleteLocalDir(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
-  private def nextIdxDir(): String = {
-    idxReaper
-    val d = java.nio.file.Files
-      .createTempDirectory("graft_q104_index").toString
-    Option(liveIdxDir.getAndSet(d)).foreach(deleteLocalDir)
-    d
-  }
+  private val liveIdxDir = new graft.LiveDirSlot("graft_q104_index")
 
   /** Incremental containment-index maintenance — T1 for the INVERTED
     * INDEX, the way q70 is T1 for the dedup VERDICT and q91 for the ANN
@@ -2470,7 +2369,7 @@ object TextPipeline {
       .agg(expr("max(doc_id) * 4 div 5")).head().getLong(0)
     val sh = shingles(spark, dir)
     // ---- index build: ONE corpus-text scan, then index-derived stats
-    val idx = nextIdxDir()
+    val idx = liveIdxDir.next()
     sh.filter($"doc_id" < split)
       .write.mode("overwrite").parquet(s"$idx/postings")
     val post0 = spark.read.parquet(s"$idx/postings")
@@ -2531,25 +2430,7 @@ object TextPipeline {
     * drop side is in the new batch — increment ≡ full is the contract. */
   private def containmentIncrementOracle =
     s"""WITH split AS (SELECT MAX(doc_id) * 4 // 5 AS split_id FROM documents),
-       |t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-       |s AS (SELECT DISTINCT doc_id, sh FROM (
-       |        SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1),
-       |                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS sh
-       |        FROM t WHERE len(ws) >= $SHINGLE_K)),
-       |fr AS (SELECT sh, COUNT(*) AS df FROM s GROUP BY 1),
-       |r AS (SELECT s.doc_id, s.sh FROM s JOIN fr USING (sh)
-       |      WHERE fr.df <= $MAX_SHINGLE_DF),
-       |n AS (SELECT doc_id, COUNT(*) AS nsh FROM r GROUP BY 1),
-       |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-       |      FROM r a JOIN r b ON a.sh = b.sh AND a.doc_id < b.doc_id
-       |      GROUP BY 1, 2)
-       |SELECT doc_a, doc_b, CAST(shared AS BIGINT) AS shared,
-       |       CAST(na.nsh AS BIGINT) AS na, CAST(nb.nsh AS BIGINT) AS nb,
-       |       CAST(shared AS DOUBLE) / LEAST(na.nsh, nb.nsh) AS containment
-       |FROM p
-       |JOIN n na ON na.doc_id = p.doc_a
-       |JOIN n nb ON nb.doc_id = p.doc_b
-       |WHERE $CONTAIN_DEN * shared >= $CONTAIN_NUM * LEAST(na.nsh, nb.nsh)
+       |$containmentPairsSql
        |  AND doc_b >= (SELECT split_id FROM split)
        |ORDER BY doc_a, doc_b""".stripMargin
 

@@ -77,14 +77,8 @@ object StreamingCap {
           java.nio.file.Paths.get(stateDir, "LATEST"),
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        prev.filter(_ != v).foreach { old =>
-          val p = java.nio.file.Paths.get(stateDir, old)
-          if (java.nio.file.Files.exists(p)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-          }
-        }
+        prev.filter(_ != v).foreach(old => graft.LiveDirSlot
+          .deleteLocalDir(java.nio.file.Paths.get(stateDir, old).toString))
         ()
       }
 }

@@ -88,14 +88,8 @@ object StreamingNbModel {
       java.nio.file.Paths.get(stateDir, "LATEST"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    prev.map(_._1).filter(_ != v).foreach { old =>
-      val p = java.nio.file.Paths.get(stateDir, old)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
+    prev.map(_._1).filter(_ != v).foreach(old => graft.LiveDirSlot
+      .deleteLocalDir(java.nio.file.Paths.get(stateDir, old).toString))
   }
 
   /** The maintain loop: arriving labeled documents (doc_id, lang, text)

@@ -9,11 +9,24 @@ import scala.jdk.CollectionConverters._
   * extension settings. */
 class SessionsSpec extends AnyFunSuite {
 
+  import SessionsSpec.{mainScalaFiles, mainSources}
+
   private val call = "SparkSession.builder()"
+
+  test("SparkSession.builder() appears only in Sessions.scala") {
+    val callers = mainScalaFiles.filter(f => Files.readString(f).contains(call))
+      .map(f => mainSources.relativize(f).toString).sorted
+    assert(callers == List("graft/Sessions.scala"),
+      s"$call outside Sessions.scala; route these through " +
+        s"Sessions.builder(): ${callers.filterNot(_ == "graft/Sessions.scala")}")
+  }
+}
+
+object SessionsSpec {
 
   /** `src/main/scala` of the checkout the suite runs in: the nearest
     * ancestor of the working directory that holds it. */
-  private def mainSources: Path = {
+  def mainSources: Path = {
     var d = Paths.get("").toAbsolutePath
     while (d != null && !Files.isDirectory(d.resolve("src/main/scala")))
       d = d.getParent
@@ -21,13 +34,8 @@ class SessionsSpec extends AnyFunSuite {
     d.resolve("src/main/scala")
   }
 
-  test("SparkSession.builder() appears only in Sessions.scala") {
-    val files = Files.walk(mainSources).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toList
-    val callers = files.filter(f => Files.readString(f).contains(call))
-      .map(f => mainSources.relativize(f).toString).sorted
-    assert(callers == List("graft/Sessions.scala"),
-      s"$call outside Sessions.scala; route these through " +
-        s"Sessions.builder(): ${callers.filterNot(_ == "graft/Sessions.scala")}")
-  }
+  /** Every `.scala` file under [[mainSources]], in path order. */
+  def mainScalaFiles: List[Path] =
+    Files.walk(mainSources).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList.sorted
 }

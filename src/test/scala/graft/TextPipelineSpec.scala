@@ -675,24 +675,6 @@ class TextPipelineSpec extends SparkSpec {
     assert(pairs.toSeq == Seq((4L, 5L, 9L, 10L, 13L, 0.9)), pairs.mkString(";"))
   }
 
-  test("malformed sketch-gate override fails with a named diagnosis") {
-    // round-11 verdict item 6: the gate knob is the operator's deploy
-    // control — a typo'd value must name the knob, not surface a bare
-    // NumberFormatException from inside candidate planning.
-    System.setProperty("graft.sketch.minDocs", "20k")
-    try {
-      val e = intercept[IllegalArgumentException](TextPipeline.sketchMinDocs)
-      assert(e.getMessage.contains("graft.sketch.minDocs")
-        && e.getMessage.contains("20k"), e.getMessage)
-    } finally System.clearProperty("graft.sketch.minDocs")
-    // a well-formed override (whitespace tolerated) parses…
-    System.setProperty("graft.sketch.minDocs", " 12345 ")
-    try assert(TextPipeline.sketchMinDocs == 12345L)
-    finally System.clearProperty("graft.sketch.minDocs")
-    // …and with no override the committed default is served
-    assert(TextPipeline.sketchMinDocs == TextPipeline.SKETCH_MIN_DOCS)
-  }
-
   test("df cutoff never drops a pair the rerank would keep (fixture)") {
     // On the main fixture (max df 7 < 64) the cutoff is behavior-neutral.
     val sh = TextPipeline.shingles(spark, dir)
