@@ -50,13 +50,13 @@ object CurationPipeline {
       // verdict metadata): id-keyed left-semi against the sample survivors
       val shardInput = Tables(spark, dir, "documents")
         .join(sampled.select($"doc_id"), Seq("doc_id"), "left_semi")
-      Sinks.writeShards(shardInput, s"$outDir/shards", "doc_id", nShards)
-      // counts AFTER the write: n_sharded reads back what the loader will
-      // see, so the manifest can never overstate the shipped artifact
+      // n_sampled is counted on the shard write itself, so the manifest
+      // can never overstate the shipped artifact
+      val nSharded =
+        Sinks.writeShards(shardInput, s"$outDir/shards", "doc_id", nShards)
       val nCorpus = Tables(spark, dir, "documents").count()
       val nCurated = verdict.count()
       val nCapped = capped.count()
-      val nSharded = spark.read.parquet(s"$outDir/shards").count()
       val manifest = Seq(
         (nCorpus, nCurated, nCapped, nSharded, nShards.toLong)
       ).toDF("n_corpus", "n_curated", "n_capped", "n_sampled", "n_shards")

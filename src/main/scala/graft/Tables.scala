@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -98,69 +98,4 @@ object Tables {
       .option("lowerBound", lower).option("upperBound", upper)
       .option("numPartitions", n)
       .load()
-}
-
-/** Determinism helpers shared by every query and its DuckDB oracle.
-  *
-  * The driver hash-compares Spark output parquet against DuckDB output on
-  * the same tables (BASELINE.md "Engine acceptance targets"). Floating-point
-  * sums are order-dependent, and Spark's partial aggregation order differs
-  * from DuckDB's — so every sum over non-integral doubles goes through an
-  * exact decimal: elementwise double arithmetic (bit-identical in both
-  * engines) → cast to DECIMAL(30,6) (deterministic round-half-up for
-  * positive values in both engines) → exact, order-independent decimal sum
-  * → cast back to double (deterministic nearest). Averages divide two such
-  * deterministic doubles. This costs one extra cast in the codegen'd
-  * aggregate and keeps results reproducible at any parallelism — the same
-  * property that makes results stable across 1000-executor re-runs.
-  */
-object Dx {
-  /** Exact, order-independent sum of a double expression → double. */
-  def dsum(e: Column): Column = sum(e.cast(DecimalType(30, 6))).cast("double")
-
-  /** Decimal-exact sum kept as decimal (for window cumsums that must add
-    * exactly across frames). */
-  def decSum(e: Column): Column = sum(e.cast(DecimalType(30, 6)))
-
-  /** Exact sum of a COMPUTED (noisy) double expression. Spark casts
-    * double→decimal via the shortest string repr + HALF_UP while DuckDB
-    * expands the full binary value, so they disagree on full-precision
-    * noise (and their round() built-ins disagree on ties). Instead round to
-    * cents with pure IEEE ops — floor(x*100+0.5)/100 — which both engines
-    * evaluate bit-identically; the result is k/100 whose decimal(·,6) cast
-    * is unambiguous for |x| < 1e8. Use [[dsum]] for raw input columns, this
-    * for products/ratios. */
-  def dsum2(e: Column): Column =
-    sum((floor(e * 100.0 + 0.5) / 100.0).cast(DecimalType(30, 6))).cast("double")
-
-  /** Bit-portable round-to-cents for a computed double (see [[dsum2]]). */
-  def round2(e: Column): Column = floor(e * 100.0 + 0.5) / 100.0
-
-  /** SQL twin fragments for DuckDB oracles. */
-  def sqlDsum(e: String): String = s"CAST(SUM(CAST(($e) AS DECIMAL(30,6))) AS DOUBLE)"
-  def sqlDsum2(e: String): String =
-    s"CAST(SUM(CAST((floor(($e)*100.0 + 0.5)/100.0) AS DECIMAL(30,6))) AS DOUBLE)"
-  def sqlRound2(e: String): String = s"(floor(($e)*100.0 + 0.5)/100.0)"
-
-  /** Deterministic hash-membership key: the first 8 hex chars of
-    * md5(salt ‖ id) as a long in [0, 2³²) — the device behind stratified
-    * sampling and the eval-set carve (membership is a pure function of
-    * the row, stable under re-runs and re-partitioning). Shared here so
-    * every consumer keys the SAME 32-bit prefix; the DuckDB twin is
-    * [[sqlHex2Long]] over the same md5 expression. */
-  def hashKey(salt: String, id: Column): Column =
-    conv(substring(md5(concat(lit(salt), id.cast("string"))), 1, 8), 16, 10)
-      .cast("long")
-
-  /** DuckDB-side parse of the first `n` hex chars of expression `h` (a hex
-    * string, e.g. md5 output) into a BIGINT — DuckDB has no conv(); Spark
-    * side uses conv(substring(h,1,n),16,10). Generated as a positional
-    * polynomial so both engines agree exactly. */
-  def sqlHex2Long(h: String, n: Int): String = {
-    val terms = (1 to n).map { i =>
-      val mult = BigInt(16).pow(n - i)
-      s"(strpos('0123456789abcdef', substr($h,$i,1)) - 1) * $mult"
-    }
-    "(" + terms.mkString(" + ") + ")"
-  }
 }

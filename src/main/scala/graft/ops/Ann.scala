@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Query, Tables}
+import graft.{Dx, Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,31 +22,15 @@ import org.apache.spark.sql.functions._
   *    Expected bucket size N/2ᵖˡᵃⁿᵉˢ; tune planes so buckets fit a task,
   *    multi-probe (flip one bit) to recover recall at 100 TB.
   *
-  * Determinism: every dot product / norm is summed as cents-style
-  * fixed-point decimals (floor(x·1e12 + 0.5)/1e12 per element product,
-  * exact decimal accumulation) so the result is order-independent and
-  * bit-equal between Spark and the DuckDB oracle — same argument as
-  * [[graft.Dx.dsum2]], with 1e12 scaling because unit-vector components
-  * are ~1e-1: the nearest-double of k/1e12 rounds back to k/1e12 at
-  * decimal scale 15 since the representation error (~1e-17) is far below
-  * the 0.5e-15 rounding boundary.
+  * Determinism: every dot product / norm is summed on the 1e-12
+  * fixed-point grid ([[Dx.dotDec]]), so the result is
+  * order-independent and bit-equal between Spark and the DuckDB oracle.
   */
 object Ann {
 
   /** Number of probe queries (vec_id < NQUERIES) and neighbors kept. */
   val NQUERIES = 8
   val TOPK = 10
-
-  /** Decimal-exact sum over zip_with'ed element products (see class doc).
-    * `private[ops]`: [[Retrieval]]'s dense fusion leg (q127) scores with
-    * the same formulation so the two consumers cannot drift. */
-  private[ops] def dotDec(a: String, b: String): Column = expr(
-    s"""aggregate(
-       |  zip_with($a, $b, (x, y) ->
-       |    CAST(floor(CAST(x AS DOUBLE) * CAST(y AS DOUBLE) * 1e12 + 0.5) / 1e12
-       |         AS DECIMAL(38,15))),
-       |  CAST(0 AS DECIMAL(38,15)),
-       |  (acc, z) -> CAST(acc + z AS DECIMAL(38,15)))""".stripMargin)
 
   /** Operand type of the exact decimal metrics. Operands are bounded to
     * DECIMAL(24,15) BEFORE the arithmetic: at (38,15) inputs Spark's
@@ -61,7 +45,7 @@ object Ann {
     * centroid (or code) for a fixed vector. `nrm` is the centroid's
     * decimal squared norm column. */
   private def decMetric(nrm: String, a: String, b: String): Column =
-    (col(nrm).cast(d24) - lit(2) * dotDec(a, b).cast(d24))
+    (col(nrm).cast(d24) - lit(2) * Dx.dotDec(a, b).cast(d24))
       .cast(org.apache.spark.sql.types.DecimalType(38, 15))
 
   private def embeddings(spark: SparkSession, dir: String): DataFrame =
@@ -72,7 +56,7 @@ object Ann {
   private[ops] def withNorm(spark: SparkSession, dir: String): DataFrame =
     embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
-        dotDec("embedding", "embedding").as("nrm_dec"))
+        Dx.dotDec("embedding", "embedding").as("nrm_dec"))
 
   // ---------------------------------------------------------------- q29
 
@@ -88,7 +72,7 @@ object Ann {
     val scored = base
       .join(broadcast(queries), $"vec_id" =!= $"query_id")
       .withColumn("cosine",
-        dotDec("q_emb", "embedding").cast("double") /
+        Dx.dotDec("q_emb", "embedding").cast("double") /
           (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
     val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc)
     scored
@@ -97,9 +81,6 @@ object Ann {
       .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine", $"rnk")
       .orderBy($"query_id", $"rnk")
   }
-
-  private val prodDec =
-    "CAST(floor(CAST(%s AS DOUBLE) * CAST(%s AS DOUBLE) * 1e12 + 0.5) / 1e12 AS DECIMAL(38,15))"
 
   /** Oracle CTE `el` (vec_id, i, x): one row per embedding element,
     * `i` 1-based. */
@@ -112,7 +93,7 @@ object Ann {
   /** Oracle CTE `norms` (vec_id, nrm): the decimal squared norm over `el`. */
   private val normsCte =
     s"""norms AS (
-       |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
+       |  SELECT vec_id, SUM(${Dx.sqlProdDec("x", "x")}) AS nrm
        |  FROM el GROUP BY 1)""".stripMargin
 
   private val elNormsCtes = s"$elCte,\n$normsCte"
@@ -138,7 +119,7 @@ object Ann {
   private val candRerankSql =
     s"""dots AS (
        |  SELECT c.query_id, c.neighbor_id,
-       |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
+       |         SUM(${Dx.sqlProdDec("q.x", "e.x")}) AS dot
        |  FROM cand c
        |  JOIN el q ON q.vec_id = c.query_id
        |  JOIN el e ON e.vec_id = c.neighbor_id AND e.i = q.i
@@ -149,7 +130,7 @@ object Ann {
     s"""WITH $elNormsCtes,
        |dots AS (
        |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-       |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
+       |         SUM(${Dx.sqlProdDec("q.x", "e.x")}) AS dot
        |  FROM el q JOIN el e ON q.i = e.i AND q.vec_id <> e.vec_id
        |  WHERE q.vec_id < $NQUERIES
        |  GROUP BY 1, 2),
@@ -261,7 +242,7 @@ object Ann {
     import spark.implicits._
     val base = embeddings(spark, dir)
       .select($"vec_id", $"embedding",
-        dotDec("embedding", "embedding").as("nrm_dec"))
+        Dx.dotDec("embedding", "embedding").as("nrm_dec"))
       .withColumn("bucket", bucketCol(dim))
     val probes = array(
       col("bucket") +:
@@ -275,7 +256,7 @@ object Ann {
       .join(broadcast(queries), Seq("bucket"))
       .filter($"vec_id" =!= $"query_id")
       .withColumn("cosine",
-        dotDec("q_emb", "embedding").cast("double") /
+        Dx.dotDec("q_emb", "embedding").cast("double") /
           (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
     val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc)
     scored
@@ -409,7 +390,7 @@ object Ann {
       .filter($"cos_fast" >=
         lit(threshold) - cosineMargin(dim, $"nrm_a", $"nrm_b"))
       .withColumn("cosine",
-        dotDec("emb_a", "emb_b").cast("double") /
+        Dx.dotDec("emb_a", "emb_b").cast("double") /
           (sqrt($"nrm_a".cast("double")) * sqrt($"nrm_b".cast("double"))))
       .filter($"cosine" >= threshold)
       .select($"vec_a", $"vec_b", $"cosine")
@@ -572,7 +553,7 @@ object Ann {
        |  FROM pr JOIN b e USING (bucket)
        |  WHERE pr.vec_id < e.vec_id),
        |dots AS (
-       |  SELECT p.vec_a, p.vec_b, SUM(${prodDec.format("a.x", "e.x")}) AS dot
+       |  SELECT p.vec_a, p.vec_b, SUM(${Dx.sqlProdDec("a.x", "e.x")}) AS dot
        |  FROM pairs p
        |  JOIN el a ON a.vec_id = p.vec_a
        |  JOIN el e ON e.vec_id = p.vec_b AND e.i = a.i
@@ -662,7 +643,7 @@ object Ann {
       .join(broadcast(queryProbes), Seq("cent_id"))
       .filter($"vec_id" =!= $"query_id")
       .withColumn("cosine",
-        dotDec("q_emb", "embedding").cast("double") /
+        Dx.dotDec("q_emb", "embedding").cast("double") /
           (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc))
@@ -733,12 +714,6 @@ object Ann {
     * training/serve paths persist for `dir`. */
   def vecsTag(dir: String): String = s"ann.vecs:$dir"
 
-  /** Fixed-point decimal lift of one element (same 1e12 device as
-    * [[dotDec]] — round-half-up is engine-portable, see class doc). */
-  private def valDec(x: Column): Column =
-    (floor(x.cast("double") * 1e12 + 0.5) / 1e12)
-      .cast(org.apache.spark.sql.types.DecimalType(38, 15))
-
   /** One Lloyd iteration: assign every vector to its nearest centroid,
     * then recompute each centroid as the elementwise mean of its cell.
     *
@@ -756,11 +731,11 @@ object Ann {
     * the explode's N·dim rows never shuffle raw. Empty cells drop (the
     * standard Lloyd edge; both engines agree by construction).
     *
-    * Exactness: elements lift through [[valDec]] before the mean's sum,
+    * Exactness: elements lift through [[Dx.valDec]] before the mean's sum,
     * division by the cell count happens in double after an exact decimal
     * sum — deterministic at any parallelism, which is what lets q83's
     * oracle replay BOTH rounds bit-for-bit. */
-  /** Plain-double twin of [[dotDec]] — same index-ordered accumulation,
+  /** Plain-double twin of [[Dx.dotDec]] — same index-ordered accumulation,
     * no fixed-point lift. The deploy metric: one IEEE multiply-add per
     * element instead of decimal arithmetic. */
   private def dotDbl(a: String, b: String): Column = expr(
@@ -910,7 +885,7 @@ object Ann {
       .select($"cent_id", posexplode($"embedding"))
       .groupBy($"cent_id", $"pos")
       .agg(
-        (sum(valDec($"col")).cast("double") / count(lit(1))).as("c_val"),
+        (sum(Dx.valDec($"col")).cast("double") / count(lit(1))).as("c_val"),
         count(lit(1)).cast("long").as("n_assigned"))
   }
 
@@ -925,7 +900,7 @@ object Ann {
       .agg(transform(
         array_sort(collect_list(struct($"pos", $"c_val"))),
         s => s.getField("c_val")).as("c_emb"))
-      .withColumn("c_nrm_dec", dotDec("c_emb", "c_emb"))
+      .withColumn("c_nrm_dec", Dx.dotDec("c_emb", "c_emb"))
   }
 
   /** q83: TRAIN the IVF coarse quantizer q48 serves — [[KMEANS_ITERS]]
@@ -952,7 +927,7 @@ object Ann {
     var cents = vecs
       .filter($"vec_id" >= NQUERIES && $"vec_id" < NQUERIES + IVF_NCENTROIDS)
       .select($"vec_id".as("cent_id"), $"embedding".as("c_emb"))
-      .withColumn("c_nrm_dec", dotDec("c_emb", "c_emb"))
+      .withColumn("c_nrm_dec", Dx.dotDec("c_emb", "c_emb"))
     var flat: DataFrame = null
     for (_ <- 1 to KMEANS_ITERS) {
       flat = kmeansStep(vecs, cents, exactMetric)
@@ -1006,7 +981,7 @@ object Ann {
     var cents = seeds.getOrElse(
       vecs.filter($"vec_id" >= NQUERIES && $"vec_id" < NQUERIES + IVF_NCENTROIDS)
         .select($"vec_id".as("cent_id"), $"embedding".as("c_emb"))
-        .withColumn("c_nrm_dec", dotDec("c_emb", "c_emb")))
+        .withColumn("c_nrm_dec", Dx.dotDec("c_emb", "c_emb")))
     var iters = 0
     var converged = false
     var reseededTotal = 0L
@@ -1029,7 +1004,7 @@ object Ann {
         next = next.unionByName(
           far.join(broadcast(emptyDf), "rn")
             .select($"cent_id", $"embedding".as("c_emb"))
-            .withColumn("c_nrm_dec", dotDec("c_emb", "c_emb")))
+            .withColumn("c_nrm_dec", Dx.dotDec("c_emb", "c_emb")))
       }
       // Movement: max squared centroid shift this round. A reseed round
       // never converges (the reseeded cell moved by construction).
@@ -1053,18 +1028,16 @@ object Ann {
     * argmin over the same decimal metric, decimal-sum means. 1-based
     * `generate_subscripts` surfaces as 0-based `pos` to match Spark's
     * `posexplode`. */
-  private val xDec =
-    "CAST(floor(CAST(%s AS DOUBLE) * 1e12 + 0.5) / 1e12 AS DECIMAL(38,15))"
 
   /** One Lloyd round as CTEs, `cel$prevCel` → `cel${n+1}` (shared by the
     * q83 training oracle and q85's train→serve composition). */
   private def kmeansRoundSql(n: Int, prevCel: String): String =
     s"""cnrm$n AS (
-       |  SELECT cent_id, SUM(${prodDec.format("x", "x")}) AS nrm
+       |  SELECT cent_id, SUM(${Dx.sqlProdDec("x", "x")}) AS nrm
        |  FROM $prevCel GROUP BY 1),
        |metric$n AS (
        |  SELECT e.vec_id, c.cent_id,
-       |         CAST(n.nrm - 2 * SUM(${prodDec.format("e.x", "c.x")})
+       |         CAST(n.nrm - 2 * SUM(${Dx.sqlProdDec("e.x", "c.x")})
        |              AS DECIMAL(38,15)) AS m
        |  FROM el e
        |  JOIN $prevCel c ON c.i = e.i
@@ -1077,7 +1050,7 @@ object Ann {
        |    FROM metric$n) WHERE rn = 1),
        |cel${n + 1} AS (
        |  SELECT a.cent_id, e.i,
-       |         CAST(SUM(${xDec.format("e.x")}) AS DOUBLE) / COUNT(*) AS x,
+       |         CAST(SUM(${Dx.sqlValDec("e.x")}) AS DOUBLE) / COUNT(*) AS x,
        |         COUNT(*) AS n_assigned
        |  FROM asn$n a JOIN el e USING (vec_id)
        |  GROUP BY 1, 2)""".stripMargin
@@ -1113,11 +1086,11 @@ object Ann {
     * semantics, not cost. */
   private def hierKmeansRoundSql(n: Int): String =
     s"""cnrm$n AS (
-       |  SELECT cent_id, SUM(${prodDec.format("x", "x")}) AS nrm
+       |  SELECT cent_id, SUM(${Dx.sqlProdDec("x", "x")}) AS nrm
        |  FROM cel$n GROUP BY 1),
        |metric$n AS (
        |  SELECT e.vec_id, c.cent_id,
-       |         CAST(nn.nrm - 2 * SUM(${prodDec.format("e.x", "c.x")})
+       |         CAST(nn.nrm - 2 * SUM(${Dx.sqlProdDec("e.x", "c.x")})
        |              AS DECIMAL(38,15)) AS m
        |  FROM el e
        |  JOIN cel$n c ON c.i = e.i
@@ -1134,7 +1107,7 @@ object Ann {
        |  SELECT cent_id FROM crs$n CROSS JOIN nc$n WHERE crn <= nc),
        |pm$n AS (
        |  SELECT c.cent_id, o.cent_id AS coarse_id,
-       |         CAST(nn.nrm - 2 * SUM(${prodDec.format("c.x", "o.x")})
+       |         CAST(nn.nrm - 2 * SUM(${Dx.sqlProdDec("c.x", "o.x")})
        |              AS DECIMAL(38,15)) AS m
        |  FROM cel$n c
        |  JOIN cel$n o ON o.i = c.i
@@ -1165,7 +1138,7 @@ object Ann {
        |  WHERE rn = 1),
        |cel${n + 1} AS (
        |  SELECT a.cent_id, e.i,
-       |         CAST(SUM(${xDec.format("e.x")}) AS DOUBLE) / COUNT(*) AS x,
+       |         CAST(SUM(${Dx.sqlValDec("e.x")}) AS DOUBLE) / COUNT(*) AS x,
        |         COUNT(*) AS n_assigned
        |  FROM asnh$n a JOIN el e USING (vec_id)
        |  GROUP BY 1, 2)""".stripMargin
@@ -1206,7 +1179,7 @@ object Ann {
     val cents = vecs
       .filter($"vec_id" >= NQUERIES && $"vec_id" < NQUERIES + IVF_NCENTROIDS)
       .select($"vec_id".as("cent_id"), $"embedding".as("c_emb"))
-      .withColumn("c_nrm_dec", dotDec("c_emb", "c_emb"))
+      .withColumn("c_nrm_dec", Dx.dotDec("c_emb", "c_emb"))
     assignTo(vecs, cents, exactMetric = true).orderBy($"vec_id")
   }
 
@@ -1238,7 +1211,7 @@ object Ann {
     * ‖v‖² − 2⟨v,c⟩ + ‖c‖² — the assignment metric alone (‖c‖² − 2⟨v,c⟩)
     * orders correctly only across CENTROIDS for one vector, not across
     * VECTORS in one cell, where ‖v‖² varies. Every term is the pinned
-    * decimal formulation ([[dotDec]], the q90/q83 replay), operands
+    * decimal formulation ([[Dx.dotDec]], the q90/q83 replay), operands
     * bounded to (24,15) before the add so no engine caps the scale; ties
     * broken by vec_id, so the cut is total and cross-engine identical.
     * Output is integers only.
@@ -1255,7 +1228,7 @@ object Ann {
     val cents = vecs
       .filter($"vec_id" >= NQUERIES && $"vec_id" < NQUERIES + IVF_NCENTROIDS)
       .select($"vec_id".as("cent_id"), $"embedding".as("c_emb"))
-      .withColumn("c_nrm_dec", dotDec("c_emb", "c_emb"))
+      .withColumn("c_nrm_dec", Dx.dotDec("c_emb", "c_emb"))
     val assigned = vecs.join(broadcast(cents))
       .withColumn("m_dec", decMetric("c_nrm_dec", "embedding", "c_emb"))
       .groupBy($"vec_id")
@@ -1263,7 +1236,7 @@ object Ann {
         min_by($"cent_id", struct($"m_dec", $"cent_id")).as("cent_id"),
         min(struct($"m_dec", $"cent_id")).getField("m_dec").as("m_min"))
       .withColumn("d2_dec",
-        $"m_min".cast(d24) + dotDec("embedding", "embedding").cast(d24))
+        $"m_min".cast(d24) + Dx.dotDec("embedding", "embedding").cast(d24))
     assigned
       .withColumn("cell_rank", row_number().over(
         Window.partitionBy($"cent_id").orderBy($"d2_dec", $"vec_id"))
@@ -1275,14 +1248,14 @@ object Ann {
   private def cellCapOracle: String =
     s"""WITH ${seedCellCtes((NQUERIES + IVF_NCENTROIDS).toString)},
        |cnrm AS (
-       |  SELECT cent_id, SUM(${prodDec.format("x", "x")}) AS nrm
+       |  SELECT cent_id, SUM(${Dx.sqlProdDec("x", "x")}) AS nrm
        |  FROM cel0 GROUP BY 1),
        |vnrm AS (
-       |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
+       |  SELECT vec_id, SUM(${Dx.sqlProdDec("x", "x")}) AS nrm
        |  FROM el GROUP BY 1),
        |metric AS (
        |  SELECT e.vec_id, c.cent_id,
-       |         CAST(n.nrm - 2 * SUM(${prodDec.format("e.x", "c.x")})
+       |         CAST(n.nrm - 2 * SUM(${Dx.sqlProdDec("e.x", "c.x")})
        |              AS DECIMAL(38,15)) AS m
        |  FROM el e
        |  JOIN cel0 c ON c.i = e.i
@@ -1432,7 +1405,7 @@ object Ann {
       var rs = norm(vecs
         .filter($"vec_id" >= NQUERIES && $"vec_id" < NQUERIES + k)
         .select($"vec_id".as("cent_id"), $"embedding".as("c_emb"))
-        .withColumn("c_nrm_dec", dotDec("c_emb", "c_emb")))
+        .withColumn("c_nrm_dec", Dx.dotDec("c_emb", "c_emb")))
       for (_ <- 1 to KMEANS_ITERS) {
         val cents = spark.createDataFrame(
           java.util.Arrays.asList(rs: _*), trainedCentSchema)
@@ -1461,7 +1434,7 @@ object Ann {
     // arrays; the plan drops to ONE embeddings file scan (the cache
     // build) for the whole train→serve composition.
     ivfServe(
-      vecs.withColumn("nrm_dec", dotDec("embedding", "embedding")),
+      vecs.withColumn("nrm_dec", Dx.dotDec("embedding", "embedding")),
       cents.select($"cent_id", $"c_emb", $"c_nrm_dec".as("c_nrm")),
       dotDbl)
   }
@@ -1471,7 +1444,7 @@ object Ann {
        |carr AS (
        |  SELECT cent_id, list(x ORDER BY i) AS c_emb FROM cel2 GROUP BY 1),
        |cnrm AS (
-       |  SELECT cent_id, SUM(${prodDec.format("x", "x")}) AS nrm
+       |  SELECT cent_id, SUM(${Dx.sqlProdDec("x", "x")}) AS nrm
        |  FROM cel2 GROUP BY 1),
        |$normsCte,
        |aff AS (
@@ -1542,15 +1515,15 @@ object Ann {
         Window.partitionBy($"vec_id").orderBy($"m_dec", $"cent_id")))
       .filter($"arn" <= IVF_NPROBE)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"), $"cent_id")
-      .withColumn("q_nrm", dotDec("q_emb", "q_emb"))
+      .withColumn("q_nrm", Dx.dotDec("q_emb", "q_emb"))
     val cells = probes.select($"cent_id").distinct()
       .as[Long].collect().toSeq.sorted // ≤ |Q|·nprobe rows — planning input
     graft.streaming.StreamingAnn.readCells(spark, indexDir, cells)
-      .withColumn("nrm_dec", dotDec("embedding", "embedding"))
+      .withColumn("nrm_dec", Dx.dotDec("embedding", "embedding"))
       .join(broadcast(probes), Seq("cent_id"))
       .filter($"vec_id" =!= $"query_id")
       .withColumn("cosine",
-        dotDec("q_emb", "embedding").cast("double") /
+        Dx.dotDec("q_emb", "embedding").cast("double") /
           (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc))
@@ -1603,35 +1576,6 @@ object Ann {
     * sizing k via [[ncentroidsFor]] at deploy (k is fixture-pinned to
     * [[IVF_NCENTROIDS]] here for oracle replayability); a pathological
     * cell composes with the q88 delegate-cap + rank-chain device. */
-  /** SemDeDup ASSIGNMENT-metric deploy knob — the q83/q90 `exactMetric`
-    * trade surfaced as a runtime control (the sketch-gate precedent):
-    * default true runs the decimal argmin the oracle replays; false runs
-    * the IEEE-double argmin, which at the 100× scale point cuts the
-    * dominant n·k assignment cost (the measured numbers live in
-    * SCALING.md) and can differ only on near-exact metric ties — the
-    * same contract [[graft.streaming.StreamingAnn]]'s ingest ships
-    * under, pinned verdict-identical on the fixture corpus by AnnSpec.
-    * Property `graft.semdedup.exactMetric` / env
-    * `SPARK_GRAFT_SEMDEDUP_EXACT`; malformed values fail with a named
-    * diagnosis, not a bare parse exception. Training itself always runs
-    * decimal — it executes once per (dir, k) and is driver-cached, so
-    * the knob governs the per-run assignment leg only. */
-  private[graft] def semDedupExactMetric: Boolean = {
-    def parse(src: String, v: String): Boolean = v.trim.toLowerCase match {
-      case "true" => true
-      case "false" => false
-      case other => throw new IllegalArgumentException(
-        s"$src = '$other': the semdedup metric knob takes true|false " +
-          "(default true; set via system property " +
-          "graft.semdedup.exactMetric or env SPARK_GRAFT_SEMDEDUP_EXACT)")
-    }
-    sys.props.get("graft.semdedup.exactMetric")
-      .map(parse("system property graft.semdedup.exactMetric", _))
-      .orElse(sys.env.get("SPARK_GRAFT_SEMDEDUP_EXACT")
-        .map(parse("environment variable SPARK_GRAFT_SEMDEDUP_EXACT", _)))
-      .getOrElse(true)
-  }
-
   def semDedup(spark: SparkSession, dir: String, dim: Int = EMBED_DIM,
       k: Option[Int] = None,
       occCap: Int = Int.MaxValue, chainW: Int = CHAIN_W,
@@ -1644,12 +1588,11 @@ object Ann {
     val kk = k.getOrElse(IVF_NCENTROIDS)
     val cents = trainedCents(spark, dir, vecs, kk, hier)
     val assigned =
-      if (hier) assignCellsHier(vecs, cents,
-        exactMetric = semDedupExactMetric)
-      else assignCells(vecs, cents, exactMetric = semDedupExactMetric)
+      if (hier) assignCellsHier(vecs, cents, exactMetric = true)
+      else assignCells(vecs, cents, exactMetric = true)
     val asg = assigned
       .select($"vec_id", $"embedding", $"cent_id", $"m_asg")
-      .withColumn("nrm_dec", dotDec("embedding", "embedding"))
+      .withColumn("nrm_dec", Dx.dotDec("embedding", "embedding"))
     // Within-cell pair stage, HARD-CAPPED (round-12 verdict item 3 — the
     // q88 delegate-budget + rank-chain device composed into the learned-
     // cell path): members of each cell get a deterministic rank ordered
@@ -1726,7 +1669,7 @@ object Ann {
         (sqrt($"nrm_a".cast("double")) * sqrt($"nrm_b".cast("double"))))
       .filter($"cos_fast" >=
         lit(NEARDUP_COS) - cosineMargin(dim, $"nrm_a", $"nrm_b"))
-      .withColumn("cosine", dotDec("emb_a", "emb_b").cast("double") /
+      .withColumn("cosine", Dx.dotDec("emb_a", "emb_b").cast("double") /
         (sqrt($"nrm_a".cast("double")) * sqrt($"nrm_b".cast("double"))))
       .filter($"cosine" >= NEARDUP_COS)
       .select($"vec_b".as("vec_id")).distinct()
@@ -1782,7 +1725,7 @@ object Ann {
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding")))
     val cents = trainedCents(spark, dir, vecs, ncentroidsFor(n),
       hier = true)
-    assignCellsHier(vecs, cents, exactMetric = semDedupExactMetric)
+    assignCellsHier(vecs, cents, exactMetric = true)
       .groupBy($"cent_id").agg(count(lit(1)).as("occ"))
       .agg(max($"occ")).as[Long].head()
   }
@@ -1816,12 +1759,12 @@ object Ann {
        |  FROM (SELECT DISTINCT cent_id FROM cel2)),
        |coarse AS (SELECT cent_id FROM crs CROSS JOIN nc WHERE crn <= nc),
        |conrm AS (
-       |  SELECT cent_id, SUM(${prodDec.format("x", "x")}) AS nrm
+       |  SELECT cent_id, SUM(${Dx.sqlProdDec("x", "x")}) AS nrm
        |  FROM cel2 WHERE cent_id IN (SELECT cent_id FROM coarse)
        |  GROUP BY 1),
        |pm AS (
        |  SELECT c.cent_id, o.cent_id AS coarse_id,
-       |         CAST(n.nrm - 2 * SUM(${prodDec.format("c.x", "o.x")})
+       |         CAST(n.nrm - 2 * SUM(${Dx.sqlProdDec("c.x", "o.x")})
        |              AS DECIMAL(38,15)) AS m
        |  FROM cel2 c
        |  JOIN cel2 o ON o.i = c.i
@@ -1858,14 +1801,14 @@ object Ann {
     s"""WITH $ctes,
        |${kmeansRoundSql(2, "cel2")},
        |${hierPart}norms AS (
-       |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
+       |  SELECT vec_id, SUM(${Dx.sqlProdDec("x", "x")}) AS nrm
        |  FROM el GROUP BY 1),
        |p AS (
        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
        |  FROM $asn a JOIN $asn b
        |    ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id),
        |dots AS (
-       |  SELECT p.vec_a, p.vec_b, SUM(${prodDec.format("a.x", "e.x")}) AS dot
+       |  SELECT p.vec_a, p.vec_b, SUM(${Dx.sqlProdDec("a.x", "e.x")}) AS dot
        |  FROM p
        |  JOIN el a ON a.vec_id = p.vec_a
        |  JOIN el e ON e.vec_id = p.vec_b AND e.i = a.i
@@ -2026,7 +1969,7 @@ object Ann {
     * rerank. The emitted rows carry both scores so the oracle pins the
     * screen and the rerank.
     *
-    * Determinism: the norm is the exact decimal [[dotDec]]; the
+    * Determinism: the norm is the exact decimal [[Dx.dotDec]]; the
     * normalize-quantize chain is IEEE double ops in one pinned order;
     * everything after it is integer and decimal arithmetic — the whole
     * two-stage plan replays bit-for-bit in DuckDB.
@@ -2057,7 +2000,7 @@ object Ann {
       .withColumn("crnk", row_number().over(wCand))
       .filter($"crnk" <= SQ_CAND)
       .withColumn("cosine",
-        dotDec("q_emb", "embedding").cast("double") /
+        Dx.dotDec("q_emb", "embedding").cast("double") /
           (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
       .withColumn("rnk", row_number().over(wRank).cast("long"))
       .filter($"rnk" <= TOPK)
@@ -2089,7 +2032,7 @@ object Ann {
        |  WHERE crnk <= $SQ_CAND),
        |dots AS (
        |  SELECT c.query_id, c.neighbor_id, c.qscore,
-       |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
+       |         SUM(${Dx.sqlProdDec("q.x", "e.x")}) AS dot
        |  FROM cand c
        |       JOIN el q ON q.vec_id = c.query_id
        |       JOIN el e ON e.vec_id = c.neighbor_id AND q.i = e.i
@@ -2155,7 +2098,7 @@ object Ann {
     * its nearest code by the norm-dropped decimal metric (the
     * [[kmeansStep]] argmin restated per slice), then recompute each
     * code's c_sub as the elementwise mean of its assigned subvectors —
-    * the [[cellMeans]] decimal-sum mean (`CAST(SUM(valDec(x)) AS
+    * the [[cellMeans]] decimal-sum mean (`CAST(SUM(Dx.valDec(x)) AS
     * DOUBLE) / COUNT(*)`), so the round replays exactly in SQL. A code
     * capturing nothing vanishes — the fixed-round oracle contract
     * [[ivfKmeans]] documents, one level down. */
@@ -2170,13 +2113,13 @@ object Ann {
         min_by($"code", struct($"mdec", $"code")).as("code"))
     asn.select($"m", $"code", posexplode($"sub").as(Seq("j", "x")))
       .groupBy($"m", $"code", $"j")
-      .agg((sum(valDec($"x")).cast("double") / count(lit(1))).as("x"))
+      .agg((sum(Dx.valDec($"x")).cast("double") / count(lit(1))).as("x"))
       .groupBy($"m", $"code")
       .agg(transform(array_sort(collect_list(struct($"j", $"x"))),
         s => s.getField("x")).as("c_sub"))
       .select($"m".cast("int"), $"code".cast("long"),
         $"c_sub".cast("array<double>"),
-        dotDec("c_sub", "c_sub").as("c_nrm"))
+        Dx.dotDec("c_sub", "c_sub").as("c_nrm"))
   }
 
   /** Per-subspace codebook rows trained on the corpus `src`: [[PQ_ITERS]]
@@ -2201,7 +2144,7 @@ object Ann {
       .select($"m".cast("int"),
         $"vec_id".cast("long").as("code"),
         expr("transform(sub, x -> CAST(x AS DOUBLE))").as("c_sub"),
-        dotDec("sub", "sub").as("c_nrm"))
+        Dx.dotDec("sub", "sub").as("c_nrm"))
     if (!trained) seeds.collect()
     else {
       val subs = pqSubvectors(src, dim).persist()
@@ -2258,7 +2201,7 @@ object Ann {
       .withColumn("mdec", decMetric("c_nrm", "sub", "c_sub"))
       .groupBy($"vec_id", $"m")
       .agg(min($"mdec").as("m_min"),
-        first(dotDec("sub", "sub")).as("s_nrm"))
+        first(Dx.dotDec("sub", "sub")).as("s_nrm"))
       .agg(sum(($"m_min".cast(d24) + $"s_nrm".cast(d24)).cast("double")))
       .as[Double].head()
   }
@@ -2310,7 +2253,7 @@ object Ann {
       .select($"vec_id".as("query_id"), $"m", $"sub".as("q_sub"))
       .join(broadcast(cb), Seq("m"))
       .select($"query_id", $"m", $"code",
-        dotDec("q_sub", "c_sub").as("dd"))
+        Dx.dotDec("q_sub", "c_sub").as("dd"))
   }
 
   def pqTopK(spark: SparkSession, dir: String,
@@ -2337,11 +2280,11 @@ object Ann {
     * the flat subspace-element CTE `se` (vec_id, m, j, x). */
   private def pqRoundSql(n: Int, src: String): String =
     s"""pqcbn$n AS (
-       |  SELECT m, code, SUM(${prodDec.format("x", "x")}) AS c_nrm
+       |  SELECT m, code, SUM(${Dx.sqlProdDec("x", "x")}) AS c_nrm
        |  FROM pqcb$n GROUP BY 1, 2),
        |pqmet$n AS (
        |  SELECT s.vec_id, s.m, c.code,
-       |         CAST(n.c_nrm - 2 * SUM(${prodDec.format("s.x", "c.x")})
+       |         CAST(n.c_nrm - 2 * SUM(${Dx.sqlProdDec("s.x", "c.x")})
        |              AS DECIMAL(38,15)) AS mdec
        |  FROM $src s
        |  JOIN pqcb$n c ON c.m = s.m AND c.j = s.j
@@ -2354,7 +2297,7 @@ object Ann {
        |    FROM pqmet$n) WHERE rn = 1),
        |pqcb${n + 1} AS (
        |  SELECT a.m, a.code, s.j,
-       |         CAST(SUM(${xDec.format("s.x")}) AS DOUBLE) / COUNT(*) AS x
+       |         CAST(SUM(${Dx.sqlValDec("s.x")}) AS DOUBLE) / COUNT(*) AS x
        |  FROM pqasn$n a JOIN $src s ON s.vec_id = a.vec_id AND s.m = a.m
        |  GROUP BY 1, 2, 3)""".stripMargin
 
@@ -2369,7 +2312,7 @@ object Ann {
        |${(0 until PQ_ITERS).map(pqRoundSql(_, src)).mkString(",\n")},
        |cb AS (SELECT m, code, j, x FROM pqcb$PQ_ITERS),
        |cbn AS (
-       |  SELECT m, code, SUM(${prodDec.format("x", "x")}) AS c_nrm
+       |  SELECT m, code, SUM(${Dx.sqlProdDec("x", "x")}) AS c_nrm
        |  FROM cb GROUP BY 1, 2)""".stripMargin
 
   /** Oracle CTE `se` (vec_id, m, j, x): `el` split into [[PQ_M]]
@@ -2386,7 +2329,7 @@ object Ann {
   private def pqEncodeLutCtes: String =
     s"""enc AS (
        |  SELECT s.vec_id, s.m, c.code,
-       |         CAST(n.c_nrm - 2 * SUM(${prodDec.format("s.x", "c.x")})
+       |         CAST(n.c_nrm - 2 * SUM(${Dx.sqlProdDec("s.x", "c.x")})
        |              AS DECIMAL(38,15)) AS mdec
        |  FROM se s
        |  JOIN cb c ON c.m = s.m AND c.j = s.j
@@ -2399,7 +2342,7 @@ object Ann {
        |    FROM enc) WHERE rn = 1),
        |lut AS (
        |  SELECT q.vec_id AS query_id, q.m, c.code,
-       |         SUM(${prodDec.format("q.x", "c.x")}) AS dd
+       |         SUM(${Dx.sqlProdDec("q.x", "c.x")}) AS dd
        |  FROM se q JOIN cb c ON c.m = q.m AND c.j = q.j
        |  WHERE q.vec_id < $NQUERIES
        |  GROUP BY 1, 2, 3)""".stripMargin
@@ -2419,7 +2362,7 @@ object Ann {
   private def pqRerankSql: String =
     s"""dots AS (
        |  SELECT c.query_id, c.neighbor_id, c.adc_dec,
-       |         SUM(${prodDec.format("q.x", "e.x")}) AS dot
+       |         SUM(${Dx.sqlProdDec("q.x", "e.x")}) AS dot
        |  FROM cand c
        |       JOIN el q ON q.vec_id = c.query_id
        |       JOIN el e ON e.vec_id = c.neighbor_id AND q.i = e.i
@@ -2568,7 +2511,7 @@ object Ann {
       .join(payload, "vec_id")
       .join(broadcast(queries), Seq("query_id"))
       .withColumn("cosine",
-        dotDec("q_emb", "embedding").cast("double") /
+        Dx.dotDec("q_emb", "embedding").cast("double") /
           (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
       .withColumn("adc", $"adc_dec".cast("double"))
       .withColumn("rnk", row_number().over(wRank).cast("long"))
@@ -2748,10 +2691,9 @@ object Ann {
     embeddings(spark, dir)
       .select(posexplode($"embedding").as(Seq("dim", "x")))
       .select($"dim".cast("long").as("dim"), $"x".cast("double").as("xd"))
-      .withColumn("qv", when(qok,
-        expr("CAST(floor(xd * 1e12 + 0.5) AS BIGINT)")).otherwise(lit(0L)))
-      .withColumn("qsq", when(qok,
-        expr("CAST(floor(xd * xd * 1e12 + 0.5) AS BIGINT)")).otherwise(lit(0L)))
+      .withColumn("qv", when(qok, Dx.fix($"xd", Dx.E12)).otherwise(lit(0L)))
+      .withColumn("qsq",
+        when(qok, Dx.fix($"xd" * $"xd", Dx.E12)).otherwise(lit(0L)))
       .groupBy($"dim")
       .agg(
         count(lit(1)).cast("long").as("n"),
@@ -2767,7 +2709,7 @@ object Ann {
         sum($"qsq").cast("long").as("ssq_e12"),
         count(when(qok, lit(1))).cast("long").as("n_fin"))
       .withColumn("mean", when($"n_fin" > 0L,
-        $"sum_e12".cast("double") / ($"n_fin".cast("double") * lit(1e12))))
+        $"sum_e12".cast("double") / ($"n_fin".cast("double") * Dx.E12)))
       .select($"dim", $"n", $"n_nan", $"n_inf", $"n_big", $"n_zero",
         $"min_v", $"max_v", $"sum_e12", $"ssq_e12", $"mean")
       .orderBy($"dim")
@@ -2785,9 +2727,9 @@ object Ann {
        |  FROM el
        |), q2 AS (
        |  SELECT dim, xd, fin, qok,
-       |         CASE WHEN qok THEN CAST(floor(xd * 1e12 + 0.5) AS BIGINT)
+       |         CASE WHEN qok THEN CAST(${Dx.sqlFix("xd", Dx.SqlE12)} AS BIGINT)
        |              ELSE 0 END AS qv,
-       |         CASE WHEN qok THEN CAST(floor(xd * xd * 1e12 + 0.5) AS BIGINT)
+       |         CASE WHEN qok THEN CAST(${Dx.sqlFix("xd * xd", Dx.SqlE12)} AS BIGINT)
        |              ELSE 0 END AS qsq
        |  FROM q
        |), a AS (
@@ -2809,7 +2751,7 @@ object Ann {
        |SELECT dim, n, n_nan, n_inf, n_big, n_zero, min_v, max_v, sum_e12,
        |       ssq_e12,
        |       CASE WHEN n_fin > 0 THEN CAST(sum_e12 AS DOUBLE)
-       |         / (CAST(n_fin AS DOUBLE) * 1e12) END AS mean
+       |         / (CAST(n_fin AS DOUBLE) * ${Dx.SqlE12}) END AS mean
        |FROM a ORDER BY dim""".stripMargin
 
   val all: Seq[Query] = Seq(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Caches, Query, Tables}
+import graft.{Caches, Dx, Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,15 +43,13 @@ import org.apache.spark.sql.functions._
   * is [[graft.functions.PinnedMath.lnRatioSql]], one shared SQL text both
   * engines evaluate verbatim. Per-(doc, class) accumulation is an
   * ORDER-FREE fixed-point SUM: each contribution (contrib = lp · n, one
-  * correctly rounded product) is lifted onto the 1e-12 integer grid —
-  * floor(contrib·1e12 + 0.5), identical in both engines because ×, +,
-  * floor on doubles are correctly rounded/exact — and the per-group
-  * reduction is an exact DECIMAL(38,0) integer SUM, associative and
-  * commutative, so NO ordering pin is needed and Spark plans a hash
-  * aggregation (the round-14 order-pinned float fold forced a sort-based
-  * aggregation that spilled unboundedly at 1000× scale). The score
-  * re-scales once (CAST(Σ AS DOUBLE)/1e12, one correctly rounded
-  * division) and adds the prior; each lift perturbs the float score by
+  * correctly rounded product) is lifted onto the 1e-12 integer grid and
+  * summed exactly ([[graft.Dx.fixSum]]), associative and commutative,
+  * so NO ordering pin is needed and Spark plans a hash aggregation (an
+  * order-pinned float fold forced a sort-based aggregation that spilled
+  * unboundedly at 1000× scale). The score re-scales once
+  * ([[graft.Dx.unfix]], one correctly rounded division) and adds the
+  * prior; each lift perturbs the float score by
   * ≤ 0.5·ulp(contrib·1e12)/1e12 — exactly 0.5e-12 while |contrib| ≤
   * ~9e3 (contrib·1e12 inside 2^53, where the grid is resolved at
   * integer ulp), growing with the double's ulp beyond that (≈1e-9 near
@@ -194,23 +192,14 @@ object Classify {
         coalesce(expr("try_element_at(lps, cls)"), $"lp0")
           * $"n".cast("double"))
 
-    // ORDER-FREE fixed-point accumulation (see class doc). The round-14
-    // version order-pinned a float fold (aggregate(array_sort(
-    // collect_list(...)))), which forced Spark into a sort-based
-    // aggregation materializing every per-(doc, class) term list — it
-    // spilled past a 77 GB ceiling at 1000× corpus scale. Lifting each
-    // contribution onto the 1e-12 integer grid makes the per-group
-    // reduction an integer SUM: associative + commutative, so it runs as
-    // a HASH aggregation with map-side partials and no list, and DuckDB's
-    // SUM of the same lifted values matches bit-for-bit with no ordering
-    // clause (the Ann decimal-dot device, applied to log space).
+    // ORDER-FREE fixed-point accumulation (see class doc): an integer
+    // SUM runs as a HASH aggregation with map-side partials and no
+    // per-(doc, class) list, and DuckDB's SUM of the same lifted values
+    // matches bit-for-bit with no ordering clause.
     val scored = cand
-      .withColumn("fx",
-        expr("CAST(floor(contrib * 1e12 + 0.5) AS DECIMAL(38,0))"))
       .groupBy($"doc_id", $"label", $"cls", $"lp_prior")
-      .agg(sum($"fx").as("sum_fx"))
-      .withColumn("score",
-        $"lp_prior" + expr("CAST(sum_fx AS DOUBLE) / 1e12"))
+      .agg(Dx.fixSum($"contrib", Dx.E12).as("sum_fx"))
+      .withColumn("score", $"lp_prior" + Dx.unfix($"sum_fx", Dx.E12))
 
     val w = Window.partitionBy($"doc_id")
       .orderBy($"score".desc, $"cls".asc)
@@ -423,7 +412,10 @@ object Classify {
   /** Shared CTE chain: doc-term counts, the smoothed model over the
     * `trainWhere` side, and per-(doc, class) scores + argmax rank over
     * the `scoreWhere` side — the SQL mirror of [[scoredBest]]. */
-  private def scoredCtes(trainWhere: String, scoreWhere: String): String =
+  private def scoredCtes(trainWhere: String, scoreWhere: String): String = {
+    // the oracle wraps its line after the grid scale
+    val sumFx = Dx.sqlFixSum("COALESCE(lp, lp0) * CAST(n AS DOUBLE)",
+      s"${Dx.SqlE12}\n${" " * 10}")
     s"""WITH dt AS (
        |  SELECT doc_id, lang, term, CAST(COUNT(*) AS BIGINT) AS n
        |  FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS term
@@ -465,12 +457,11 @@ object Classify {
        |  LEFT JOIN model m ON m.cls = c.cls AND m.term = h.term
        |), sc AS (
        |  SELECT doc_id, label, cls, lp_prior,
-       |         SUM(CAST(floor(COALESCE(lp, lp0) * CAST(n AS DOUBLE) * 1e12
-       |           + 0.5) AS DECIMAL(38,0))) AS sum_fx
+       |         $sumFx AS sum_fx
        |  FROM cand GROUP BY 1, 2, 3, 4
        |), sc2 AS (
        |  SELECT doc_id, label, cls,
-       |         lp_prior + CAST(sum_fx AS DOUBLE) / 1e12 AS score
+       |         lp_prior + ${Dx.sqlUnfix("sum_fx", Dx.SqlE12)} AS score
        |  FROM sc
        |), rk AS (
        |  SELECT doc_id, label, cls, score,
@@ -482,6 +473,7 @@ object Classify {
        |           OVER (PARTITION BY doc_id) AS lbl_score
        |  FROM sc2
        |)""".stripMargin
+  }
 
   private val splitTrain = s"doc_id % $HOLDOUT_MOD <> 0"
   private val splitHold = s"doc_id % $HOLDOUT_MOD = 0"

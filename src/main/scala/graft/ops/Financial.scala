@@ -83,7 +83,7 @@ object Financial {
   private val abcCtes =
     s"""rev AS (
        |  SELECT l_partkey AS part_id,
-       |         SUM(CAST(($REV) AS DECIMAL(30,6))) AS rev_dec
+       |         ${Dx.sqlDecSum(s"($REV)")} AS rev_dec
        |  FROM lineitem GROUP BY 1
        |), w AS (
        |  SELECT part_id, rev_dec,
@@ -252,7 +252,7 @@ object Financial {
   private val runningRevenueOracle =
     s"""WITH daily AS (
        |  SELECT date_trunc('day', l_shipdate) AS ship_day,
-       |         SUM(CAST(($REV) AS DECIMAL(30,6))) AS rev_dec
+       |         ${Dx.sqlDecSum(s"($REV)")} AS rev_dec
        |  FROM lineitem GROUP BY 1
        |)
        |SELECT ship_day,
@@ -301,7 +301,7 @@ object Financial {
     import spark.implicits._
     val li = Tables(spark, dir, "lineitem")
       .select($"l_partkey".as("part_id"), $"l_orderkey",
-        expr(REV).cast(DecimalType(30, 6)).as("rev_dec"))
+        Dx.dec(expr(REV)).as("rev_dec"))
     Scale.saltedSum(li, Seq("part_id"), $"rev_dec", $"l_orderkey", "rev_sum")
       .select($"part_id", $"rev_sum".cast("double").as("revenue"))
       .orderBy($"part_id")
@@ -323,7 +323,7 @@ object Financial {
     import spark.implicits._
     val fact = Tables(spark, dir, "lineitem")
       .select($"l_suppkey", $"l_orderkey",
-        expr(REV).cast(DecimalType(30, 6)).as("rev_dec"))
+        Dx.dec(expr(REV)).as("rev_dec"))
     val dim = Tables(spark, dir, "supplier")
       .select($"s_suppkey".as("l_suppkey"), $"s_nationkey".as("nation_id"))
     Scale.saltedJoin(fact, dim, Seq("l_suppkey"), $"l_orderkey")

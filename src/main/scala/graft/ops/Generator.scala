@@ -544,8 +544,7 @@ object Generator {
       .agg(
         countDistinct($"vec_id").as("n_vecs"),
         count(lit(1)).cast("long").as("n_elems"),
-        sum(expr("CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) / 1000000 AS DECIMAL(30,6))"))
-          .cast("double").as("sum_fp"))
+        Dx.dsum(Dx.grid($"x".cast("double"), Dx.E6)).as("sum_fp"))
       .orderBy($"label")
   }
 
@@ -566,8 +565,8 @@ object Generator {
        |SELECT CAST(label AS INT) AS label,
        |       CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n_vecs,
        |       CAST(COUNT(*) AS BIGINT) AS n_elems,
-       |       CAST(SUM(CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) / 1000000
-       |                AS DECIMAL(30,6))) AS DOUBLE) AS sum_fp
+       |       CAST(SUM(CAST(${Dx.sqlGrid("CAST(x AS DOUBLE)", "1000000")}
+       |                AS ${Dx.SqlDec})) AS DOUBLE) AS sum_fp
        |FROM v GROUP BY 1 ORDER BY 1""".stripMargin
   }
 

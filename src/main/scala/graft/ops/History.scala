@@ -190,7 +190,7 @@ object History {
     s"""WITH daily AS (
        |  SELECT l_partkey AS part_id, l_suppkey AS warehouse_id,
        |         date_trunc('day', l_shipdate) AS valid_from,
-       |         SUM(CAST(($SIGNED) AS DECIMAL(30,6))) AS net_dec
+       |         ${Dx.sqlDecSum(s"($SIGNED)")} AS net_dec
        |  FROM lineitem GROUP BY 1, 2, 3
        |), bal AS (
        |  SELECT part_id, warehouse_id, valid_from,

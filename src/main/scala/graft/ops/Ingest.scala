@@ -247,8 +247,7 @@ object Ingest {
       $"current_stock_dec".as("quantity"))
     val legs = transferLegs(spark, dir)
       .select($"part_id", $"warehouse_id",
-        $"quantity".cast(org.apache.spark.sql.types.DecimalType(30, 6))
-          .as("quantity"))
+        Dx.dec($"quantity").as("quantity"))
     base.unionByName(legs)
       .groupBy($"part_id", $"warehouse_id")
       .agg(sum($"quantity").cast("double").as("quantity_on_hand"))

@@ -147,8 +147,7 @@ object Inventory {
         count(when($"is_dead_stock", lit(1))).cast("long")
           .as("total_dead_stock_items"),
         coalesce(
-          sum(when($"is_dead_stock",
-            Dx.round2($"stock_value").cast(org.apache.spark.sql.types.DecimalType(30, 6))))
+          sum(when($"is_dead_stock", Dx.dec(Dx.round2($"stock_value"))))
             .cast("double"),
           lit(0.0)).as("total_dead_stock_value"),
         sum($"sold_qty_dec").cast("double").as("total_qty_sold"),
@@ -184,10 +183,10 @@ object Inventory {
        |), sv0 AS ($stockValueCells
        |), sv AS (
        |  SELECT part_id, supplier_id,
-       |         qoh * (CASE WHEN CAST(SUM(CAST(qty_sum AS DECIMAL(30,6))) OVER (PARTITION BY part_id) AS DOUBLE) = 0.0
+       |         qoh * (CASE WHEN CAST(${Dx.sqlDecSum("qty_sum")} OVER (PARTITION BY part_id) AS DOUBLE) = 0.0
        |                     THEN 0.0
-       |                     ELSE CAST(SUM(CAST(cost_sum AS DECIMAL(30,6))) OVER (PARTITION BY part_id) AS DOUBLE)
-       |                          / CAST(SUM(CAST(qty_sum AS DECIMAL(30,6))) OVER (PARTITION BY part_id) AS DOUBLE)
+       |                     ELSE CAST(${Dx.sqlDecSum("cost_sum")} OVER (PARTITION BY part_id) AS DOUBLE)
+       |                          / CAST(${Dx.sqlDecSum("qty_sum")} OVER (PARTITION BY part_id) AS DOUBLE)
        |                END) AS stock_value
        |  FROM sv0
        |), dead_agg AS (
@@ -201,7 +200,7 @@ object Inventory {
        |  FROM lineitem WHERE l_returnflag IN ('A','R')
        |), inv AS (
        |  SELECT CAST(SUM(qty_dec) AS DOUBLE) / COUNT(*) AS avg_inventory_qty
-       |  FROM (SELECT SUM(CAST(l_quantity AS DECIMAL(30,6))) AS qty_dec
+       |  FROM (SELECT ${Dx.sqlDecSum("l_quantity")} AS qty_dec
        |        FROM lineitem GROUP BY l_partkey, l_suppkey)
        |)
        |SELECT total_dead_stock_items, total_dead_stock_value,
@@ -245,8 +244,8 @@ object Inventory {
   private val stockAgingOracle =
     s"""WITH cells AS (
        |  SELECT l_partkey AS part_id, l_suppkey AS supplier_id,
-       |         SUM(CAST(l_quantity AS DECIMAL(30,6))) AS qty_dec,
-       |         SUM(CAST(l_extendedprice AS DECIMAL(30,6))) AS cost_dec
+       |         ${Dx.sqlDecSum("l_quantity")} AS qty_dec,
+       |         ${Dx.sqlDecSum("l_extendedprice")} AS cost_dec
        |  FROM lineitem GROUP BY 1, 2
        |), last_move AS (
        |  SELECT l_partkey AS part_id, l_suppkey AS supplier_id,

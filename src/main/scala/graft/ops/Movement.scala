@@ -72,10 +72,6 @@ object Movement {
       unit, step)
   }
 
-  /** The exact storage type of trend values: 24 integer digits — any
-    * realizable value magnitude; see [[gapFill]]. */
-  private val TREND_DEC = org.apache.spark.sql.types.DecimalType(30, 6)
-
   private def trendOf(events: DataFrame, unit: String, step: String): DataFrame = {
     import events.sparkSession.implicits._
     gapFill(
@@ -83,14 +79,15 @@ object Movement {
         .groupBy(date_trunc(unit, $"ts").as("b"))
         .agg(
           count(lit(1)).cast("long").as("n_events"),
-          Dx.decSum($"value").cast(TREND_DEC).as("v_dec")),
+          Dx.dec(Dx.decSum($"value")).as("v_dec")),
       step)
   }
 
   /** The densify half of A11 over an aggregated bucket frame
     * (b, n_events, v_dec DECIMAL) — shared by the full recompute and the
     * delta merge. Emits BOTH value representations: `total_value_dec`
-    * (DECIMAL(30,6), the exact stored truth every later merge consumes —
+    * ([[Dx.Dec]]: 24 integer digits hold any realizable value
+    * magnitude; the exact stored truth every later merge consumes —
     * this is what removes the old ~1e9 double round-trip bound) and
     * `total_value` (the presentation double the reports and oracles
     * compare). Registered queries drop the decimal twin; WRITTEN reports
@@ -110,7 +107,7 @@ object Movement {
         $"bucket",
         when($"bucket" === $"b", $"n_events").otherwise(0L).as("n_events"),
         when($"bucket" === $"b", $"v_dec")
-          .otherwise(lit(0).cast(TREND_DEC)).as("total_value_dec"))
+          .otherwise(Dx.dec(lit(0))).as("total_value_dec"))
       .withColumn("total_value", $"total_value_dec".cast("double"))
       .orderBy($"bucket")
   }
@@ -153,20 +150,20 @@ object Movement {
       .groupBy(date_trunc(unit, $"ts").as("b"))
       .agg(
         count(lit(1)).cast("long").as("n_events"),
-        Dx.decSum($"value").cast(TREND_DEC).as("v_dec"))
+        Dx.dec(Dx.decSum($"value")).as("v_dec"))
     // prefer the exact decimal column engine-written reports persist;
     // fall back to the presentation double for foreign reports
     val storedVal =
       if (stored.columns.contains("total_value_dec"))
-        $"total_value_dec".cast(TREND_DEC)
-      else $"total_value".cast(TREND_DEC)
+        Dx.dec($"total_value_dec")
+      else Dx.dec($"total_value")
     val merged = stored
       .select($"bucket".as("b"), $"n_events", storedVal.as("v_dec"))
       .unionByName(delta)
       .groupBy($"b")
       .agg(
         sum($"n_events").cast("long").as("n_events"),
-        sum($"v_dec").cast(TREND_DEC).as("v_dec"))
+        Dx.dec(sum($"v_dec")).as("v_dec"))
     gapFill(merged, step)
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Query, Tables}
+import graft.{Dx, Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,10 +20,9 @@ import org.apache.spark.sql.functions._
   *    IDENTICAL — the q106 "PMI without the log" device applied to
   *    retrieval. Written as (2N − 2df + 1)/(2df + 1): integer numerator
   *    and denominator, ONE rounding.
-  *  - per-term scores round to the 1e-6 grid with pure IEEE ops
-  *    (floor(x·1e6 + ½)/1e6, the [[graft.Dx]] dsum2 device) and sum as
-  *    DECIMAL(30,6), so the per-document sum is order-independent at
-  *    any parallelism.
+  *  - per-term scores round half up onto the 1e-6 grid
+  *    ([[graft.Dx.grid]]) and sum exactly ([[graft.Dx.dsum]]), so the
+  *    per-document sum is order-independent at any parallelism.
   *
   * 100 TB shape (the inverted-index probe, without materializing one):
   *  - ONE corpus scan projects to doc grain: (doc_id, dl, query-term
@@ -87,8 +86,20 @@ object Retrieval {
     val den = col("tf").cast("double") +
       lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl))
     val raw = idf * ((col("tf").cast("double") * lit(2.2)) / den)
-    floor(raw * lit(1000000.0) + lit(0.5)) / lit(1000000.0)
+    Dx.grid(raw, Dx.E6)
   }
+
+  /** [[rscoreCol]]'s raw BM25 term in oracle SQL, ending on the line
+    * break the oracle prints before the grid scale. */
+  private val rawScoreSql =
+    s"""(CAST(n_docs * 2 - df * 2 + 1 AS DOUBLE)
+       |                / CAST(df * 2 + 1 AS DOUBLE))
+       |               * ((CAST(tf AS DOUBLE) * 2.2)
+       |                  / (CAST(tf AS DOUBLE)
+       |                     + 1.2 * (0.25 + 0.75 * (CAST(tf.dl AS DOUBLE)
+       |                        / (CAST(sum_dl AS DOUBLE)
+       |                           / CAST(n_docs AS DOUBLE))))))
+       |${" " * 14}""".stripMargin
 
   /** Shared scoring tail: (doc_id, dl, term, tf) postings + the ≤|Q|-row
     * df table + the 1-row corpus stats → per-doc decimal-summed BM25,
@@ -108,8 +119,7 @@ object Retrieval {
       .withColumn("rscore", rscoreCol)
       .groupBy($"doc_id", $"dl")
       .agg(count(lit(1)).cast("long").as("n_hits"),
-        sum($"rscore".cast(org.apache.spark.sql.types.DecimalType(30, 6)))
-          .cast("double").as("score"))
+        Dx.dsum($"rscore").as("score"))
       .select($"doc_id", $"dl", $"n_hits", $"score")
       .orderBy($"score".desc, $"doc_id".asc)
       .limit(TOP_K)
@@ -150,21 +160,14 @@ object Retrieval {
        |  SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1
        |), scored AS (
        |  SELECT tf.doc_id, tf.dl, tf.term,
-       |         floor((CAST(n_docs * 2 - df * 2 + 1 AS DOUBLE)
-       |                / CAST(df * 2 + 1 AS DOUBLE))
-       |               * ((CAST(tf AS DOUBLE) * 2.2)
-       |                  / (CAST(tf AS DOUBLE)
-       |                     + 1.2 * (0.25 + 0.75 * (CAST(tf.dl AS DOUBLE)
-       |                        / (CAST(sum_dl AS DOUBLE)
-       |                           / CAST(n_docs AS DOUBLE))))))
-       |               * 1000000.0 + 0.5) / 1000000.0 AS rscore
+       |         ${Dx.sqlGrid(rawScoreSql, "1000000.0")} AS rscore
        |  FROM tf JOIN dft ON tf.term = dft.term CROSS JOIN stats
        |)""".stripMargin
 
   private val bm25Oracle =
     s"""${bm25Sql(QUERY_TERMS)}
        |SELECT doc_id, dl, CAST(COUNT(*) AS BIGINT) AS n_hits,
-       |       CAST(SUM(CAST(rscore AS DECIMAL(30,6))) AS DOUBLE) AS score
+       |       CAST(${Dx.sqlDecSum("rscore")} AS DOUBLE) AS score
        |FROM scored GROUP BY 1, 2
        |ORDER BY score DESC, doc_id LIMIT $TOP_K""".stripMargin
 
@@ -201,8 +204,7 @@ object Retrieval {
       .withColumn("rscore", rscoreCol)
       .groupBy($"query_id", $"doc_id", $"dl")
       .agg(count(lit(1)).cast("long").as("n_hits"),
-        sum($"rscore".cast(org.apache.spark.sql.types.DecimalType(30, 6)))
-          .cast("double").as("score"))
+        Dx.dsum($"rscore").as("score"))
     val w = Window.partitionBy($"query_id")
       .orderBy($"score".desc, $"doc_id".asc)
     scored
@@ -235,7 +237,7 @@ object Retrieval {
     s"""${bm25Sql(batchTerms)}, $batchQtCte, byq AS (
        |  SELECT qt.query_id, scored.doc_id, scored.dl,
        |         CAST(COUNT(*) AS BIGINT) AS n_hits,
-       |         CAST(SUM(CAST(scored.rscore AS DECIMAL(30,6))) AS DOUBLE)
+       |         CAST(${Dx.sqlDecSum("scored.rscore")} AS DOUBLE)
        |           AS score
        |  FROM scored JOIN qt ON scored.term = qt.term
        |  GROUP BY 1, 2, 3
@@ -294,7 +296,7 @@ object Retrieval {
   private val ragRankedCtes =
     s"""$batchQtCte, byq AS (
        |  SELECT qt.query_id, scored.doc_id, scored.dl,
-       |         CAST(SUM(CAST(scored.rscore AS DECIMAL(30,6))) AS DOUBLE)
+       |         CAST(${Dx.sqlDecSum("scored.rscore")} AS DOUBLE)
        |           AS score
        |  FROM scored JOIN qt ON scored.term = qt.term
        |  GROUP BY 1, 2, 3
@@ -552,7 +554,7 @@ object Retrieval {
     coalesce(expr(s"1000000L div (${RRF_K}L + $rnkCol)"), lit(0L))
 
   /** Dense retrieval leg: exact decimal cosine of every vector against
-    * the [[DENSE_QUERY]] probe ([[Ann.dotDec]] — the same formulation as
+    * the [[DENSE_QUERY]] probe ([[Dx.dotDec]] — the same formulation as
     * q29, so the leg inherits its cross-engine bit-equality), top-20 via
     * `orderBy.limit` (TakeOrderedAndProject — per-partition heaps, never
     * a global sort; the rank window then runs over 20 rows). */
@@ -565,7 +567,7 @@ object Retrieval {
       .filter($"vec_id" =!= DENSE_QUERY)
       .crossJoin(broadcast(probe))
       .withColumn("cosine",
-        Ann.dotDec("q_emb", "embedding").cast("double") /
+        Dx.dotDec("q_emb", "embedding").cast("double") /
           (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
       .select($"vec_id".as("doc_id"), $"cosine")
       .orderBy($"cosine".desc, $"doc_id".asc)
@@ -610,11 +612,9 @@ object Retrieval {
 
   private val hybridRrfOracle = {
     val dim = Ann.EMBED_DIM
-    val prodDec =
-      "CAST(floor(CAST(%s AS DOUBLE) * CAST(%s AS DOUBLE) * 1e12 + 0.5) / 1e12 AS DECIMAL(38,15))"
     s"""${bm25Sql(QUERY_TERMS)}, bmtop AS (
        |  SELECT doc_id,
-       |         CAST(SUM(CAST(rscore AS DECIMAL(30,6))) AS DOUBLE) AS score
+       |         CAST(${Dx.sqlDecSum("rscore")} AS DOUBLE) AS score
        |  FROM scored GROUP BY 1
        |  ORDER BY score DESC, doc_id LIMIT $FUSE_DEPTH
        |), bm AS (
@@ -626,10 +626,10 @@ object Retrieval {
        |         unnest(embedding) AS x
        |  FROM embeddings
        |), norms AS (
-       |  SELECT vec_id, SUM(${prodDec.format("x", "x")}) AS nrm
+       |  SELECT vec_id, SUM(${Dx.sqlProdDec("x", "x")}) AS nrm
        |  FROM el GROUP BY 1
        |), dots AS (
-       |  SELECT e.vec_id AS doc_id, SUM(${prodDec.format("q.x", "e.x")}) AS dot
+       |  SELECT e.vec_id AS doc_id, SUM(${Dx.sqlProdDec("q.x", "e.x")}) AS dot
        |  FROM el q JOIN el e ON q.i = e.i AND e.vec_id <> $DENSE_QUERY
        |  WHERE q.vec_id = $DENSE_QUERY
        |  GROUP BY 1

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Query, Tables}
+import graft.{Dx, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The SQL front door, driver-proven end to end (round-7 verdict item 5).
@@ -95,8 +95,8 @@ object SqlSurface {
   private[graft] def formattedValuationFusedSql: String =
     s"""WITH cells AS (
        |  SELECT l_partkey AS part_id, l_suppkey AS supplier_id,
-       |         SUM(CAST(l_quantity AS DECIMAL(30,6))) AS qty_dec,
-       |         SUM(CAST(l_extendedprice AS DECIMAL(30,6))) AS cost_dec
+       |         ${Dx.sqlDecSum("l_quantity")} AS qty_dec,
+       |         ${Dx.sqlDecSum("l_extendedprice")} AS cost_dec
        |  FROM lineitem GROUP BY 1, 2
        |), sv0 AS (
        |  SELECT part_id, supplier_id,

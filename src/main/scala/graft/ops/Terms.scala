@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Query, Tables}
+import graft.{Dx, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -988,9 +988,8 @@ object Terms {
         count(when($"c2" === 1L, lit(1))).cast("long").as("n_singleton"),
         // order-free 1e-12 fixed-point lift + exact integer SUM → hash
         // aggregation, no per-doc list (see class doc)
-        sum(expr("CAST(floor(lp * 1e12 + 0.5) AS DECIMAL(38,0))"))
-          .as("sum_fx"))
-      .withColumn("nll", -(expr("CAST(sum_fx AS DOUBLE) / 1e12")))
+        Dx.fixSum($"lp", Dx.E12).as("sum_fx"))
+      .withColumn("nll", -Dx.unfix($"sum_fx", Dx.E12))
       .withColumn("nll_per_tok", $"nll" / $"n_bigrams")
       .select($"doc_id", $"n_bigrams", $"n_singleton", $"nll",
         $"nll_per_tok")
@@ -1037,8 +1036,8 @@ object Terms {
        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
        |         CAST(COUNT(CASE WHEN c2 = 1 THEN 1 END) AS BIGINT)
        |           AS n_singleton,
-       |         -(CAST(SUM(CAST(floor(lp * 1e12 + 0.5) AS DECIMAL(38,0)))
-       |             AS DOUBLE) / 1e12) AS nll
+       |         -(CAST(${Dx.sqlFixSum("lp", Dx.SqlE12)}
+       |             AS DOUBLE) / ${Dx.SqlE12}) AS nll
        |  FROM s GROUP BY 1
        |)
        |SELECT doc_id, n_bigrams, n_singleton, nll,

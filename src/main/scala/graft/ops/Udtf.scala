@@ -245,8 +245,7 @@ object Udtf {
     val cumAsc = $"total_rcpt" - $"cum_desc" + $"qty_dec"
     def layerValue(cum: Column): Column =
       when($"l_returnflag" === "A",
-        Dx.round2(retained(cum).cast("double") * $"unit_cost")
-          .cast(DecimalType(30, 6)))
+        Dx.dec(Dx.round2(retained(cum).cast("double") * $"unit_cost")))
     val parts = Tables(spark, dir, "part")
       .select($"p_partkey".as("part_id"), $"p_name".as("part_name"))
     enriched
@@ -301,10 +300,10 @@ object Udtf {
        |       CAST(SUM(signed_dec) AS DOUBLE) AS total_quantity,
        |       COALESCE(CAST(SUM(CASE WHEN l_returnflag = 'A' THEN
        |         CAST(${Dx.sqlRound2("CAST(ret_fifo AS DOUBLE) * unit_cost")}
-       |              AS DECIMAL(30,6)) END) AS DOUBLE), 0.0) AS fifo_value,
+       |              AS ${Dx.SqlDec}) END) AS DOUBLE), 0.0) AS fifo_value,
        |       COALESCE(CAST(SUM(CASE WHEN l_returnflag = 'A' THEN
        |         CAST(${Dx.sqlRound2("CAST(ret_lifo AS DOUBLE) * unit_cost")}
-       |              AS DECIMAL(30,6)) END) AS DOUBLE), 0.0) AS lifo_value
+       |              AS ${Dx.SqlDec}) END) AS DOUBLE), 0.0) AS lifo_value
        |FROM v JOIN part p ON v.part_id = p.p_partkey
        |GROUP BY v.part_id, p.p_name
        |HAVING CAST(SUM(signed_dec) AS DOUBLE) > 0.0

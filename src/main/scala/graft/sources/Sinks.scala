@@ -158,14 +158,16 @@ object Sinks {
     * but costs a second pass over the input (range bounds are sampled),
     * the wrong trade for a corpus-sized write. At petabyte scale raise
     * `nShards` to the loader's file-count target; balance and determinism
-    * are unchanged. */
+    * are unchanged. Returns the rows written, [[counted]] on the write
+    * (the counter sits above the repartition, in the result stage). */
   def writeShards(
-      df: DataFrame, path: String, idCol: String, nShards: Int): Unit =
-    df
+      df: DataFrame, path: String, idCol: String, nShards: Int): Long = {
+    val (rows, n) = counted(df
       .withColumn("shard", pmod(xxhash64(col(idCol)), lit(nShards.toLong)))
-      .repartition(nShards, col("shard"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("shard").parquet(path)
+      .repartition(nShards, col("shard")))
+    rows.write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(path)
+    n.value
+  }
 
   /** JSONL flavor of [[writeShards]] — the wire format LLM training
     * loaders actually consume (one JSON object per line, shard dirs by

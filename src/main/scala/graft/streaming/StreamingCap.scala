@@ -20,11 +20,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *    the sink is exactly-once WITHOUT a batch-id fence (contrast the
   *    ledger sink, whose sums are not idempotent and need one). The
   *    spec pins this replay identity directly.
-  *  - Publication is versioned-dir + atomic pointer swap: the merged
-  *    list lands in `state_v<batchId>`, then a LATEST pointer file is
-  *    replaced atomically. A crash at ANY point leaves LATEST on the
-  *    previous consistent version; the replayed batch overwrites
-  *    `state_v<batchId>` (same content, by idempotence) and re-points.
+  *  - Publication goes through [[VersionedState]]: a crash at ANY
+  *    point leaves readers on the previous consistent version; the
+  *    replayed batch rewrites its version (same content, by idempotence)
+  *    and re-points.
   */
 /** A document arriving on the cap-maintenance stream. */
 final case class CapDoc(doc_id: Long, source: String, n_chars: Long)
@@ -38,19 +37,12 @@ object StreamingCap {
   def mergeBatch(stored: DataFrame, batch: DataFrame): DataFrame =
     graft.ops.Sampling.capMerge(stored, batch)
 
-  private def latestVersion(stateDir: String): Option[String] = {
-    val ptr = java.nio.file.Paths.get(stateDir, "LATEST")
-    if (java.nio.file.Files.exists(ptr))
-      Some(new String(java.nio.file.Files.readAllBytes(ptr), "UTF-8").trim)
-    else None
-  }
-
   /** Current keep list at `stateDir`, or an empty frame before the first
     * batch lands. */
   def readState(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): DataFrame =
-    latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/$v")
+    VersionedState.latest(stateDir) match {
+      case Some((v, _)) => spark.read.parquet(v)
       case None =>
         import spark.implicits._
         Seq.empty[(Long, String, Long, Long)]
@@ -64,21 +56,9 @@ object StreamingCap {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prev = latestVersion(stateDir)
-        val v = s"state_v$batchId"
-        mergeBatch(readState(spark, stateDir), batch)
-          .write.mode("overwrite").parquet(s"$stateDir/$v")
-        // atomic pointer swap, then best-effort teardown of the
-        // superseded version (failure leaves garbage, never bad state)
-        val tmp = java.nio.file.Paths.get(stateDir, s".LATEST_$batchId")
-        java.nio.file.Files.write(tmp, v.getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(stateDir, "LATEST"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        prev.filter(_ != v).foreach(old => graft.LiveDirSlot
-          .deleteLocalDir(java.nio.file.Paths.get(stateDir, old).toString))
-        ()
+        mergeBatch(readState(batch.sparkSession, stateDir), batch)
+          .write.mode("overwrite")
+          .parquet(VersionedState.versionDir(stateDir, batchId))
+        VersionedState.publish(stateDir, batchId)
       }
 }

@@ -15,31 +15,19 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *
   * Scale design (the [[StreamingCap]] contract, adapted):
   *  - State is MODEL-sized (|V|·|C| + |C| rows), not corpus-sized — the
-  *    NB summary property — so it lives as plain parquet versions with
-  *    an atomic LATEST pointer swap; the settled corpus is never
+  *    NB summary property — so it lives as plain parquet versions
+  *    published through [[VersionedState]]; the settled corpus is never
   *    rescanned.
   *  - Delivery: count-sum merges are NOT idempotent (unlike the A-ES
   *    reservoir's rank-cap), so exactly-once comes from a BATCH-ID
-  *    FENCE: the published version name carries the batch id, and a
+  *    FENCE: the published version carries the batch id, and a
   *    re-delivered batch (id ≤ the published one) is skipped whole —
   *    replay ≡ no-op is a fence property, pinned directly by the spec.
-  *  - Publication: versioned dir + atomic pointer swap (crash at any
-  *    point leaves LATEST on the previous consistent version).
   */
 /** A labeled document arriving on the model-maintenance stream. */
 final case class NbDoc(doc_id: Long, lang: String, text: String)
 
 object StreamingNbModel {
-
-  private def latest(stateDir: String): Option[(String, Long)] = {
-    val ptr = java.nio.file.Paths.get(stateDir, "LATEST")
-    if (!java.nio.file.Files.exists(ptr)) None
-    else {
-      val v = new String(
-        java.nio.file.Files.readAllBytes(ptr), "UTF-8").trim
-      Some((v, v.stripPrefix("state_v").toLong))
-    }
-  }
 
   private def emptyTerms(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -54,10 +42,9 @@ object StreamingNbModel {
     * batch lands). */
   def readState(spark: SparkSession,
       stateDir: String): (DataFrame, DataFrame) =
-    latest(stateDir) match {
+    VersionedState.latest(stateDir) match {
       case Some((v, _)) =>
-        (spark.read.parquet(s"$stateDir/$v/terms"),
-          spark.read.parquet(s"$stateDir/$v/prior"))
+        (spark.read.parquet(s"$v/terms"), spark.read.parquet(s"$v/prior"))
       case None => (emptyTerms(spark), emptyPrior(spark))
     }
 
@@ -74,22 +61,15 @@ object StreamingNbModel {
     * replay pin; [[ingestStream]]'s foreachBatch delegates here. */
   def foldBatch(spark: SparkSession, stateDir: String,
       batch: DataFrame, batchId: Long): Unit = {
-    val prev = latest(stateDir)
-    if (prev.exists(_._2 >= batchId)) return // fence: replay ≡ no-op
+    // fence: replay ≡ no-op
+    if (VersionedState.latest(stateDir).exists(_._2 >= batchId)) return
     val (terms, prior) = readState(spark, stateDir)
-    val v = s"state_v$batchId"
+    val v = VersionedState.versionDir(stateDir, batchId)
     graft.ops.Classify.nbMergeTerms(terms, batch)
-      .write.mode("overwrite").parquet(s"$stateDir/$v/terms")
+      .write.mode("overwrite").parquet(s"$v/terms")
     graft.ops.Classify.nbMergePrior(prior, batch)
-      .write.mode("overwrite").parquet(s"$stateDir/$v/prior")
-    val tmp = java.nio.file.Paths.get(stateDir, s".LATEST_$batchId")
-    java.nio.file.Files.write(tmp, v.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(stateDir, "LATEST"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    prev.map(_._1).filter(_ != v).foreach(old => graft.LiveDirSlot
-      .deleteLocalDir(java.nio.file.Paths.get(stateDir, old).toString))
+      .write.mode("overwrite").parquet(s"$v/prior")
+    VersionedState.publish(stateDir, batchId)
   }
 
   /** The maintain loop: arriving labeled documents (doc_id, lang, text)

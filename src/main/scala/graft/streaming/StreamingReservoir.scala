@@ -21,8 +21,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *    (the set-union dedup inside the core absorbs re-delivered rows) —
   *    the sink is exactly-once WITHOUT a batch-id fence. The spec pins
   *    the replay identity directly.
-  *  - Publication is versioned-dir + atomic pointer swap (crash at any
-  *    point leaves LATEST on the previous consistent version).
+  *  - Publication goes through [[VersionedState]].
   */
 /** A document arriving on the reservoir-maintenance stream. */
 final case class ResDoc(doc_id: Long, lang: String, n_chars: Long)
@@ -36,19 +35,12 @@ object StreamingReservoir {
   def mergeBatch(stored: DataFrame, batch: DataFrame): DataFrame =
     graft.ops.Sampling.reservoirMerge(stored, batch)
 
-  private def latestVersion(stateDir: String): Option[String] = {
-    val ptr = java.nio.file.Paths.get(stateDir, "LATEST")
-    if (java.nio.file.Files.exists(ptr))
-      Some(new String(java.nio.file.Files.readAllBytes(ptr), "UTF-8").trim)
-    else None
-  }
-
   /** Current reservoir at `stateDir`, or an empty frame before the first
     * batch lands. */
   def readState(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): DataFrame =
-    latestVersion(stateDir) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/$v")
+    VersionedState.latest(stateDir) match {
+      case Some((v, _)) => spark.read.parquet(v)
       case None =>
         import spark.implicits._
         Seq.empty[(String, Long, Long, Double, Long)]
@@ -62,19 +54,9 @@ object StreamingReservoir {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prev = latestVersion(stateDir)
-        val v = s"state_v$batchId"
-        mergeBatch(readState(spark, stateDir), batch)
-          .write.mode("overwrite").parquet(s"$stateDir/$v")
-        val tmp = java.nio.file.Paths.get(stateDir, s".LATEST_$batchId")
-        java.nio.file.Files.write(tmp, v.getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(stateDir, "LATEST"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        prev.filter(_ != v).foreach(old => graft.LiveDirSlot
-          .deleteLocalDir(java.nio.file.Paths.get(stateDir, old).toString))
-        ()
+        mergeBatch(readState(batch.sparkSession, stateDir), batch)
+          .write.mode("overwrite")
+          .parquet(VersionedState.versionDir(stateDir, batchId))
+        VersionedState.publish(stateDir, batchId)
       }
 }

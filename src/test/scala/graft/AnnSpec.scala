@@ -357,28 +357,6 @@ class AnnSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("semdedup metric knob: double leg matches decimal, malformed value diagnosed") {
-    // The deploy knob can flip the assignment to IEEE doubles; on the
-    // fixture (well-separated planted clusters — no near-exact metric
-    // ties) the verdict must be identical to the decimal leg, and a
-    // typo'd value must name the knob.
-    def verdict() = Ann.semDedup(spark, dir, dim = DIM).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val dec = verdict()
-    System.setProperty("graft.semdedup.exactMetric", "false")
-    try assert(verdict() == dec, "double-metric verdict must match decimal")
-    finally System.clearProperty("graft.semdedup.exactMetric")
-    System.setProperty("graft.semdedup.exactMetric", "maybe")
-    try {
-      val e = intercept[IllegalArgumentException](Ann.semDedupExactMetric)
-      assert(e.getMessage.contains("graft.semdedup.exactMetric")
-        && e.getMessage.contains("maybe"), e.getMessage)
-    } finally System.clearProperty("graft.semdedup.exactMetric")
-    Ann.clearTrainedCache()
-    graft.Caches.releasePrefix("ann.")
-    spark.catalog.clearCache()
-  }
-
   test("ANN recall harness: per-query recall@k with the companions always hit") {
     // The LSH-recall test above proves the companions survive the
     // approximate path; the recall harness must therefore report
