@@ -1,14 +1,14 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Per-round benchmark: runs every headline query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line. Each query is FULLY materialized via a noop-format
-  * write (every column computed, nothing collected) — `.count()` would let
-  * Catalyst prune the aggregate/window work out of the measurement. Failures
+/** Registry benchmark: runs every headline query on SPARK_GRAFT_SF_DIR and
+  * prints ONE JSON line. Each query is FULLY materialized by [[Metrics.run]]
+  * (a noop-sink write: every column computed, nothing collected). Failures
   * are reported per-query as -1 and make the process exit nonzero: a broken
   * query must never read as a fast one.
   *
-  * Measurement protocol (round-4 verdict item 1):
+  * Measurement protocol — no timed sample is the process's first execution
+  * of anything:
   *  - one untimed warm-up run precedes the loop (JVM/codegen/parquet-footer
   *    warm-up would otherwise land on whichever query runs first);
   *  - every query runs SPARK_GRAFT_BENCH_RUNS times (default 3); the
@@ -27,46 +27,24 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Sessions.cpus
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    // Multi-JVM A/B (round-9 verdict item 6): `local[n]` never serializes
-    // an exchange, so SPARK_GRAFT_MASTER=local-cluster[w,c,mem] runs the
-    // SAME bench against real worker JVMs (session contract shared with
-    // HashCheck via [[Sessions]] — including the executor-jar wiring).
+    // `local[n]` never serializes an exchange, so
+    // SPARK_GRAFT_MASTER=local-cluster[w,c,mem] runs the SAME bench against
+    // real worker JVMs (session contract shared with HashCheck via
+    // [[Sessions]] — including the executor-jar wiring).
     val master = Sessions.master
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Per-stage shuffle volume, attributed per query by draining the
-    // listener bus at each measurement boundary — the hard evidence for
-    // exchange-volume claims that plan shapes alone cannot give.
-    val shuffleRead = new java.util.concurrent.atomic.AtomicLong
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = e.stageInfo.taskMetrics
-          if (m != null) {
-            shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            ()
-          }
-        }
-      })
-    def shuffleNow(): (Long, Long) = {
-      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-      (shuffleRead.get(), shuffleWrite.get())
-    }
     System.err.println(
       s"[bench] heap=${Runtime.getRuntime.maxMemory() / (1 << 20)}MiB " +
         s"cpus=$cpus runs=$runs")
 
     // Aux = every registered non-headline query, derived from the registry
-    // itself — a hand-maintained name set silently dropped new queries from
-    // timing (round-4 advice). SPARK_GRAFT_BENCH_ONLY=q27_…,…: focused
-    // re-timing of a comma-separated EXACT-name subset (perf-iteration
-    // tooling; the driver's full run never sets it). Exact matching + a
-    // hard failure on unknown names (round-6 advice): a prefix like "q5"
-    // used to select q53–q58 and a typo silently produced an empty run
-    // whose zero total could be misread as a perf win.
+    // itself, so a new query cannot drop out of timing.
+    // SPARK_GRAFT_BENCH_ONLY=q27_…,…: focused re-timing of a
+    // comma-separated EXACT-name subset (perf-iteration tooling; a full run
+    // never sets it). Names match exactly and an unknown name fails the
+    // run: a prefix like "q5" would select q53–q58, and a typo would give
+    // an empty run whose zero total could be misread as a perf win.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { names =>
@@ -89,34 +67,27 @@ object Bench {
     val skipped = SparkEntry.registry
       .filter(q => q.benchSkip && only.isEmpty).map(_.name)
 
-    // Calibration probe (round-8 drift attribution): a FIXED synthetic
-    // job — hash over a 50M range, one exchange, one agg; no input data,
-    // no query code — timed min-of-3. Round-over-round headline drift
-    // (16.0 → 17.9 → 19.5 s) reproduced under round-6 code re-benched on
-    // the round-8 day (q01 1.65 s in the r6 artifact, 1.97 s under the
-    // SAME code today), while same-day old-vs-new code differs by ≈0 —
-    // the machine's effective throughput moves day to day (GC ~30 ms and
-    // steal ~0.1% both ruled out by the artifact's own fields).
-    // `calib_sec` is the per-artifact throughput anchor; `value_norm`
-    // (= value / calib_sec) is the cross-round comparable headline.
+    // Calibration probe: a FIXED synthetic job — hash over a 50M range,
+    // one exchange, one agg; no input data, no query code — timed
+    // min-of-3. The same code measures differently on different days (the
+    // host's effective throughput moves while same-day old-vs-new code
+    // differs by ≈0), so `calib_sec` is the per-artifact throughput anchor
+    // and `value_norm` (= value / calib_sec) the comparable headline.
     //
-    // Ordering (round-8 verdict item 2): the probe runs FIRST — its
-    // first run doubles as the JVM-wide throwaway (noop writer,
-    // codegen/JIT of the exchange machinery) — then the query warm-up,
-    // then the timed loop, so no timed sample is ever the process's
-    // first execution of anything. Round 8 ran warm-up before the probe
-    // and q01 (first timed, right after the probe's three 50M-row
-    // allocation bursts) caught a 9.7 s max; this order puts the
-    // GC-debt-absorbing query warm-up between the probe and the clock.
+    // Ordering: the probe runs FIRST — its first run doubles as the
+    // JVM-wide throwaway (noop writer, codegen/JIT of the exchange
+    // machinery) — then the query warm-up, then the timed loop, so no
+    // timed sample is ever the process's first execution of anything, and
+    // the warm-up absorbs the GC debt of the probe's three 50M-row
+    // allocation bursts before the clock starts (a first timed query right
+    // after the probe once caught a 9.7 s max).
     def calibProbe(): Double = try {
       (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        spark.range(0, 50000000L, 1, cpus.toInt)
+        Metrics.run(spark)(spark.range(0, 50000000L, 1, cpus.toInt)
           .selectExpr("xxhash64(id) AS h")
           .repartition(cpus.toInt)
-          .selectExpr("bit_xor(h) AS s") // overflow-free under ANSI
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+          .selectExpr("bit_xor(h) AS s")) // overflow-free under ANSI
+          .wallSec
       }.min
     } catch {
       case e: Throwable =>
@@ -128,25 +99,25 @@ object Bench {
 
     // Untimed setup pass: one-time artifacts a query reads but whose
     // build is not that query's cost — q84's stored-history parquet
-    // (round-8 ADVICE: built lazily inside the first timed sample, it
-    // inflated queries_max/GC attribution and a runs=1 invocation timed
-    // the build as query cost).
+    // (built lazily inside the first timed sample, it would inflate
+    // queries_max/GC attribution, and a runs=1 invocation would time the
+    // build as query cost).
     try graft.ops.History.ensureStored(spark, sfDir)
     catch { case e: Throwable =>
       System.err.println(s"[bench] q84 stored-table setup failed: $e") }
     // Untimed: train-once quantizer warm-up for the IVF serve queries —
     // q83 times TRAINING cold every run; q85/q91 time SERVING against
-    // the driver-cached model (Ann.trainedCache scaladoc, round-11
-    // verdict item 8). Without this the first timed q85 sample pays the
-    // one-time train and trips the unstable flag as a fake stall.
+    // the driver-cached model (Ann.trainedCache scaladoc). Without this
+    // the first timed q85 sample pays the one-time train and trips the
+    // unstable flag as a fake stall.
     if ((headline ++ aux).exists(q =>
         q.name == "q85_ivf_serve_trained" || q.name == "q91_ivf_serve_index"))
       try graft.ops.Ann.warmTrained(spark, sfDir)
       catch { case e: Throwable =>
         System.err.println(s"[bench] IVF trained-model warm-up failed: $e") }
-    // Untimed: q101's sized-k quantizer (round-13 verdict item 6 — the
-    // first timed sample otherwise pays the one-time k≈√n training +
-    // hierarchy prologue and trips the unstable flag as a fake stall).
+    // Untimed: q101's sized-k quantizer (the first timed sample otherwise
+    // pays the one-time k≈√n training + hierarchy prologue and trips the
+    // unstable flag as a fake stall).
     if ((headline ++ aux).exists(_.name == "q101_semdedup_auto"))
       try graft.ops.Ann.warmSemDedupAuto(spark, sfDir)
       catch { case e: Throwable =>
@@ -157,31 +128,31 @@ object Bench {
         "q163_pq_recall", "q164_ivfpq_recall", "q165_pq_index_serve",
         "q166_pq_index_increment").contains(q.name)))
       // q166 trains under a CUT-KEYED cache key; warm that codebook too
-      // when it is in the benched set (round-14 ADVICE — otherwise its
-      // first timed sample still pays PQ Lloyd training).
+      // when it is in the benched set (otherwise its first timed sample
+      // still pays PQ Lloyd training).
       try graft.ops.Ann.warmPq(spark, sfDir, incrementCut =
         (headline ++ aux).exists(_.name == "q166_pq_index_increment"))
       catch { case e: Throwable =>
         System.err.println(s"[bench] PQ codebook warm-up failed: $e") }
 
-    // Untimed warm-up: the first TIMED query end-to-end (falls through to
-    // the first aux query under a BENCH_ONLY subset with no headline
-    // selection — an empty-headline run previously got no query warm-up
-    // at all and its first aux sample ate it).
-    try {
-      (headline ++ aux).headOption.foreach(
-        _.timed(spark, sfDir).write.format("noop").mode("overwrite").save())
+    // Untimed warm-up: the first TIMED query end-to-end (the first aux
+    // query under a BENCH_ONLY subset with no headline selection, so an
+    // empty-headline run still gets one). It runs at cold start and again
+    // after every re-probe, between the probe and the clock.
+    def warmUp(): Unit = try {
+      (headline ++ aux).headOption
+        .foreach(q => Metrics.run(spark)(q.timed(spark, sfDir)))
       spark.catalog.clearCache()
     } catch { case _: Throwable => () }
+    warmUp()
 
     var failed = List.empty[String]
     /** Cumulative (busyJiffies, stealJiffies) from /proc/stat — the VM
-      * noisy-neighbor detector. The round-8 attribution hunt found the
-      * per-round headline drift (16.0 → 17.9 → 19.5 s) was NOT plan cost
-      * (isolated re-runs reproduce round-6 numbers with identical plans
-      * and ~30 ms GC) and NOT GC; on a shared-host VM the remaining
-      * candidate is host contention, so the artifact now records steal
-      * alongside GC and cross-round comparisons start from evidence. */
+      * noisy-neighbor detector. Headline drift between artifacts of the
+      * same code is neither plan cost (identical plans re-run at the old
+      * numbers) nor GC (~30 ms); on a shared-host VM the remaining
+      * candidate is host contention, so the artifact records steal beside
+      * GC and a comparison starts from evidence. */
     def cpuJiffies(): (Long, Long) =
       try {
         val f = scala.io.Source.fromFile("/proc/stat")
@@ -191,33 +162,20 @@ object Bench {
         val idle = parts(3) + parts(4) // idle + iowait
         (parts.sum - idle, if (parts.length > 7) parts(7) else 0L)
       } catch { case _: Throwable => (0L, 0L) }
-    /** Total stop-the-world time so far across all collectors (ms). */
-    def gcNow(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime.max(0L)).sum
-    }
     /** Per-query measurement: (min s, max s, gc ms at the min run, gc ms
-      * at the max run); -1s on failure. GC deltas ATTRIBUTE drift
-      * (round-7 verdict item 2): a query whose max-run wall time spikes
-      * while its max-run GC spikes with it is an environment stall, not a
-      * plan regression — previously the artifact could not tell the two
-      * apart and a +11% headline drift went unexplained. Times `q.timed`
-      * — the operator's API shape; a registered closure's compare-only
-      * orderBy (see [[Query.benchFn]]) is not operator cost. */
+      * at the max run, shuffle bytes read and written at the min run); -1s
+      * on failure. GC deltas ATTRIBUTE drift: a query whose max-run wall
+      * time spikes while its max-run GC spikes with it is an environment
+      * stall, not a plan regression. Times `q.timed` — the operator's API
+      * shape; a registered closure's compare-only orderBy (see
+      * [[Query.benchFn]]) is not operator cost. */
     def time(q: Query): (Double, Double, Long, Long, Long, Long) = {
       System.err.println(s"[bench] timing ${q.name}")
       val samples = (1 to runs).map { _ =>
-        val g0 = gcNow()
-        val s0 = shuffleNow()
-        val t0 = System.nanoTime()
         try {
-          q.timed(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          val gc = gcNow() - g0
-          val s1 = shuffleNow()
+          val s = Metrics.run(spark)(q.timed(spark, sfDir))
           spark.catalog.clearCache()
-          (dt, gc, s1._1 - s0._1, s1._2 - s0._2)
+          (s.wallSec, s.gcMs, s.shuffleRead, s.shuffleWrite)
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] ${q.name} FAILED: $e")
@@ -235,10 +193,10 @@ object Bench {
 
     /** Committed reference for the calibration probe, in CPU-SECONDS
       * (calib_sec × worker threads): the probe is embarrassingly
-      * parallel, so its total CPU work is machine-size-invariant —
-      * the round-9 one-day backfill band (2.63–2.94 s at 32 threads)
-      * puts a healthy host at 84–94 cpu-sec; the r08 slow day measured
-      * ~195 and the contended r09 driver artifact ~476. */
+      * parallel, so its total CPU work is machine-size-invariant — a
+      * one-day backfill band (2.63–2.94 s at 32 threads) puts a healthy
+      * host at 84–94 cpu-sec; a slow day measured ~195 and a contended
+      * artifact ~476. */
     val CALIB_REF_CPUSEC = 90.0
     val CALIB_TOLERANCE = 2.0
     def calibCpuSecOf(c: Double): Double =
@@ -249,25 +207,15 @@ object Bench {
         cs > 0 && cs > CALIB_TOLERANCE * CALIB_REF_CPUSEC
       }
 
-    // Bounded in-process retry on contention (round-11 verdict item 3):
-    // two rounds running, the committed artifact self-labeled
-    // `contended:true` because nothing between the measurement and the
-    // driver's artifact copy could re-run in a quieter window. Now the
-    // measurement loop itself retries — when a full pass lands contended
-    // (steal > 1% or the calibration probe outside the healthy band),
-    // the attempt is recorded in `retry_trail`, the process backs off,
-    // re-probes, and re-measures, up to SPARK_GRAFT_CONTENTION_RETRIES
-    // extra passes (default 2; 0 disables). The final artifact is the
-    // LAST attempt's numbers plus the full trail, so a contended record
-    // can only ship with its retry history attached — the round-10
-    // failure mode (a contended record silently replacing a quiet one)
-    // is structurally gone.
-    val maxAttempts = 1 + sys.env.get("SPARK_GRAFT_CONTENTION_RETRIES")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      .getOrElse(2).max(0)
-    val backoffSec = sys.env.get("SPARK_GRAFT_CONTENTION_BACKOFF_SEC")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      .getOrElse(120).max(0)
+    // Bounded in-process retry on contention: when a full pass lands
+    // contended (steal > 1% or the calibration probe outside the healthy
+    // band), the attempt is recorded in `retry_trail`, the process backs
+    // off, re-probes, and re-measures, up to two extra passes. The final
+    // artifact is the LAST attempt's numbers plus the full trail, so a
+    // contended record can only ship with its retry history attached and
+    // never silently replaces a quiet one.
+    val maxAttempts = 3 // the first pass + two retries
+    val backoffSec = 120
     var results = Seq.empty[(String, (Double, Double, Long, Long, Long, Long))]
     var auxResults = Seq.empty[(String, (Double, Double, Long, Long, Long, Long))]
     var stealPct = -1.0
@@ -299,23 +247,16 @@ object Bench {
         Thread.sleep(backoffSec * 1000L)
         calibSec = calibProbe()
         System.err.println(s"[bench] calib_sec=$calibSec (attempt ${attempt + 1})")
-        // probe-before-clock hazard (the round-8 ordering lore above):
-        // the probe's three 50M-row allocation bursts must not land on
-        // the retried pass's FIRST timed sample — absorb the GC debt in
-        // the same untimed query warm-up the cold start uses.
-        try {
-          (headline ++ aux).headOption.foreach(
-            _.timed(spark, sfDir).write.format("noop").mode("overwrite").save())
-          spark.catalog.clearCache()
-        } catch { case _: Throwable => () }
+        // the probe's allocation bursts must not land on the retried
+        // pass's FIRST timed sample (the probe ordering above)
+        warmUp()
       } else done = true
     }
 
     def jmap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // JSON string escaper (round-16 ADVICE: sfDir/master were
-    // interpolated unescaped — a quote or backslash in either would
-    // corrupt both output lines).
+    // JSON string escaper: a quote or backslash in sfDir or master must
+    // not corrupt either output line.
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -332,7 +273,7 @@ object Bench {
       .map { case (k, (_, _, gMn, gMx, _, _)) => s"\"$k\":[$gMn,$gMx]" }
       .mkString("{", ",", "}")
     // Shuffle volume at the min run: [bytes read, bytes written] — the
-    // listener-measured exchange evidence (local-cluster A/B, item 6).
+    // measured exchange evidence that plan shapes alone cannot give.
     val shuffleJson = (results ++ auxResults)
       .map { case (k, (_, _, _, _, sr, sw)) => s"\"$k\":[$sr,$sw]" }
       .mkString("{", ",", "}")
@@ -348,18 +289,15 @@ object Bench {
     unstable.foreach(k => System.err.println(
       s"[bench] UNSTABLE $k: max > 3x min — environment stall suspected"))
     val unstableJson = unstable.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Contention guard (round-9 verdict item 2): the max-vs-min rule
-    // above compares runs to each other, so a UNIFORMLY slow window —
-    // every run inflated by host contention — passed silently (the
-    // committed r09 artifact: steal 2.32%, calib 14.9 s vs the same-day
-    // 2.6–2.9 s band, q01 5× its own SQL twin, `unstable: []`). This
-    // guard is CALIB-RELATIVE instead: the artifact self-labels
-    // `contended` when whole-run steal exceeds 1% (the threshold the
-    // steal comment has always documented as "wall times inflated") or
-    // the probe's cpu-seconds exceed CALIB_TOLERANCE× the committed
-    // healthy band — a contended artifact can no longer ship looking
-    // normal, and the driver/operator can re-run instead of grading the
-    // hypervisor.
+    // Contention guard: the max-vs-min rule above compares runs to each
+    // other, so a UNIFORMLY slow window — every run inflated by host
+    // contention — would pass it (one artifact showed steal 2.32%, calib
+    // 14.9 s vs a same-day 2.6–2.9 s band, and `unstable: []`). This guard
+    // is CALIB-RELATIVE instead: the artifact self-labels `contended` when
+    // whole-run steal exceeds 1% or the probe's cpu-seconds exceed
+    // CALIB_TOLERANCE× the committed healthy band, so a contended artifact
+    // cannot look normal and the operator can re-run instead of grading
+    // the hypervisor.
     val calibCpuSec = calibCpuSecOf(calibSec)
     val contended = isContended(stealPct, calibSec)
     if (contended) System.err.println(
@@ -367,16 +305,15 @@ object Bench {
         s"calib_cpusec=$calibCpuSec (healthy ~$CALIB_REF_CPUSEC) — " +
         "wall times are inflated by the host, not the plans; re-run " +
         "in a quiet window before comparing raw seconds")
-    // Measurement provenance (round-6 advice): queries timed on a benchFn
-    // measure the operator's API shape, not the registered compare
-    // closure — flag them so cross-round artifact diffs see the
-    // measurement change, and record which twins were skipped entirely.
+    // Measurement provenance: queries timed on a benchFn measure the
+    // operator's API shape, not the registered compare closure — flag them
+    // so artifact diffs see the measurement change, and record which twins
+    // were skipped entirely.
     val shapeJson = (headline ++ aux).filter(_.benchFn.isDefined)
       .map(q => "\"" + q.name + "\":\"api\"").mkString("{", ",", "}")
     val skippedJson = skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
     val heapMib = Runtime.getRuntime.maxMemory() / (1 << 20)
-    // The cross-round comparable headline (round-8 verdict item 3:
-    // nothing consumed calib_sec) — judge-side comparison is one field.
+    // The headline comparable across artifacts — one field to compare.
     val valueNorm =
       if (calibSec > 0) math.round(total / calibSec * 1000.0) / 1000.0
       else -1.0
@@ -391,9 +328,9 @@ object Bench {
         s""""contended":$contended,"attempts":$attempt,""" +
         s""""retry_trail":${retryTrail.reverse.mkString("[", ",", "]")},""" +
         s""""value_norm":$valueNorm,"sf":${jstr(sfDir)}}"""
-    // Durable artifact FIRST (round-5 verdict item 4: a tail-captured
-    // stdout window truncated the total once aux grew) — the file is the
-    // self-contained record regardless of how stdout is captured.
+    // Durable artifact FIRST: a tail-captured stdout window can truncate
+    // the total, so the file is the self-contained record regardless of
+    // how stdout is captured.
     // A focused BENCH_ONLY run lands in its own file: the committed
     // BENCH_LAST.json is the FULL-registry record, and a perf-iteration
     // subset overwriting it once shipped a 0.0-total artifact.
@@ -408,16 +345,14 @@ object Bench {
         System.err.println(s"[bench] could not write $out: $e")
     }
     println(json)
-    // Bounded aux spotlight (round-17 verdict item 4/6): the driver's
-    // stdout tail keeps only the final ~2 KB and the summary line below
-    // carries the headline map only, so the 154 aux queries — where the
-    // optimization rounds' work actually lands — were invisible to the
-    // driver's round-over-round comparison. This SECOND bounded line
-    // (~550 B) surfaces the slowest TOP-12 aux entries inside the tail
-    // window. It is printed BEFORE the summary line, which stays LAST
-    // and parseable (the rounds-14/15 mid-line-capture lesson); the full
-    // aux map lives in the durable artifact file regardless. Additive
-    // stdout only — the timed region is untouched.
+    // Bounded aux spotlight: a consumer that keeps only the final ~2 KB of
+    // stdout sees the summary line below, which carries the headline map
+    // only, so the aux queries would be invisible to it. This SECOND
+    // bounded line (~550 B) surfaces the slowest TOP-12 aux entries inside
+    // that window. It is printed BEFORE the summary line, which stays LAST
+    // and parseable whole; the full aux map lives in the durable artifact
+    // file regardless. Additive stdout only — the timed region is
+    // untouched.
     val auxMins = auxResults.collect {
       case (k, (mn, _, _, _, _, _)) if mn >= 0 => k -> mn
     }
@@ -427,20 +362,16 @@ object Bench {
       println(s"""{"aux_top":${jmap(top)},"aux_total":$auxTotal,""" +
         s""""aux_n":${auxMins.size},"summary":false}""")
     }
-    // Compact summary LAST (round-15 verdict item 1's driver half): the
-    // full line above is ~20 KB for the 174-query registry, and the
-    // driver that grades rounds captures only the final ~2000 chars of
-    // stdout — rounds 14 and 15 both came back `parsed: null` because
-    // the capture window landed MID-LINE. This line keeps the driver's
+    // Compact summary LAST: the full line above is ~20 KB for the
+    // 174-query registry, and a consumer that captures only the final
+    // ~2000 chars of stdout would land MID-LINE. This line keeps the
     // required fields (metric/value/unit/queries/sf) with the headline
-    // query map only (~1 KB), so it always fits the window whole; the
+    // query map only (~1 KB), so it always fits that window whole; the
     // full record lives in the artifact file either way.
-    // Size guard (round-16 ADVICE): nothing bounded the headline map, so
-    // a grown headline set would silently re-break the "always fits the
-    // ~2000-char window" guarantee this line exists to provide. When the
-    // full map would push the line past ~1.5 KB, keep only the slowest
-    // TOP-N entries (the ones a grader compares first) and say how many
-    // were dropped — the full map is always in the artifact file above.
+    // Size guard: when the full headline map would push the line past
+    // ~1.5 KB, keep only the slowest TOP-N entries (the ones a reader
+    // compares first) and say how many were dropped — a grown headline
+    // set must not break the "always fits the window" guarantee.
     def summaryLine(queriesJson: String, dropped: Int): String =
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
         s""""queries":$queriesJson,"queries_dropped":$dropped,""" +
@@ -458,8 +389,8 @@ object Bench {
       })
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
-    // Opt-in hard gate (ADVICE round 5): a stalled environment otherwise
-    // exits green and downstream tooling must remember to read the field.
+    // Opt-in hard gate: a stalled environment otherwise exits green and
+    // downstream tooling must remember to read the field.
     if (unstable.nonEmpty &&
         sys.env.get("SPARK_GRAFT_FAIL_UNSTABLE").exists(_.nonEmpty))
       sys.exit(2)

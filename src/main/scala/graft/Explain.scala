@@ -1,16 +1,15 @@
 package graft
 
 /** Plan inspector: EXECUTES the named queries (all registered queries if
-  * none given) and reads each plan's `FileSourceScan` nodes back with
-  * their `numOutputRows` metric — the per-round check that no query
-  * re-reads a table more often than its design claims (VERDICT round-2
-  * wrongs #3/#4).
+  * none given) through [[Metrics.run]] and reads the executed plan's
+  * `FileSourceScan` nodes back with their `numOutputRows` metric — the
+  * check that no query re-reads a table more often than its design claims.
   *
-  * Every run is checked against [[ScanBudget]] (round-8 verdict item 1):
-  * a query whose executed plan scans a governed table more times than its
-  * budgeted design floor fails the process (exit 2) with a loud listing —
-  * plan regressions break the regeneration command itself instead of
-  * aging silently inside the committed artifact.
+  * Every run is checked against [[ScanBudget]]: a query whose executed
+  * plan scans a governed table more times than its budgeted design floor
+  * fails the process (exit 2) with a loud listing — plan regressions break
+  * the regeneration command itself instead of aging silently inside the
+  * committed artifact.
   *
   * Usage: runMain graft.Explain [sfDir] [queryName...]
   *  - `SPARK_GRAFT_PLANS_OUT=PLANS.md` additionally writes the full
@@ -24,12 +23,12 @@ object Explain {
     val names = args.drop(1).toSet
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // Committed exact-count pin (round-9 verdict item 7): ScanBudget's
-    // exceptions are documented UPPER bounds, so a plan that regressed
-    // from 1 scan to 2 under a 2-scan floor passed silently. This file
-    // records the regenerated ACTUAL counts; any regeneration over the
-    // same sf whose counts differ — in either direction — fails, so a
-    // drift must be acknowledged by regenerating the pin
+    // Committed exact-count pin: ScanBudget's exceptions are documented
+    // UPPER bounds, so a plan that regressed from 1 scan to 2 under a
+    // 2-scan floor would pass them. This file records the regenerated
+    // ACTUAL counts; any regeneration over the same sf whose counts
+    // differ — in either direction — fails, so a drift must be
+    // acknowledged by regenerating the pin
     // (SPARK_GRAFT_BUDGET_OUT=SCANBUDGET.json) in the same commit.
     val budgetPinPath = "SCANBUDGET.json"
     val pinned: Map[String, Map[String, Int]] =
@@ -41,11 +40,11 @@ object Explain {
       .filter(q => names.isEmpty || names(q.name))
       .map { q =>
         val df = q.fn(spark, sfDir)
-        // PlanScans executes THIS QueryExecution and reads each scan
-        // node's numOutputRows metric (static plan text over-counts).
-        // Operator-owned artifact dirs carry run-unique suffixes (q91's
-        // temp index, q84's fingerprint-keyed store) — normalize them so
-        // regenerated PLANS.md rows diff cleanly across rounds.
+        // PlanScans runs the frame and reads each scan node's
+        // numOutputRows metric off the plan that ran (static plan text
+        // over-counts). Operator-owned artifact dirs carry run-unique
+        // suffixes (q91's temp index, q84's fingerprint-keyed store) —
+        // normalize them so regenerated PLANS.md rows diff cleanly.
         def artifactName(n: String): String =
           n.replaceAll("([0-9a-f]{16,}|\\d{8,})$", "<id>")
         val raw = PlanScans.executedScans(df)

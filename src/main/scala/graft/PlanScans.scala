@@ -29,17 +29,15 @@ object PlanScans {
     walk(p).groupBy(System.identityHashCode(_)).values.map(_.head).toSeq
   }
 
-  /** Execute `df`'s OWN QueryExecution (a fresh action would land its
-    * metrics on a different plan instance) and return each scan's
-    * (root-path name, rows actually read). */
-  def executedScans(df: DataFrame): Seq[(String, Long)] = {
-    df.queryExecution.toRdd.foreach(_ => ())
-    scans(df.queryExecution.executedPlan)
+  /** Materialize `df` through [[Metrics.run]] and return each scan of
+    * the recorded plan — the plan that ran, so its metrics are the rows
+    * actually read — as (root-path name, rows read). */
+  def executedScans(df: DataFrame): Seq[(String, Long)] =
+    scans(Metrics.run(df.sparkSession)(df).plan)
       .map(f => f.relation.location.rootPaths.headOption
         .map(_.getName).getOrElse("?")
         -> f.metrics("numOutputRows").value)
       .sorted
-  }
 
   /** Scan-node count per governed TABLE (suffix-stripped, artifact paths
     * excluded) — the quantity [[ScanBudget.maxScans]] bounds. */

@@ -1,9 +1,5 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
 /** Per-stage measurement harness (optimization guide §1: decide whether a
   * query's time goes to scan, exchange, or compute BEFORE touching the
   * plan; the Spark UI is disabled in this sandbox, so this main prints
@@ -13,8 +9,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   *
   * Runs the registered query `warm` untimed times (JIT/codegen/footer
   * warm-up, default 1), then `timed` measured times (default 1), with the
-  * bench's exact materialization (noop sink, cache cleared between runs).
-  * For every stage of the measured runs prints: stage id, wall ms,
+  * bench's exact materialization ([[Metrics.run]], cache cleared between
+  * runs). For every stage of the measured runs prints: stage id, wall ms,
   * executor-run ms (Σ task run time), GC ms, input bytes/rows, shuffle
   * read/write bytes, task count, and the callsite — the evidence for
   * plan-shape claims in OPTIMIZATION_r17.md. Measurement tooling only:
@@ -31,41 +27,15 @@ object ProfileQuery {
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    case class Row(id: Int, wallMs: Long, runMs: Long, gcMs: Long,
-        inB: Long, inRows: Long, srB: Long, swB: Long, tasks: Int,
-        site: String)
-    val rows = ArrayBuffer.empty[Row]
-    @volatile var collect = false
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        if (collect) {
-          val si = e.stageInfo
-          val m = si.taskMetrics
-          val wall = (for {
-            s <- si.submissionTime; c <- si.completionTime
-          } yield c - s).getOrElse(-1L)
-          rows += Row(si.stageId, wall, m.executorRunTime, m.jvmGCTime,
-            m.inputMetrics.bytesRead, m.inputMetrics.recordsRead,
-            m.shuffleReadMetrics.totalBytesRead,
-            m.shuffleWriteMetrics.bytesWritten,
-            si.numTasks, si.details.linesIterator.take(1).mkString)
-        }
-      }
-    })
-
-    def runOnce(): Double = {
-      val t0 = System.nanoTime()
-      q.timed(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
+    def runOnce(): Metrics.Sample = {
+      val s = Metrics.run(spark)(q.timed(spark, sfDir))
       spark.catalog.clearCache()
-      dt
+      s
     }
     (1 to warm).foreach(_ => runOnce())
-    org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-    collect = true
-    val walls = (1 to timed).map(_ => runOnce())
-    org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
-    collect = false
+    val samples = (1 to timed).map(_ => runOnce())
+    val walls = samples.map(_.wallSec)
+    val rows = samples.flatMap(_.stages)
 
     println(f"== $name: timed ${walls.map(w => f"$w%.3f").mkString(", ")} s " +
       s"(over $timed run(s); ${rows.size} stages)")
@@ -74,14 +44,14 @@ object ProfileQuery {
       f"${"tasks"}%5s  site")
     rows.sortBy(-_.wallMs).foreach { r =>
       println(f"${r.id}%5d ${r.wallMs}%8d ${r.runMs}%8d ${r.gcMs}%6d " +
-        f"${r.inB / 1e6}%8.2f ${r.inRows}%10d ${r.srB / 1e6}%8.2f " +
-        f"${r.swB / 1e6}%8.2f ${r.tasks}%5d  ${r.site}")
+        f"${r.inBytes / 1e6}%8.2f ${r.inRows}%10d ${r.shuffleRead / 1e6}%8.2f " +
+        f"${r.shuffleWrite / 1e6}%8.2f ${r.tasks}%5d  ${r.site}")
     }
     val tot = rows.map(_.wallMs).sum
     println(f"== stage wall total ${tot}ms, stages ${rows.size}, " +
       f"executor-run ${rows.map(_.runMs).sum}ms, " +
       f"gc ${rows.map(_.gcMs).sum}ms, " +
-      f"shuffleR ${rows.map(_.srB).sum / 1e6}%.1f MB")
+      f"shuffleR ${rows.map(_.shuffleRead).sum / 1e6}%.1f MB")
     spark.stop()
   }
 }

@@ -16,18 +16,16 @@ object Verify {
       case (name, _) => only.forall(_.contains(name))
     }
     // Per-query dump status, recorded for the durable machine-readable
-    // result file below (round-15 verdict item 1: the driver's log-tail
-    // parse zeroed two consecutive rounds' correctness records; a FILE
-    // the driver — and the committed repo — can read cannot be truncated
-    // away). Row counts come from the written parquet's footer metadata
-    // (no second execution of the query).
+    // result file below: a log tail can be truncated away, a FILE cannot.
+    // Row counts are counted on the dump write itself
+    // ([[sources.Sinks.counted]], below the coalesce so it runs in the
+    // write's one result stage); no dump is read back to count it.
     val status = scala.collection.mutable.LinkedHashMap.empty[String, String]
     selected.foreach { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        val rows = spark.read.parquet(s"$outDir/$name").count()
-        status(name) = s"""{"status":"dumped","rows":$rows}"""
+        val (counted, rows) = sources.Sinks.counted(fn(spark, sfDir))
+        counted.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        status(name) = s"""{"status":"dumped","rows":${rows.value}}"""
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         status(name) = s"""{"status":"failed"}"""
@@ -36,8 +34,8 @@ object Verify {
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in oracle SQL would otherwise make a reader's
+    // json.load fail and silently drop every correctness record.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -60,8 +58,8 @@ object Verify {
         s""""queries":${status.map { case (k, v) => s"${q(k)}:$v" }
           .mkString("{", ",", "}")}}"""
     Files.writeString(Paths.get(s"$outDir/verify_result.json"), result)
-    // Root-file placement (round-16 ADVICE): a bare relative path landed
-    // wherever the JVM was launched; resolve against the repo root — the
+    // Root-file placement: a bare relative path would land wherever the
+    // JVM was launched; resolve against the repo root — the
     // nearest ancestor of CWD holding build.sbt — so a wrapper launched
     // from a subdirectory still refreshes the committed VERIFY_LAST.json.
     // SPARK_GRAFT_VERIFY_OUT (absolute or relative-to-CWD) overrides.

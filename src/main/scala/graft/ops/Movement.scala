@@ -60,7 +60,7 @@ object Movement {
     * is calendar-bounded (≤ a few thousand rows for decades of data at any
     * fact scale). */
   def trend(spark: SparkSession, dir: String, unit: String, step: String): DataFrame =
-    trendOf(hot(spark, dir), unit, step)
+    trendOfEvents(hot(spark, dir), unit, step)
 
   /** The stored-report simulation for the delta test/query: the trend a
     * previous pipeline run would have written from events ≤ `until` —
@@ -68,19 +68,26 @@ object Movement {
   def trendUntil(spark: SparkSession, dir: String,
       unit: String, step: String, until: String): DataFrame = {
     import spark.implicits._
-    trendOf(hot(spark, dir).filter($"ts" <= to_timestamp(lit(until))),
+    trendOfEvents(hot(spark, dir).filter($"ts" <= to_timestamp(lit(until))),
       unit, step)
   }
 
-  private def trendOf(events: DataFrame, unit: String, step: String): DataFrame = {
+  /** [[trend]] over an arbitrary event frame (ts, value) — also the entry
+    * for tests and streaming callers that already hold the filtered
+    * stream. */
+  def trendOfEvents(events: DataFrame, unit: String, step: String): DataFrame =
+    gapFill(buckets(events, unit), step)
+
+  /** The calendar-bucket aggregate of an event frame (ts, value):
+    * (b, n_events, v_dec DECIMAL) per `date_trunc(unit, ts)` — the one
+    * aggregation both the full recompute and the delta merge fold. */
+  private def buckets(events: DataFrame, unit: String): DataFrame = {
     import events.sparkSession.implicits._
-    gapFill(
-      events
-        .groupBy(date_trunc(unit, $"ts").as("b"))
-        .agg(
-          count(lit(1)).cast("long").as("n_events"),
-          Dx.dec(Dx.decSum($"value")).as("v_dec")),
-      step)
+    events
+      .groupBy(date_trunc(unit, $"ts").as("b"))
+      .agg(
+        count(lit(1)).cast("long").as("n_events"),
+        Dx.dec(Dx.decSum($"value")).as("v_dec"))
   }
 
   /** The densify half of A11 over an aggregated bucket frame
@@ -146,11 +153,7 @@ object Movement {
   def mergeTrend(stored: DataFrame, newEvents: DataFrame,
       unit: String, step: String): DataFrame = {
     import stored.sparkSession.implicits._
-    val delta = newEvents
-      .groupBy(date_trunc(unit, $"ts").as("b"))
-      .agg(
-        count(lit(1)).cast("long").as("n_events"),
-        Dx.dec(Dx.decSum($"value")).as("v_dec"))
+    val delta = buckets(newEvents, unit)
     // prefer the exact decimal column engine-written reports persist;
     // fall back to the presentation double for foreign reports
     val storedVal =
@@ -166,12 +169,6 @@ object Movement {
         Dx.dec(sum($"v_dec")).as("v_dec"))
     gapFill(merged, step)
   }
-
-  /** [[trend]] over an arbitrary event frame (ts, value) — the public
-    * twin of the internal core, used by tests and streaming callers that
-    * already hold the filtered stream. */
-  def trendOfEvents(events: DataFrame, unit: String, step: String): DataFrame =
-    trendOf(events, unit, step)
 
   private def trendSql(unit: String, step: String): String =
     s"""WITH hot AS ($hotSql

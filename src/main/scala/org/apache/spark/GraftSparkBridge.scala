@@ -1,10 +1,10 @@
 package org.apache.spark
 
 /** Minimal bridge to `private[spark]` scheduler internals (same pattern
-  * as `org.apache.spark.sql.GraftSqlBridge`): [[graft.Bench]] reads
-  * per-query shuffle volume through a listener, and listener events are
-  * delivered asynchronously — draining the bus between queries is the
-  * only way to attribute stage metrics to the query that produced them. */
+  * as `org.apache.spark.sql.GraftSqlBridge`): `graft.Metrics` reads each
+  * run's stages and plan through listeners, and listener events are
+  * delivered asynchronously — draining the bus at each run's boundaries
+  * is the only way to attribute them to the run that produced them. */
 object GraftSparkBridge {
   def drainListenerBus(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
