@@ -1,12 +1,13 @@
 package graft
 
-import java.util.concurrent.{CompletableFuture, CompletionException, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap, Executors, ThreadFactory, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.Sinks
 
@@ -20,13 +21,17 @@ import graft.sources.Sinks
   * `Pipeline.run(spark, dataDir, outDir)`.
   *
   * Invariants of [[Pipeline.run]]:
-  *  - reports run concurrently: the DQ fan-out and every report that
-  *    reads only the inputs are submitted together to one pool of the
+  *  - reports run concurrently: the DQ fan-out and every report not in
+  *    [[Pipeline.DERIVED]] are submitted together to one pool of the
   *    session's `defaultParallelism` threads, so their short Spark jobs
-  *    share the cores instead of queueing one after another;
-  *  - a report in [[Pipeline.DERIVED_FROM_TRENDS]] starts only after its
-  *    trend source has been written in the same run, and aggregates that
-  *    written output;
+  *    share the cores instead of queueing one after another; a report in
+  *    `DERIVED` starts only after its source has been written in the same
+  *    run, and aggregates that written output, read with the schema the
+  *    run wrote it with;
+  *  - run snapshot: the run reads its inputs through one
+  *    [[Tables.Snapshot]] of `dataDir`, so each input table is listed and
+  *    its schema inferred once per run, and `hasNewData` and every report
+  *    read the same file set;
   *  - each report's row count is counted on its own write
   *    ([[sources.Sinks.counted]]); no output is read back to count it;
   *  - failure contract: if any report or the DQ fan-out fails, the run
@@ -58,9 +63,10 @@ import graft.sources.Sinks
   *    pass — the reference filters movements inside extract instead;
   *    report entries here read raw inputs so their DuckDB oracles stay
   *    input-exact);
-  *  - cross-report reuse is Catalyst's job (shared subtrees become reused
-  *    exchanges within a report; across reports the parquet scans are the
-  *    shared base), not a mutable dict threaded through transform stages.
+  *  - cross-report reuse is the run snapshot's resolved inputs and the
+  *    derived reports' written sources (within a report, shared subtrees
+  *    become reused exchanges), not a mutable dict of DataFrames threaded
+  *    through transform stages.
   */
 object Pipeline {
 
@@ -89,14 +95,28 @@ object Pipeline {
     "weekly_trends" -> (("week", "1 week")),
     "monthly_trends" -> (("month", "1 month")))
 
-  /** Reports that are pure aggregations of a trend report written earlier
-    * in the SAME run: derived from the just-written output (calendar-
-    * bounded — broadcast-sized at any fact scale) instead of re-scanning
-    * the fact. Each waits for its source's write ([[run]]). */
-  val DERIVED_FROM_TRENDS
-      : Map[String, (String, org.apache.spark.sql.DataFrame => DataFrame)] = Map(
+  /** Reports that are pure aggregations of another report written earlier
+    * in the SAME run: derived from the just-written output (a calendar or
+    * a per-cell valuation, far smaller than the fact) instead of
+    * re-scanning the fact. Each waits for its source's write ([[run]]). */
+  val DERIVED: Map[String, (String, DataFrame => DataFrame)] = Map(
     "peak_day_of_week" -> (("daily_trends", ops.Movement.peakFromDaily _)),
-    "peak_month" -> (("monthly_trends", ops.Movement.peakFromMonthly _)))
+    "peak_month" -> (("monthly_trends", ops.Movement.peakFromMonthly _)),
+    "financial_summary" -> (("stock_value_report", ops.Financial.summaryOf _)))
+
+  requireSourcesFirst(REPORTS.map(_._1),
+    DERIVED.map { case (name, (src, _)) => name -> src })
+
+  /** [[run]] submits outputs in `order` and chains each derived report on
+    * its source's future, so every source must come first. */
+  private[graft] def requireSourcesFirst(
+      order: Seq[String], derived: Map[String, String]): Unit =
+    derived.foreach { case (name, src) =>
+      val at = order.indexOf(src)
+      require(at >= 0 && at < order.indexOf(name),
+        s"Pipeline: derived report $name must come after its source $src " +
+          s"in REPORTS (${order.mkString(", ")})")
+    }
 
   /** Run the full pipeline; returns rows written per report (empty map =
     * incremental short-circuit fired). Each report lands at
@@ -113,8 +133,9 @@ object Pipeline {
       outDir: String,
       incrementalSince: Option[String] = None,
       dqFanout: Boolean = false): Map[String, Long] = {
+    val inputs = new Tables.Snapshot(spark, dataDir)
     val skip = incrementalSince.exists(ts =>
-      !ops.Incremental.hasNewData(spark, dataDir, ts))
+      !inputs(ops.Incremental.hasNewData(spark, dataDir, ts)))
     if (skip) return Map.empty
 
     // A jdbc: outDir loads every report into warehouse TABLES and the
@@ -133,10 +154,17 @@ object Pipeline {
       case _ => Set.empty
     }
 
+    // the schema each report was written with, for its derived reports
+    val wroteSchema = new ConcurrentHashMap[String, StructType]
+
     /** Computes and writes report `name`; returns the rows written. */
     def report(name: String, fn: (SparkSession, String) => DataFrame): Long = {
-      val df = (DERIVED_FROM_TRENDS.get(name), incrementalSince) match {
-        case (Some((src, derive)), _) => derive(written(spark, outDir, src))
+      val df = (DERIVED.get(name), incrementalSince) match {
+        case (Some((src, derive)), _) =>
+          // parquet with the schema it was written with: no inference job
+          derive(
+            if (jdbcOut) written(spark, outDir, src)
+            else spark.read.schema(wroteSchema.get(src)).parquet(s"$outDir/$src"))
         case (None, Some(since)) if deltas(name) =>
           // row-subset path: stored report ⊎ post-checkpoint buckets
           val (unit, step) = TREND_REPORTS(name)
@@ -149,6 +177,7 @@ object Pipeline {
       if (deltas(name)) Sinks.overwriteInPlace(counted, s"$outDir/$name")
       else if (jdbcOut) Sinks.writeJdbc(counted, outDir, name)
       else Sinks.writeParquet(counted, s"$outDir/$name")
+      wroteSchema.put(name, df.schema)
       rows.value
     }
 
@@ -164,13 +193,14 @@ object Pipeline {
       math.min(outputs.size, spark.sparkContext.defaultParallelism),
       poolThreads)
     val outcomes = try {
-      // REPORTS lists every trend source before the reports derived from it
+      // REPORTS lists every source before its derived reports (checked
+      // by requireSourcesFirst)
       val started = outputs.foldLeft(Map.empty[String, CompletableFuture[Long]]) {
         case (sofar, (name, work)) =>
-          sofar + (name -> DERIVED_FROM_TRENDS.get(name).fold(
-            CompletableFuture.supplyAsync(() => work(), pool)) {
+          sofar + (name -> DERIVED.get(name).fold(
+            CompletableFuture.supplyAsync(() => inputs(work()), pool)) {
             case (src, _) =>
-              sofar(src).thenApplyAsync((_: Long) => work(), pool)
+              sofar(src).thenApplyAsync((_: Long) => inputs(work()), pool)
           })
       }
       // every future completes — a task's Throwable completes it

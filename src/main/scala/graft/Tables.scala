@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types._
 
 /** Parquet sources for the driver testdata (TESTDATA.md): TPC-H-ish star
@@ -19,26 +23,26 @@ import org.apache.spark.sql.types._
   * predicates/projections declaratively and NEVER cache or collect a base
   * table. At cluster scale the same code runs over partitioned object-store
   * layouts; nothing here assumes a single file.
+  *
+  * Run snapshot ([[Snapshot]]): inside one [[Pipeline.run]] every
+  * `Tables(spark, dataDir, name)` resolves `name` once — one file listing,
+  * one schema inference, also when reports ask for it concurrently — and
+  * each call gets a fresh relation over that resolved source, so all of a
+  * run's reports read the same file set. The snapshot shares a resolved
+  * relation (file listing and schema), not data: no rows are cached, and
+  * the snapshot is gone when the run returns or throws. Outside a run
+  * every call resolves anew.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (dir.startsWith("jdbc:")) {
-      // S1 JDBC pass-through (`wsm/etl_pipeline/extract/data_extractor
-      // .py:27-36`: seven `SELECT *` over a warehouse connection): `dir`
-      // is the connection URL and `name` the table — so EVERY registered
-      // operator runs unchanged against a JDBC warehouse by passing the
-      // URL where the parquet dir usually goes. Catalyst pushes filters
-      // into the remote query (`PushedFilters` on the scan) and prunes
-      // columns into the SELECT list, same as the parquet path. For a
-      // parallel extract at scale use [[jdbcPartitioned]] — a plain JDBC
-      // read is a single connection/partition by design.
-      spark.read.format("jdbc")
-        .option("url", dir).option("dbtable", name).load()
-    } else {
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val raw = Option(inRun.get).filter(_.covers(spark, dir))
+      .fold(source(spark, dir, name))(_.relation(name))
+    if (dir.startsWith("jdbc:")) raw
+    else {
       // The testdata has shipped timestamp columns with three physical
       // encodings across driver regenerations — TIMESTAMP(NANOS) (read as
       // raw Long via the legacy conf), timestamp[us] without tz (read as
@@ -56,8 +60,6 @@ object Tables {
       // upstream writer (pandas/arrow version of the day) produced.
       // Casts are per-column projections fused into the scan — no extra
       // pass, and pushdown/pruning are unaffected.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
       val ntzFixed = raw.schema.fields.foldLeft(raw) { (df, f) =>
         if (f.dataType == TimestampNTZType)
           df.withColumn(f.name, col(f.name).cast(TimestampType))
@@ -72,6 +74,63 @@ object Tables {
             "graft.Tables' ts normalization for this new testdata drift")
       }
       else ntzFixed
+    }
+  }
+
+  /** The tables under one input dir, each resolved once for the duration
+    * of a run; [[Pipeline.run]] evaluates its input reads inside [[apply]]. */
+  final class Snapshot(spark: SparkSession, dir: String) {
+    // the lazy val resolves once under concurrent first use; a failed
+    // resolution throws to every caller that tries it
+    private final class Resolved(name: String) {
+      lazy val relation: BaseRelation =
+        source(spark, dir, name).queryExecution.analyzed match {
+          case r: LogicalRelation => r.relation
+          case other => throw new IllegalStateException(
+            s"Tables.Snapshot: $dir/$name resolved to ${other.nodeName}, " +
+              "not a relation")
+        }
+    }
+    private val resolved = new ConcurrentHashMap[String, Resolved]
+
+    private[Tables] def covers(s: SparkSession, d: String): Boolean =
+      (s eq spark) && d == dir
+
+    /** A new relation (fresh attribute ids, so one report may join a
+      * table with itself) over `name` as this snapshot resolved it. */
+    private[Tables] def relation(name: String): DataFrame =
+      spark.baseRelationToDataFrame(
+        resolved.computeIfAbsent(name, new Resolved(_)).relation)
+
+    /** `body` on this thread, with `Tables(spark, dir, _)` answering from
+      * this snapshot. */
+    def apply[T](body: => T): T = {
+      val outer = inRun.get
+      inRun.set(this)
+      try body finally inRun.set(outer)
+    }
+  }
+
+  private val inRun = new ThreadLocal[Snapshot]
+
+  /** `name` as the source under `dir` holds it now, before [[apply]]
+    * normalizes its timestamps. */
+  private def source(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (dir.startsWith("jdbc:")) {
+      // S1 JDBC pass-through (`wsm/etl_pipeline/extract/data_extractor
+      // .py:27-36`: seven `SELECT *` over a warehouse connection): `dir`
+      // is the connection URL and `name` the table — so EVERY registered
+      // operator runs unchanged against a JDBC warehouse by passing the
+      // URL where the parquet dir usually goes. Catalyst pushes filters
+      // into the remote query (`PushedFilters` on the scan) and prunes
+      // columns into the SELECT list, same as the parquet path. For a
+      // parallel extract at scale use [[jdbcPartitioned]] — a plain JDBC
+      // read is a single connection/partition by design.
+      spark.read.format("jdbc")
+        .option("url", dir).option("dbtable", name).load()
+    } else {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      spark.read.parquet(s"$dir/$name.parquet")
     }
 
   /** Register every warehouse table as a temp view, giving users the full

@@ -215,13 +215,17 @@ object Financial {
     s"SELECT * FROM (${stockValueSql}\n) ORDER BY stock_value DESC, part_id, supplier_id LIMIT 10"
 
   /** One-row financial summary (A8 + S7): exact total over the valuation. */
-  def financialSummary(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    stockValue(spark, dir).agg(
+  def financialSummary(spark: SparkSession, dir: String): DataFrame =
+    summaryOf(stockValue(spark, dir))
+
+  /** The financial summary of a [[stockValue]]-shaped frame — also of the
+    * `stock_value_report` a pipeline run just wrote. Every sum is exact,
+    * so the result does not depend on the frame's row order. */
+  def summaryOf(sv: DataFrame): DataFrame =
+    sv.agg(
       Dx.dsum2(col("stock_value")).as("total_inventory_value"),
       Dx.dsum(col("quantity_on_hand")).as("total_units"),
       count(lit(1)).cast("long").as("n_stock_cells"))
-  }
 
   private val financialSummaryOracle =
     s"""WITH sv AS (${stockValueSql})

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * project + rename (OUT leg quantity negated, C11), J2 inner self-join of
   * the OUT and IN legs on (reference, product), A9 route patterns with
   * `countDistinct` (exact — `approx_count_distinct` is the stated 100 TB
-  * escape hatch if route cardinality ever explodes), A10 the pivot with a
-  * FIXED column set + `na.fill(0)` (absent types still yield zero columns,
-  * `report_generator.py:106`), O2 sort.
+  * escape hatch if route cardinality ever explodes), A10 the pivot as a
+  * FIXED column set of conditional counts (absent types still yield zero
+  * columns, `report_generator.py:106`), O2 sort.
   *
   * Fixture mapping: a "transfer" is an order line present with both
   * `l_returnflag='R'` (the OUT leg, warehouse := supplier) and `'A'` (the
@@ -28,9 +28,9 @@ import org.apache.spark.sql.functions._
   * fact; the self-join shuffles both sides on the SAME key
   * (reference, product) — co-partitioned sort-merge join, no broadcast of
   * fact-derived data. The pattern agg then reshuffles the (already tiny)
-  * join output on route. The pivot is a partial+final hash agg with a
-  * fixed 5-value pivot list — no second pass to discover pivot values
-  * (Spark would otherwise run a distinct scan first).
+  * join output on route. The pivot is one conditional count per fixed
+  * event type in a single partial+final hash agg keyed by user — one
+  * exchange, and no pass to discover pivot values.
   */
 object Warehouse {
 
@@ -130,17 +130,16 @@ object Warehouse {
   private val patternsTop10Oracle = s"$patternsOracle LIMIT 10"
 
   /** The five fixed pivot values (A10 — fixed so absent types still emit
-    * zero-filled columns AND Spark skips the pivot-value discovery scan). */
+    * zero-count columns). */
   val EVENT_TYPES: Seq[String] = Seq("click", "error", "purchase", "signup", "view")
 
   /** A10: per-user I/O summary — one fixed count column per event type. */
   def ioPivot(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    val counts = EVENT_TYPES.map(t => count(when($"event_type" === t, 1)).as(t))
     Tables(spark, dir, "events")
       .groupBy($"user_id")
-      .pivot("event_type", EVENT_TYPES)
-      .count()
-      .na.fill(0L, EVENT_TYPES)
+      .agg(counts.head, counts.tail: _*)
       .orderBy($"user_id")
   }
 

@@ -5,8 +5,9 @@ package graft
   * run, and the incremental short-circuit writes nothing — the §3.1
   * lifecycle as one call. The concurrent run's own invariants are pinned
   * too: counts taken on the write equal what landed, every written report
-  * equals its constructor's output, and a failed run waits, names the
-  * failures and appends no summary. */
+  * equals its constructor's output, each input table is resolved once
+  * per run, and a failed run waits, names the failures and appends no
+  * summary. */
 class PipelineSpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
 
@@ -19,6 +20,20 @@ class PipelineSpec extends SparkSpec {
   /** A DataFrame's rows as a sorted multiset. */
   private def rowBag(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toString).sorted
+
+  /** A copy of the directory tree at `from`, in a new temp dir. */
+  private def copyTree(from: java.nio.file.Path): java.nio.file.Path = {
+    import java.nio.file.Files
+    val to = Files.createTempDirectory("graft-pipe-copy")
+    scala.util.Using.resource(Files.walk(from)) { paths =>
+      paths.forEach { p =>
+        val target = to.resolve(from.relativize(p))
+        if (Files.isDirectory(p)) Files.createDirectories(target)
+        else Files.copy(p, target)
+      }
+    }
+    to
+  }
 
   /** `run` on another thread, failing the test instead of hanging if it
     * ever blocks. */
@@ -184,38 +199,84 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("every written report equals its constructor's output; peak_* waits for its source") {
+    // covers every Pipeline.DERIVED report, not only the peak_* pair
     import org.apache.spark.sql.functions.{lit, to_timestamp}
     import spark.implicits._
-    // the output dir first holds a run over an older ledger, so a peak_*
-    // report that read its trend source before this run rewrote it would
-    // aggregate the stale calendar and differ from its constructor
+    // the output dir first holds a run over an older ledger and fewer
+    // orders, so a derived report that read its source before this run
+    // rewrote it would aggregate the stale source and differ from its
+    // constructor
     val stale = fixtureDir(
-      "lineitem" -> Tables(spark, src, "lineitem"),
+      "lineitem" -> Tables(spark, src, "lineitem")
+        .filter($"l_orderkey" % 2 === 0),
       "events" -> Tables(spark, src, "events")
         .filter($"ts" <= to_timestamp(lit("2024-01-15 00:00:00"))))
     spark.sparkContext.hadoopConfiguration
       .set("fs.stallfs.impl", classOf[StallFs].getName)
-    val out = "stallfs://" +
-      java.nio.file.Files.createTempDirectory("graft-pipe-eq").toString
-    Pipeline.run(spark, stale, out)
-    val stalePeaks = Pipeline.DERIVED_FROM_TRENDS.keys.map(name =>
-      name -> rowBag(spark.read.parquet(s"$out/$name"))).toMap
-    // rewriting daily_trends now stalls until peak_month starts writing:
-    // every report ahead of peak_month in the pool's queue, including a
-    // peak_day_of_week that did not wait for its source, runs against
-    // the stale daily_trends
-    StallFs.arm()
-    Pipeline.run(spark, src, out)
-    Pipeline.REPORTS.foreach { case (name, fn) =>
-      val expected = fn(spark, src)
-      val got = spark.read.parquet(s"$out/$name")
-      assert(got.columns.toSeq == expected.columns.toSeq, name)
-      assert(rowBag(got) == rowBag(expected), s"$name != its constructor")
+    val staleOut = java.nio.file.Files.createTempDirectory("graft-pipe-eq")
+    Pipeline.run(spark, stale, s"stallfs://$staleOut")
+    val expected = Pipeline.REPORTS.map { case (name, fn) =>
+      val df = fn(spark, src)
+      name -> ((df.columns.toSeq, rowBag(df)))
+    }.toMap
+    val order = Pipeline.REPORTS.map(_._1)
+    Pipeline.DERIVED.foreach { case (name, (source, _)) =>
+      // over a copy of the stale output, rewriting `source` stalls until
+      // the report after `name` in REPORTS starts writing: the stall
+      // holds one pool thread, so every report queued ahead of that one,
+      // including a `name` that did not wait for its source, runs against
+      // the stale `source`
+      val out = copyTree(staleOut)
+      StallFs.arm(source, order(order.indexOf(name) + 1))
+      Pipeline.run(spark, src, s"stallfs://$out")
+      order.foreach { report =>
+        val got = spark.read.parquet(s"$out/$report")
+        val (columns, rows) = expected(report)
+        assert(got.columns.toSeq == columns, report)
+        assert(rowBag(got) == rows,
+          s"$report != its constructor (stalled $source)")
+      }
+      // the stale run really was different, so the check above could fail
+      assert(rowBag(spark.read.parquet(s"$staleOut/$name")) !=
+        expected(name)._2, name)
     }
-    // the stale run really was different, so the check above could fail
-    stalePeaks.foreach { case (name, rows) =>
-      assert(rows != rowBag(spark.read.parquet(s"$out/$name")), name)
+  }
+
+  test("a run resolves each input table once: derived reads start no schema inference") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // a job outside any SQL execution is a parquet schema inference
+    val inferences = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.sql.execution.id") == null)
+          inferences.incrementAndGet()
     }
+    val out = java.nio.file.Files.createTempDirectory("graft-pipe-once").toString
+    val sc = spark.sparkContext
+    org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      bounded(Pipeline.run(spark, src, out, dqFanout = true))
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    // events and lineitem, once each
+    assert(inferences.get == 2, inferences.get)
+  }
+
+  test("a derived report listed before its source fails by name") {
+    Pipeline.requireSourcesFirst(Pipeline.REPORTS.map(_._1),
+      Pipeline.DERIVED.map { case (name, (source, _)) => name -> source })
+    val before = intercept[IllegalArgumentException](
+      Pipeline.requireSourcesFirst(Seq("peak_month", "monthly_trends"),
+        Map("peak_month" -> "monthly_trends")))
+    assert(before.getMessage.contains(
+      "derived report peak_month must come after its source monthly_trends"),
+      before.getMessage)
+    val missing = intercept[IllegalArgumentException](
+      Pipeline.requireSourcesFirst(Seq("financial_summary"),
+        Map("financial_summary" -> "stock_value_report")))
+    assert(missing.getMessage.contains("stock_value_report"),
+      missing.getMessage)
   }
 
   test("a failed run waits for in-flight reports, names the failures, appends no summary") {
@@ -242,27 +303,41 @@ class PipelineSpec extends SparkSpec {
   }
 }
 
-/** The local filesystem under the `stallfs:` scheme, with one stall: the
-  * delete an overwrite of a `daily_trends` directory starts with waits
-  * until a `peak_month` directory is created (or a minute passes) once
-  * [[StallFs.arm]] has been called. */
+/** The local filesystem under the `stallfs:` scheme, with one stall once
+  * [[StallFs.arm]]`(source, releaser)` has been called: the delete an
+  * overwrite of a `source` directory starts with waits until a `releaser`
+  * directory is created (or a minute passes). */
 class StallFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   import org.apache.hadoop.fs.Path
   import org.apache.hadoop.fs.permission.FsPermission
   override def getScheme: String = "stallfs"
   override def getUri: java.net.URI = java.net.URI.create("stallfs:///")
   override def delete(p: Path, recursive: Boolean): Boolean = {
-    if (p.getName == "daily_trends")
+    if (p.getName == StallFs.source)
       StallFs.gate.await(1, java.util.concurrent.TimeUnit.MINUTES)
     super.delete(p, recursive)
   }
+  // a write's job setup calls the one-argument mkdirs, which does not
+  // delegate to the two-argument one
+  override def mkdirs(p: Path): Boolean = {
+    release(p)
+    super.mkdirs(p)
+  }
   override def mkdirs(p: Path, perm: FsPermission): Boolean = {
-    if (p.toUri.getPath.contains("/peak_month/")) StallFs.gate.countDown()
+    release(p)
     super.mkdirs(p, perm)
   }
+  private def release(p: Path): Unit =
+    if (p.toUri.getPath.contains(s"/${StallFs.releaser}/"))
+      StallFs.gate.countDown()
 }
 
 object StallFs {
   @volatile private[graft] var gate = new java.util.concurrent.CountDownLatch(0)
-  def arm(): Unit = gate = new java.util.concurrent.CountDownLatch(1)
+  @volatile private var source, releaser = ""
+  def arm(source: String, releaser: String): Unit = {
+    this.source = source
+    this.releaser = releaser
+    gate = new java.util.concurrent.CountDownLatch(1)
+  }
 }
