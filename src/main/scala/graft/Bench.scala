@@ -81,7 +81,7 @@ object Bench {
     // the warm-up absorbs the GC debt of the probe's three 50M-row
     // allocation bursts before the clock starts (a first timed query right
     // after the probe once caught a 9.7 s max).
-    def calibProbe(): Double = try {
+    val calibSec: Double = try {
       (1 to 3).map { _ =>
         Metrics.run(spark)(spark.range(0, 50000000L, 1, cpus.toInt)
           .selectExpr("xxhash64(id) AS h")
@@ -94,7 +94,6 @@ object Bench {
         System.err.println(s"[bench] calibration probe failed: $e")
         -1.0
     }
-    var calibSec: Double = calibProbe()
     System.err.println(s"[bench] calib_sec=$calibSec")
 
     // Untimed setup pass: one-time artifacts a query reads but whose
@@ -107,7 +106,7 @@ object Bench {
       System.err.println(s"[bench] q84 stored-table setup failed: $e") }
     // Untimed: train-once quantizer warm-up for the IVF serve queries —
     // q83 times TRAINING cold every run; q85/q91 time SERVING against
-    // the driver-cached model (Ann.trainedCache scaladoc). Without this
+    // the driver-memoized model (Ann.trainedCents scaladoc). Without this
     // the first timed q85 sample pays the one-time train and trips the
     // unstable flag as a fake stall.
     if ((headline ++ aux).exists(q =>
@@ -122,12 +121,12 @@ object Bench {
       try graft.ops.Ann.warmSemDedupAuto(spark, sfDir)
       catch { case e: Throwable =>
         System.err.println(s"[bench] q101 sized-quantizer warm-up failed: $e") }
-    // Untimed: the PQ codebook the quantized-ANN serves read (train-once
-    // artifact, the trainedCache precedent).
+    // Untimed: the PQ codebook the quantized-ANN serves read (a train-once
+    // artifact memoized like the quantizer).
     if ((headline ++ aux).exists(q => Set("q154_ann_pq", "q158_ann_ivfpq",
         "q163_pq_recall", "q164_ivfpq_recall", "q165_pq_index_serve",
         "q166_pq_index_increment").contains(q.name)))
-      // q166 trains under a CUT-KEYED cache key; warm that codebook too
+      // q166 trains under a CUT-KEYED memo key; warm that codebook too
       // when it is in the benched set (otherwise its first timed sample
       // still pays PQ Lloyd training).
       try graft.ops.Ann.warmPq(spark, sfDir, incrementCut =
@@ -137,14 +136,12 @@ object Bench {
 
     // Untimed warm-up: the first TIMED query end-to-end (the first aux
     // query under a BENCH_ONLY subset with no headline selection, so an
-    // empty-headline run still gets one). It runs at cold start and again
-    // after every re-probe, between the probe and the clock.
-    def warmUp(): Unit = try {
+    // empty-headline run still gets one), between the probe and the clock.
+    try {
       (headline ++ aux).headOption
         .foreach(q => Metrics.run(spark)(q.timed(spark, sfDir)))
       spark.catalog.clearCache()
     } catch { case _: Throwable => () }
-    warmUp()
 
     var failed = List.empty[String]
     /** Cumulative (busyJiffies, stealJiffies) from /proc/stat — the VM
@@ -191,67 +188,16 @@ object Bench {
       }
     }
 
-    /** Committed reference for the calibration probe, in CPU-SECONDS
-      * (calib_sec × worker threads): the probe is embarrassingly
-      * parallel, so its total CPU work is machine-size-invariant — a
-      * one-day backfill band (2.63–2.94 s at 32 threads) puts a healthy
-      * host at 84–94 cpu-sec; a slow day measured ~195 and a contended
-      * artifact ~476. */
-    val CALIB_REF_CPUSEC = 90.0
-    val CALIB_TOLERANCE = 2.0
-    def calibCpuSecOf(c: Double): Double =
-      if (c > 0) math.round(c * cpus.toInt * 100.0) / 100.0 else -1.0
-    def isContended(steal: Double, calib: Double): Boolean =
-      steal > 1.0 || {
-        val cs = calibCpuSecOf(calib)
-        cs > 0 && cs > CALIB_TOLERANCE * CALIB_REF_CPUSEC
-      }
-
-    // Bounded in-process retry on contention: when a full pass lands
-    // contended (steal > 1% or the calibration probe outside the healthy
-    // band), the attempt is recorded in `retry_trail`, the process backs
-    // off, re-probes, and re-measures, up to two extra passes. The final
-    // artifact is the LAST attempt's numbers plus the full trail, so a
-    // contended record can only ship with its retry history attached and
-    // never silently replaces a quiet one.
-    val maxAttempts = 3 // the first pass + two retries
-    val backoffSec = 120
-    var results = Seq.empty[(String, (Double, Double, Long, Long, Long, Long))]
-    var auxResults = Seq.empty[(String, (Double, Double, Long, Long, Long, Long))]
-    var stealPct = -1.0
-    var retryTrail = List.empty[String]
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      failed = Nil // a retried pass re-times every query from scratch
-      val jif0 = cpuJiffies()
-      results = headline.map(q => q.name -> time(q))
-      auxResults = aux.map(q => q.name -> time(q))
-      val jif1 = cpuJiffies()
-      // steal as % of the machine's busy jiffies over the whole run:
-      // >1–2% means the host contended the guest and walls are inflated.
-      stealPct =
-        if (jif1._1 - jif0._1 <= 0) -1.0
-        else math.round(
-          (jif1._2 - jif0._2) * 10000.0 / (jif1._1 - jif0._1)) / 100.0
-      if (isContended(stealPct, calibSec) && attempt < maxAttempts) {
-        retryTrail ::= s"""{"attempt":$attempt,"steal_pct":$stealPct,""" +
-          s""""calib_sec":$calibSec,""" +
-          s""""calib_cpusec":${calibCpuSecOf(calibSec)},""" +
-          s""""backoff_sec":$backoffSec}"""
-        System.err.println(
-          s"[bench] attempt $attempt CONTENDED (steal=$stealPct%, " +
-            s"calib=$calibSec s) — backing off ${backoffSec}s, re-probing " +
-            "and re-measuring")
-        Thread.sleep(backoffSec * 1000L)
-        calibSec = calibProbe()
-        System.err.println(s"[bench] calib_sec=$calibSec (attempt ${attempt + 1})")
-        // the probe's allocation bursts must not land on the retried
-        // pass's FIRST timed sample (the probe ordering above)
-        warmUp()
-      } else done = true
-    }
+    val jif0 = cpuJiffies()
+    val results = headline.map(q => q.name -> time(q))
+    val auxResults = aux.map(q => q.name -> time(q))
+    val jif1 = cpuJiffies()
+    // steal as % of the machine's busy jiffies over the whole run:
+    // >1–2% means the host contended the guest and walls are inflated.
+    val stealPct =
+      if (jif1._1 - jif0._1 <= 0) -1.0
+      else math.round(
+        (jif1._2 - jif0._2) * 10000.0 / (jif1._1 - jif0._1)) / 100.0
 
     def jmap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -298,8 +244,18 @@ object Bench {
     // CALIB_TOLERANCE× the committed healthy band, so a contended artifact
     // cannot look normal and the operator can re-run instead of grading
     // the hypervisor.
-    val calibCpuSec = calibCpuSecOf(calibSec)
-    val contended = isContended(stealPct, calibSec)
+    // Committed reference for the calibration probe, in CPU-SECONDS
+    // (calib_sec × worker threads): the probe is embarrassingly parallel,
+    // so its total CPU work is machine-size-invariant — a one-day backfill
+    // band (2.63–2.94 s at 32 threads) puts a healthy host at 84–94
+    // cpu-sec; a slow day measured ~195 and a contended artifact ~476.
+    val CALIB_REF_CPUSEC = 90.0
+    val CALIB_TOLERANCE = 2.0
+    val calibCpuSec =
+      if (calibSec > 0) math.round(calibSec * cpus.toInt * 100.0) / 100.0
+      else -1.0
+    val contended = stealPct > 1.0 ||
+      calibCpuSec > CALIB_TOLERANCE * CALIB_REF_CPUSEC
     if (contended) System.err.println(
       s"[bench] CONTENDED window: steal=$stealPct% " +
         s"calib_cpusec=$calibCpuSec (healthy ~$CALIB_REF_CPUSEC) — " +
@@ -325,9 +281,8 @@ object Bench {
         s""""shuffle_bytes":$shuffleJson,"master":${jstr(master)},""" +
         s""""heap_mib":$heapMib,"cpus":$cpus,"steal_pct":$stealPct,""" +
         s""""calib_sec":$calibSec,"calib_cpusec":$calibCpuSec,""" +
-        s""""contended":$contended,"attempts":$attempt,""" +
-        s""""retry_trail":${retryTrail.reverse.mkString("[", ",", "]")},""" +
-        s""""value_norm":$valueNorm,"sf":${jstr(sfDir)}}"""
+        s""""contended":$contended,"value_norm":$valueNorm,""" +
+        s""""sf":${jstr(sfDir)}}"""
     // Durable artifact FIRST: a tail-captured stdout window can truncate
     // the total, so the file is the self-contained record regardless of
     // how stdout is captured.
@@ -377,8 +332,8 @@ object Bench {
         s""""queries":$queriesJson,"queries_dropped":$dropped,""" +
         s""""runs":$runs,"master":${jstr(master)},"heap_mib":$heapMib,""" +
         s""""cpus":$cpus,"steal_pct":$stealPct,"calib_sec":$calibSec,""" +
-        s""""contended":$contended,"attempts":$attempt,""" +
-        s""""value_norm":$valueNorm,"summary":true,"sf":${jstr(sfDir)}}"""
+        s""""contended":$contended,"value_norm":$valueNorm,""" +
+        s""""summary":true,"sf":${jstr(sfDir)}}"""
     val fullSummary = summaryLine(qs, 0)
     println(
       if (fullSummary.length <= 1500) fullSummary

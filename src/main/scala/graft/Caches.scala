@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Tracked persist() handles for library entry points.
@@ -25,6 +27,11 @@ import org.apache.spark.storage.StorageLevel
   * newest handle. The harness mains keep their `clearCache()` contract
   * unchanged (it also empties this registry's storage; stale registry
   * entries then unpersist as no-ops).
+  *
+  * [[memo]] is the driver-side twin for small build-once artifacts (a
+  * trained quantizer, a PQ codebook, a corpus count): values held on the
+  * driver, not persisted frames, keyed by the input files they were
+  * built from.
   */
 object Caches {
   private val reg = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
@@ -96,4 +103,39 @@ object Caches {
 
   /** Tags currently tracked (diagnostics/tests). */
   def tracked: Set[String] = reg.keySet.toSet
+
+  // one slot per (key, dir): the fingerprint it was built under and the
+  // value, built on first read (concurrent readers wait for one build)
+  private final class Built(val fingerprint: String, build: () => Any) {
+    lazy val value: Any = build()
+  }
+  private val memos = new ConcurrentHashMap[String, Built]
+
+  /** `build`'s value for the artifact `key` over `dir`, built once while
+    * the `tables` under `dir` keep their [[Tables.fingerprint]] and built
+    * again when any of them is rewritten in place, so a regenerated corpus
+    * never gets the old corpus's model. A rewrite the memo sees also
+    * refreshes the session's cached frames over those tables, which Spark
+    * would otherwise keep serving with the old rows to the rebuild and
+    * to its caller. `key` names the artifact and its parameters and fixes
+    * the value's type. Holds one value per (`key`, `dir`); a build that
+    * throws leaves nothing behind. A `jdbc:` dir has an empty
+    * fingerprint, so its value is keyed by the URL alone and lives until
+    * [[clearMemo]]. */
+  def memo[T](spark: SparkSession, key: String, dir: String,
+      tables: Seq[String])(build: => T): T = {
+    val slotKey = s"$key@$dir"
+    val fp = tables.map(Tables.fingerprint(spark, dir, _)).mkString("|")
+    if (Option(memos.get(slotKey)).exists(_.fingerprint != fp))
+      tables.foreach(t => spark.catalog.refreshByPath(s"$dir/$t.parquet"))
+    val slot = memos.compute(slotKey, (_, held) =>
+      if (held != null && held.fingerprint == fp) held
+      else new Built(fp, () => build))
+    try slot.value.asInstanceOf[T]
+    catch { case e: Throwable => memos.remove(slotKey, slot); throw e }
+  }
+
+  /** Drop every [[memo]] value — for tests that pin a rebuilt artifact
+    * equal to the memoized one. */
+  def clearMemo(): Unit = memos.clear()
 }

@@ -70,30 +70,33 @@ import graft.sources.Sinks
   */
 object Pipeline {
 
+  /** The calendar-trend reports and their (unit, step), in report
+    * order — the reports with a genuine row-subset delta (merging new
+    * buckets into a stored calendar is cheaper than rescanning the
+    * ledger; for everything else delta ≈ recompute). */
+  val TREND_REPORTS: Map[String, (String, String)] =
+    scala.collection.immutable.ListMap(
+      "daily_trends" -> (("day", "1 day")),
+      "weekly_trends" -> (("week", "1 week")),
+      "monthly_trends" -> (("month", "1 month")))
+
   /** The reference's twelve named reports
     * (`wsm/etl_pipeline/load/data_loader.py:33-38`) → engine queries. */
-  val REPORTS: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "dead_stock_report" -> (ops.Inventory.deadStockReport(_, _)),
-    "inventory_summary" -> (ops.Inventory.inventorySummary(_, _)),
-    "daily_trends" -> (ops.Movement.trend(_, _, "day", "1 day")),
-    "weekly_trends" -> (ops.Movement.trend(_, _, "week", "1 week")),
-    "monthly_trends" -> (ops.Movement.trend(_, _, "month", "1 month")),
-    "peak_day_of_week" -> (ops.Movement.peakDayOfWeek(_, _)),
-    "peak_month" -> (ops.Movement.peakMonth(_, _)),
-    "abc_analysis" -> (ops.Financial.abcAnalysis(_, _)),
-    "stock_value_report" -> (ops.Financial.stockValue(_, _)),
-    "financial_summary" -> (ops.Financial.financialSummary(_, _)),
-    "transfer_patterns" -> (ops.Warehouse.transferPatterns(_, _)),
-    "warehouse_io_summary" -> (ops.Warehouse.ioPivot(_, _)))
-
-  /** The calendar-trend reports and their (unit, step) — the reports
-    * with a genuine row-subset delta (merging new buckets into a stored
-    * calendar is cheaper than rescanning the ledger; for everything else
-    * delta ≈ recompute). */
-  val TREND_REPORTS: Map[String, (String, String)] = Map(
-    "daily_trends" -> (("day", "1 day")),
-    "weekly_trends" -> (("week", "1 week")),
-    "monthly_trends" -> (("month", "1 month")))
+  val REPORTS: Seq[(String, (SparkSession, String) => DataFrame)] =
+    Seq[(String, (SparkSession, String) => DataFrame)](
+      "dead_stock_report" -> (ops.Inventory.deadStockReport(_, _)),
+      "inventory_summary" -> (ops.Inventory.inventorySummary(_, _))) ++
+    TREND_REPORTS.toSeq.map { case (name, (unit, step)) =>
+      name -> ((s: SparkSession, d: String) =>
+        ops.Movement.trend(s, d, unit, step))
+    } ++ Seq[(String, (SparkSession, String) => DataFrame)](
+      "peak_day_of_week" -> (ops.Movement.peakDayOfWeek(_, _)),
+      "peak_month" -> (ops.Movement.peakMonth(_, _)),
+      "abc_analysis" -> (ops.Financial.abcAnalysis(_, _)),
+      "stock_value_report" -> (ops.Financial.stockValue(_, _)),
+      "financial_summary" -> (ops.Financial.financialSummary(_, _)),
+      "transfer_patterns" -> (ops.Warehouse.transferPatterns(_, _)),
+      "warehouse_io_summary" -> (ops.Warehouse.ioPivot(_, _)))
 
   /** Reports that are pure aggregations of another report written earlier
     * in the SAME run: derived from the just-written output (a calendar or

@@ -102,10 +102,9 @@ object ScanBudget {
     // probe-leg floor (the BM25 leg rides q122's one documents scan).
     "q127_hybrid_rrf" -> Map("embeddings" -> 2),
     // Scalar-quantized ANN: corpus leg + broadcast probe leg (the q29
-    // self-join floor). The per-dim min/max train leg is a driver-cached
-    // 64-double artifact since round 13 (the q85 trainedCache precedent
-    // — train once, serve many), so the serve plan dropped from the q48
-    // 3-scan form to this 2-scan floor.
+    // self-join floor). The screen quantizes each NORMALIZED vector on
+    // its own (Ann.quantized), so there is no train leg: both legs are
+    // the one un-persisted quantized projection, read once per side.
     "q132_ann_quantized" -> Map("embeddings" -> 2),
     // Quantized-screen recall evaluations: q162/q163/q164 all ride the
     // DEFAULT 1-scan budget since round 15 — recallAgainstBrute tracks

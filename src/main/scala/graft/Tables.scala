@@ -113,6 +113,24 @@ object Tables {
 
   private val inRun = new ThreadLocal[Snapshot]
 
+  /** The data files of table `name` under `dir` as it holds them now:
+    * each file's `name:size:mtime`, sorted and comma-joined, or `absent`
+    * when the table has no directory. Rewriting the table in place (the
+    * ScaleGen workflow) changes it, so an artifact keyed by it is rebuilt
+    * instead of served stale. A `jdbc:` dir cannot be listed: its
+    * fingerprint is empty, so a key over it is the URL alone. */
+  def fingerprint(spark: SparkSession, dir: String, name: String): String =
+    if (dir.startsWith("jdbc:")) ""
+    else {
+      val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(path))
+        fs.listStatus(path).filter(_.isFile)
+          .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+          .sorted.mkString(",")
+      else "absent"
+    }
+
   /** `name` as the source under `dir` holds it now, before [[apply]]
     * normalizes its timestamps. */
   private def source(spark: SparkSession, dir: String, name: String): DataFrame =

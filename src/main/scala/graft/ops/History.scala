@@ -267,9 +267,9 @@ object History {
     * run would have persisted), then read back from parquet — the
     * between-runs artifact a production T1 pipeline maintains.
     *
-    * Cache validity (round-8 ADVICE): the key is a fingerprint of the
-    * LEDGER INPUTS — every `lineitem` data file's (path, size, mtime) —
-    * plus checkpoint and a version token, so regenerating the data under
+    * Cache validity: the key is the `lineitem` fingerprint
+    * ([[graft.Tables.fingerprint]]: every data file's name, size and
+    * mtime) plus dir and checkpoint, so regenerating the data under
     * `d` in place (the ScaleGen workflow) changes the key and forces a
     * rebuild instead of silently reusing a stale artifact. Concurrent
     * JVMs racing the first build are isolated by temp-dir-and-rename via
@@ -283,13 +283,7 @@ object History {
   def storedTable(s: SparkSession, d: String, checkpoint: String): DataFrame = {
     val hconf = s.sparkContext.hadoopConfiguration
     val fs = org.apache.hadoop.fs.FileSystem.get(hconf)
-    val ledgerDir = new org.apache.hadoop.fs.Path(s"$d/lineitem.parquet")
-    val inputs =
-      if (fs.exists(ledgerDir))
-        fs.listStatus(ledgerDir).filter(_.isFile)
-          .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
-          .sorted.mkString(",")
-      else "absent"
+    val inputs = Tables.fingerprint(s, d, "lineitem")
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$d|$checkpoint|$inputs".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString

@@ -981,25 +981,23 @@ object TextPipeline {
     * on one fixture). */
   val SKETCH_MIN_DOCS: Long = 20000L
 
-  /** Session-lifetime cache behind the size gate's corpus count
-    * (ADVICE round 11): without it every [[shingleNearDup]] CALL — and
-    * every composition that embeds one (keep lists, components, the
-    * curation verdict) — re-ran the count-star eagerly at plan-build
-    * time. For parquet dirs the count is an O(files) footer read and the
-    * dir's contents are immutable for the life of a run, so one count
-    * per (JVM, dir) is both safe and all the gate needs. For `jdbc:`
-    * dirs the count is a REMOTE `count(*)` that may scan the table when
-    * aggregate pushdown is unavailable — caching bounds that cost to
-    * once per session, which is the honest cost of a runtime-statistics
-    * gate over a source with no cheap statistics. */
-  private val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private val gateLogged =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** The size gate's corpus count, memoized on the driver
+    * ([[graft.Caches.memo]], keyed by the documents' file fingerprint):
+    * without it every [[shingleNearDup]] CALL — and every composition that
+    * embeds one (keep lists, components, the curation verdict) — re-ran
+    * the count-star eagerly at plan-build time. For parquet dirs the
+    * count is an O(files) footer read, recounted only when the corpus is
+    * rewritten. For `jdbc:` dirs the count is a REMOTE `count(*)` that may
+    * scan the table when aggregate pushdown is unavailable; the memo
+    * bounds that cost to once per session, which is the honest cost of a
+    * runtime-statistics gate over a source with no cheap statistics. */
   private def gateDocCount(spark: SparkSession, dir: String): Long =
-    docCountCache.computeIfAbsent(
-      dir, d => java.lang.Long.valueOf(docs(spark, d).count())).longValue()
+    graft.Caches.memo(spark, "textpipeline.doc_count", dir, Seq("documents")) {
+      docs(spark, dir).count()
+    }
 
   /** Near-duplicate pairs by exact 3-shingle Jaccard ≥ 0.8, candidates
     * from the df-bounded inverted index — NEVER all-pairs: the self-join

@@ -162,12 +162,17 @@ object Sinks {
     * (the counter sits above the repartition, in the result stage). */
   def writeShards(
       df: DataFrame, path: String, idCol: String, nShards: Int): Long = {
-    val (rows, n) = counted(df
-      .withColumn("shard", pmod(xxhash64(col(idCol)), lit(nShards.toLong)))
-      .repartition(nShards, col("shard")))
+    val (rows, n) = counted(sharded(df, idCol, nShards))
     rows.write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(path)
     n.value
   }
+
+  /** `df` with its `shard` (xxhash64 of the id, mod `nShards`) and
+    * repartitioned on it — the one assignment both shard writers use, so
+    * each document lands in the same shard in either format. */
+  private def sharded(df: DataFrame, idCol: String, nShards: Int): DataFrame =
+    df.withColumn("shard", pmod(xxhash64(col(idCol)), lit(nShards.toLong)))
+      .repartition(nShards, col("shard"))
 
   /** JSONL flavor of [[writeShards]] — the wire format LLM training
     * loaders actually consume (one JSON object per line, shard dirs by
@@ -180,9 +185,7 @@ object Sinks {
     * arrays/base64 per `to_json`'s documented mapping. */
   def writeJsonlShards(
       df: DataFrame, path: String, idCol: String, nShards: Int): Unit =
-    df
-      .withColumn("shard", pmod(xxhash64(col(idCol)), lit(nShards.toLong)))
-      .repartition(nShards, col("shard"))
+    sharded(df, idCol, nShards)
       .select(col("shard"),
         to_json(struct(df.columns.map(col): _*)).as("value"))
       .write.mode(SaveMode.Overwrite)

@@ -50,14 +50,20 @@ object StreamingLedger {
       .flatMapGroupsWithState(
         OutputMode.Update, GroupStateTimeout.NoTimeout)(
         (key: (Long, Long), rows: Iterator[Movement],
-         state: GroupState[(Double, Long)]) => {
-          val (q0, n0) = state.getOption.getOrElse((0.0, 0L))
-          var q = q0
-          var n = n0
-          rows.foreach { m => q += m.quantity; n += 1 }
-          state.update((q, n))
-          Iterator(CellUpdate(key._1, key._2, q, n))
-        })
+         state: GroupState[(Double, Long)]) =>
+          Iterator(fold(key, rows, state)))
+  }
+
+  /** Folds a cell's new movements into its running (quantity, count)
+    * state and returns the cell's update. */
+  private def fold(key: (Long, Long), rows: Iterator[Movement],
+      state: GroupState[(Double, Long)]): CellUpdate = {
+    val (q0, n0) = state.getOption.getOrElse((0.0, 0L))
+    var q = q0
+    var n = n0
+    rows.foreach { m => q += m.quantity; n += 1 }
+    state.update((q, n))
+    CellUpdate(key._1, key._2, q, n)
   }
 
   /** [[runningSnapshot]] with BOUNDED state under key churn: idle cells
@@ -90,13 +96,9 @@ object StreamingLedger {
             state.remove()
             Iterator.empty
           } else {
-            val (q0, n0) = state.getOption.getOrElse((0.0, 0L))
-            var q = q0
-            var n = n0
-            rows.foreach { m => q += m.quantity; n += 1 }
-            state.update((q, n))
+            val update = fold(key, rows, state)
             state.setTimeoutDuration(idleTimeoutMs)
-            Iterator(CellUpdate(key._1, key._2, q, n))
+            Iterator(update)
           }
         })
   }

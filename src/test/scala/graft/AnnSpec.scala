@@ -219,11 +219,11 @@ class AnnSpec extends SparkSpec {
     // and a cold retrain produce the same rows, cosines included.
     def serve() = Ann.ivfTopKTrained(spark, dir)
       .collect().map(_.toSeq).toSeq
-    Ann.clearTrainedCache()
+    graft.Caches.clearMemo()
     val cold = serve() // trains, populates the cache
     val warm = serve() // cache hit
     assert(warm == cold, "cache-hit serve must be byte-identical")
-    Ann.clearTrainedCache()
+    graft.Caches.clearMemo()
     assert(serve() == cold, "fresh retrain must reproduce the cached model")
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
@@ -243,7 +243,6 @@ class AnnSpec extends SparkSpec {
       (100 until 116).map(_.toLong).toSet
     assert(rows.filterNot(_._2).keySet == expectedDrop,
       s"dropped = ${rows.filterNot(_._2).keySet.toSeq.sorted}")
-    Ann.clearTrainedCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -262,7 +261,6 @@ class AnnSpec extends SparkSpec {
       (100 until 116).map(_.toLong).toSet
     assert(rows.filterNot(_._2).keySet == expectedDrop,
       s"dropped = ${rows.filterNot(_._2).keySet.toSeq.sorted}")
-    Ann.clearTrainedCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -277,7 +275,6 @@ class AnnSpec extends SparkSpec {
     assert(occ <= Ann.OCC_CAP,
       s"max cell occupancy $occ exceeds OCC_CAP=${Ann.OCC_CAP}: q101's " +
         "capped pair stage now diverges from its all-pairs oracle")
-    Ann.clearTrainedCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -294,7 +291,6 @@ class AnnSpec extends SparkSpec {
         .toSet
     val uncapped = verdict(Int.MaxValue)
     assert(verdict(Ann.OCC_CAP) == uncapped)
-    Ann.clearTrainedCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -311,14 +307,12 @@ class AnnSpec extends SparkSpec {
     val denseDir = fixtureDir(
       "embeddings" -> (Emb(8L, base(0).toSeq, 0) +:
         (0 until 39).map(k => Emb(100L + k, base(0).toSeq, 0))).toDF())
-    Ann.clearTrainedCache()
     val rows = Ann.semDedup(spark, denseDir, dim = DIM, k = Some(1),
       occCap = 8, chainW = 3).collect()
       .map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(rows.size == 40, s"verdict must cover every vector: ${rows.size}")
     assert(rows.filter(_._2).keySet == Set(8L),
       s"kept = ${rows.filter(_._2).keySet.toSeq.sorted}")
-    Ann.clearTrainedCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -352,7 +346,6 @@ class AnnSpec extends SparkSpec {
       assert(cell(j.toLong) == cell(j + 8L),
         s"identical twins ($j, ${j + 8}) split")
     }
-    Ann.clearTrainedCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -605,7 +598,6 @@ class AnnSpec extends SparkSpec {
   }
 
   test("q154 PQ-ANN ranks the planted companions first through the ADC screen") {
-    Ann.clearPqCache()
     val top = Ann.pqTopK(spark, dir, dim = DIM)
       .filter($"rnk" <= 2).collect()
       .groupBy(_.getLong(0))
@@ -614,7 +606,6 @@ class AnnSpec extends SparkSpec {
       assert(top(q.toLong) == Set(100L + 2 * q, 101L + 2 * q),
         s"query $q top-2 = ${top(q.toLong)}")
     }
-    Ann.clearPqCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -664,7 +655,6 @@ class AnnSpec extends SparkSpec {
         }
     var cbT = seedCb
     for (_ <- 1 to Ann.PQ_ITERS) cbT = lloydRound(cbT)
-    Ann.clearPqCache()
     val out = Ann.pqTopK(spark, dir, dim = DIM).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
@@ -677,20 +667,17 @@ class AnnSpec extends SparkSpec {
       assert(adc == replay,
         s"ADC for ($qid,$nid): got $adc, JDK replay $replay")
     }
-    Ann.clearPqCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
 
   test("q165 index serve ≡ q154 in-plan serve (pure encode, same codebook)") {
-    Ann.clearPqCache()
     val inPlan = Ann.pqTopK(spark, dir, dim = DIM)
       .collect().map(_.toSeq).toSeq
     val fromIndex = Ann.pqServeFromWrittenIndex(spark, dir, dim = DIM)
       .collect().map(_.toSeq).toSeq
     assert(fromIndex == inPlan,
       "serving from the written code index must replay the in-plan serve")
-    Ann.clearPqCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -701,14 +688,12 @@ class AnnSpec extends SparkSpec {
     // the arriving rows land in the hot cells, the worst case for an
     // increment shortcut. Encoding is per-vector pure under the stored
     // codebook, so increment ≡ recompute must be EXACT.
-    Ann.clearPqCache()
     val inc = Ann.pqIndexIncrement(spark, dir, dim = DIM)
       .collect().map(_.toSeq).toSeq
     val oneShot = Ann.pqIndexIncrement(spark, dir, dim = DIM, oneShot = true)
       .collect().map(_.toSeq).toSeq
     assert(inc == oneShot, "incremented index must serve ≡ full re-encode")
     assert(inc.nonEmpty)
-    Ann.clearPqCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -719,12 +704,10 @@ class AnnSpec extends SparkSpec {
     // on real testdata two rounds must STRICTLY improve on the raw seed
     // subvectors — the number the q163/q164 recall gains ride on.
     val real = "/root/testdata/sf0.001"
-    Ann.clearPqCache()
     val seeded = Ann.pqDistortion(spark, real, Ann.EMBED_DIM, trained = false)
     val trained = Ann.pqDistortion(spark, real, Ann.EMBED_DIM, trained = true)
     assert(trained < seeded,
       s"trained distortion $trained must beat seeded $seeded")
-    Ann.clearPqCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -736,7 +719,6 @@ class AnnSpec extends SparkSpec {
     // do individually. Also pin the composition's PRUNING is real: each
     // query's candidate set (any rank) stays under nprobe cells' worth
     // of the corpus, i.e. strictly fewer than the 39 a full screen sees.
-    Ann.clearPqCache()
     val rows = Ann.ivfPqTopK(spark, dir, dim = DIM).collect()
     val top = rows.filter(_.getLong(4) <= 2L)
       .groupBy(_.getLong(0))
@@ -748,7 +730,6 @@ class AnnSpec extends SparkSpec {
     val perQuery = rows.groupBy(_.getLong(0)).view.mapValues(_.length)
     assert(perQuery.values.forall(n => n > 0 && n < 39),
       s"probe pruning must bound candidates: $perQuery")
-    Ann.clearPqCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -756,13 +737,12 @@ class AnnSpec extends SparkSpec {
   test("q154 PQ codebook cache serves byte-identical to fresh derivation") {
     def serve() = Ann.pqTopK(spark, dir, dim = DIM)
       .collect().map(_.toSeq).toSeq
-    Ann.clearPqCache()
+    graft.Caches.clearMemo()
     val cold = serve()
     val warm = serve()
     assert(warm == cold, "cache-hit serve must be byte-identical")
-    Ann.clearPqCache()
+    graft.Caches.clearMemo()
     assert(serve() == cold, "fresh codebook must reproduce the cached serve")
-    Ann.clearPqCache()
     graft.Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }

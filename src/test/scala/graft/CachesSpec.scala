@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Pins [[Caches.track]]'s displacement rules — the registry invariants
   * every operator's persist lifecycle rides on:
@@ -11,7 +14,11 @@ import org.apache.spark.storage.StorageLevel
   *  3. (round-14 ADVICE) a handle still registered under ANOTHER tag is
   *     NOT unpersisted when one of its tags is displaced — the surviving
   *     tag's consumers keep their cache and its release() stays
-  *     meaningful. */
+  *     meaningful.
+  *
+  * and [[Caches.memo]]'s key: an artifact built on one corpus is rebuilt
+  * once the corpus is rewritten in place, and no operator keeps a memo
+  * map of its own. */
 class CachesSpec extends SparkSpec {
 
   private def df(n: Int) = {
@@ -75,5 +82,66 @@ class CachesSpec extends SparkSpec {
     assert(twin.storageLevel == StorageLevel.NONE)
     Caches.releasePrefix("cachesspec.")
     spark.catalog.clearCache()
+  }
+
+  /** A dir holding 40 random 8-dim vectors (the Ann id layout: queries
+    * < 8, seeds 8..23) as its embeddings table. */
+  private def embeddingsDir(seed: Long): Path = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    Paths.get(fixtureDir("embeddings" ->
+      (0 until 40).map(i => Emb(i, Seq.fill(8)(rnd.nextFloat() - 0.5f), 0))
+        .toDF()))
+  }
+
+  /** A memoized artifact built on corpus A must not be served after the
+    * dir is rewritten in place with corpus B by another process (a
+    * file-level copy, as a ScaleGen run regenerates a dir): `serve` over
+    * the rewritten dir must equal a cold `serve` over a dir holding B. */
+  private def rebuiltAfterRewrite(serve: String => Seq[Seq[Any]]): Unit = {
+    val dir = embeddingsDir(seed = 1)
+    val fresh = embeddingsDir(seed = 2)
+    val onA = serve(dir.toString) // builds and memoizes A's artifact
+    val table = dir.resolve("embeddings.parquet")
+    Files.walk(table).sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))
+    Files.walk(fresh.resolve("embeddings.parquet")).forEach(p =>
+      Files.copy(p, table.resolve(fresh.resolve("embeddings.parquet")
+        .relativize(p).toString)))
+    val coldB = serve(fresh.toString)
+    assert(onA != coldB, "the two corpora must give different results")
+    assert(serve(dir.toString) == coldB,
+      "a corpus rewritten in place must be served from a rebuilt artifact")
+    Caches.releasePrefix("ann.")
+    spark.catalog.clearCache()
+  }
+
+  test("memo: trained quantizer is rebuilt when the corpus is rewritten in place") {
+    rebuiltAfterRewrite(d =>
+      ops.Ann.ivfTopKTrained(spark, d).collect().map(_.toSeq).toSeq)
+  }
+
+  test("memo: PQ codebook is rebuilt when the corpus is rewritten in place") {
+    rebuiltAfterRewrite(d =>
+      ops.Ann.pqTopK(spark, d, dim = 8).collect().map(_.toSeq).toSeq)
+  }
+
+  test("operators in graft/ops hold no memo map of their own") {
+    // a driver-side artifact goes through Caches.memo, which keys it by
+    // the input files; a private map keyed by dir serves a stale value
+    // once the corpus is rewritten in place
+    val root = SessionsSpec.mainSources
+    val memoMap = """computeIfAbsent|new ConcurrentHashMap""".r
+    val hits = for {
+      f <- SessionsSpec.mainScalaFiles
+      if root.relativize(f).startsWith("graft/ops")
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      t = line.trim
+      if !(t.startsWith("*") || t.startsWith("/*") || t.startsWith("//"))
+      if memoMap.findFirstIn(line).isDefined
+    } yield s"${root.relativize(f)}:${i + 1}: $t"
+    if (hits.nonEmpty) fail(s"${hits.size} code lines in graft/ops build " +
+      "a memo map; route the artifact through Caches.memo:\n" +
+      hits.mkString("\n"))
   }
 }

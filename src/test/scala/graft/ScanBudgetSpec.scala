@@ -98,14 +98,12 @@ class ScanBudgetSpec extends SparkSpec {
 
   test("q100 semdedup reads embeddings once (shared trained-quantizer projection)") {
     assert(counts("q100_semdedup") == Map("embeddings" -> 1))
-    ops.Ann.clearTrainedCache()
     Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
 
   test("q101 sized-k semdedup also reads embeddings once") {
     assert(counts("q101_semdedup_auto") == Map("embeddings" -> 1))
-    ops.Ann.clearTrainedCache()
     Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -247,7 +245,6 @@ class ScanBudgetSpec extends SparkSpec {
 
   test("q154 PQ serve reads embeddings once (persisted base feeds encode, LUT and rerank)") {
     assert(counts("q154_ann_pq") == Map("embeddings" -> 1))
-    ops.Ann.clearPqCache()
     Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
@@ -257,7 +254,6 @@ class ScanBudgetSpec extends SparkSpec {
     // one persisted base — a regression to a per-leg scan multiplies the
     // corpus read by the number of composition stages.
     assert(counts("q158_ann_ivfpq") == Map("embeddings" -> 1))
-    ops.Ann.clearPqCache()
     Caches.releasePrefix("ann.")
     spark.catalog.clearCache()
   }
