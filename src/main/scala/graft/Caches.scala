@@ -14,8 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * CALLER finally materializes the plan, so the operator cannot
   * `unpersist()` in a `finally` before returning; and `spark.catalog
   * .clearCache()` (the harness mains' per-query contract) is too blunt
-  * for a long-lived user session — it drops caches the caller owns
-  * (round-7 ADVICE).
+  * for a long-lived user session — it drops caches the caller owns.
   *
   * This registry is the middle path: operators `track(tag, df)` their
   * persisted handles, and a caller releases exactly the caches a module
@@ -36,9 +35,8 @@ import org.apache.spark.storage.StorageLevel
 object Caches {
   private val reg = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
-  /** Drop registry entries whose plan has NO live cache entry (round-16
-    * ADVICE: a tag left behind by `spark.catalog.clearCache()` would
-    * otherwise keep `aliased` true for a freshly tracked same-plan frame
+  /** Drop registry entries whose plan has NO live cache entry: a tag
+    * left behind by `spark.catalog.clearCache()` would otherwise keep `aliased` true for a freshly tracked same-plan frame
     * forever, turning the live tag's release into a permanent no-op —
     * a leak in long sessions mixing clearCache with track/release).
     *
@@ -56,12 +54,12 @@ object Caches {
 
   /** Persist `df` (if not already persisted) and track the handle under
     * `tag`; returns `df`. A displaced handle whose plan DIFFERS from the
-    * incoming one is unpersisted here (round-13 ADVICE: repeat-callable
-    * track sites would otherwise accumulate orphaned persisted frames
-    * over a long session). Same-plan displacement must NOT unpersist:
+    * incoming one is unpersisted here: repeat-callable track sites
+    * would otherwise accumulate orphaned persisted frames over a long
+    * session. Same-plan displacement must NOT unpersist:
     * Spark's CacheManager dedupes by canonical plan, so dropping the old
     * handle would evict the cache entry the incoming frame relies on —
-    * and that protection extends across TAGS (round-14 ADVICE): the same
+    * and that protection extends across TAGS: the same
     * frame tracked under two tags and displaced under one stays cached
     * while any OTHER registry entry still resolves to the same result,
     * so the surviving tag's consumers keep their cache and its later
@@ -81,7 +79,7 @@ object Caches {
 
   /** Unpersist and forget the handle tracked under `tag` (no-op when
     * absent or already cleared by the harness's clearCache). Mirrors
-    * [[track]]'s cross-tag guard (round-15 ADVICE): when another
+    * [[track]]'s cross-tag guard: when another
     * registry entry's handle is sameResult with the removed one — e.g.
     * `ann.recall_base:<dir>` and `ann.pq_base:<dir>` both tracking the
     * withNorm plan — releasing ONE tag must not unpersist the shared

@@ -67,8 +67,8 @@ object CurationPipeline {
       verdict.unpersist()
       // the verdict's dedup stage pins its own (id, digest) projection;
       // release exactly that tracked handle — a library caller's own
-      // caches stay intact (round-7 ADVICE: clearCache here dropped
-      // caches the caller owned)
+      // caches stay intact (a clearCache here would drop caches the
+      // caller owns)
       Caches.release(ops.TextPipeline.dedupBaseTag(dir))
     }
   }

@@ -31,7 +31,10 @@ import graft.sources.Sinks
   *  - run snapshot: the run reads its inputs through one
   *    [[Tables.Snapshot]] of `dataDir`, so each input table is listed and
   *    its schema inferred once per run, and `hasNewData` and every report
-  *    read the same file set;
+  *    read the same file set. No other read infers a schema: a derived
+  *    report reads its source with the schema it was written with, and
+  *    the delta path reads a stored trend report with the schema of the
+  *    run's own trend plan;
   *  - each report's row count is counted on its own write
   *    ([[sources.Sinks.counted]]); no output is read back to count it;
   *  - failure contract: if any report or the DQ fan-out fails, the run
@@ -160,19 +163,24 @@ object Pipeline {
     // the schema each report was written with, for its derived reports
     val wroteSchema = new ConcurrentHashMap[String, StructType]
 
+    // a parquet report read with a known schema: no inference job
+    def stored(name: String, schema: StructType): DataFrame =
+      spark.read.schema(schema).parquet(s"$outDir/$name")
+
     /** Computes and writes report `name`; returns the rows written. */
     def report(name: String, fn: (SparkSession, String) => DataFrame): Long = {
       val df = (DERIVED.get(name), incrementalSince) match {
         case (Some((src, derive)), _) =>
-          // parquet with the schema it was written with: no inference job
           derive(
             if (jdbcOut) written(spark, outDir, src)
-            else spark.read.schema(wroteSchema.get(src)).parquet(s"$outDir/$src"))
+            else stored(src, wroteSchema.get(src)))
         case (None, Some(since)) if deltas(name) =>
-          // row-subset path: stored report ⊎ post-checkpoint buckets
+          // row-subset path: stored report ⊎ post-checkpoint buckets, the
+          // stored report read with this run's own trend schema (analysis
+          // only: the snapshot has resolved `events`)
           val (unit, step) = TREND_REPORTS(name)
           ops.Movement.trendDelta(spark, dataDir, unit, step, since,
-            written(spark, outDir, name))
+            stored(name, fn(spark, dataDir).schema))
         case _ => fn(spark, dataDir)
       }
       val (counted, rows) = Sinks.counted(df)

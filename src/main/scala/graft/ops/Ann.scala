@@ -58,6 +58,31 @@ object Ann {
       .select(col("vec_id"), col("embedding"),
         Dx.dotDec("embedding", "embedding").as("nrm_dec"))
 
+  /** Exact cosine of a probe (`q_emb`, `q_nrm`) against a vector
+    * (`embedding`, `nrm_dec`): the decimal dot over the roots of the two
+    * decimal norms — the `cos` CTE of [[cosTopKSql]]. */
+  private[ops] val exactCosine: Column =
+    Dx.dotDec("q_emb", "embedding").cast("double") /
+      (sqrt(col("q_nrm").cast("double")) * sqrt(col("nrm_dec").cast("double")))
+
+  /** The Spark twin of [[cosTopKSql]]'s tail: per `query_id`, rank the
+    * `cosine`-scored rows by (cosine DESC, vec_id) and keep the top
+    * [[TOPK]] as (query_id, neighbor_id, `keep`…, cosine, rnk), ordered
+    * by (query_id, rnk). */
+  private def topKByCosine(scored: DataFrame, keep: String*): DataFrame =
+    scored
+      .withColumn("rnk", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("cosine").desc, col("vec_id").asc)).cast("long"))
+      .filter(col("rnk") <= TOPK)
+      .select(Seq(col("query_id"), col("vec_id").as("neighbor_id")) ++
+        keep.map(col) ++ Seq(col("cosine"), col("rnk")): _*)
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** Exact rerank of candidate (probe, vector) `pairs`: [[exactCosine]]
+    * then [[topKByCosine]]. */
+  private def cosTopK(pairs: DataFrame, keep: String*): DataFrame =
+    topKByCosine(pairs.withColumn("cosine", exactCosine), keep: _*)
+
   // ---------------------------------------------------------------- q29
 
   /** Exact cosine top-k for each probe query (vec_id < 8): broadcast the
@@ -69,17 +94,7 @@ object Ann {
       $"vec_id".as("query_id"),
       $"embedding".as("q_emb"),
       $"nrm_dec".as("q_nrm"))
-    val scored = base
-      .join(broadcast(queries), $"vec_id" =!= $"query_id")
-      .withColumn("cosine",
-        Dx.dotDec("q_emb", "embedding").cast("double") /
-          (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc)
-    scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter($"rnk" <= TOPK)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine", $"rnk")
-      .orderBy($"query_id", $"rnk")
+    cosTopK(base.join(broadcast(queries), $"vec_id" =!= $"query_id"))
   }
 
   /** Oracle CTE `el` (vec_id, i, x): one row per embedding element,
@@ -229,7 +244,7 @@ object Ann {
     * so probes never produce duplicate pairs. Exact cosine rerank inside
     * the probed buckets only.
     *
-    * Oracle-checkable END TO END (round-4): the hyperplanes are literal
+    * Oracle-checkable END TO END: the hyperplanes are literal
     * ±1 constants, and both engines evaluate each projection as an
     * index-ordered double accumulation over float elements — bit-equal
     * sums (verified against DuckDB's `list_sum(list_transform(...))` on
@@ -252,18 +267,8 @@ object Ann {
       $"embedding".as("q_emb"),
       $"nrm_dec".as("q_nrm"),
       explode(probes).as("bucket"))
-    val scored = base
-      .join(broadcast(queries), Seq("bucket"))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("cosine",
-        Dx.dotDec("q_emb", "embedding").cast("double") /
-          (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
-    val w = Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc)
-    scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter($"rnk" <= TOPK)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine", $"rnk")
-      .orderBy($"query_id", $"rnk")
+    cosTopK(base.join(broadcast(queries), Seq("bucket"))
+      .filter($"vec_id" =!= $"query_id"))
   }
 
   /** DuckDB replay of the full LSH pipeline (see [[lshTopK]] doc): the
@@ -639,18 +644,8 @@ object Ann {
       .filter($"arn" <= IVF_NPROBE)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"),
         $"nrm_dec".as("q_nrm"), $"cent_id")
-    assigned
-      .join(broadcast(queryProbes), Seq("cent_id"))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("cosine",
-        Dx.dotDec("q_emb", "embedding").cast("double") /
-          (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc))
-        .cast("long"))
-      .filter($"rnk" <= TOPK)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine", $"rnk")
-      .orderBy($"query_id", $"rnk")
+    cosTopK(assigned.join(broadcast(queryProbes), Seq("cent_id"))
+      .filter($"vec_id" =!= $"query_id"))
   }
 
   /** DuckDB replay of [[ivfTopK]]: pairwise index-ordered double dots for
@@ -755,14 +750,31 @@ object Ann {
        |  CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
        |  CAST(0 AS DOUBLE), (acc, z) -> acc + z)""".stripMargin)
 
-  /** `exactMetric`: true (default) scores the argmin in fixed-point
-    * decimals — engine-exact, what the q83 oracle replays; false scores
-    * in plain double — the deploy knob when training throughput matters
-    * more than cross-engine replay (assignment can differ only on
-    * near-exact metric ties; AnnSpec pins both paths identical on the
-    * fixture corpus). The same flag philosophy as `Scale.prefixSum`'s
-    * smallInput: flipping it at a new scale is a config change, not a
-    * correctness question, because the spec pins the equivalence. */
+  /** The assignment metric of centroid norm `nrm` and embedding `c`
+    * against vector `v`. `exactMetric` true scores in fixed-point
+    * decimals ([[decMetric]]) — engine-exact, what the q83 oracle
+    * replays; false scores in plain double — the deploy choice when
+    * training throughput matters more than cross-engine replay
+    * (assignment can differ only on near-exact metric ties; AnnSpec pins
+    * both paths identical on the fixture corpus). */
+  private def assignMetric(exactMetric: Boolean, nrm: String, v: String,
+      c: String): Column =
+    if (exactMetric) decMetric(nrm, v, c)
+    else col(nrm).cast("double") - lit(2.0) * dotDbl(v, c)
+
+  /** Per-vector argmin of `m_dec` over the (vector, centroid) rows of
+    * `scored`: `(vec_id, embedding, cent_id, m_asg)`, ties to the lower
+    * cent_id. */
+  private def argminCell(scored: DataFrame): DataFrame =
+    scored.groupBy(col("vec_id"))
+      .agg(first(col("embedding")).as("embedding"),
+        min_by(col("cent_id"), struct(col("m_dec"), col("cent_id")))
+          .as("cent_id"),
+        min(struct(col("m_dec"), col("cent_id"))).getField("m_dec")
+          .cast("double").as("m_win"))
+      .withColumn("m_asg", col("m_win") + dotDbl("embedding", "embedding"))
+      .drop("m_win")
+
   /** Argmin assignment of every vector to its nearest centroid:
     * `(vec_id, embedding, cent_id, m_asg)`. `m_asg` is the winning
     * norm-dropped metric AS DOUBLE plus the vector's own ‖v‖² — i.e. the
@@ -770,21 +782,9 @@ object Ann {
     * form is only valid within one vector's argmin); the converged
     * trainer ranks reseed candidates on it. */
   private def assignCells(vectors: DataFrame, cents: DataFrame,
-      exactMetric: Boolean): DataFrame = {
-    import vectors.sparkSession.implicits._
-    val m =
-      if (exactMetric) decMetric("c_nrm_dec", "embedding", "c_emb")
-      else
-        $"c_nrm_dec".cast("double") - lit(2.0) * dotDbl("embedding", "c_emb")
-    vectors.join(broadcast(cents)).withColumn("m_dec", m)
-      .groupBy($"vec_id")
-      .agg(first($"embedding").as("embedding"),
-        min_by($"cent_id", struct($"m_dec", $"cent_id")).as("cent_id"),
-        min(struct($"m_dec", $"cent_id")).getField("m_dec").cast("double")
-          .as("m_win"))
-      .withColumn("m_asg", $"m_win" + dotDbl("embedding", "embedding"))
-      .drop("m_win")
-  }
+      exactMetric: Boolean): DataFrame =
+    argminCell(vectors.join(broadcast(cents)).withColumn("m_dec",
+      assignMetric(exactMetric, "c_nrm_dec", "embedding", "c_emb")))
 
   /** Two-level (coarse → fine) argmin assignment — the IVF-literature
     * acceleration of the flat n·k assignment leg (Jégou et al. 2011's
@@ -794,9 +794,8 @@ object Ann {
     * dimension-sized prologue), then per vector argmin over the √k coarse
     * set and argmin again over the winning parent's children —
     * n·O(2√k) metric evaluations instead of n·k. Under the k ≈ √n
-    * sizing that turns the assignment leg from n^1.5 into n^1.25, the
-    * round-12 q101 scale flag's second head (the pair stage was the
-    * first; both are now sub-n^1.5).
+    * sizing that turns the assignment leg from n^1.5 into n^1.25, so
+    * neither q101 leg (pair stage, assignment) is n^1.5.
     *
     * Semantics: a vector whose flat-nearest centroid's parent is NOT its
     * nearest coarse centroid lands in a neighboring cell — the standard
@@ -825,8 +824,7 @@ object Ann {
       .select($"cent_id".as("coarse_id"), $"c_emb".as("co_emb"),
         $"c_nrm_dec".as("co_nrm"))
     def metric(coEmb: String, vEmb: String) =
-      if (exactMetric) decMetric("co_nrm", vEmb, coEmb)
-      else $"co_nrm".cast("double") - lit(2.0) * dotDbl(vEmb, coEmb)
+      assignMetric(exactMetric, "co_nrm", vEmb, coEmb)
     // parent: each centroid's nearest coarse (k×√k — tiny, broadcast)
     val parent = cents.join(broadcast(coarse))
       .withColumn("m_dec", metric("co_emb", "c_emb"))
@@ -844,19 +842,9 @@ object Ann {
         min_by($"coarse_id", struct($"m_dec", $"coarse_id"))
           .as("coarse_id"))
     // stage 2: argmin over the winning parent's children (n×~k/√k)
-    vCoarse.join(broadcast(children), "coarse_id")
+    argminCell(vCoarse.join(broadcast(children), "coarse_id")
       .withColumn("m_dec",
-        if (exactMetric) decMetric("c_nrm_dec", "embedding", "c_emb")
-        else
-          $"c_nrm_dec".cast("double") -
-            lit(2.0) * dotDbl("embedding", "c_emb"))
-      .groupBy($"vec_id")
-      .agg(first($"embedding").as("embedding"),
-        min_by($"cent_id", struct($"m_dec", $"cent_id")).as("cent_id"),
-        min(struct($"m_dec", $"cent_id")).getField("m_dec").cast("double")
-          .as("m_win"))
-      .withColumn("m_asg", $"m_win" + dotDbl("embedding", "embedding"))
-      .drop("m_win")
+        assignMetric(exactMetric, "c_nrm_dec", "embedding", "c_emb")))
   }
 
   /** Public assignment surface: nearest trained centroid per vector —
@@ -1430,7 +1418,7 @@ object Ann {
 
   // ---------------------------------------------------------------- q91
 
-  /** q91: MAINTAIN→SERVE — the round-8 q70 move replayed for ANN: serve
+  /** q91: MAINTAIN→SERVE — the q70 move replayed for ANN: serve
     * top-k over an index that was WRITTEN by the maintain path, not over
     * in-plan assignments. The fn (1) trains the quantizer ([[KMEANS_ITERS]]
     * Lloyd rounds, q83's arithmetic), (2) writes the corpus through
@@ -1464,11 +1452,10 @@ object Ann {
   def ivfServeFromIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val vecs = Ann.vecs(spark, dir)
-    // The SAME trained quantizer q85 serves (driver-cached k×dim model,
-    // round-11 verdict item 8) — already local, so the two consumers
-    // below (index write + probe ranking) replay a LocalRelation instead
-    // of re-running training per subtree (the pre-round-12 shape needed
-    // a localCheckpoint for exactly that).
+    // The SAME trained quantizer q85 serves (driver-cached k×dim model)
+    // — already local, so the two consumers below (index write + probe
+    // ranking) replay a LocalRelation instead of re-running training per
+    // subtree.
     val trained = trainedCents(spark, dir)
     val indexDir = liveIndexDir.next()
     graft.streaming.StreamingAnn
@@ -1486,19 +1473,10 @@ object Ann {
       .withColumn("q_nrm", Dx.dotDec("q_emb", "q_emb"))
     val cells = probes.select($"cent_id").distinct()
       .as[Long].collect().toSeq.sorted // ≤ |Q|·nprobe rows — planning input
-    graft.streaming.StreamingAnn.readCells(spark, indexDir, cells)
+    cosTopK(graft.streaming.StreamingAnn.readCells(spark, indexDir, cells)
       .withColumn("nrm_dec", Dx.dotDec("embedding", "embedding"))
       .join(broadcast(probes), Seq("cent_id"))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("cosine",
-        Dx.dotDec("q_emb", "embedding").cast("double") /
-          (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc))
-        .cast("long"))
-      .filter($"rnk" <= TOPK)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine", $"rnk")
-      .orderBy($"query_id", $"rnk")
+      .filter($"vec_id" =!= $"query_id"))
   }
 
   /** DuckDB replay of [[ivfServeFromIndex]]: training (both rounds), the
@@ -1809,26 +1787,28 @@ object Ann {
     * k·|Q|-row outputs on (query_id, neighbor_id) — evaluation cost is
     * output-sized, never corpus-sized. The 4-scan budget is the two
     * composed 2-scan retrieval floors, stated in [[ScanBudget]]. */
-  def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val exact = bruteForceTopK(spark, dir)
-      .select($"query_id", $"neighbor_id")
-    val approx = lshTopK(spark, dir)
-      .select($"query_id", $"neighbor_id", lit(1).as("hit"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy($"query_id")
+  def annRecall(spark: SparkSession, dir: String): DataFrame =
+    recallOf(bruteForceTopK(spark, dir), lshTopK(spark, dir))
+
+  /** Per-query recall of the `approx` serve's (query_id, neighbor_id)
+    * pairs against the `exact` serve's: (query_id, n_exact, n_hit,
+    * recall). */
+  private def recallOf(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.select(col("query_id"), col("neighbor_id"))
+      .join(approx.select(col("query_id"), col("neighbor_id"),
+        lit(1).as("hit")), Seq("query_id", "neighbor_id"), "left")
+      .groupBy(col("query_id"))
       .agg(count(lit(1)).cast("long").as("n_exact"),
-        count($"hit").cast("long").as("n_hit"))
-      .withColumn("recall", $"n_hit".cast("double") / $"n_exact")
-      .select($"query_id", $"n_exact", $"n_hit", $"recall")
-  }
+        count(col("hit")).cast("long").as("n_hit"))
+      .withColumn("recall", col("n_hit").cast("double") / col("n_exact"))
+      .select(col("query_id"), col("n_exact"), col("n_hit"), col("recall"))
 
   // ------------------------------------------------- q162 / q163 / q164
 
   /** Per-query recall@[[TOPK]] of an approximate serve against
     * [[bruteForceTopK]] — the [[annRecall]] evaluation applied to the
-    * QUANTIZED screens (round-13 verdict item 1: the quantized family
-    * shipped correctness proofs but no measured retrieval quality).
+    * QUANTIZED screens, so each has a measured retrieval quality next to
+    * its correctness proof.
     * Measuring the FINAL output is exactly screen recall@k: the rerank
     * is exact cosine over the screened candidates, so a true top-k
     * neighbor that survives the screen always lands in the final top-k
@@ -1839,23 +1819,13 @@ object Ann {
     * the q103 discipline. */
   private def recallAgainstBrute(spark: SparkSession, dir: String,
       approx: DataFrame): DataFrame = {
-    import spark.implicits._
     // Track the norm'd projection so the exact leg's two subtrees (corpus
     // + broadcast probes) and any approx-serve subtree built on the same
     // withNorm plan all materialize from ONE cached embeddings scan —
-    // Spark's CacheManager substitutes every sameResult subtree (round-14
-    // ADVICE #5: q162 was executing 4 parquet scans, eval-only cost but
-    // off the ann.vecs precedent).
+    // Spark's CacheManager substitutes every sameResult subtree. q103's
+    // annRecall does not track it: its pinned budget is 4 scans.
     graft.Caches.track(s"ann.recall_base:$dir", withNorm(spark, dir))
-    val exact = bruteForceTopK(spark, dir)
-      .select($"query_id", $"neighbor_id")
-    val ap = approx.select($"query_id", $"neighbor_id", lit(1).as("hit"))
-    exact.join(ap, Seq("query_id", "neighbor_id"), "left")
-      .groupBy($"query_id")
-      .agg(count(lit(1)).cast("long").as("n_exact"),
-        count($"hit").cast("long").as("n_hit"))
-      .withColumn("recall", $"n_hit".cast("double") / $"n_exact")
-      .select($"query_id", $"n_exact", $"n_hit", $"recall")
+    recallOf(bruteForceTopK(spark, dir), approx)
   }
 
   /** q162: recall@k of the q132 int8 screen. */
@@ -1958,19 +1928,9 @@ object Ann {
         "aggregate(zip_with(q_qv, qv, (a, b) -> a * b), 0L, (acc, v) -> acc + v)"))
     val wCand = Window.partitionBy($"query_id")
       .orderBy($"qscore".desc, $"vec_id".asc)
-    val wRank = Window.partitionBy($"query_id")
-      .orderBy($"cosine".desc, $"vec_id".asc)
-    screened
+    cosTopK(screened
       .withColumn("crnk", row_number().over(wCand))
-      .filter($"crnk" <= SQ_CAND)
-      .withColumn("cosine",
-        Dx.dotDec("q_emb", "embedding").cast("double") /
-          (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .filter($"rnk" <= TOPK)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"qscore",
-        $"cosine", $"rnk")
-      .orderBy($"query_id", $"rnk")
+      .filter($"crnk" <= SQ_CAND), "qscore")
   }
 
   private val sqOracle =
@@ -2463,25 +2423,16 @@ object Ann {
     import adc.sparkSession.implicits._
     val wCand = Window.partitionBy($"query_id")
       .orderBy($"adc_dec".desc, $"vec_id".asc)
-    val wRank = Window.partitionBy($"query_id")
-      .orderBy($"cosine".desc, $"vec_id".asc)
     val queries = payload.select($"vec_id".as("query_id"),
       $"embedding".as("q_emb"), $"nrm_dec".as("q_nrm"))
       .filter($"query_id" < NQUERIES)
-    adc
+    topKByCosine(adc
       .withColumn("crnk", row_number().over(wCand))
       .filter($"crnk" <= SQ_CAND)
       .join(payload, "vec_id")
       .join(broadcast(queries), Seq("query_id"))
-      .withColumn("cosine",
-        Dx.dotDec("q_emb", "embedding").cast("double") /
-          (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
-      .withColumn("adc", $"adc_dec".cast("double"))
-      .withColumn("rnk", row_number().over(wRank).cast("long"))
-      .filter($"rnk" <= TOPK)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"adc",
-        $"cosine", $"rnk")
-      .orderBy($"query_id", $"rnk")
+      .withColumn("cosine", exactCosine)
+      .withColumn("adc", $"adc_dec".cast("double")), "adc")
   }
 
   // --------------------------------------------------------- q165 / q166

@@ -124,12 +124,16 @@ object Financial {
        |       CAST(COUNT(*) AS BIGINT) AS n_parts
        |FROM w GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Weighted average unit cost per part (A7) with the reference's explicit
-    * zero-denominator guard (`functions.sql:204-207`). */
-  def weightedAvgCost(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    Tables(spark, dir, "lineitem")
-      .groupBy($"l_partkey".as("part_id"))
+  /** Weighted average unit cost per part (A7). */
+  def weightedAvgCost(spark: SparkSession, dir: String): DataFrame =
+    avgCostByPart(Tables(spark, dir, "lineitem")).orderBy(col("part_id"))
+
+  /** A7 over lineitem rows `li`: (part_id, avg_cost), Σ extendedprice /
+    * Σ quantity per part, with the reference's explicit zero-denominator
+    * guard (`functions.sql:204-207`). */
+  private[ops] def avgCostByPart(li: DataFrame): DataFrame = {
+    import li.sparkSession.implicits._
+    li.groupBy($"l_partkey".as("part_id"))
       .agg(
         Dx.dsum(expr("l_extendedprice")).as("cost_sum"),
         Dx.dsum(expr("l_quantity")).as("qty_sum"))
@@ -138,7 +142,6 @@ object Financial {
         when($"qty_sum" === 0.0, 0.0)
           .otherwise($"cost_sum" / $"qty_sum")
           .as("avg_cost"))
-      .orderBy($"part_id")
   }
 
   private val weightedAvgCostOracle =
@@ -158,7 +161,7 @@ object Financial {
     * 100 TB plan: one scan of lineitem → partial+final hash agg keyed
     * (part, supplier) → window partitionBy(part) over the already-aggregated
     * cells (same key prefix, a dimension-sized exchange, no fact re-scan, no
-    * broadcast of a fact-derived aggregate — round-1's scale-killer). All
+    * broadcast of a fact-derived aggregate, which would not scale). All
     * sums stay DECIMAL inside the window so the rollup is order-independent
     * and equals the oracle's direct per-part aggregation exactly. */
   def stockValue(spark: SparkSession, dir: String): DataFrame = {

@@ -40,16 +40,11 @@ object Ingest {
   /** Deterministic command batch from the testdata (see class doc). */
   def commands(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables(spark, dir, "lineitem")
-      .filter($"l_returnflag" === "R")
-      .select(
-        $"l_orderkey".as("reference_id"),
-        $"l_partkey".as("part_id"),
-        $"l_suppkey".as("from_warehouse_id"),
-        (($"l_suppkey" * 7 + $"l_partkey") % 97 + 1).as("to_warehouse_id"),
-        ($"l_quantity" - 20.0).as("quantity"),
-        when($"l_partkey" % 5 === 0, lit(null).cast("string"))
-          .otherwise(concat(lit("ref "), $"l_orderkey")).as("notes"))
+    Warehouse.outLegs(spark, dir,
+      (($"l_suppkey" * 7 + $"l_partkey") % 97 + 1).as("to_warehouse_id"),
+      ($"l_quantity" - 20.0).as("quantity"),
+      when($"l_partkey" % 5 === 0, lit(null).cast("string"))
+        .otherwise(concat(lit("ref "), $"l_orderkey")).as("notes"))
   }
 
   private val commandsSql =
@@ -66,7 +61,7 @@ object Ingest {
     * [[replaySnapshot]] — sum-of-cell-sums ≡ flat ledger sum, bit-exactly.
     * Shared (identical subtree → one exchange via ReuseExchange) between
     * the validation join and the replay union, which is what cuts q36
-    * from three lineitem scans to two (round-6 verdict #1). */
+    * from three lineitem scans to two. */
   private def snapshotDec(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // The explicit key isnotnull filter mirrors what
@@ -138,7 +133,7 @@ object Ingest {
               // explicit floor() before the long cast: Spark's cast
               // truncates toward zero, DuckDB's CAST rounds half-to-even —
               // one shared rounding rule keeps the engines identical even
-              // for fractional stock (round-3 ADVICE).
+              // for fractional stock.
               floor(coalesce($"current_stock", lit(0.0))).cast("long")
                 .as("current_stock"))))
           .otherwise(
@@ -188,7 +183,7 @@ object Ingest {
     * '')`). Generated by ONE `explode(array(outLeg, inLeg))` over the
     * validated batch (SURVEY §2.10 P2's mapping), not a two-branch union:
     * a union re-executes the whole validated subtree once per leg (the
-    * round-4 scan audit measured the commands scan 2-4× across q35/q36),
+    * scan audit measured the commands scan 2-4× across q35/q36),
     * while the explode is a single pass — U1's row-union semantics with a
     * generator's plan shape. */
   def transferLegs(spark: SparkSession, dir: String): DataFrame = {

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * outer join keeping never-moved stock, C3 datediff, C4 fillna-9999
   * sentinel (never-moved ⇒ dead), F8 dead-stock predicate, A2–A4
   * turnover / span / dead-count scalars with div-0 guards (C9), C12
-  * round-2, J4 dead-stock valuation join, A8 totals.
+  * two-decimal rounding, J4 dead-stock valuation join, A8 totals.
   *
   * Fixture mapping: a stock "cell" is (part, supplier); the snapshot is the
   * ledger replay of all lineitem rows (A14 semantics). The movement LOG is
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * logged movement, exactly the left-join-miss semantics). Every consumer
   * in this module (q09 and all four q10 inputs) derives from that one
   * aggregate, and Spark's ReuseExchange collapses the shared subtree, so
-  * q10's physical plan reads the fact ONCE (was ~5 scans in round 2).
+  * q10's physical plan reads the fact ONCE.
   * Scalars are 1-row aggs cross-joined (auto-broadcast).
   */
 object Inventory {
@@ -121,7 +121,7 @@ object Inventory {
 
   /** q10: one-row inventory summary — dead-stock count + value (J4/A4/A8),
     * stock turnover ratio (A2) and days-of-inventory-on-hand (A3), with the
-    * reference's div-0 guards and round-2 presentation
+    * reference's div-0 guards and two-decimal presentation
     * (`inventory_metrics.py:48-74`). */
   def inventorySummary(spark: SparkSession, dir: String,
       asOf: org.apache.spark.sql.Column = lit(AS_OF)): DataFrame = {
@@ -133,7 +133,7 @@ object Inventory {
     //
     // The whole summary is then ONE linear plan: scan → cell hash agg →
     // per-part window → single global conditional aggregate. Branching into
-    // separate scalar aggs (round 2) re-scanned the fact per branch because
+    // separate scalar aggs would re-scan the fact per branch, because
     // column pruning makes each branch's aggregate canonically different —
     // conditional aggregation over one pass is the scale-correct shape.
     val perPart = org.apache.spark.sql.expressions.Window.partitionBy($"part_id")

@@ -55,7 +55,7 @@ object Movement {
     * `lead` window and emits itself plus a zero row for every missing
     * calendar step up to (not including) the successor. ONE pass over the
     * aggregate: no persist, no spine self-join, no cache-lifetime caller
-    * contract (the round-3 ADVICE leak). The `lead` window is
+    * contract that a caller could leak. The `lead` window is
     * unpartitioned but runs over the AGGREGATED buckets, whose cardinality
     * is calendar-bounded (≤ a few thousand rows for decades of data at any
     * fact scale). */
@@ -155,10 +155,11 @@ object Movement {
     import stored.sparkSession.implicits._
     val delta = buckets(newEvents, unit)
     // prefer the exact decimal column engine-written reports persist;
-    // fall back to the presentation double for foreign reports
+    // fall back to the presentation double for foreign reports, whether
+    // the column is absent or, read under a declared schema, NULL
     val storedVal =
       if (stored.columns.contains("total_value_dec"))
-        Dx.dec($"total_value_dec")
+        coalesce(Dx.dec($"total_value_dec"), Dx.dec($"total_value"))
       else Dx.dec($"total_value")
     val merged = stored
       .select($"bucket".as("b"), $"n_events", storedVal.as("v_dec"))

@@ -167,8 +167,15 @@ object Quality {
 
   /** DuckDB twin of [[profileOf]] for any table/WHERE/column list. */
   private def profileSql(table: String, where: String,
-      cols: Seq[(String, String)]): String = {
-    val selects = cols.map { case (name, kind) =>
+      cols: Seq[(String, String)]): String =
+    profileSelects(s"$table $where", cols).mkString("(", "\nUNION ALL\n", ")")
+
+  /** One profile SELECT per (column, kind) of `cols` over `from` (the
+    * text after FROM): column_name, n_rows, n_null, n_distinct and the
+    * kind-rendered min_str/max_str. */
+  private def profileSelects(from: String,
+      cols: Seq[(String, String)]): Seq[String] =
+    cols.map { case (name, kind) =>
       val (mn, mx) = kind match {
         case "num" =>
           (s"CAST(CAST(MIN($name) AS DECIMAL(18,6)) AS VARCHAR)",
@@ -185,10 +192,8 @@ object Quality {
          |            AS BIGINT) AS n_null,
          |       CAST(COUNT(DISTINCT $name) AS BIGINT) AS n_distinct,
          |       $mn AS min_str, $mx AS max_str
-         |FROM $table $where""".stripMargin
+         |FROM $from""".stripMargin
     }
-    selects.mkString("(", "\nUNION ALL\n", ")")
-  }
 
   // ---------------------------------------------------------------- q118
 
@@ -255,28 +260,8 @@ object Quality {
        |ORDER BY b.column_name""".stripMargin
   }
 
-  private val columnProfileOracle = {
-    val selects = PROFILE_COLS.map { case (name, kind) =>
-      val (mn, mx) = kind match {
-        case "num" =>
-          (s"CAST(CAST(MIN($name) AS DECIMAL(18,6)) AS VARCHAR)",
-            s"CAST(CAST(MAX($name) AS DECIMAL(18,6)) AS VARCHAR)")
-        case "date" =>
-          (s"strftime(MIN($name), '%Y-%m-%d')",
-            s"strftime(MAX($name), '%Y-%m-%d')")
-        case _ =>
-          (s"CAST(MIN($name) AS VARCHAR)", s"CAST(MAX($name) AS VARCHAR)")
-      }
-      s"""SELECT '$name' AS column_name,
-         |       CAST(COUNT(*) AS BIGINT) AS n_rows,
-         |       CAST(SUM(CASE WHEN $name IS NULL THEN 1 ELSE 0 END)
-         |            AS BIGINT) AS n_null,
-         |       CAST(COUNT(DISTINCT $name) AS BIGINT) AS n_distinct,
-         |       $mn AS min_str, $mx AS max_str
-         |FROM lineitem""".stripMargin
-    }
-    selects.mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
-  }
+  private val columnProfileOracle = profileSelects("lineitem", PROFILE_COLS)
+    .mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
 
   // ---------------------------------------------------------------- q114
 

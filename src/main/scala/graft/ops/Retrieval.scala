@@ -125,10 +125,11 @@ object Retrieval {
       .limit(TOP_K)
   }
 
-  /** q122: top-20 documents for [[QUERY_TERMS]] by BM25 (ratio idf). */
-  def bm25Search(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val base = baseOf(spark, dir, QUERY_TERMS).persist()
+  /** BM25's corpus statistics over a [[baseOf]] frame: `stats` (1 row:
+    * sum_dl, n_docs), `tf` (doc_id, dl, term, tf) and `dft` (term, df) —
+    * the Spark twin of [[bm25Sql]]'s `stats`, `tf` and `dft` CTEs. */
+  private def corpusStats(base: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    import base.sparkSession.implicits._
     val stats = base.agg(
       sum($"dl").cast("long").as("sum_dl"),
       count(lit(1)).cast("long").as("n_docs"))
@@ -138,6 +139,13 @@ object Retrieval {
       .agg(count(lit(1)).cast("long").as("tf"))
     val dft = tf.groupBy($"term")
       .agg(count(lit(1)).cast("long").as("df"))
+    (stats, tf, dft)
+  }
+
+  /** q122: top-20 documents for [[QUERY_TERMS]] by BM25 (ratio idf). */
+  def bm25Search(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val (stats, tf, dft) = corpusStats(baseOf(spark, dir, QUERY_TERMS).persist())
     rankTopK(tf, dft, stats)
   }
 
@@ -186,18 +194,9 @@ object Retrieval {
     val qterms = QUERY_BATCH
       .flatMap { case (qid, ts) => ts.map(qid -> _) }
       .toDF("query_id", "term")
-    val base = baseOf(spark, dir, allTerms).persist()
-    val stats = base.agg(
-      sum($"dl").cast("long").as("sum_dl"),
-      count(lit(1)).cast("long").as("n_docs"))
-    val tf = base
-      .select($"doc_id", $"dl", explode($"q").as("term"))
-      .groupBy($"doc_id", $"dl", $"term")
-      .agg(count(lit(1)).cast("long").as("tf"))
     // df is corpus-global per term (query-independent), shared by every
     // query that probes the term
-    val dft = tf.groupBy($"term")
-      .agg(count(lit(1)).cast("long").as("df"))
+    val (stats, tf, dft) = corpusStats(baseOf(spark, dir, allTerms).persist())
     val scored = tf.join(broadcast(dft), "term")
       .join(broadcast(qterms), "term")
       .crossJoin(broadcast(stats))
@@ -280,8 +279,8 @@ object Retrieval {
       // dl >= 1 (a doc has at least one whitespace token), so the packed
       // prefix is at most RAG_BUDGET rows — bounding the rank BEFORE the
       // cumulative window restores the WindowGroupLimit partial top-K
-      // plan (round-13 ADVICE: unbounded, every matching doc shipped to
-      // the per-query exchange). Oracle applies the same bound.
+      // plan (unbounded, every matching doc would ship to the per-query
+      // exchange). Oracle applies the same bound.
       .filter($"rnk" <= RAG_BUDGET)
       .withColumn("cum_tokens", sum($"dl").over(wCum).cast("long"))
       .filter($"cum_tokens" <= RAG_BUDGET)
@@ -346,7 +345,7 @@ object Retrieval {
   val RAG_BUDGET_BPE = 450L
 
   /** q167: [[ragContext]] budgeted in REAL tokenizer units — the fix
-    * q160 argues for (round-13 verdict item 4): q161 packs by whitespace
+    * q160 argues for: q161 packs by whitespace
     * `dl`, and a context budgeted in words overflows a BPE-denominated
     * model window by the language's fertility (measured ≈ 3.87× here,
     * and per-language variance is exactly what q160 reports). This
@@ -435,6 +434,18 @@ object Retrieval {
   private val liveIdxDir = new graft.LiveDirSlot("graft_q125_index")
   private val liveIncrementDir = new graft.LiveDirSlot("graft_q126_index")
 
+  /** Index postings (doc_id, dl, term, tf, term_bucket) of a (doc_id,
+    * l: split tokens) frame. */
+  private def postings(tokens: DataFrame): DataFrame = {
+    import tokens.sparkSession.implicits._
+    tokens
+      .select($"doc_id", size($"l").cast("long").as("dl"),
+        explode($"l").as("term"))
+      .groupBy($"doc_id", $"dl", $"term")
+      .agg(count(lit(1)).cast("long").as("tf"))
+      .withColumn("term_bucket", termBucket)
+  }
+
   /** Build the FULL inverted index from a (doc_id, text) frame into
     * `idx`: postings (doc_id, dl, term, tf) partitioned by the term-hash
     * bucket, plus the 1-row corpus stats. Two scans of the input — the
@@ -444,12 +455,7 @@ object Retrieval {
   private def writeIndexOf(src: DataFrame, idx: String): Unit = {
     import src.sparkSession.implicits._
     val base = src.select($"doc_id", split($"text", " ").as("l"))
-    base
-      .select($"doc_id", size($"l").cast("long").as("dl"),
-        explode($"l").as("term"))
-      .groupBy($"doc_id", $"dl", $"term")
-      .agg(count(lit(1)).cast("long").as("tf"))
-      .withColumn("term_bucket", termBucket)
+    postings(base)
       .write.mode("overwrite").partitionBy("term_bucket")
       .parquet(s"$idx/q125_postings")
     base.agg(sum(size($"l")).cast("long").as("sum_dl"),
@@ -513,12 +519,7 @@ object Retrieval {
     // the increment: one batch scan → posting append + stats merge
     val batch = corpus.filter($"doc_id" >= cut)
       .select($"doc_id", split($"text", " ").as("l"))
-    batch
-      .select($"doc_id", size($"l").cast("long").as("dl"),
-        explode($"l").as("term"))
-      .groupBy($"doc_id", $"dl", $"term")
-      .agg(count(lit(1)).cast("long").as("tf"))
-      .withColumn("term_bucket", termBucket)
+    postings(batch)
       .write.mode("append").partitionBy("term_bucket")
       .parquet(s"$idx/q125_postings")
     val stored = spark.read.parquet(s"$idx/q125_stats").head()
@@ -566,9 +567,7 @@ object Retrieval {
     val top = base
       .filter($"vec_id" =!= DENSE_QUERY)
       .crossJoin(broadcast(probe))
-      .withColumn("cosine",
-        Dx.dotDec("q_emb", "embedding").cast("double") /
-          (sqrt($"q_nrm".cast("double")) * sqrt($"nrm_dec".cast("double"))))
+      .withColumn("cosine", Ann.exactCosine)
       .select($"vec_id".as("doc_id"), $"cosine")
       .orderBy($"cosine".desc, $"doc_id".asc)
       .limit(FUSE_DEPTH)

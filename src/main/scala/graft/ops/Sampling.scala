@@ -91,14 +91,24 @@ object Sampling {
     * by hoping two engines' builtins agree. */
   def lengthQuantiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    interpolatedQuantiles(docs(spark, dir).select($"lang", $"n_chars"), "q")
+      .orderBy($"lang", $"p")
+  }
+
+  /** Per-lang type-7 quantiles of `n_chars` over (lang, n_chars) rows
+    * `src`, at every [[QUANTILES]] p: (lang, p, `out`, `more`…), where
+    * `more` are further aggregates over the same (lang, p) groups. The
+    * two order statistics are picked by row number and interpolated as
+    * lo + (hi − lo)·(h − ⌊h⌋), h = (n − 1)·p. */
+  private[ops] def interpolatedQuantiles(src: DataFrame, out: String,
+      more: Column*): DataFrame = {
+    import src.sparkSession.implicits._
     val byVal = Window.partitionBy($"lang").orderBy($"n_chars")
     val all = Window.partitionBy($"lang")
-    val v = docs(spark, dir)
-      .select($"lang", $"n_chars")
+    src
       .withColumn("rn", row_number().over(byVal))
       .withColumn("n", count(lit(1)).over(all))
-    val ps = QUANTILES.toDF("p")
-    v.crossJoin(ps)
+      .crossJoin(QUANTILES.toDF("p"))
       .withColumn("h", ($"n" - 1) * $"p")
       .withColumn("lo", floor($"h").cast("long"))
       .withColumn("hi", ceil($"h").cast("long"))
@@ -107,8 +117,7 @@ object Sampling {
       .agg((min(when($"rn" === $"lo" + 1, $"n_chars")).cast("double") +
         (max(when($"rn" === $"hi" + 1, $"n_chars")) -
           min(when($"rn" === $"lo" + 1, $"n_chars"))) *
-          (max($"h") - max($"lo"))).as("q"))
-      .orderBy($"lang", $"p")
+          (max($"h") - max($"lo"))).as(out), more: _*)
   }
 
   private val quantilesOracle = {
@@ -472,7 +481,7 @@ object Sampling {
     // consumes only (w, n_tokens), so column pruning rewrites ITS
     // aggregate differently from the plan branch that keeps n_docs —
     // two non-identical subtrees, no exchange reuse, two corpus scans
-    // (measured by the round-12 scan audit; q96 escapes because its
+    // (measured by the scan audit; q96 escapes because its
     // totals consume every non-key agg output). The q108 persist
     // precedent; harness clears the cache per query.
     val bySource = graft.Caches.track(s"sampling.epochBySource:$dir",

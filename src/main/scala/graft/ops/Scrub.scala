@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{Dx, Query, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -88,6 +88,30 @@ object Scrub {
   /** ~5% of docs are "eval": first 8 md5 hex chars under 0.05·2³². */
   val EVAL_THRESHOLD: Long = (0.05 * (1L << 32)).toLong
 
+  /** 1 when the salted-hash carve puts the doc in the held-out eval
+    * set, else 0. */
+  private def evalTag: Column =
+    (Dx.hashKey(EVAL_SALT, col("doc_id")) < EVAL_THRESHOLD).cast("int")
+
+  /** Document shingles (doc_id, sh) with their doc's `is_eval`. */
+  private def evalTaggedShingles(spark: SparkSession, dir: String): DataFrame =
+    TextPipeline.shingles(spark, dir).withColumn("is_eval", evalTag)
+
+  /** The decontamination verdict: every training doc with its
+    * `n_eval_hits` from `hits` (doc_id, n_eval_hits), 0 and `clean` when
+    * it has none. */
+  private def evalVerdict(spark: SparkSession, dir: String,
+      hits: DataFrame): DataFrame = {
+    import spark.implicits._
+    docs(spark, dir)
+      .withColumn("is_eval", evalTag)
+      .filter($"is_eval" === 0)
+      .join(hits, Seq("doc_id"), "left")
+      .select($"doc_id", $"lang", $"source",
+        coalesce($"n_eval_hits", lit(0L)).as("n_eval_hits"),
+        ($"n_eval_hits".isNull).as("clean"))
+  }
+
   /** Benchmark decontamination: a TRAINING document is contaminated if it
     * shares ≥1 3-token shingle with any EVAL document — the n-gram
     * overlap screen run before shipping training data, so eval answers
@@ -109,23 +133,14 @@ object Scrub {
     * without re-reading text. */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def evalTag =
-      (Dx.hashKey(EVAL_SALT, $"doc_id") < EVAL_THRESHOLD).cast("int")
-    val sh = TextPipeline.shingles(spark, dir)
-      .withColumn("is_eval", evalTag)
+    val sh = evalTaggedShingles(spark, dir)
     val hits = sh
       .withColumn("has_eval",
         max($"is_eval").over(Window.partitionBy($"sh")))
       .filter($"is_eval" === 0 && $"has_eval" === 1)
       .groupBy($"doc_id")
       .agg(count(lit(1)).cast("long").as("n_eval_hits"))
-    docs(spark, dir)
-      .withColumn("is_eval", evalTag)
-      .filter($"is_eval" === 0)
-      .join(hits, Seq("doc_id"), "left")
-      .select($"doc_id", $"lang", $"source",
-        coalesce($"n_eval_hits", lit(0L)).as("n_eval_hits"),
-        ($"n_eval_hits".isNull).as("clean"))
+    evalVerdict(spark, dir, hits)
   }
 
   /** Oracle CTEs `tagged` (`cols` plus is_eval, the salted-hash eval
@@ -197,10 +212,7 @@ object Scrub {
       capacity: Long = EVAL_SHINGLE_CAPACITY,
       fpp: Double = 0.01): DataFrame = {
     import spark.implicits._
-    def evalTag =
-      (Dx.hashKey(EVAL_SALT, $"doc_id") < EVAL_THRESHOLD).cast("int")
-    val sh = TextPipeline.shingles(spark, dir)
-      .withColumn("is_eval", evalTag)
+    val sh = evalTaggedShingles(spark, dir)
     val evalSh = graft.Caches.track(s"scrub.evalShingles:$dir",
       sh.filter($"is_eval" === 1).select($"sh").distinct())
     val bloom = evalSh.agg(
@@ -211,13 +223,7 @@ object Scrub {
       .join(evalSh, Seq("sh"), "left_semi")
       .groupBy($"doc_id")
       .agg(count(lit(1)).cast("long").as("n_eval_hits"))
-    docs(spark, dir)
-      .withColumn("is_eval", evalTag)
-      .filter($"is_eval" === 0)
-      .join(hits, Seq("doc_id"), "left")
-      .select($"doc_id", $"lang", $"source",
-        coalesce($"n_eval_hits", lit(0L)).as("n_eval_hits"),
-        ($"n_eval_hits".isNull).as("clean"))
+    evalVerdict(spark, dir, hits)
   }
 
   // ---------------------------------------------------------------- q115
@@ -340,10 +346,7 @@ object Scrub {
     * own exchange. */
   def contaminationProvenance(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    def evalTag =
-      (Dx.hashKey(EVAL_SALT, $"doc_id") < EVAL_THRESHOLD).cast("int")
-    val sh = TextPipeline.shingles(spark, dir)
-      .withColumn("is_eval", evalTag)
+    val sh = evalTaggedShingles(spark, dir)
     val evalSide = sh.filter($"is_eval" === 1)
       .select($"doc_id".as("eval_id"), $"sh")
       .withColumn("eval_n",

@@ -356,24 +356,8 @@ object Sketch {
       .select($"lang", $"n_chars",
         (Dx.hashKey(QSK_SALT, $"doc_id") < QSK_THRESHOLD).as("keep"))
       .persist()
-    def t7(src: DataFrame, out: String, nOut: String): DataFrame = {
-      val byVal = Window.partitionBy(col("lang")).orderBy(col("n_chars"))
-      val all = Window.partitionBy(col("lang"))
-      val v = src
-        .withColumn("rn", row_number().over(byVal))
-        .withColumn("n", count(lit(1)).over(all))
-      v.crossJoin(Sampling.QUANTILES.toDF("p"))
-        .withColumn("h", ($"n" - 1) * $"p")
-        .withColumn("lo", floor($"h").cast("long"))
-        .withColumn("hi", ceil($"h").cast("long"))
-        .filter($"rn" === $"lo" + 1 || $"rn" === $"hi" + 1)
-        .groupBy($"lang", $"p")
-        .agg((min(when($"rn" === $"lo" + 1, $"n_chars")).cast("double") +
-          (max(when($"rn" === $"hi" + 1, $"n_chars")) -
-            min(when($"rn" === $"lo" + 1, $"n_chars"))) *
-            (max($"h") - max($"lo"))).as(out),
-          max($"n").cast("long").as(nOut))
-    }
+    def t7(src: DataFrame, out: String, nOut: String): DataFrame =
+      Sampling.interpolatedQuantiles(src, out, max($"n").cast("long").as(nOut))
     val exact = t7(base.select($"lang", $"n_chars"), "q_exact", "n_full")
     val est = t7(base.filter($"keep").select($"lang", $"n_chars"),
       "q_est", "n_samp")
@@ -533,8 +517,8 @@ object Sketch {
         when($"k_eff" < KMV_K, $"k_eff".cast("double"))
           .otherwise(lit(KMV_NUM) / $"uu".cast("double")))
     // exact ground-truth overlap: GROUP-BY-GRAM + in-group pairing
-    // (guide §3 — the round-17 shape self-joined the persisted gram
-    // frame on `k`, shuffling it TWICE; grouping shuffles it ONCE and
+    // (guide §3 — a self-join of the persisted gram frame on `k`
+    // shuffles it TWICE; grouping shuffles it ONCE and
     // pairs sources inside each gram's row). Per gram the sorted source
     // list is dimension-bounded (≤ |sources|), so the pair expansion is
     // in-memory and emits exactly the self-join's (src_a < src_b) rows:

@@ -385,11 +385,15 @@ object TextPipeline {
           s"j -> array_min(slice(hs, j, $WINNOW_W))))"))
   }
 
-  private def winnowSummary(sets: DataFrame): DataFrame = {
+  /** Per-doc summary of the winnow fingerprint set `fps`: (doc_id,
+    * n_kgrams, n_fingerprints, min_fp, max_fp, fp_sum) by doc_id, with
+    * `nKgrams` the caller's aliased k-gram count. */
+  private def winnowSummary(sets: DataFrame,
+      nKgrams: Column = size(col("hs")).cast("long").as("n_kgrams")): DataFrame = {
     import sets.sparkSession.implicits._
     sets.select(
       $"doc_id",
-      size($"hs").cast("long").as("n_kgrams"),
+      nKgrams,
       size($"fps").cast("long").as("n_fingerprints"),
       expr("array_min(fps)").as("min_fp"),
       expr("array_max(fps)").as("max_fp"),
@@ -405,18 +409,13 @@ object TextPipeline {
     * power-sum oracle; n_kgrams = chars − K + 1 by construction. */
   def winnowFingerprints(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    docs(spark, dir)
+    winnowSummary(docs(spark, dir)
       .filter(length($"text") >= WINNOW_K + WINNOW_W - 1)
       .select($"doc_id",
         (length($"text") - (WINNOW_K - 1)).cast("long").as("n_kgrams"),
         graft.functions.WinnowFingerprint(
-          $"text", WINNOW_K, WINNOW_W, POLY_B, POLY_M).as("fps"))
-      .select($"doc_id", $"n_kgrams",
-        size($"fps").cast("long").as("n_fingerprints"),
-        expr("array_min(fps)").as("min_fp"),
-        expr("array_max(fps)").as("max_fp"),
-        expr("aggregate(fps, CAST(0 AS BIGINT), (a, x) -> a + x)").as("fp_sum"))
-      .orderBy($"doc_id")
+          $"text", WINNOW_K, WINNOW_W, POLY_B, POLY_M).as("fps")),
+      $"n_kgrams")
   }
 
   /** The declarative HOF twin of [[winnowFingerprints]] — same values,
@@ -580,6 +579,20 @@ object TextPipeline {
 
   // ---------------------------------------------------------------- q62
 
+  /** The curation gate's signals, computed in ONE text projection:
+    * `n_tokens` (space-split count), `ttr` (distinct / all tokens) and
+    * `lang_pred` ([[langPredict]]). q62's verdict and q119's funnel both
+    * gate on these, so the funnel's last stage is the verdict. */
+  private def withCurationSignals(texts: DataFrame): DataFrame = {
+    import texts.sparkSession.implicits._
+    texts
+      .withColumn("n_tokens", size(split($"text", " ")).cast("long"))
+      .withColumn("ttr",
+        size(array_distinct(split($"text", " "))).cast("double")
+          / size(split($"text", " ")).cast("double"))
+      .withColumn("lang_pred", langPredict)
+  }
+
   /** The end-to-end CURATION verdict — the artifact a training-data run
     * ships after all filter stages: a document survives iff it
     * (1) survives dedup (the q57 greedy keep list: exact md5 groups ∪
@@ -596,13 +609,8 @@ object TextPipeline {
   def curationVerdict(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val kept = dedupKeepList(spark, dir).select($"doc_id")
-    docs(spark, dir)
-      .join(kept, Seq("doc_id"), "left_semi")
-      .withColumn("n_tokens", size(split($"text", " ")).cast("long"))
-      .withColumn("ttr",
-        size(array_distinct(split($"text", " "))).cast("double")
-          / size(split($"text", " ")).cast("double"))
-      .withColumn("lang_pred", langPredict)
+    withCurationSignals(docs(spark, dir)
+      .join(kept, Seq("doc_id"), "left_semi"))
       .filter($"n_tokens" >= QUALITY_MIN_TOKENS && $"ttr" >= QUALITY_MIN_TTR &&
         $"lang_pred" =!= "unknown")
       .select($"doc_id", $"source", $"lang_pred", $"n_tokens", $"ttr")
@@ -627,13 +635,8 @@ object TextPipeline {
     import spark.implicits._
     val kept = dedupKeepList(spark, dir)
       .select($"doc_id", lit(1L).as("in_keep"))
-    val flagged = docs(spark, dir)
-      .join(kept, Seq("doc_id"), "left")
-      .withColumn("n_tokens", size(split($"text", " ")).cast("long"))
-      .withColumn("ttr",
-        size(array_distinct(split($"text", " "))).cast("double")
-          / size(split($"text", " ")).cast("double"))
-      .withColumn("lang_pred", langPredict)
+    val flagged = withCurationSignals(docs(spark, dir)
+      .join(kept, Seq("doc_id"), "left"))
       .withColumn("s1", $"in_keep".isNotNull)
       .withColumn("s2", $"s1" && $"n_tokens" >= QUALITY_MIN_TOKENS &&
         $"ttr" >= QUALITY_MIN_TTR)
@@ -790,8 +793,8 @@ object TextPipeline {
   val MAX_SHINGLE_DF = 64
 
   /** Scale drivers for the MOSTLY-HOT FALLBACK under adversarial skew
-    * (round-14 verdict item 8 — the planted-mega-cluster probe): from
-    * the hot-probe posting HISTOGRAM alone, no pair join executed,
+    * (the planted-mega-cluster probe): from the [[hotProbes]] posting
+    * HISTOGRAM alone, no pair join executed,
     * returns one row `(n_docs, qualifying_docs, hot_buckets,
     * max_bucket_occ, driver_pairs)` where `driver_pairs` =
     * Σ over hot-probe buckets of occ·(occ−1)/2 — the EXACT upper bound
@@ -806,7 +809,7 @@ object TextPipeline {
     * rows pair this histogram with the executed q27 at the decades the
     * pair OUTPUT itself fits.
     *
-    * `capped_pairs` (round-16) replays the same arithmetic under
+    * `capped_pairs` replays the same arithmetic under
     * [[shingleEvidence]]'s budget — per bucket
     * C(min(occ,cap),2) + max(occ−cap,0)·chainW — the candidate volume
     * the COMPONENTS family actually joins on a mega-cluster corpus. */
@@ -815,8 +818,51 @@ object TextPipeline {
       occCap: Int = HOT_OCC_CAP, chainW: Int = HOT_CHAIN_W): DataFrame = {
     import spark.implicits._
     val nDocs = docs(spark, dir).count()
-    val shDf = shingles(spark, dir).withColumn("df",
-      count(lit(1)).over(Window.partitionBy($"sh")))
+    val (_, mostlyHot, probes) = hotProbes(dfTagged(shingles(spark, dir)), maxDf)
+    val nQual = mostlyHot.count()
+    val hist = probes.groupBy($"sh").agg(count(lit(1)).as("occ"))
+      .agg(count(lit(1)),
+        coalesce(max($"occ"), lit(0L)),
+        // `div` (integer division) keeps the bound exact at ANY bucket
+        // occupancy — Spark's `/` on longs is double division, exact
+        // only while occ·(occ−1) < 2^53, and this histogram exists
+        // precisely for giant-occupancy mega-cluster buckets. The
+        // product is always even, so div loses nothing.
+        coalesce(sum(expr("occ * (occ - 1) div 2")), lit(0L)),
+        coalesce(sum(
+          expr(s"least(occ, ${occCap}L) * (least(occ, ${occCap}L) - 1) div 2" +
+            s" + greatest(occ - ${occCap}L, 0L) * ${chainW}L")), lit(0L)))
+      .head()
+    Seq((nDocs, nQual, hist.getLong(0), hist.getLong(1), hist.getLong(2),
+        hist.getLong(3)))
+      .toDF("n_docs", "qualifying_docs", "hot_buckets", "max_bucket_occ",
+        "driver_pairs", "capped_pairs")
+  }
+
+  /** Postings `sh` (doc_id, sh) tagged with their shingle's document
+    * frequency `df` by ONE count window over ONE shuffle, so every
+    * consumer (rare index, hot postings, per-doc stats) branches above
+    * one exchange and the shingle explosion runs once. */
+  private def dfTagged(sh: DataFrame): DataFrame =
+    sh.withColumn("df", count(lit(1)).over(Window.partitionBy(col("sh"))))
+
+  /** The mostly-hot fallback's selection over [[dfTagged]] postings:
+    *  - `docStats` (doc_id, n_sh, n_rare): ONE per-doc aggregation gives
+    *    both the set sizes the rerank needs and the rare counts the
+    *    fallback gate needs;
+    *  - `mostlyHot` (doc_id): docs whose shingles are ≥
+    *    [[NEARDUP_THRESHOLD]] hot — the [[shingleNearDup]] doc proves no
+    *    qualifying pair can have a sub-threshold poster. hot_frac ≥ t is
+    *    tested as a ratio: the algebraically equal `n_rare ≤ (1−t)·n_sh`
+    *    form loses the boundary doc to binary rounding of (1−t);
+    *  - `probes` (doc_id, sh): each such doc's [[ALLHOT_PROBES]]
+    *    lowest-hash hot shingles.
+    * [[shingleNearDup]] joins on these probes and [[hotFallbackStats]]
+    * counts their buckets, so the statistics bound the join they
+    * describe. */
+  private def hotProbes(shDf: DataFrame,
+      maxDf: Int): (DataFrame, DataFrame, DataFrame) = {
+    import shDf.sparkSession.implicits._
     val docStats = shDf.groupBy($"doc_id").agg(
       count(lit(1)).as("n_sh"),
       count(when($"df" <= maxDf, lit(1))).as("n_rare"))
@@ -827,28 +873,10 @@ object TextPipeline {
     val probes = shDf.filter($"df" > maxDf).select($"doc_id", $"sh")
       .join(mostlyHot, Seq("doc_id"))
       .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"doc_id")
-          .orderBy(xxhash64($"sh"), $"sh")))
+        Window.partitionBy($"doc_id").orderBy(xxhash64($"sh"), $"sh")))
       .filter($"rnk" <= ALLHOT_PROBES)
       .select($"doc_id", $"sh")
-    val nQual = mostlyHot.count()
-    val hist = probes.groupBy($"sh").agg(count(lit(1)).as("occ"))
-      .agg(count(lit(1)),
-        coalesce(max($"occ"), lit(0L)),
-        // `div` (integer division) keeps the bound exact at ANY bucket
-        // occupancy — Spark's `/` on longs is double division, exact
-        // only while occ·(occ−1) < 2^53, and this histogram exists
-        // precisely for giant-occupancy mega-cluster buckets (round-15
-        // ADVICE). The product is always even, so div loses nothing.
-        coalesce(sum(expr("occ * (occ - 1) div 2")), lit(0L)),
-        coalesce(sum(
-          expr(s"least(occ, ${occCap}L) * (least(occ, ${occCap}L) - 1) div 2" +
-            s" + greatest(occ - ${occCap}L, 0L) * ${chainW}L")), lit(0L)))
-      .head()
-    Seq((nDocs, nQual, hist.getLong(0), hist.getLong(1), hist.getLong(2),
-        hist.getLong(3)))
-      .toDF("n_docs", "qualifying_docs", "hot_buckets", "max_bucket_occ",
-        "driver_pairs", "capped_pairs")
+    (docStats, mostlyHot, probes)
   }
 
   /** Candidate near-dup pairs from the SKETCHED df-bounded inverted
@@ -1011,7 +1039,7 @@ object TextPipeline {
     * candidates hard-bounded by the sketch (below); on a corpus with no
     * hot shingles the hot top-up is empty.
     *
-    * SIZE-GATED CANDIDATE GENERATION (round-11; round-10 verdict item 3):
+    * SIZE-GATED CANDIDATE GENERATION:
     * two rare-index strategies, chosen by corpus size
     * ([[SKETCH_MIN_DOCS]]) the way AQE picks join strategies by runtime
     * statistics —
@@ -1020,7 +1048,7 @@ object TextPipeline {
     *    passing, so no rare top-up join runs. Candidate volume is
     *    linear-in-driver at reference scale (measured through r09);
     *    this is the cheapest correct plan there.
-    *  - SKETCHED (corpus ≥ gate; round-10, round-9 verdict item 4): the
+    *  - SKETCHED (corpus ≥ gate): the
     *    pair join reads only each doc's [[RARE_PROBES]] smallest-by-
     *    xxhash64 rare shingles ([[sketchPostings]] — winnowing-style
     *    sparsification). The df ceiling alone bounded per-SHINGLE pairs
@@ -1036,7 +1064,7 @@ object TextPipeline {
     * TextPipelineSpec pins the two paths to identical output on a mixed
     * fixture (forced via the `sketchGate` parameter).
     *
-    * MOSTLY-HOT FALLBACK (round-4 advice; widened round 6): a cluster
+    * MOSTLY-HOT FALLBACK ([[hotProbes]]): a cluster
     * duplicated more than maxDf times makes EVERY one of its shingles
     * hot, so no member ever reaches the rare index — precisely the
     * most-duplicated content a dedup pass targets. Which docs must post
@@ -1046,9 +1074,8 @@ object TextPipeline {
     * exactly the docs with hot fraction ≥ t (equivalently n_rare ≤
     * (1−t)·n_sh; zero-rare docs are the hot_frac = 1 case) post their
     * [[ALLHOT_PROBES]] smallest-by-hash hot shingles into a second tiny
-    * index and meet there — this closes the round-5 rare-tailed-twin
-    * residual (a duplicate that grew one unique tail line now posts and
-    * is found; TextPipelineSpec pins it).
+    * index and meet there — a rare-tailed twin (a duplicate that grew
+    * one unique tail line) posts and is found; TextPipelineSpec pins it.
     *
     * Fan-out stays bounded: K postings per posting doc, and a doc posts
     * ONLY when ≥ t of its content is >maxDf-duplicated material — a
@@ -1066,7 +1093,7 @@ object TextPipeline {
         * gate, [[SKETCH_MIN_DOCS]]. */
       sketchGate: Option[Long] = None,
       /** Per-probe-bucket delegate budget for the hot-fallback candidate
-        * join (round-16: the megadup sub-quadratic demand). The default
+        * join (the megadup sub-quadratic bound). The default
         * Int.MaxValue keeps the PAIR-COMPLETE semantics — q27's contract
         * is every qualifying pair, and its plan is byte-unchanged. A
         * finite cap ([[HOT_OCC_CAP]] via [[shingleEvidence]]) bounds the
@@ -1078,23 +1105,14 @@ object TextPipeline {
       hotOccCap: Int = Int.MaxValue,
       hotChainW: Int = HOT_CHAIN_W): DataFrame = {
     import spark.implicits._
-    val sh = shingles(spark, dir)
-    // ONE window over ONE shuffle tags every posting with its shingle's
-    // document frequency. The round-6 shape (groupBy(sh) agg joined back
-    // onto sh) referenced the shingle subtree twice with different column
-    // pruning, so the corpus text was scanned and exploded once per shape
-    // (three executed scans measured); as a count(*) window, every
-    // consumer (rare index both sides, hot postings, per-doc stats)
-    // branches ABOVE one exchange and the explosion runs exactly once —
-    // plan-identical subtrees reuse the exchange. (A persist of the pair
-    // frame was measured 4× SLOWER than recomputing: columnar round-trip
-    // of 10M-row pairs loses to codegen re-derivation. Scan sharing here
-    // comes from exchange reuse, not caching.)
-    val shDf = sh.withColumn("df",
-      count(lit(1)).over(Window.partitionBy($"sh")))
+    // Scan sharing comes from exchange reuse above the one df window,
+    // not caching: a persist of the pair frame measured 4× slower than
+    // recomputing (columnar round-trip of 10M-row pairs loses to codegen
+    // re-derivation).
+    val shDf = dfTagged(shingles(spark, dir))
     val shRare = shDf.filter($"df" <= maxDf).select($"doc_id", $"sh")
     val shHot = shDf.filter($"df" > maxDf).select($"doc_id", $"sh")
-    // Size gate (round-11): the sketch's candidate cap matters only once
+    // Size gate: the sketch's candidate cap matters only once
     // corpus density makes the direct index's candidate stream
     // super-linear (measured knee ≈ 10× reference scale); below the gate
     // the direct pair join is strictly cheaper — exact shared_rare falls
@@ -1105,33 +1123,12 @@ object TextPipeline {
     val nDocs = gateDocCount(spark, dir)
     val useSketch = nDocs >= gateVal
     // one decision log per (dir, gate): the SCALING artifacts record
-    // which path each measured point executed (round-11 verdict item 7)
+    // which path each measured point executed
     if (gateLogged.add(s"$dir#$gateVal"))
       System.err.println(s"[graft] shingleNearDup gate: dir=$dir " +
         s"docs=$nDocs minDocs=$gateVal " +
         s"path=${if (useSketch) "sketched" else "direct"}")
-    // ONE per-doc aggregation over the df-tagged postings yields both the
-    // set sizes the rerank needs AND the rare counts the fallback gate
-    // needs (folding what would be two full-size aggs — and replacing the
-    // two doc_id distincts of the zero-rare-only round-5 shape)
-    val docStats = shDf.groupBy($"doc_id").agg(
-      count(lit(1)).as("n_sh"),
-      count(when($"df" <= maxDf, lit(1))).as("n_rare"))
-    // fallback probes: docs whose content is ≥ NEARDUP_THRESHOLD hot —
-    // the class doc proves no qualifying pair can have a sub-threshold
-    // poster. hot_frac ≥ t as a ratio: the algebraically equal
-    // `n_rare ≤ (1−t)·n_sh` form loses the boundary doc to binary
-    // rounding of (1−t).
-    val mostlyHot = docStats
-      .filter(($"n_sh" - $"n_rare").cast("double") / $"n_sh"
-        >= NEARDUP_THRESHOLD)
-      .select($"doc_id")
-    val probes = shHot.join(mostlyHot, Seq("doc_id"))
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"doc_id")
-          .orderBy(xxhash64($"sh"), $"sh")))
-      .filter($"rnk" <= ALLHOT_PROBES)
-      .select($"doc_id", $"sh")
+    val (docStats, _, probes) = hotProbes(shDf, maxDf)
     val candHot =
       if (hotOccCap == Int.MaxValue)
         // pair-complete (q27's contract): every qualifying pair meets
@@ -1174,7 +1171,7 @@ object TextPipeline {
           s"hotOccCap $hotOccCap must be >= hotChainW $hotChainW")
         val sig = probes.groupBy($"doc_id")
           .agg(sort_array(collect_list(xxhash64($"sh"))).as("sig"))
-        // TWO-STAGE in-bucket rank (round-16 verdict item 4): the direct
+        // TWO-STAGE in-bucket rank: the direct
         // `row_number over (partition by sh order by sig, doc_id)` puts
         // ALL d members of a hot bucket in ONE task — id-sized rows and
         // fine at the measured d = 50k, but a 10⁹-member cluster at real
@@ -1420,6 +1417,25 @@ object TextPipeline {
     * wrong keep list. */
   val COMPONENT_MAX_ITERS = 16
 
+  /** (node, comp) labels of the duplicate-evidence graph over `base`
+    * ([[dedupBase]]): exact evidence as edges (each content-hash group's
+    * minimum ↔ member), near evidence as the capped [[shingleEvidence]]
+    * pairs (fixture-identical, megadup-linear), labelled by the shared
+    * [[Scale.minLabelComponents]] fixpoint. q60, q93 and q138 all label
+    * through this one edge set, so their clusters cannot disagree. */
+  private def evidenceComponents(spark: SparkSession, dir: String,
+      base: DataFrame): DataFrame = {
+    import spark.implicits._
+    val exactEdges = base
+      .withColumn("m", min($"doc_id").over(Window.partitionBy($"content_hash")))
+      .filter($"doc_id" =!= $"m")
+      .select($"m".as("a"), $"doc_id".as("b"))
+    val nearEdges = shingleEvidence(spark, dir)
+      .select($"doc_a".as("a"), $"doc_b".as("b"))
+    Scale.minLabelComponents(
+      exactEdges.unionByName(nearEdges), COMPONENT_MAX_ITERS)
+  }
+
   /** Connected-components keep list — the transitive-closure alternative
     * to [[dedupKeepList]]'s greedy pair-drop: duplicate evidence (exact
     * md5 groups + shingle-Jaccard pairs) is treated as an EQUIVALENCE, so
@@ -1446,18 +1462,7 @@ object TextPipeline {
   def dedupComponents(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = dedupBase(spark, dir)
-    // exact evidence as edges (group min ↔ member), near evidence as-is
-    val gmin = Window.partitionBy($"content_hash")
-    val exactEdges = base
-      .withColumn("m", min($"doc_id").over(gmin))
-      .filter($"doc_id" =!= $"m")
-      .select($"m".as("a"), $"doc_id".as("b"))
-    // components-evidence mode: capped hot fallback, components unchanged
-    // (see [[shingleEvidence]] — fixture-identical, megadup-linear)
-    val nearEdges = shingleEvidence(spark, dir)
-      .select($"doc_a".as("a"), $"doc_b".as("b"))
-    val comp = Scale.minLabelComponents(
-      exactEdges.unionByName(nearEdges), COMPONENT_MAX_ITERS)
+    val comp = evidenceComponents(spark, dir, base)
     val drops = comp.filter($"comp" < $"node").select($"node".as("doc_id"))
     base
       .join(drops, Seq("doc_id"), "left_anti")
@@ -1492,17 +1497,7 @@ object TextPipeline {
   def componentRepresentatives(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = dedupBase(spark, dir)
-    val gmin = Window.partitionBy($"content_hash")
-    val exactEdges = base
-      .withColumn("m", min($"doc_id").over(gmin))
-      .filter($"doc_id" =!= $"m")
-      .select($"m".as("a"), $"doc_id".as("b"))
-    // components-evidence mode: capped hot fallback, components unchanged
-    // (see [[shingleEvidence]] — fixture-identical, megadup-linear)
-    val nearEdges = shingleEvidence(spark, dir)
-      .select($"doc_a".as("a"), $"doc_b".as("b"))
-    val comp = Scale.minLabelComponents(
-      exactEdges.unionByName(nearEdges), COMPONENT_MAX_ITERS)
+    val comp = evidenceComponents(spark, dir, base)
     val labeled = base
       .join(comp.select($"node".as("doc_id"), $"comp"), Seq("doc_id"), "left")
       .withColumn("comp", coalesce($"comp", $"doc_id"))
@@ -1640,7 +1635,27 @@ object TextPipeline {
     * is a per-doc `array_sort`+`array_join`, bounded by document size. */
   def spanScrub(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val toks = docs(spark, dir)
+    val toks = spanToks(spark, dir)
+      // tail positions start no gram; a unique sentinel key keeps them in
+      // the SAME exchange with singleton partitions (sdf = 1, never
+      // covered) instead of one NULL partition holding 2·(K−1)·ndocs rows
+      .withColumn("shk", coalesce($"sh",
+        concat(lit("\u0000"), $"doc_id", lit(":"), $"pos")))
+    val bySh = Window.partitionBy($"shk")
+    spanCover(toks
+      .withColumn("dr", dense_rank().over(bySh.orderBy($"doc_id")))
+      .withColumn("sdf", max($"dr").over(bySh))
+      .withColumn("dup_start",
+        when($"sdf" >= SPAN_MIN_DOCS, lit(1)).otherwise(lit(0))))
+  }
+
+  /** Span-scrub token stream (doc_id, pos, tok, sh), sh being the
+    * [[SPAN_K]]-gram starting at pos (NULL in the tail): token stream
+    * AND gram starts come out of ONE `transform`+`explode` projection, so
+    * the corpus text is read once. The Spark twin of [[spanTokCtes]]. */
+  private def spanToks(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    docs(spark, dir)
       .select($"doc_id", split($"text", " ").as("ws"))
       .filter($"doc_id".isNotNull)
       .select($"doc_id", explode(expr(
@@ -1651,19 +1666,18 @@ object TextPipeline {
         .as("t"))
       .select($"doc_id", $"t.pos".as("pos"), $"t.tok".as("tok"),
         $"t.sh".as("sh"))
-      // tail positions start no gram; a unique sentinel key keeps them in
-      // the SAME exchange with singleton partitions (sdf = 1, never
-      // covered) instead of one NULL partition holding 2·(K−1)·ndocs rows
-      .withColumn("shk", coalesce($"sh",
-        concat(lit("\u0000"), $"doc_id", lit(":"), $"pos")))
-    val bySh = Window.partitionBy($"shk")
+  }
+
+  /** Span-scrub coverage and rebuild over `dup_start`-flagged
+    * [[spanToks]]: a token is covered when a duplicated gram starts
+    * within the [[SPAN_K]] positions up to it (a sliding `max` over a
+    * doc-keyed window), and the cleaned text is the uncovered tokens in
+    * position order. The Spark twin of [[spanCoverSql]]. */
+  private def spanCover(flagged: DataFrame): DataFrame = {
+    import flagged.sparkSession.implicits._
     val byDoc = Window.partitionBy($"doc_id").orderBy($"pos")
       .rowsBetween(-(SPAN_K - 1), Window.currentRow)
-    toks
-      .withColumn("dr", dense_rank().over(bySh.orderBy($"doc_id")))
-      .withColumn("sdf", max($"dr").over(bySh))
-      .withColumn("dup_start",
-        when($"sdf" >= SPAN_MIN_DOCS, lit(1)).otherwise(lit(0)))
+    flagged
       .withColumn("covered", max($"dup_start").over(byDoc))
       .groupBy($"doc_id")
       .agg(
@@ -1739,37 +1753,12 @@ object TextPipeline {
     * (tail rows group within their own document). */
   def spanScrubWithin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val toks = docs(spark, dir)
-      .select($"doc_id", split($"text", " ").as("ws"))
-      .filter($"doc_id".isNotNull)
-      .select($"doc_id", explode(expr(
-        s"transform(sequence(0, size(ws) - 1), i -> struct(" +
-          s"i AS pos, ws[i] AS tok, " +
-          s"IF(i + $SPAN_K <= size(ws), " +
-          s"concat_ws(' ', slice(ws, i + 1, $SPAN_K)), NULL) AS sh))"))
-        .as("t"))
-      .select($"doc_id", $"t.pos".as("pos"), $"t.tok".as("tok"),
-        $"t.sh".as("sh"))
-      .repartition($"doc_id")
+    val toks = spanToks(spark, dir).repartition($"doc_id")
     val byOcc = Window.partitionBy($"doc_id", $"sh").orderBy($"pos")
-    val byDoc = Window.partitionBy($"doc_id").orderBy($"pos")
-      .rowsBetween(-(SPAN_K - 1), Window.currentRow)
-    toks
+    spanCover(toks
       .withColumn("dup_start",
         when($"sh".isNotNull && row_number().over(byOcc) >= 2, lit(1))
-          .otherwise(lit(0)))
-      .withColumn("covered", max($"dup_start").over(byDoc))
-      .groupBy($"doc_id")
-      .agg(
-        count(lit(1)).cast("long").as("n_tokens"),
-        sum($"covered").cast("long").as("n_covered"),
-        array_join(expr(
-          "transform(array_sort(collect_list(" +
-            "CASE WHEN covered = 0 THEN struct(pos, tok) END)), " +
-            "x -> x.tok)"), " ").as("cleaned_text"))
-      .withColumn("cover_frac", $"n_covered".cast("double") / $"n_tokens")
-      .select($"doc_id", $"n_tokens", $"n_covered", $"cover_frac",
-        $"cleaned_text")
+          .otherwise(lit(0))))
   }
 
   private def spanScrubWithinOracle =
@@ -2037,17 +2026,7 @@ object TextPipeline {
   def dedupImpact(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = dedupBase(spark, dir)
-    val gmin = Window.partitionBy($"content_hash")
-    val exactEdges = base
-      .withColumn("m", min($"doc_id").over(gmin))
-      .filter($"doc_id" =!= $"m")
-      .select($"m".as("a"), $"doc_id".as("b"))
-    // components-evidence mode: capped hot fallback, components unchanged
-    // (see [[shingleEvidence]] — fixture-identical, megadup-linear)
-    val nearEdges = shingleEvidence(spark, dir)
-      .select($"doc_a".as("a"), $"doc_b".as("b"))
-    val comp = Scale.minLabelComponents(
-      exactEdges.unionByName(nearEdges), COMPONENT_MAX_ITERS)
+    val comp = evidenceComponents(spark, dir, base)
     val drops = comp.filter($"comp" < $"node")
       .select($"node".as("doc_id"), $"comp")
     val clusters = drops
@@ -2136,9 +2115,8 @@ object TextPipeline {
   def containmentNearDup(spark: SparkSession, dir: String,
       maxDf: Int = MAX_SHINGLE_DF): DataFrame = {
     import spark.implicits._
-    val shDf = shingles(spark, dir).withColumn("df",
-      count(lit(1)).over(Window.partitionBy($"sh")))
-    val shRare = shDf.filter($"df" <= maxDf).select($"doc_id", $"sh")
+    val shRare = dfTagged(shingles(spark, dir)).filter($"df" <= maxDf)
+      .select($"doc_id", $"sh")
     val byDoc = Window.partitionBy($"doc_id")
     val prefix = shRare
       .withColumn("rnk", row_number().over(
@@ -2161,6 +2139,15 @@ object TextPipeline {
       .groupBy($"doc_a", $"doc_b")
       .agg(count(lit(1)).as("shared"))
     val sizes = shRare.groupBy($"doc_id").agg(count(lit(1)).as("nsh"))
+    containedPairs(shared, sizes)
+  }
+
+  /** The containment test over (doc_a, doc_b, shared) pairs and per-doc
+    * rare-set `sizes` (doc_id, nsh): keep a pair when shared ≥
+    * [[CONTAIN_NUM]]/[[CONTAIN_DEN]] of the smaller set, in integers, as
+    * (doc_a, doc_b, shared, na, nb, containment). */
+  private def containedPairs(shared: DataFrame, sizes: DataFrame): DataFrame = {
+    import shared.sparkSession.implicits._
     shared
       .join(sizes.select($"doc_id".as("doc_a"), $"nsh".as("na")), Seq("doc_a"))
       .join(sizes.select($"doc_id".as("doc_b"), $"nsh".as("nb")), Seq("doc_b"))
@@ -2412,16 +2399,7 @@ object TextPipeline {
       .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("shared"))
     // corpus ids < split ≤ batch ids, so the size tables are disjoint
     val sizes = naCorpus.unionByName(nb)
-    cb.unionByName(bb)
-      .join(sizes.select($"doc_id".as("doc_a"), $"nsh".as("na")),
-        Seq("doc_a"))
-      .join(sizes.select($"doc_id".as("doc_b"), $"nsh".as("nb")),
-        Seq("doc_b"))
-      .filter(lit(CONTAIN_DEN) * $"shared" >=
-        lit(CONTAIN_NUM) * least($"na", $"nb"))
-      .withColumn("containment",
-        $"shared".cast("double") / least($"na", $"nb"))
-      .select($"doc_a", $"doc_b", $"shared", $"na", $"nb", $"containment")
+    containedPairs(cb.unionByName(bb), sizes)
   }
 
   /** Oracle for q104: the FULL q99 recompute restricted to pairs whose
@@ -2654,8 +2632,7 @@ object TextPipeline {
     * double. */
   def gramNovelty(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    shingles(spark, dir)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy($"sh")))
+    dfTagged(shingles(spark, dir))
       .groupBy($"doc_id")
       .agg(count(lit(1)).cast("long").as("n_grams"),
         sum(when($"df" === 1, 1L).otherwise(0L)).cast("long")

@@ -119,16 +119,8 @@ object Udtf {
     val completed = Tables(spark, dir, "orders")
       .filter($"o_orderstatus" === "F")
       .select($"o_orderkey")
-    val avgCost = li
-      .join(completed, $"l_orderkey" === $"o_orderkey")
-      .groupBy($"l_partkey".as("part_id"))
-      .agg(
-        Dx.dsum(expr("l_extendedprice")).as("cost_sum"),
-        Dx.dsum(expr("l_quantity")).as("qty_sum"))
-      .select(
-        $"part_id",
-        when($"qty_sum" === 0.0, 0.0)
-          .otherwise($"cost_sum" / $"qty_sum").as("avg_cost"))
+    val avgCost = Financial.avgCostByPart(
+      li.join(completed, $"l_orderkey" === $"o_orderkey"))
     val totals = li
       .groupBy($"l_partkey".as("part_id"))
       .agg(Dx.dsum(expr("l_quantity")).as("total_quantity"))

@@ -86,8 +86,8 @@ object Sinks {
     // Swap via rename-aside, never delete-then-rename: at every crash
     // point either `path` still holds the old report or `.staging` holds
     // the complete new one, and [[recoverSwap]] rolls the swap forward —
-    // no window where the report is simply gone (round-6 advice: the
-    // delete/rename gap silently reset the streaming merge history).
+    // no window where the report is simply gone (a delete/rename gap
+    // would silently reset the streaming merge history).
     fs.delete(old, true)
     if (fs.exists(p) && !fs.rename(p, old))
       throw new java.io.IOException(s"rename-aside failed for $path")
@@ -317,7 +317,7 @@ object Sinks {
     * URIs below are the spec's own required constants), so the JDK
     * stdlib covers the single-sheet case in full: `[Content_Types].xml`
     * + package/workbook relationships + one `sheetData` part. No
-    * third-party dependency — the round-8 verdict's item 8 resolution.
+    * third-party dependency.
     *
     * Cell mapping: header row then data rows; numeric columns land as
     * NATIVE numeric cells (`t="n"` — spreadsheets compute on them),

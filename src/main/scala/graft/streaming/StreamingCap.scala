@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming maintenance of the per-source document cap — the q139/q142
@@ -39,26 +39,16 @@ object StreamingCap {
 
   /** Current keep list at `stateDir`, or an empty frame before the first
     * batch lands. */
-  def readState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame =
-    VersionedState.latest(stateDir) match {
-      case Some((v, _)) => spark.read.parquet(v)
-      case None =>
-        import spark.implicits._
-        Seq.empty[(Long, String, Long, Long)]
-          .toDF("doc_id", "source", "src_rank", "n_chars")
+  def readState(spark: SparkSession, stateDir: String): DataFrame =
+    VersionedState.readLatest(spark, stateDir) {
+      import spark.implicits._
+      Seq.empty[(Long, String, Long, Long)]
+        .toDF("doc_id", "source", "src_rank", "n_chars")
     }
 
-  /** The maintain loop: arriving documents (doc_id, source, n_chars) →
-    * merged keep list published at `stateDir` (read it back with
+  /** The maintain loop ([[VersionedState.maintain]]): arriving documents
+    * (doc_id, source, n_chars) → merged keep list published at `stateDir` (read it back with
     * [[readState]]). */
   def ingestStream(docs: DataFrame, stateDir: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(readState(batch.sparkSession, stateDir), batch)
-          .write.mode("overwrite")
-          .parquet(VersionedState.versionDir(stateDir, batchId))
-        VersionedState.publish(stateDir, batchId)
-      }
+    VersionedState.maintain(docs, stateDir)(readState, mergeBatch)
 }

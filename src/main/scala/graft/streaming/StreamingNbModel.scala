@@ -77,7 +77,7 @@ object StreamingNbModel {
     * surface back with [[servingSurface]]).
     *
     * A DURABLE `checkpointDir` is load-bearing for the fence, not an
-    * option (round-14 ADVICE): Structured Streaming only guarantees
+    * option: Structured Streaming only guarantees
     * monotone batch ids under a persistent checkpointLocation — without
     * one, a restarted query resets ids to 0, and the fence would then
     * silently SKIP real new batches until the counter passes the

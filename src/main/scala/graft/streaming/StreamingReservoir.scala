@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming maintenance of the per-stratum A-ES weighted reservoir —
@@ -37,26 +37,16 @@ object StreamingReservoir {
 
   /** Current reservoir at `stateDir`, or an empty frame before the first
     * batch lands. */
-  def readState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame =
-    VersionedState.latest(stateDir) match {
-      case Some((v, _)) => spark.read.parquet(v)
-      case None =>
-        import spark.implicits._
-        Seq.empty[(String, Long, Long, Double, Long)]
-          .toDF("lang", "doc_id", "n_chars", "smp_key", "rk")
+  def readState(spark: SparkSession, stateDir: String): DataFrame =
+    VersionedState.readLatest(spark, stateDir) {
+      import spark.implicits._
+      Seq.empty[(String, Long, Long, Double, Long)]
+        .toDF("lang", "doc_id", "n_chars", "smp_key", "rk")
     }
 
-  /** The maintain loop: arriving documents (doc_id, lang, n_chars) →
-    * merged reservoir published at `stateDir` (read it back with
+  /** The maintain loop ([[VersionedState.maintain]]): arriving documents
+    * (doc_id, lang, n_chars) → merged reservoir published at `stateDir` (read it back with
     * [[readState]]). */
   def ingestStream(docs: DataFrame, stateDir: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(readState(batch.sparkSession, stateDir), batch)
-          .write.mode("overwrite")
-          .parquet(VersionedState.versionDir(stateDir, batchId))
-        VersionedState.publish(stateDir, batchId)
-      }
+    VersionedState.maintain(docs, stateDir)(readState, mergeBatch)
 }

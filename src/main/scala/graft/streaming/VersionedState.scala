@@ -1,6 +1,8 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Versioned-dir state behind an atomic LATEST pointer: the publication
   * protocol of the streaming writers whose state is a plain parquet dir
@@ -13,6 +15,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * state through [[latest]] only, so a crash at any point leaves them on
   * the previous consistent version: a version dir written without its
   * pointer swap is never read, and a replayed batch overwrites it.
+  *
+  * [[maintain]] is the one maintain loop of the single-frame states
+  * (cap keep list, reservoir): read the published state, merge the
+  * micro-batch, write its version, publish. Each writer brings its own
+  * merge and empty schema. [[StreamingNbModel]] keeps its own loop: its
+  * two-frame state and batch-id fence do not fit this shape.
   */
 private[streaming] object VersionedState {
 
@@ -32,6 +40,29 @@ private[streaming] object VersionedState {
       Some((s"$stateDir/$v", v.stripPrefix("state_v").toLong))
     }
   }
+
+  /** The published single-frame state at `stateDir`, or `empty` before
+    * the first publish. */
+  def readLatest(spark: SparkSession, stateDir: String)(
+      empty: => DataFrame): DataFrame =
+    latest(stateDir).fold(empty)(v => spark.read.parquet(v._1))
+
+  /** The maintain loop: each micro-batch of `arrivals` is merged into
+    * the state `read` returns, written as the batch's version and
+    * published. It needs no batch-id fence only because `merge` is
+    * idempotent — merge(merge(S, B), B) = merge(S, B) — so a batch that
+    * `foreachBatch` re-delivers rewrites the same version. */
+  def maintain(arrivals: DataFrame, stateDir: String)(
+      read: (SparkSession, String) => DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame): DataStreamWriter[Row] =
+    arrivals.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        merge(read(batch.sparkSession, stateDir), batch)
+          .write.mode("overwrite")
+          .parquet(versionDir(stateDir, batchId))
+        publish(stateDir, batchId)
+      }
 
   /** Point LATEST at batch `batchId`'s fully written version, then delete
     * the version it superseded (best effort: a failed delete leaves

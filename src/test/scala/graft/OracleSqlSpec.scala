@@ -14,28 +14,48 @@ class OracleSqlSpec extends AnyFunSuite {
   private val MinRun = 8
 
   test(s"no run of $MinRun stripMargin lines appears twice in src/main") {
-    val root = SessionsSpec.mainSources
-    // (file, 0-based first line) of every all-margin window, by its text
-    val windows = (for {
-      f <- SessionsSpec.mainScalaFiles
-      lines = Files.readAllLines(f).asScala.map(_.trim).toIndexedSeq
-      i <- 0 to lines.size - MinRun
-      w = lines.slice(i, i + MinRun)
-      if w.forall(_.startsWith("|"))
-    } yield w -> (root.relativize(f).toString, i)).groupMap(_._1)(_._2)
-    val copied: Set[(String, Int)] = windows.values.filter(_.size > 1)
-      .flatten.flatMap { case (f, i) => (i until i + MinRun).map(f -> _) }
-      .toSet
-    // adjacent copied lines of one file merge into one reported region
-    val regions = copied.groupMap(_._1)(_._2).toSeq.sortBy(_._1)
-      .flatMap { case (f, ls) =>
-        ls.toSeq.sorted.foldLeft(List.empty[(Int, Int)]) {
-          case ((s, e) :: rest, l) if l == e + 1 => (s, l) :: rest
-          case (acc, l) => (l, l) :: acc
-        }.reverse.map { case (s, e) => s"$f:${s + 1}-${e + 1}" }
-      }
+    // each maximal block of consecutive margin lines is one segment
+    val regions = OracleSqlSpec.copiedRegions(MinRun) { lines =>
+      lines.zipWithIndex.map { case (l, i) => (i, l) }
+        .foldRight(List.empty[List[(Int, String)]]) {
+          case (m @ (i, l), (seg @ ((j, _) :: _)) :: rest)
+              if l.startsWith("|") && j == i + 1 => (m :: seg) :: rest
+          case (m @ (_, l), segs) if l.startsWith("|") => List(m) :: segs
+          case (_, segs) => segs
+        }
+    }
     assert(regions.isEmpty,
       s"${regions.size} regions repeat oracle SQL; define the fragment " +
         s"once and splice it:\n${regions.mkString("\n")}")
+  }
+}
+
+object OracleSqlSpec {
+
+  /** The copied regions of `src/main/scala`, as `file:first-last`
+    * (1-based lines). `segments` cuts a file's trimmed lines into
+    * segments of (0-based line, text); a copy is a window of `minRun`
+    * consecutive entries of one segment whose texts appear, identical,
+    * at another place. Copied entries adjacent within a segment merge
+    * into one region. */
+  def copiedRegions(minRun: Int)(
+      segments: IndexedSeq[String] => Seq[Seq[(Int, String)]]): Seq[String] = {
+    val root = SessionsSpec.mainSources
+    // one entry per line of a segment: (file, segment, position, line)
+    val windows = (for {
+      f <- SessionsSpec.mainScalaFiles
+      (seg, s) <- segments(Files.readAllLines(f).asScala.map(_.trim)
+        .toIndexedSeq).zipWithIndex
+      w <- seg.zipWithIndex.sliding(minRun) if w.size == minRun
+    } yield w.map(_._1._2) ->
+      w.map { case ((line, _), p) => (root.relativize(f).toString, s, p, line) })
+      .groupMap(_._1)(_._2)
+    val copied = windows.values.filter(_.size > 1).flatten.flatten.toSet
+    copied.toSeq.sortBy { case (f, s, p, _) => (f, s, p) }
+      .foldLeft(List.empty[((String, Int, Int, Int), (String, Int, Int, Int))]) {
+        case ((first, (f, s, p, _)) :: rest, e @ (f2, s2, p2, _))
+            if f == f2 && s == s2 && p2 == p + 1 => (first, e) :: rest
+        case (acc, e) => (e, e) :: acc
+      }.reverse.map { case ((f, _, _, a), (_, _, _, b)) => s"$f:${a + 1}-${b + 1}" }
   }
 }
