@@ -3,29 +3,26 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.storage.StorageLevel
 
-/** Tracked persist() handles for library entry points.
+/** The one path by which code persists a frame, keyed by the files the
+  * frame reads.
   *
-  * Several operators persist an intermediate that MULTIPLE subtrees of
-  * their (lazy) returned plan consume — the dedup digest base, the
-  * k-means embedding projection, the bloom eval-shingle carve, the q84
-  * stored-history fixture. The persist must still be registered when the
-  * CALLER finally materializes the plan, so the operator cannot
-  * `unpersist()` in a `finally` before returning; and `spark.catalog
-  * .clearCache()` (the harness mains' per-query contract) is too blunt
-  * for a long-lived user session — it drops caches the caller owns.
+  * An operator whose plan consumes one intermediate in several subtrees
+  * persists it with [[track]]`(tag, df)`. The cache must outlive the
+  * operator, because the caller materializes the plan later, so the
+  * caller releases exactly the caches a module created: [[release]] by
+  * tag, or [[releasePrefix]] for a module (`"ann."`), leaving caches it
+  * owns itself alone. Tags are `<module>.<name>:<dir>`, one per plan, so
+  * two dirs' caches never alias. `spark.catalog.clearCache()` also
+  * empties this registry's storage; its stale entries are then dropped.
   *
-  * This registry is the middle path: operators `track(tag, df)` their
-  * persisted handles, and a caller releases exactly the caches a module
-  * created — [[release]] by tag, or a module-scoped [[releasePrefix]]
-  * (e.g. `Caches.releasePrefix("ann.")` after an IVF session) — without
-  * touching anything else in the session. Tags embed the source dir so
-  * two dirs' caches never alias. Re-tracking an identical plan is safe:
-  * Spark's CacheManager dedupes cached plans, and the registry keeps the
-  * newest handle. The harness mains keep their `clearCache()` contract
-  * unchanged (it also empties this registry's storage; stale registry
-  * entries then unpersist as no-ops).
+  * Each tracked handle keeps the file listing its frame's relations were
+  * resolved over. Spark's CacheManager matches a cached plan by root path,
+  * so after a dir is rewritten in place it keeps serving the old rows;
+  * tracking a tag again over a changed listing first refreshes the
+  * session's cached frames over those roots.
   *
   * [[memo]] is the driver-side twin for small build-once artifacts (a
   * trained quantizer, a PQ codebook, a corpus count): values held on the
@@ -33,64 +30,79 @@ import org.apache.spark.storage.StorageLevel
   * built from.
   */
 object Caches {
-  private val reg = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  // a tracked handle and the `filesRead` listing of its relations
+  private final class Held(val df: DataFrame, val files: String)
+  private val reg = scala.collection.concurrent.TrieMap.empty[String, Held]
 
-  /** Drop registry entries whose plan has NO live cache entry: a tag
-    * left behind by `spark.catalog.clearCache()` would otherwise keep `aliased` true for a freshly tracked same-plan frame
-    * forever, turning the live tag's release into a permanent no-op —
-    * a leak in long sessions mixing clearCache with track/release).
+  /** Drop registry entries whose plan has no live cache entry: a tag left
+    * behind by `spark.catalog.clearCache()` would otherwise keep a freshly
+    * tracked same-plan frame aliased forever, turning the live tag's
+    * release into a permanent no-op.
     *
-    * The purge MUST run before a new `persist()` re-creates the cache
+    * The purge must run before a new `persist()` re-creates the cache
     * entry: `Dataset.storageLevel` is a CacheManager lookup keyed by the
-    * canonical PLAN, not by handle, so once a same-plan frame is
+    * canonical plan, not by handle, so once a same-plan frame is
     * re-persisted the stale tag's handle reports the new entry's level
-    * and becomes indistinguishable from a live alias — which is why the
-    * check sits at the top of [[track]] (pre-persist) and [[release]]
-    * rather than inside the alias predicate. */
+    * and looks like a live alias. Hence it sits at the top of [[track]]
+    * and [[release]]. */
   private def purgeStale(): Unit =
     reg.foreach { case (t, h) =>
-      if (h.storageLevel == StorageLevel.NONE) { reg.remove(t, h); () }
+      if (h.df.storageLevel == StorageLevel.NONE) { reg.remove(t, h); () }
     }
 
+  /** The root paths of `df`'s file relations and their data files as those
+    * relations listed them (`path:size:mtime`, sorted, comma-joined). Read
+    * from each relation's own FileIndex: no listing, no job. */
+  private def filesRead(df: DataFrame): (Seq[String], String) = {
+    val indexes = df.queryExecution.analyzed.collectWithSubqueries {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }.collect { case i: PartitioningAwareFileIndex => i }
+    (indexes.flatMap(_.rootPaths.map(_.toString)).distinct, indexes
+      .flatMap(_.allFiles().map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}"))
+      .sorted.mkString(","))
+  }
+
+  /** Refresh the session's cached frames over `roots` when the files
+    * under them moved from `before` to `now`. */
+  private def refreshIfRewritten(spark: SparkSession, before: Option[String],
+      now: String, roots: => Seq[String]): Unit =
+    if (before.exists(_ != now)) roots.foreach(spark.catalog.refreshByPath)
+
   /** Persist `df` (if not already persisted) and track the handle under
-    * `tag`; returns `df`. A displaced handle whose plan DIFFERS from the
-    * incoming one is unpersisted here: repeat-callable track sites
-    * would otherwise accumulate orphaned persisted frames over a long
-    * session. Same-plan displacement must NOT unpersist:
-    * Spark's CacheManager dedupes by canonical plan, so dropping the old
-    * handle would evict the cache entry the incoming frame relies on —
-    * and that protection extends across TAGS: the same
-    * frame tracked under two tags and displaced under one stays cached
-    * while any OTHER registry entry still resolves to the same result,
-    * so the surviving tag's consumers keep their cache and its later
-    * release() stays meaningful. */
+    * `tag`; returns `df`. A displaced handle whose plan differs from the
+    * incoming one is unpersisted, so repeat-callable track sites do not
+    * accumulate orphaned frames over a long session. Same-plan
+    * displacement must not unpersist: the CacheManager dedupes by
+    * canonical plan, so dropping the old handle would evict the entry
+    * the incoming frame relies on. The same holds across tags: a handle
+    * displaced under one tag stays cached while another tag still holds
+    * a same-result handle, so that tag's release stays meaningful. */
   def track(tag: String, df: DataFrame): DataFrame = {
     purgeStale()
+    val (roots, files) = filesRead(df)
+    refreshIfRewritten(df.sparkSession, reg.get(tag).map(_.files), files, roots)
     if (df.storageLevel == StorageLevel.NONE) df.persist()
-    reg.put(tag, df).foreach { old =>
+    reg.put(tag, new Held(df, files)).foreach { old =>
       def same(a: DataFrame, b: DataFrame) =
         a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
-      if ((old ne df) && !same(old, df) &&
-          !reg.exists { case (t, h) => t != tag && same(h, old) })
-        old.unpersist()
+      if ((old.df ne df) && !same(old.df, df) &&
+          !reg.exists { case (t, h) => t != tag && same(h.df, old.df) })
+        old.df.unpersist()
     }
     df
   }
 
-  /** Unpersist and forget the handle tracked under `tag` (no-op when
-    * absent or already cleared by the harness's clearCache). Mirrors
-    * [[track]]'s cross-tag guard: when another
-    * registry entry's handle is sameResult with the removed one — e.g.
-    * `ann.recall_base:<dir>` and `ann.pq_base:<dir>` both tracking the
-    * withNorm plan — releasing ONE tag must not unpersist the shared
-    * CacheManager entry out from under the surviving tag's consumers;
-    * the block is freed when the LAST aliasing tag releases. */
+  /** Unpersist and forget the handle tracked under `tag` (a no-op when
+    * absent or already cleared by `clearCache`). Mirrors [[track]]'s
+    * cross-tag guard: while another tag holds a same-result handle,
+    * releasing one tag leaves the shared CacheManager entry to the
+    * survivor; the last aliasing tag's release frees the block. */
   def release(tag: String): Unit = {
     purgeStale()
     reg.remove(tag).foreach { old =>
       val aliased = reg.values.exists(h =>
-        h.queryExecution.analyzed.sameResult(old.queryExecution.analyzed))
-      if (!aliased) old.unpersist()
+        h.df.queryExecution.analyzed.sameResult(old.df.queryExecution.analyzed))
+      if (!aliased) old.df.unpersist()
     }
   }
 
@@ -124,8 +136,8 @@ object Caches {
       tables: Seq[String])(build: => T): T = {
     val slotKey = s"$key@$dir"
     val fp = tables.map(Tables.fingerprint(spark, dir, _)).mkString("|")
-    if (Option(memos.get(slotKey)).exists(_.fingerprint != fp))
-      tables.foreach(t => spark.catalog.refreshByPath(s"$dir/$t.parquet"))
+    refreshIfRewritten(spark, Option(memos.get(slotKey)).map(_.fingerprint),
+      fp, tables.map(t => s"$dir/$t.parquet"))
     val slot = memos.compute(slotKey, (_, held) =>
       if (held != null && held.fingerprint == fp) held
       else new Built(fp, () => build))

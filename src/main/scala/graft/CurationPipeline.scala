@@ -39,9 +39,10 @@ object CurationPipeline {
     import spark.implicits._
     // the verdict is the pipeline's dominant plan (the q62 dedup
     // composition) and is consumed twice — by the shard write and by the
-    // manifest count — so persist it for the run's duration; id-and-
+    // manifest count — so it is cached for the run's duration; id-and-
     // metadata-sized, never the text
-    val verdict = ops.TextPipeline.curationVerdict(spark, dir).persist()
+    val verdictTag = s"curationpipeline.verdict:$dir"
+    val verdict = Caches.track(verdictTag, ops.TextPipeline.curationVerdict(spark, dir))
     try {
       val capped =
         ops.Sampling.capFilter(verdict, $"n_tokens", sourceCap)
@@ -64,11 +65,9 @@ object CurationPipeline {
         .parquet(s"$outDir/manifest")
       manifest
     } finally {
-      verdict.unpersist()
-      // the verdict's dedup stage pins its own (id, digest) projection;
-      // release exactly that tracked handle — a library caller's own
-      // caches stay intact (a clearCache here would drop caches the
-      // caller owns)
+      // the verdict and its dedup stage's (id, digest) projection, and
+      // nothing else: a library caller's own caches stay intact
+      Caches.release(verdictTag)
       Caches.release(ops.TextPipeline.dedupBaseTag(dir))
     }
   }

@@ -7,6 +7,7 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, date_trunc, lit, raise_error, to_timestamp, when}
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.Sinks
@@ -132,7 +133,11 @@ object Pipeline {
     * Incremental caller contract: `incrementalSince` is the checkpoint
     * the PREVIOUS run covered (its reports hold exactly the events ≤
     * that timestamp) and the event ledger is append-only — then the
-    * trend delta path is exact (see [[ops.Movement.trendDelta]]). */
+    * trend delta path is exact (see [[ops.Movement.trendDelta]]). A
+    * stored trend report holding a bucket after the checkpoint's own
+    * bucket fails the run, naming the report and the checkpoint. Events
+    * after the checkpoint that fall inside its own bucket cannot be seen
+    * from the report; they are merged a second time. */
   def run(
       spark: SparkSession,
       dataDir: String,
@@ -177,10 +182,15 @@ object Pipeline {
         case (None, Some(since)) if deltas(name) =>
           // row-subset path: stored report ⊎ post-checkpoint buckets, the
           // stored report read with this run's own trend schema (analysis
-          // only: the snapshot has resolved `events`)
+          // only: the snapshot has resolved `events`); a stored bucket
+          // past the checkpoint's own fails the write (no extra job)
           val (unit, step) = TREND_REPORTS(name)
+          val b = col("bucket")
           ops.Movement.trendDelta(spark, dataDir, unit, step, since,
-            stored(name, fn(spark, dataDir).schema))
+            stored(name, fn(spark, dataDir).schema).withColumn("bucket",
+              when(b > date_trunc(unit, to_timestamp(lit(since))), raise_error(lit(
+                s"Pipeline.run: stored $name holds a bucket after the " +
+                  s"incremental checkpoint $since"))).otherwise(b)))
         case _ => fn(spark, dataDir)
       }
       val (counted, rows) = Sinks.counted(df)

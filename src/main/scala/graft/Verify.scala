@@ -30,7 +30,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         status(name) = s"""{"status":"failed"}"""
       }
-      // Scale.prefixSum caller contract: release per-query persisted blocks.
+      // release the query's cached blocks before the next one
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -58,6 +58,11 @@ object Ann {
       .select(col("vec_id"), col("embedding"),
         Dx.dotDec("embedding", "embedding").as("nrm_dec"))
 
+  /** `dir`'s [[withNorm]], persisted and tracked: the one cached base the
+    * PQ serves and the quantized-screen recall harnesses share. */
+  private def normed(spark: SparkSession, dir: String): DataFrame =
+    graft.Caches.track(s"ann.normed:$dir", withNorm(spark, dir))
+
   /** Exact cosine of a probe (`q_emb`, `q_nrm`) against a vector
     * (`embedding`, `nrm_dec`): the decimal dot over the roots of the two
     * decimal norms — the `cos` CTE of [[cosTopKSql]]. */
@@ -908,13 +913,11 @@ object Ann {
     * gets the same exact cross-engine proof as index serving.
     *
     * The embedding projection is persisted: every round re-reads it (and
-    * lineage would otherwise re-scan parquet per round) — same cache
-    * contract as `Scale.prefixSum`; with many rounds add a
-    * localCheckpoint per round (the q60 iteration device). The handle is
-    * tracked ([[graft.Caches]], tag [[vecsTag]]) so a long-lived session
-    * releases it with `Caches.release(Ann.vecsTag(dir))` — or all ANN
-    * caches with `Caches.releasePrefix("ann.")` — after the action
-    * completes, instead of clearing the whole session cache. */
+    * lineage would otherwise re-scan parquet per round); with many
+    * rounds add a localCheckpoint per round (the q60 iteration device).
+    * The handle is tracked ([[graft.Caches]], tag [[vecsTag]]): a
+    * long-lived session releases it with `Caches.release(Ann.vecsTag(dir))`
+    * (or every ANN cache with `Caches.releasePrefix("ann.")`). */
   def ivfKmeans(spark: SparkSession, dir: String,
       exactMetric: Boolean = true): DataFrame = {
     import spark.implicits._
@@ -1819,12 +1822,12 @@ object Ann {
     * the q103 discipline. */
   private def recallAgainstBrute(spark: SparkSession, dir: String,
       approx: DataFrame): DataFrame = {
-    // Track the norm'd projection so the exact leg's two subtrees (corpus
+    // Cache the norm'd projection so the exact leg's two subtrees (corpus
     // + broadcast probes) and any approx-serve subtree built on the same
     // withNorm plan all materialize from ONE cached embeddings scan —
     // Spark's CacheManager substitutes every sameResult subtree. q103's
-    // annRecall does not track it: its pinned budget is 4 scans.
-    graft.Caches.track(s"ann.recall_base:$dir", withNorm(spark, dir))
+    // annRecall does not cache it: its pinned budget is 4 scans.
+    normed(spark, dir)
     recallOf(bruteForceTopK(spark, dir), approx)
   }
 
@@ -2052,9 +2055,10 @@ object Ann {
     * training against. Shared by the full-corpus [[pqCodebook]] and
     * q166's base-only codebook (codebooks are a versioned artifact
     * trained on the corpus-so-far; arriving batches are ENCODED, not
-    * retrained). */
-  private def pqTrainRows(spark: SparkSession, src: DataFrame,
-      dim: Int, trained: Boolean): Array[org.apache.spark.sql.Row] = {
+    * retrained). The rounds share `src`'s subvectors, cached under `tag`
+    * until training ends. */
+  private def pqTrainRows(spark: SparkSession, src: DataFrame, dim: Int,
+      trained: Boolean, tag: String): Array[org.apache.spark.sql.Row] = {
     import spark.implicits._
     val seeds = pqSubvectors(
       src.filter($"vec_id" >= NQUERIES && $"vec_id" < NQUERIES + PQ_K),
@@ -2065,14 +2069,14 @@ object Ann {
         Dx.dotDec("sub", "sub").as("c_nrm"))
     if (!trained) seeds.collect()
     else {
-      val subs = pqSubvectors(src, dim).persist()
+      val subs = graft.Caches.track(tag, pqSubvectors(src, dim))
       try {
         var cb = seeds.collect()
         for (_ <- 1 to PQ_ITERS)
           cb = pqLloydRound(subs, spark.createDataFrame(
             java.util.Arrays.asList(cb: _*), pqCbSchema)).collect()
         cb
-      } finally { subs.unpersist(); () }
+      } finally graft.Caches.release(tag)
     }
   }
 
@@ -2089,7 +2093,7 @@ object Ann {
     val rows = graft.Caches.memo(spark,
       s"ann.pq#dim=$dim#iters=$PQ_ITERS#cut=$cut", dir, Seq("embeddings")) {
       pqTrainRows(spark, embeddings(spark, dir).filter($"vec_id" < cut),
-        dim, trained = true)
+        dim, trained = true, s"ann.pqSubs:$dir#dim=$dim#cut=$cut")
     }
     (cut, spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), pqCbSchema))
@@ -2103,7 +2107,7 @@ object Ann {
       dim: Int, trained: Boolean = true): DataFrame = {
     val key = s"ann.pq#dim=$dim" + (if (trained) s"#iters=$PQ_ITERS" else "")
     val rows = graft.Caches.memo(spark, key, dir, Seq("embeddings")) {
-      pqTrainRows(spark, embeddings(spark, dir), dim, trained)
+      pqTrainRows(spark, embeddings(spark, dir), dim, trained, s"ann.pqSubs:$dir#dim=$dim")
     }
     spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), pqCbSchema)
@@ -2183,8 +2187,7 @@ object Ann {
       dim: Int = EMBED_DIM): DataFrame = {
     import spark.implicits._
     require(dim % PQ_M == 0, s"dim $dim must split into $PQ_M subspaces")
-    val base = graft.Caches.track(s"ann.pq_base:$dir",
-      withNorm(spark, dir))
+    val base = normed(spark, dir)
     val cb = pqCodebook(spark, dir, dim)
     val codes = pqCodes(base, cb, dim)
     val lut = pqLut(base, cb, dim)
@@ -2359,8 +2362,7 @@ object Ann {
     import spark.implicits._
     import graft.functions.DotProduct
     require(dim % PQ_M == 0, s"dim $dim must split into $PQ_M subspaces")
-    val base = graft.Caches.track(s"ann.pq_base:$dir",
-      withNorm(spark, dir))
+    val base = normed(spark, dir)
     val cents = base
       .filter($"vec_id" >= NQUERIES && $"vec_id" < NQUERIES + IVF_NCENTROIDS)
       .select($"vec_id".as("cent_id"), $"embedding".as("c_emb"),
@@ -2478,7 +2480,7 @@ object Ann {
   }
 
   /** q165: PQ index lifecycle — the q91 maintain→serve move applied to
-    * the quantized family (round-13 verdict item 3): (1) train the
+    * the quantized family: (1) train the
     * codebook (driver-cached artifact, [[pqCodebook]]), (2) ENCODE the
     * corpus once and WRITE the `(vec_id, codes, payload)` index, (3)
     * serve entirely from the index — screen from the codes column, LUT
@@ -2498,8 +2500,7 @@ object Ann {
   def pqServeFromWrittenIndex(spark: SparkSession, dir: String,
       dim: Int = EMBED_DIM): DataFrame = {
     import spark.implicits._
-    val base = graft.Caches.track(s"ann.pq_base:$dir",
-      withNorm(spark, dir))
+    val base = normed(spark, dir)
     val cb = pqCodebook(spark, dir, dim)
     val idx = livePqIndexDir.next()
     pqIndexRows(base, cb, dim)

@@ -54,10 +54,10 @@ import org.apache.spark.sql.functions._
   * ~9e3 (contrib·1e12 inside 2^53, where the grid is resolved at
   * integer ulp), growing with the double's ulp beyond that (≈1e-9 near
   * the BIGINT edge); cross-engine BIT-IDENTITY is unaffected at any
-  * magnitude because both engines compute the identical doubles
-  * (round-15 ADVICE: the earlier flat 0.5e-12 claim over the whole
-  * domain was wrong past 2^53). The scoring function is DOCUMENTED as
-  * this quantized sum, not as the float sum it approximates. Domain
+  * magnitude because both engines compute the identical doubles (a flat
+  * 0.5e-12 bound over the whole domain would be wrong past 2^53). The
+  * scoring function is DOCUMENTED as this quantized sum, not as the
+  * float sum it approximates. Domain
   * bound: |contrib|·1e12 must stay inside BIGINT (|lp·n| < 9.2e6 —
   * holds for any real doc: |lp| ≤ ~40 even at web-scale vocab and n is
   * one term's count in ONE doc; real contribs also sit well inside the
@@ -99,13 +99,12 @@ object Classify {
     * with window functions over the one doc-keyed exchange, no join-back.
     * `trainSide`/`scoreSide` carve the persisted doc-term frame. */
   private def scoredBest(spark: SparkSession, dir: String,
-      trainSide: Column => Column, scoreSide: Column => Column,
-      cacheTag: String): DataFrame = {
+      trainSide: Column => Column, scoreSide: Column => Column): DataFrame = {
     import spark.implicits._
     // ONE corpus scan → doc-term grain, persisted: the train counts, the
     // priors and the scoring stream are three consumers whose differing
     // column pruning would otherwise re-derive the scan (q145 rationale).
-    val dt = Caches.track(s"classify.docTerms:$cacheTag:$dir",
+    val dt = Caches.track(s"classify.docTerms:$dir",
       docs(spark, dir)
         .select($"doc_id", $"lang", explode(split($"text", " ")).as("term"))
         .groupBy($"doc_id", $"lang", $"term")
@@ -170,11 +169,11 @@ object Classify {
     // TERM-KEYED map-pivot model join (guide §2.3/§3 — shuffle fewer
     // bytes): the model pivots to ONE row per term carrying a C-entry
     // cls→lp map, the scored stream joins on `term` ALONE (|score| rows
-    // through the join — the round-17 shape joined on (cls, term) AFTER
-    // a ×C cross-expansion, so the join probe stream — and, past the
-    // broadcast threshold, the join SHUFFLE — carried |score|×C rows
-    // with the term string duplicated C times). The ×C expansion now
-    // happens AFTER the model join via the C-row broadcast cross join —
+    // through the join — joining on (cls, term) AFTER a ×C cross-expansion
+    // would make the join probe stream — and, past the broadcast
+    // threshold, the join SHUFFLE — carry |score|×C rows with the term
+    // string duplicated C times). The ×C expansion happens AFTER the
+    // model join via the C-row broadcast cross join —
     // never an exchange. Unseen terms take the class default lp0:
     // try_element_at returns NULL both for a term absent from the map's
     // class and for a term in no class at all (NULL map off the left
@@ -220,7 +219,7 @@ object Classify {
   def nbLangClassifier(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     scoredBest(spark, dir,
-      id => id % HOLDOUT_MOD =!= 0L, id => id % HOLDOUT_MOD === 0L, "split")
+      id => id % HOLDOUT_MOD =!= 0L, id => id % HOLDOUT_MOD === 0L)
       .filter($"rk" === 1)
       .select($"doc_id", $"label", $"cls".as("pred"), $"score",
         ($"score" - $"nxt").as("margin"),
@@ -237,7 +236,7 @@ object Classify {
   def nbConfusion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     scoredBest(spark, dir,
-      id => id % HOLDOUT_MOD =!= 0L, id => id % HOLDOUT_MOD === 0L, "split")
+      id => id % HOLDOUT_MOD =!= 0L, id => id % HOLDOUT_MOD === 0L)
       .filter($"rk" === 1)
       .groupBy($"label", $"cls".as("pred"))
       .agg(count(lit(1)).cast("long").as("n_docs"))
@@ -257,7 +256,7 @@ object Classify {
     * sampling stratum. */
   def labelAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    scoredBest(spark, dir, _ => lit(true), _ => lit(true), "all")
+    scoredBest(spark, dir, _ => lit(true), _ => lit(true))
       .filter($"rk" === 1 && $"cls" =!= $"label")
       .select($"doc_id", $"label", $"cls".as("pred"),
         $"score".as("score_pred"), $"lbl_score".as("score_label"),
@@ -289,7 +288,7 @@ object Classify {
   def nbCalibration(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     scoredBest(spark, dir,
-      id => id % HOLDOUT_MOD =!= 0L, id => id % HOLDOUT_MOD === 0L, "split")
+      id => id % HOLDOUT_MOD =!= 0L, id => id % HOLDOUT_MOD === 0L)
       .filter($"rk" === 1)
       .withColumn("bin",
         least(lit(9L), floor(($"score" - $"nxt") / CALIB_BIN_W)

@@ -145,7 +145,8 @@ object Retrieval {
   /** q122: top-20 documents for [[QUERY_TERMS]] by BM25 (ratio idf). */
   def bm25Search(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (stats, tf, dft) = corpusStats(baseOf(spark, dir, QUERY_TERMS).persist())
+    val (stats, tf, dft) = corpusStats(graft.Caches.track(
+      s"retrieval.bm25Base:$dir", baseOf(spark, dir, QUERY_TERMS)))
     rankTopK(tf, dft, stats)
   }
 
@@ -196,7 +197,8 @@ object Retrieval {
       .toDF("query_id", "term")
     // df is corpus-global per term (query-independent), shared by every
     // query that probes the term
-    val (stats, tf, dft) = corpusStats(baseOf(spark, dir, allTerms).persist())
+    val (stats, tf, dft) = corpusStats(graft.Caches.track(
+      s"retrieval.bm25BatchBase:$dir", baseOf(spark, dir, allTerms)))
     val scored = tf.join(broadcast(dft), "term")
       .join(broadcast(qterms), "term")
       .crossJoin(broadcast(stats))

@@ -304,11 +304,13 @@ object Sampling {
     * one seq_id-keyed aggregation collapses to sequence grain. */
   def sequencePacking(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val toks = docs(spark, dir)
-      .select($"doc_id",
-        size(expr(
-          s"regexp_extract_all(text, '${TextPipeline.BPE_PATTERN}', 0)"))
-          .cast("long").as("n_tokens"))
+    // tracked: prefixSum's range sampling and map stage both read it
+    val toks = graft.Caches.track(s"sampling.packTokens:$dir",
+      docs(spark, dir)
+        .select($"doc_id",
+          size(expr(
+            s"regexp_extract_all(text, '${TextPipeline.BPE_PATTERN}', 0)"))
+            .cast("long").as("n_tokens")))
     val spans = Scale
       .prefixSum(toks, Seq($"doc_id"), $"n_tokens", "tok_end", "corpus_tok")
       .filter($"n_tokens" > 0)
@@ -482,8 +484,7 @@ object Sampling {
     // aggregate differently from the plan branch that keeps n_docs —
     // two non-identical subtrees, no exchange reuse, two corpus scans
     // (measured by the scan audit; q96 escapes because its
-    // totals consume every non-key agg output). The q108 persist
-    // precedent; harness clears the cache per query.
+    // totals consume every non-key agg output).
     val bySource = graft.Caches.track(s"sampling.epochBySource:$dir",
       docs(spark, dir)
         .select($"source", size(split($"text", " ")).cast("long").as("nt"))

@@ -24,7 +24,7 @@ object Scale {
     * label (every label is itself a touched node, so the lookup is a
     * self-join), which doubles the distance a minimum travels per round.
     * Convergence is O(log diameter), not O(diameter) — load-bearing
-    * since round 16: the capped mega-cluster evidence
+    * because the capped mega-cluster evidence
     * ([[graft.ops.TextPipeline.shingleEvidence]]) is deliberately
     * chain-shaped (a 50k-member cluster arrives as rank chains, diameter
     * ~6k), and plain hash-min propagation measured >16 rounds there
@@ -49,12 +49,10 @@ object Scale {
       * ids), so a round changed some label iff Σcomp strictly dropped;
       * DECIMAL(38,0) keeps the sum exact at any node count × id
       * magnitude (a double sum would saturate past 2^53 and miss a
-      * 1-unit label drop). This replaces the round-16 shape's per-round
-      * `next ⋈ comp` count — one node-sized join (two exchanges) and a
-      * THIRD job per round (optimization guide §2.4: remove shuffles
-      * outright) — and rides the SAME job that materializes the lazy
-      * checkpoint, so each round is now two jobs (edge-step checkpoint +
-      * jump/convergence) instead of three. */
+      * 1-unit label drop). It rides the SAME job that materializes the
+      * lazy checkpoint, so each round is two jobs (edge-step checkpoint +
+      * jump/convergence); a per-round `next ⋈ comp` change count would
+      * add one node-sized join (two exchanges) and a third job. */
     def materializeWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
       val ck = df.localCheckpoint(false)
       val s = ck.agg(coalesce(
@@ -74,11 +72,11 @@ object Scale {
       val nbrComp = edges
         .join(comp.select($"node".as("nbr"), $"comp"), Seq("nbr"))
         .select($"node", $"comp")
-      // Checkpointed EAGERLY before the self-join (round-16 ADVICE): the
-      // jump step consumes `lowered` twice (probe and build side) in
-      // CONCURRENT map stages, so a lazy cut would race both stages into
-      // recomputing the union+groupBy edge subtree — the round's two
-      // candidate-sized shuffles — per side.
+      // Checkpointed EAGERLY before the self-join: the jump step consumes
+      // `lowered` twice (probe and build side) in CONCURRENT map stages,
+      // so a lazy cut would race both stages into recomputing the
+      // union+groupBy edge subtree — the round's two candidate-sized
+      // shuffles — per side.
       val lowered = comp.unionByName(nbrComp)
         .groupBy($"node").agg(min($"comp").as("comp"))
         .localCheckpoint()
@@ -125,17 +123,10 @@ object Scale {
     *     broadcast-join each partition's exclusive offset back.
     *
     * `cum = local_cumsum + offset`; the grand total rides the same tiny
-    * broadcast. The input is persisted so pass 2 does not recompute the
-    * (possibly expensive) upstream plan; callers pass dimension-sized
-    * inputs (post-aggregation), so the cache is small even at 100 TB fact
-    * scale.
-    *
-    * CALLER CONTRACT (cache lifetime): the persisted block lives until the
-    * caller releases it — a long-lived session running many prefix-sum
-    * queries must call `spark.catalog.clearCache()` (or unpersist) once the
-    * result is materialized, or the cached inputs accumulate for the life
-    * of the session. The harness mains (graft.Bench, graft.Verify) clear
-    * the cache after every query for exactly this reason.
+    * broadcast. The caller tracks an expensive input
+    * ([[graft.Caches.track]]), so the range partitioner's sampling pass
+    * and the shuffle map stage read its cache instead of re-running the
+    * upstream plan.
     *
     * `order` must be a TOTAL order (add a key tiebreaker): if equal keys
     * straddle a partition boundary the local-cumsum+offset is still a valid
@@ -147,7 +138,7 @@ object Scale {
     * construction stays side-effect-free, no driver-side action in any
     * query path) promise that the input is dimension-bounded (the ABC
     * input is one row per part; a time-series cumsum is calendar-bounded).
-    * True ⇒ a plain single-partition window, NO persist, no extra stages —
+    * True ⇒ a plain single-partition window, no extra stages —
     * measured ~3× faster at sf0.1 where fixed overhead dominated. False
     * (default) ⇒ the distributed two-pass above. The ScalaCheck property
     * pins both paths bit-identical, which is what makes flipping the flag
@@ -173,10 +164,7 @@ object Scale {
         .withColumn(totName, sum(value).over(all))
     }
 
-    // Persist the INPUT (lazily — materialized by the first action) so the
-    // range-partitioner's sampling pass and the shuffle map stage read the
-    // cache instead of re-executing the (possibly expensive) upstream plan.
-    val ranged = df.persist()
+    val ranged = df
       .repartitionByRange(order: _*)
       .withColumn("__pid", spark_partition_id())
 

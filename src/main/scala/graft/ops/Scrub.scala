@@ -202,12 +202,10 @@ object Scrub {
     * key bloom still fits — millions of eval shingles vs a GB-scale
     * broadcast table.
     *
-    * Cache contract (same as `Scale.prefixSum`): the eval shingle set is
-    * persisted because TWO consumers read it (the bloom-building subquery
-    * and the confirm join) — without it each would re-derive the carve
-    * with its own text scan. The harness mains clear the cache per query;
-    * long-lived sessions release the tracked handle after materializing
-    * (`Caches.release("scrub.evalShingles:" + dir)`). */
+    * The eval shingle set is cached because TWO consumers read it (the
+    * bloom-building subquery and the confirm join) — without it each
+    * would re-derive the carve with its own text scan. A caller releases
+    * it after materializing (`Caches.release("scrub.evalShingles:" + dir)`). */
   def decontaminateBloom(spark: SparkSession, dir: String,
       capacity: Long = EVAL_SHINGLE_CAPACITY,
       fpp: Double = 0.01): DataFrame = {

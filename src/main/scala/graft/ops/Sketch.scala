@@ -70,16 +70,16 @@ object Sketch {
   def hllHarness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val h = md5(concat(lit(SALT), $"text"))
-    val base = docs(spark, dir)
-      .select($"source", h.as("h"))
-      .withColumn("reg",
-        pmod(conv(substring($"h", 1, 8), 16, 10).cast("long"), lit(M.toLong)))
-      .withColumn("tail", conv(substring($"h", 9, 8), 16, 10).cast("long"))
-      .withColumn("r",
-        when($"tail" === 0L, lit(33L))
-          .otherwise(lit(33L) - length(bin($"tail")).cast("long")))
-      .select($"source", $"h", $"reg", $"r")
-      .persist()
+    val base = graft.Caches.track(s"sketch.hllBase:$dir",
+      docs(spark, dir)
+        .select($"source", h.as("h"))
+        .withColumn("reg",
+          pmod(conv(substring($"h", 1, 8), 16, 10).cast("long"), lit(M.toLong)))
+        .withColumn("tail", conv(substring($"h", 9, 8), 16, 10).cast("long"))
+        .withColumn("r",
+          when($"tail" === 0L, lit(33L))
+            .otherwise(lit(33L) - length(bin($"tail")).cast("long")))
+        .select($"source", $"h", $"reg", $"r"))
     val regs = base.groupBy($"source", $"reg")
       .agg(max($"r").as("maxr"))
     val merged = regs.groupBy($"reg")
@@ -262,11 +262,11 @@ object Sketch {
     * drops the exact side and ships counters alone. */
   def cmsHarness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tc = docs(spark, dir)
-      .select(explode(split($"text", " ")).as("term"))
-      .groupBy($"term")
-      .agg(count(lit(1)).cast("long").as("c"))
-      .persist()
+    val tc = graft.Caches.track(s"sketch.cmsTermCounts:$dir",
+      docs(spark, dir)
+        .select(explode(split($"text", " ")).as("term"))
+        .groupBy($"term")
+        .agg(count(lit(1)).cast("long").as("c")))
     val bucketStructs = CMS_SALTS.zipWithIndex.map { case (salt, r) =>
       struct(lit(r.toLong).as("r"),
         pmod(Dx.hashKey(salt, $"term"), lit(CMS_W.toLong)).as("bucket"))
@@ -352,10 +352,10 @@ object Sketch {
     * knob trades error for depth with the measured curve here. */
   def sampledQuantiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = docs(spark, dir)
-      .select($"lang", $"n_chars",
-        (Dx.hashKey(QSK_SALT, $"doc_id") < QSK_THRESHOLD).as("keep"))
-      .persist()
+    val base = graft.Caches.track(s"sketch.quantileBase:$dir",
+      docs(spark, dir)
+        .select($"lang", $"n_chars",
+          (Dx.hashKey(QSK_SALT, $"doc_id") < QSK_THRESHOLD).as("keep")))
     def t7(src: DataFrame, out: String, nOut: String): DataFrame =
       Sampling.interpolatedQuantiles(src, out, max($"n").cast("long").as(nOut))
     val exact = t7(base.select($"lang", $"n_chars"), "q_exact", "n_full")
@@ -467,21 +467,21 @@ object Sketch {
     * truth — a deploy ships signatures alone and drops both. */
   def kmvOverlap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sets = docs(spark, dir)
-      .select($"source", split($"text", " ").as("ws"))
-      .filter(size($"ws") >= KMV_GRAM_K)
-      .select($"source", explode(expr(
-        s"transform(sequence(0, size(ws) - $KMV_GRAM_K), i -> " +
-          s"md5(concat('$KMV_SALT', " +
-          s"concat_ws(' ', slice(ws, i + 1, $KMV_GRAM_K)))))")).as("k"))
-      .distinct()
-      .persist()
-    val sig = sets
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"source").orderBy($"k")))
-      .filter($"rn" <= KMV_K)
-      .select($"source", $"k")
-      .persist()
+    val sets = graft.Caches.track(s"sketch.kmvSets:$dir",
+      docs(spark, dir)
+        .select($"source", split($"text", " ").as("ws"))
+        .filter(size($"ws") >= KMV_GRAM_K)
+        .select($"source", explode(expr(
+          s"transform(sequence(0, size(ws) - $KMV_GRAM_K), i -> " +
+            s"md5(concat('$KMV_SALT', " +
+            s"concat_ws(' ', slice(ws, i + 1, $KMV_GRAM_K)))))")).as("k"))
+        .distinct())
+    val sig = graft.Caches.track(s"sketch.kmvSig:$dir",
+      sets
+        .withColumn("rn", row_number().over(
+          Window.partitionBy($"source").orderBy($"k")))
+        .filter($"rn" <= KMV_K)
+        .select($"source", $"k"))
     val perSrc = sig.groupBy($"source")
       .agg(count(lit(1)).as("n_sig"), max($"k").as("kth"))
       .join(sets.groupBy($"source").agg(count(lit(1)).as("n_exact")),

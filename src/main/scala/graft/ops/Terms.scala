@@ -285,12 +285,10 @@ object Terms {
     // vocabulary-sized, ≪ the occurrence stream): three consumers (pair
     // counts, marginals, N) branch here, and without the cache their
     // differing column pruning defeats AQE stage reuse and the corpus is
-    // scanned three times (measured; the Scale.prefixSum precedent and
-    // cache-lifetime contract — the harness mains clear the cache per
-    // query).
-    val cnt = grams.groupBy($"n", $"w1", $"w2")
-      .agg(count(lit(1)).cast("long").as("c"))
-      .persist()
+    // scanned three times (measured).
+    val cnt = graft.Caches.track(s"terms.gramCounts:$dir",
+      grams.groupBy($"n", $"w1", $"w2")
+        .agg(count(lit(1)).cast("long").as("c")))
     val uni = cnt.filter($"n" === 1)
       .select($"w1".as("term"), $"c".as("uc"))
     val pairs = cnt.filter($"n" === 2 && $"c" >= COLLOC_MIN_PAIR)
@@ -428,12 +426,11 @@ object Terms {
     // Persisted at DOC grain (one row per document): T's rollup and the
     // scoring projection both branch here, and their differing column
     // pruning defeats AQE stage reuse — without the cache the corpus is
-    // scanned twice (measured; prefixSum's persist precedent, harness
-    // clears the cache per query).
-    val byDoc = withC.groupBy($"doc_id")
-      .agg(sum($"c").cast("long").as("sum_c"),
-        count(lit(1)).cast("long").as("n_tok"))
-      .persist()
+    // scanned twice (measured).
+    val byDoc = graft.Caches.track(s"terms.docTypicality:$dir",
+      withC.groupBy($"doc_id")
+        .agg(sum($"c").cast("long").as("sum_c"),
+          count(lit(1)).cast("long").as("n_tok")))
     val total = byDoc.agg(sum($"n_tok").cast("long").as("t_tokens"))
     byDoc.crossJoin(broadcast(total))
       .withColumn("typicality",
@@ -500,11 +497,10 @@ object Terms {
     * per round bounds lineage (the q60 device). */
   def bpeMerges(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // LAZY localCheckpoint per round (optimization guide §1.2/§2.4 —
-    // this round's job-count cut): the round-16 shape eagerly
-    // localCheckpoint'ed `words` after every merge, so each round ran TWO
+    // LAZY localCheckpoint per round (optimization guide §1.2/§2.4): an
+    // eager localCheckpoint of `words` after every merge would run TWO
     // jobs (pair-count argmax + checkpoint materialization) and the LAST
-    // round's frame — which nothing consumes — was still materialized.
+    // round's frame — which nothing consumes — would still materialize.
     // Each round's only consumer of words(k) is round k+1's pair count
     // (one stage — no concurrent-stage race), so a lazy checkpoint is
     // enough: the argmax job of round k+1 computes words(k) from the
@@ -814,11 +810,11 @@ object Terms {
     * contract. */
   def sourceDivergence(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val st = docs(spark, dir)
-      .select($"source", explode(split($"text", " ")).as("term"))
-      .groupBy($"source", $"term")
-      .agg(count(lit(1)).cast("long").as("c"))
-      .persist()
+    val st = graft.Caches.track(s"terms.sourceTermCounts:$dir",
+      docs(spark, dir)
+        .select($"source", explode(split($"text", " ")).as("term"))
+        .groupBy($"source", $"term")
+        .agg(count(lit(1)).cast("long").as("c")))
     val withTot = st.withColumn("c_tot",
       sum($"c").over(Window.partitionBy($"term")).cast("long"))
     val totals = st.groupBy($"source").agg(sum($"c").cast("long").as("t_s"))
@@ -974,8 +970,7 @@ object Terms {
     // Persisted at DISTINCT-BIGRAM grain (the model artifact): the vocab
     // rollup and the scoring join both consume it, and their differing
     // column pruning defeats exchange reuse — without the cache each
-    // re-derives the corpus explode (3 documents scans measured; the
-    // q108 persist precedent, harness clears the cache per query).
+    // re-derives the corpus explode (3 documents scans measured).
     val model = graft.Caches.track(s"terms.bigramModel:$dir",
       bigramCounts(bigrams))
     val scored = scoreModel(model).select($"w1", $"w2", $"c2", $"lp")

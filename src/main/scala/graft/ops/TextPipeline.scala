@@ -1333,8 +1333,8 @@ object TextPipeline {
     *
     * 100 TB: the cache is (id, digest, metadata)-sized — tiny next to
     * the corpus; past executor storage, materialize the same projection
-    * to parquet once. Cache lifetime follows the repo-wide caller
-    * contract (Scale.prefixSum): the driver clears the cache per query. */
+    * to parquet once. A caller releases it with
+    * `Caches.release(dedupBaseTag(dir))`. */
   private def dedupBase(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.Caches.track(dedupBaseTag(dir),
@@ -1806,20 +1806,20 @@ object TextPipeline {
       maxDf: Int = MAX_SHINGLE_DF): DataFrame = {
     import spark.implicits._
     val byK = Window.partitionBy($"k")
-    val bounded = docs(spark, dir)
-      .select($"doc_id", split($"text", " ").as("ws"))
-      .filter($"doc_id".isNotNull && size($"ws") >= SPAN_K)
-      .select($"doc_id", explode(expr(
-        s"transform(sequence(0, size(ws) - $SPAN_K), i -> struct(" +
-          s"CAST(i AS LONG) AS pos, " +
-          s"md5(concat_ws(' ', slice(ws, i + 1, $SPAN_K))) AS k))"))
-        .as("t"))
-      .select($"doc_id", $"t.pos".as("pos"), $"t.k".as("k"))
-      .withColumn("dr", dense_rank().over(byK.orderBy($"doc_id")))
-      .withColumn("ddf", max($"dr").over(byK))
-      .filter($"ddf" >= 2 && $"ddf" <= maxDf)
-      .select($"doc_id", $"pos", $"k")
-      .persist()
+    val bounded = graft.Caches.track(s"textpipeline.spanGrams:$dir",
+      docs(spark, dir)
+        .select($"doc_id", split($"text", " ").as("ws"))
+        .filter($"doc_id".isNotNull && size($"ws") >= SPAN_K)
+        .select($"doc_id", explode(expr(
+          s"transform(sequence(0, size(ws) - $SPAN_K), i -> struct(" +
+            s"CAST(i AS LONG) AS pos, " +
+            s"md5(concat_ws(' ', slice(ws, i + 1, $SPAN_K))) AS k))"))
+          .as("t"))
+        .select($"doc_id", $"t.pos".as("pos"), $"t.k".as("k"))
+        .withColumn("dr", dense_rank().over(byK.orderBy($"doc_id")))
+        .withColumn("ddf", max($"dr").over(byK))
+        .filter($"ddf" >= 2 && $"ddf" <= maxDf)
+        .select($"doc_id", $"pos", $"k"))
     val m = bounded.select($"doc_id".as("doc_a"), $"pos".as("pa"), $"k")
       .join(bounded.select($"doc_id".as("doc_b"), $"pos".as("pb"), $"k"),
         Seq("k"))
@@ -1910,9 +1910,9 @@ object TextPipeline {
       .select($"n_tokens",
         expr(s"(n_stopwords * $B) div n_tokens").as("sbin"),
         expr(s"(n_punct * $B) div n_chars").as("pbin"))
-    val cells = binned.groupBy($"sbin", $"pbin")
-      .agg(count(lit(1)).as("docs"), sum($"n_tokens").as("toks"))
-      .persist()
+    val cells = graft.Caches.track(s"textpipeline.sweepCells:$dir",
+      binned.groupBy($"sbin", $"pbin")
+        .agg(count(lit(1)).as("docs"), sum($"n_tokens").as("toks")))
     val hist = cells
       .select(lit("stopword_min").as("knob"), $"sbin".as("bin"),
         $"docs", $"toks")
@@ -2500,7 +2500,7 @@ object TextPipeline {
     * evaluation cost tracks the PAIR set, never the corpus square. */
   def minhashEstimate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sh = shingles(spark, dir).persist()
+    val sh = graft.Caches.track(s"textpipeline.mhest.shingles:$dir", shingles(spark, dir))
     // ground truth: exact Jaccard ≥ threshold via the inverted index (a
     // pair at j ≥ 0.85 shares shingles by definition, so the index is
     // complete)
@@ -2518,8 +2518,7 @@ object TextPipeline {
     // The qualifying-pair set is harness-output-sized (pairs at j ≥ the
     // threshold), consumed three times (signature scoping, the per-band
     // probe, the final join) — cache it so the inverted-index self-join
-    // behind it runs once. Cache lifetime follows the repo-wide caller
-    // contract: the driver clears the session cache per query.
+    // behind it runs once.
     val truthC = graft.Caches.track(s"textpipeline.mhest.truth.$dir", truth)
     // Signatures only for docs the harness will actually judge: the
     // distinct ids of ground-truth pairs — a digest-sized id list (ids,

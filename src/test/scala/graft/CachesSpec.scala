@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.storage.StorageLevel
-import scala.jdk.CollectionConverters._
 
 /** Pins [[Caches.track]]'s displacement rules — the registry invariants
   * every operator's persist lifecycle rides on:
@@ -11,14 +10,14 @@ import scala.jdk.CollectionConverters._
   *  2. same-plan displacement keeps the cache (CacheManager dedupes by
   *     canonical plan — unpersisting would evict the incoming frame's
   *     entry);
-  *  3. (round-14 ADVICE) a handle still registered under ANOTHER tag is
-  *     NOT unpersisted when one of its tags is displaced — the surviving
-  *     tag's consumers keep their cache and its release() stays
-  *     meaningful.
+  *  3. a handle still registered under ANOTHER tag is NOT unpersisted
+  *     when one of its tags is displaced — the surviving tag's consumers
+  *     keep their cache and its release() stays meaningful.
   *
-  * and [[Caches.memo]]'s key: an artifact built on one corpus is rebuilt
-  * once the corpus is rewritten in place, and no operator keeps a memo
-  * map of its own. */
+  * and the input-file key: an artifact or cached frame built on one
+  * corpus is rebuilt once the corpus is rewritten in place, no operator
+  * keeps a memo map of its own, and nothing in `src/main` persists a
+  * frame outside [[Caches]]. */
 class CachesSpec extends SparkSpec {
 
   private def df(n: Int) = {
@@ -64,10 +63,9 @@ class CachesSpec extends SparkSpec {
   }
 
   test("release() keeps a plan another tag still aliases (r15 ADVICE)") {
-    // the Ann pattern: two DISTINCT frames with the SAME canonical plan
-    // tracked under two tags (ann.recall_base / ann.pq_base both track
-    // the withNorm projection) — releasing one tag must not unpersist
-    // the shared CacheManager entry under the survivor
+    // two DISTINCT frames with the SAME canonical plan tracked under two
+    // tags — releasing one tag must not unpersist the shared
+    // CacheManager entry under the survivor
     val a = df(9)
     val twin = df(9) // distinct object, same canonical plan
     Caches.track("cachesspec.r1", a)
@@ -94,10 +92,11 @@ class CachesSpec extends SparkSpec {
         .toDF()))
   }
 
-  /** A memoized artifact built on corpus A must not be served after the
-    * dir is rewritten in place with corpus B by another process (a
-    * file-level copy, as a ScaleGen run regenerates a dir): `serve` over
-    * the rewritten dir must equal a cold `serve` over a dir holding B. */
+  /** An artifact or cached frame built on corpus A must not be served
+    * after the dir is rewritten in place with corpus B by another process
+    * (a file-level copy, as a ScaleGen run regenerates a dir): `serve`
+    * over the rewritten dir must equal a cold `serve` over a dir holding
+    * B. */
   private def rebuiltAfterRewrite(serve: String => Seq[Seq[Any]]): Unit = {
     val dir = embeddingsDir(seed = 1)
     val fresh = embeddingsDir(seed = 2)
@@ -126,22 +125,42 @@ class CachesSpec extends SparkSpec {
       ops.Ann.pqTopK(spark, d, dim = 8).collect().map(_.toSeq).toSeq)
   }
 
+  test("track: q83 k-means over a corpus rewritten in place is trained on the new rows") {
+    rebuiltAfterRewrite(d =>
+      ops.Ann.ivfKmeans(spark, d).collect().map(_.toSeq).toSeq)
+  }
+
+  test("track: a tracked table rewritten in place is served with the new rows") {
+    rebuiltAfterRewrite(d =>
+      Caches.track(s"cachesspec.rows:$d", Tables(spark, d, "embeddings"))
+        .orderBy("vec_id").collect().map(_.toSeq).toSeq)
+    Caches.releasePrefix("cachesspec.")
+  }
+
   test("operators in graft/ops hold no memo map of their own") {
     // a driver-side artifact goes through Caches.memo, which keys it by
     // the input files; a private map keyed by dir serves a stale value
     // once the corpus is rewritten in place
-    val root = SessionsSpec.mainSources
-    val memoMap = """computeIfAbsent|new ConcurrentHashMap""".r
-    val hits = for {
-      f <- SessionsSpec.mainScalaFiles
-      if root.relativize(f).startsWith("graft/ops")
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      t = line.trim
-      if !(t.startsWith("*") || t.startsWith("/*") || t.startsWith("//"))
-      if memoMap.findFirstIn(line).isDefined
-    } yield s"${root.relativize(f)}:${i + 1}: $t"
+    val hits = SessionsSpec.codeHits(
+      """computeIfAbsent|new ConcurrentHashMap""".r, _.startsWith("graft/ops"))
     if (hits.nonEmpty) fail(s"${hits.size} code lines in graft/ops build " +
       "a memo map; route the artifact through Caches.memo:\n" +
       hits.mkString("\n"))
   }
+
+  test("only Caches.scala persists or unpersists a frame in src/main") {
+    // a raw persist is keyed by nothing: no tag releases it and a corpus
+    // rewritten in place keeps its old rows (localCheckpoint is a lineage
+    // cut, not a cache, and stays allowed)
+    val hits = SessionsSpec.codeHits(CachesSpec.Persist,
+      _.toString != "graft/Caches.scala")
+    if (hits.nonEmpty) fail(s"${hits.size} code lines cache a frame " +
+      "outside Caches; route them through Caches.track:\n" +
+      hits.mkString("\n"))
+  }
+}
+
+object CachesSpec {
+  /** A persist, an unpersist or a cache() call. */
+  val Persist = """\.persist\(|\.unpersist\(|\.cache\(\)""".r
 }

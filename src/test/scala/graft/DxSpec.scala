@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /** [[Dx]] is the one place the exactness devices are spelled: the
   * DECIMAL(30,6) cast-and-sum and the round-half-up fixed-point lift. */
@@ -64,15 +62,8 @@ class DxSpec extends SparkSpec {
   }
 
   test("only Dx.scala spells an exactness device in src/main") {
-    val root = SessionsSpec.mainSources
-    val hits = for {
-      f <- SessionsSpec.mainScalaFiles
-      if f.getFileName.toString != "Dx.scala"
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      t = line.trim
-      if !(t.startsWith("*") || t.startsWith("/*") || t.startsWith("//"))
-      if Device.findFirstIn(line).isDefined
-    } yield s"${root.relativize(f)}:${i + 1}: $t"
+    val hits = SessionsSpec.codeHits(Device,
+      _.getFileName.toString != "Dx.scala")
     if (hits.nonEmpty) fail(s"${hits.size} code lines spell an exactness " +
       "device outside Dx; route them through graft.Dx:\n" +
       hits.mkString("\n"))

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.ListenerCounts
-import scala.jdk.CollectionConverters._
 
 /** [[Metrics]] is the one recorder the measuring mains run a query
   * through: each run sees only its own stages and plan, and the recorder
@@ -53,15 +51,8 @@ class MetricsSpec extends SparkSpec {
   }
 
   test("only Metrics.scala adds a listener, drains the bus or writes noop") {
-    val root = SessionsSpec.mainSources
-    val hits = for {
-      f <- SessionsSpec.mainScalaFiles
-      if root.relativize(f).toString != "graft/Metrics.scala"
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      t = line.trim
-      if !(t.startsWith("*") || t.startsWith("/*") || t.startsWith("//"))
-      if MetricsSpec.Recorder.findFirstIn(line).isDefined
-    } yield s"${root.relativize(f)}:${i + 1}: $t"
+    val hits = SessionsSpec.codeHits(MetricsSpec.Recorder,
+      _.toString != "graft/Metrics.scala")
     if (hits.nonEmpty) fail(s"${hits.size} code lines measure a query " +
       "outside Metrics; route them through graft.Metrics.run:\n" +
       hits.mkString("\n"))

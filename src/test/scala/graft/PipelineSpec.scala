@@ -273,6 +273,7 @@ class PipelineSpec extends SparkSpec {
 
   test("a run resolves each input table once: derived reads start no schema inference") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.{col, lit, to_timestamp}
     // a job outside any SQL execution is a parquet schema inference
     val inferences = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
@@ -296,16 +297,44 @@ class PipelineSpec extends SparkSpec {
     // events and lineitem, once each
     val full = counted(Pipeline.run(spark, src, out, dqFanout = true))
     assert(full == 2, full)
-    // an incremental run over that output: the three stored trend reports
-    // take the delta path and are read without inference. Only the
-    // resolutions are counted here; the merged values are pinned by the
-    // incremental delta spec.
-    val incremental = counted(assert(Pipeline.run(spark, src, out,
-      incrementalSince = Some("2024-01-15 00:00:00")).nonEmpty))
+    // an incremental run over an output written from the ledger as of the
+    // checkpoint: the three stored trend reports take the delta path and
+    // are read without inference. Only the resolutions are counted here;
+    // the merged values are pinned by the incremental delta spec.
+    val cut = "2024-01-15 00:00:00"
+    val asOfCut = fixtureDir(
+      "lineitem" -> Tables(spark, src, "lineitem"),
+      "events" -> Tables(spark, src, "events")
+        .filter(col("ts") <= to_timestamp(lit(cut))))
+    val prev = java.nio.file.Files.createTempDirectory("graft-pipe-once-inc")
+      .toString
+    Pipeline.run(spark, asOfCut, prev)
+    val incremental = counted(assert(Pipeline.run(spark, src, prev,
+      incrementalSince = Some(cut)).nonEmpty))
     assert(incremental == 2, incremental)
-    val loadTypes = spark.read.parquet(s"$out/analytics_daily_summary")
+    val loadTypes = spark.read.parquet(s"$prev/analytics_daily_summary")
       .select("load_type").collect().map(_.getString(0)).toSet
     assert(loadTypes == Set("full", "incremental_delta"))
+  }
+
+  test("an incremental run over a stored trend report past its checkpoint fails by name") {
+    // the full run's reports cover events after the checkpoint: merging
+    // the post-checkpoint buckets again would double them
+    val cut = "2024-01-15 00:00:00"
+    val out = java.nio.file.Files.createTempDirectory("graft-pipe-past").toString
+    Pipeline.run(spark, src, out)
+    val before = rowBag(spark.read.parquet(s"$out/daily_trends"))
+    val err = intercept[RuntimeException](bounded(Pipeline.run(spark, src,
+      out, incrementalSince = Some(cut))))
+    val causes = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(causes.contains(
+      s"stored daily_trends holds a bucket after the incremental checkpoint $cut"),
+      causes)
+    // the failed delta left the stored report and the summary as they were
+    assert(rowBag(spark.read.parquet(s"$out/daily_trends")) == before)
+    assert(spark.read.parquet(s"$out/analytics_daily_summary")
+      .select("load_type").collect().map(_.getString(0)).toSeq == Seq("full"))
   }
 
   test("a derived report listed before its source fails by name") {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 /** [[Sessions]] is the only place `src/main` builds a SparkSession, so
   * every main runs on the same master, shuffle-partition, time-zone and
@@ -38,4 +39,20 @@ object SessionsSpec {
   def mainScalaFiles: List[Path] =
     Files.walk(mainSources).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toList.sorted
+
+  /** The code lines (comment lines stepped over) of the
+    * [[mainScalaFiles]] whose path relative to [[mainSources]] passes
+    * `scan` and that `pattern` matches, as `path:line: text`. */
+  def codeHits(pattern: Regex, scan: Path => Boolean): List[String] = {
+    val root = mainSources
+    for {
+      f <- mainScalaFiles
+      rel = root.relativize(f)
+      if scan(rel)
+      (line, i) <- Files.readAllLines(f).asScala.toList.zipWithIndex
+      t = line.trim
+      if !(t.startsWith("*") || t.startsWith("/*") || t.startsWith("//"))
+      if pattern.findFirstIn(line).isDefined
+    } yield s"$rel:${i + 1}: $t"
+  }
 }
