@@ -27,6 +27,13 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Sessions.cpus
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
+    // SPARK_GRAFT_BENCH_ONLY=q27_…,…: focused re-timing of a
+    // comma-separated EXACT-name subset (perf-iteration tooling; a full run
+    // never sets it), selected by SparkEntry.select: an unknown name fails
+    // the run instead of timing an empty set whose zero total could be
+    // misread as a perf win; it fails before any session starts.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+    val chosen = SparkEntry.select(only)
     // `local[n]` never serializes an exchange, so
     // SPARK_GRAFT_MASTER=local-cluster[w,c,mem] runs the SAME bench against
     // real worker JVMs (session contract shared with HashCheck via
@@ -40,30 +47,11 @@ object Bench {
 
     // Aux = every registered non-headline query, derived from the registry
     // itself, so a new query cannot drop out of timing.
-    // SPARK_GRAFT_BENCH_ONLY=q27_…,…: focused re-timing of a
-    // comma-separated EXACT-name subset (perf-iteration tooling; a full run
-    // never sets it). Names match exactly and an unknown name fails the
-    // run: a prefix like "q5" would select q53–q58, and a typo would give
-    // an empty run whose zero total could be misread as a perf win.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val known = SparkEntry.registry.map(_.name).toSet
-      val unknown = names.diff(known)
-      if (unknown.nonEmpty) {
-        System.err.println(
-          s"[bench] SPARK_GRAFT_BENCH_ONLY names not in the registry: " +
-            unknown.toSeq.sorted.mkString(", "))
-        spark.stop()
-        sys.exit(3)
-      }
-    }
-    def selected(q: Query): Boolean = only.forall(_.contains(q.name))
-    val headline = SparkEntry.registry.filter(_.headline).filter(selected)
+    val headline = chosen.filter(_.headline)
     // benchSkip twins stay out of the ROUTINE aux run but an explicit
     // BENCH_ONLY naming still times them.
-    val aux = SparkEntry.registry.filterNot(_.headline)
-      .filter(selected).filter(q => only.isDefined || !q.benchSkip)
+    val aux = chosen.filterNot(_.headline)
+      .filter(q => only.isDefined || !q.benchSkip)
     val skipped = SparkEntry.registry
       .filter(q => q.benchSkip && only.isEmpty).map(_.name)
 

@@ -37,38 +37,42 @@ object CurationPipeline {
       nShards: Int = 8,
       sourceCap: Int = ops.Sampling.SOURCE_CAP): DataFrame = {
     import spark.implicits._
-    // the verdict is the pipeline's dominant plan (the q62 dedup
-    // composition) and is consumed twice — by the shard write and by the
-    // manifest count — so it is cached for the run's duration; id-and-
-    // metadata-sized, never the text
-    val verdictTag = s"curationpipeline.verdict:$dir"
-    val verdict = Caches.track(verdictTag, ops.TextPipeline.curationVerdict(spark, dir))
-    try {
-      val capped =
-        ops.Sampling.capFilter(verdict, $"n_tokens", sourceCap)
-      val sampled = ops.Sampling.sampleFilter(capped, "lang_pred")
-      // shards carry the FULL document row (the loader wants text, not
-      // verdict metadata): id-keyed left-semi against the sample survivors
-      val shardInput = Tables(spark, dir, "documents")
-        .join(sampled.select($"doc_id"), Seq("doc_id"), "left_semi")
-      // n_sampled is counted on the shard write itself, so the manifest
-      // can never overstate the shipped artifact
-      val nSharded =
-        Sinks.writeShards(shardInput, s"$outDir/shards", "doc_id", nShards)
-      val nCorpus = Tables(spark, dir, "documents").count()
-      val nCurated = verdict.count()
-      val nCapped = capped.count()
-      val manifest = Seq(
-        (nCorpus, nCurated, nCapped, nSharded, nShards.toLong)
-      ).toDF("n_corpus", "n_curated", "n_capped", "n_sampled", "n_shards")
-      manifest.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$outDir/manifest")
-      manifest
-    } finally {
-      // the verdict and its dedup stage's (id, digest) projection, and
-      // nothing else: a library caller's own caches stay intact
-      Caches.release(verdictTag)
-      Caches.release(ops.TextPipeline.dedupBaseTag(dir))
+    // the run reads `documents` through one snapshot: listed and
+    // schema-inferred once, every stage on the same file set
+    new Tables.Snapshot(spark, dir).apply {
+      // the verdict is the pipeline's dominant plan (the q62 dedup
+      // composition) and is consumed twice — by the shard write and by the
+      // manifest count — so it is cached for the run's duration; id-and-
+      // metadata-sized, never the text
+      val verdictTag = s"curationpipeline.verdict:$dir"
+      val verdict = Caches.track(verdictTag, ops.TextPipeline.curationVerdict(spark, dir))
+      try {
+        val capped =
+          ops.Sampling.capFilter(verdict, $"n_tokens", sourceCap)
+        val sampled = ops.Sampling.sampleFilter(capped, "lang_pred")
+        // shards carry the FULL document row (the loader wants text, not
+        // verdict metadata): id-keyed left-semi against the sample survivors
+        val shardInput = Tables(spark, dir, "documents")
+          .join(sampled.select($"doc_id"), Seq("doc_id"), "left_semi")
+        // n_sampled is counted on the shard write itself, so the manifest
+        // can never overstate the shipped artifact
+        val nSharded =
+          Sinks.writeShards(shardInput, s"$outDir/shards", "doc_id", nShards)
+        val nCorpus = Tables(spark, dir, "documents").count()
+        val nCurated = verdict.count()
+        val nCapped = capped.count()
+        val manifest = Seq(
+          (nCorpus, nCurated, nCapped, nSharded, nShards.toLong)
+        ).toDF("n_corpus", "n_curated", "n_capped", "n_sampled", "n_shards")
+        manifest.coalesce(1).write.mode(SaveMode.Overwrite)
+          .parquet(s"$outDir/manifest")
+        manifest
+      } finally {
+        // the verdict and its dedup stage's (id, digest) projection, and
+        // nothing else: a library caller's own caches stay intact
+        Caches.release(verdictTag)
+        Caches.release(ops.TextPipeline.dedupBaseTag(dir))
+      }
     }
   }
 }

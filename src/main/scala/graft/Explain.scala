@@ -20,7 +20,8 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = args.drop(1).toSet
+    val selected = SparkEntry.select(
+      Option.when(args.length > 1)(args.drop(1).mkString(",")))
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Committed exact-count pin: ScanBudget's exceptions are documented
@@ -29,51 +30,49 @@ object Explain {
     // ACTUAL counts; any regeneration over the same sf whose counts
     // differ — in either direction — fails, so a drift must be
     // acknowledged by regenerating the pin
-    // (SPARK_GRAFT_BUDGET_OUT=SCANBUDGET.json) in the same commit.
+    // (SPARK_GRAFT_BUDGET_OUT=SCANBUDGET.json) in the same commit. The
+    // pin is per query, so a focused run checks its own queries too.
     val budgetPinPath = "SCANBUDGET.json"
     val pinned: Map[String, Map[String, Int]] =
-      if (names.nonEmpty) Map.empty // focused runs don't enforce the pin
-      else ScanBudgetPin.read(budgetPinPath, new java.io.File(sfDir).getName)
+      ScanBudgetPin.read(budgetPinPath, new java.io.File(sfDir).getName)
     var violations = List.empty[String]
     var governed = List.empty[(String, Map[String, Int])]
-    val rows = SparkEntry.registry
-      .filter(q => names.isEmpty || names(q.name))
-      .map { q =>
-        val df = q.fn(spark, sfDir)
-        // PlanScans runs the frame and reads each scan node's
-        // numOutputRows metric off the plan that ran (static plan text
-        // over-counts). Operator-owned artifact dirs carry run-unique
-        // suffixes (q91's temp index, q84's fingerprint-keyed store) —
-        // normalize them so regenerated PLANS.md rows diff cleanly.
-        def artifactName(n: String): String =
-          n.replaceAll("([0-9a-f]{16,}|\\d{8,})$", "<id>")
-        val raw = PlanScans.executedScans(df)
-        val executed = raw.map { case (t, n) => artifactName(t) -> n }
-        val desc = executed
-          .map { case (t, n) => s"$t=$n" }.mkString(", ")
-        println(s"==== ${q.name}: rows actually read per scan: $desc")
-        // Budget check: executed scan NODES per governed table vs the
-        // design floor (PlanScans.violations — the same check the test
-        // suite pins). Artifact paths are not governed and pass through.
-        PlanScans.violations(q.name, raw).foreach { v =>
-          System.err.println(s"[explain] BUDGET EXCEEDED $v")
+    val rows = selected.map { q =>
+      val df = q.fn(spark, sfDir)
+      // PlanScans runs the frame and reads each scan node's
+      // numOutputRows metric off the plan that ran (static plan text
+      // over-counts). Operator-owned artifact dirs carry run-unique
+      // suffixes (q91's temp index, q84's fingerprint-keyed store) —
+      // normalize them so regenerated PLANS.md rows diff cleanly.
+      def artifactName(n: String): String =
+        n.replaceAll("([0-9a-f]{16,}|\\d{8,})$", "<id>")
+      val raw = PlanScans.executedScans(df)
+      val executed = raw.map { case (t, n) => artifactName(t) -> n }
+      val desc = executed
+        .map { case (t, n) => s"$t=$n" }.mkString(", ")
+      println(s"==== ${q.name}: rows actually read per scan: $desc")
+      // Budget check: executed scan NODES per governed table vs the
+      // design floor (PlanScans.violations — the same check the test
+      // suite pins). Artifact paths are not governed and pass through.
+      PlanScans.violations(q.name, raw).foreach { v =>
+        System.err.println(s"[explain] BUDGET EXCEEDED $v")
+        violations ::= v
+      }
+      val counts = PlanScans.governedCounts(raw)
+      governed ::= q.name -> counts
+      pinned.get(q.name).foreach { exp =>
+        if (exp != counts) {
+          val v = s"${q.name}: scan counts drifted from $budgetPinPath " +
+            s"(pinned $exp, executed $counts) — plan change must " +
+            "regenerate the pin"
+          System.err.println(s"[explain] PIN DRIFT $v")
           violations ::= v
         }
-        val counts = PlanScans.governedCounts(raw)
-        governed ::= q.name -> counts
-        pinned.get(q.name).foreach { exp =>
-          if (exp != counts) {
-            val v = s"${q.name}: scan counts drifted from $budgetPinPath " +
-              s"(pinned $exp, executed $counts) — plan change must " +
-              "regenerate the pin"
-            System.err.println(s"[explain] PIN DRIFT $v")
-            violations ::= v
-          }
-        }
-        if (sys.env.get("EXPLAIN_FULL").contains("1")) df.explain("formatted")
-        spark.catalog.clearCache()
-        q.name -> desc
       }
+      if (sys.env.get("EXPLAIN_FULL").contains("1")) df.explain("formatted")
+      spark.catalog.clearCache()
+      q.name -> desc
+    }
     sys.env.get("SPARK_GRAFT_BUDGET_OUT").foreach { out =>
       ScanBudgetPin.write(out, new java.io.File(sfDir).getName,
         governed.reverse)

@@ -26,12 +26,11 @@ object HashCheck {
         "to compare masters; local-cluster needs SPARK_HOME + " +
         "SPARK_SCALA_VERSION + a packaged jar)")
     val Array(sfDir, names) = args
+    val selected = SparkEntry.select(Some(names))
     val master = Sessions.master
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val byName = SparkEntry.registry.map(q => q.name -> q).toMap
-    names.split(',').map(_.trim).filter(_.nonEmpty).foreach { n =>
-      val q = byName.getOrElse(n, sys.error(s"unknown query $n"))
+    selected.foreach { q =>
       // fields joined on U+0001: without a delimiter ("12","3") and
       // ("1","23") would render identically and a cross-JVM
       // column-boundary shift could hash equal — the exact drift class
@@ -45,7 +44,7 @@ object HashCheck {
       }.mkString("\u0001")).sorted
       val md = java.security.MessageDigest.getInstance("MD5")
       rows.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
-      println(s"HASH $n ${md.digest().map("%02x".format(_)).mkString}" +
+      println(s"HASH ${q.name} ${md.digest().map("%02x".format(_)).mkString}" +
         s" rows=${rows.length} master=$master")
       spark.catalog.clearCache()
     }

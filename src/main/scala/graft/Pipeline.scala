@@ -41,8 +41,11 @@ import graft.sources.Sinks
   *  - failure contract: if any report or the DQ fan-out fails, the run
   *    still waits for every in-flight report, then throws one exception
   *    naming every output that was not written, appends no summary row,
-  *    and leaves no pool thread alive. Reports that did succeed stay
-  *    written: each report write is atomic, the run is not.
+  *    and leaves no pool thread alive. Every parquet output write (each
+  *    report and the DQ fan-out) is atomic: it is staged, then swapped
+  *    in ([[sources.Sinks.overwriteInPlace]]), so an output whose write
+  *    fails keeps the previous run's contents. The run is not atomic:
+  *    the outputs that did succeed stay written beside the failed ones.
   *
   * Differences from the reference, by design:
   *  - reports are LAZY DataFrame DAGs materialized by their writes (the
@@ -194,10 +197,10 @@ object Pipeline {
         case _ => fn(spark, dataDir)
       }
       val (counted, rows) = Sinks.counted(df)
-      // the delta path reads the path it replaces: staging swap
-      if (deltas(name)) Sinks.overwriteInPlace(counted, s"$outDir/$name")
-      else if (jdbcOut) Sinks.writeJdbc(counted, outDir, name)
-      else Sinks.writeParquet(counted, s"$outDir/$name")
+      // staged swap: a write whose job fails leaves the previous report,
+      // and the delta path may read the path it replaces
+      if (jdbcOut) Sinks.writeJdbc(counted, outDir, name)
+      else Sinks.overwriteInPlace(counted, s"$outDir/$name")
       wroteSchema.put(name, df.schema)
       rows.value
     }

@@ -19,11 +19,13 @@ package graft
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val name = args(1)
+    val q = SparkEntry.select(Some(args(1))) match {
+      case Seq(one) => one
+      case many => sys.error(
+        s"ProfileQuery profiles one query, got ${many.map(_.name).mkString(", ")}")
+    }
     val warm = if (args.length > 2) args(2).toInt else 1
     val timed = if (args.length > 3) args(3).toInt else 1
-    val q = SparkEntry.registry.find(_.name == name).getOrElse(
-      sys.error(s"unknown query $name"))
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -37,7 +39,7 @@ object ProfileQuery {
     val walls = samples.map(_.wallSec)
     val rows = samples.flatMap(_.stages)
 
-    println(f"== $name: timed ${walls.map(w => f"$w%.3f").mkString(", ")} s " +
+    println(f"== ${q.name}: timed ${walls.map(w => f"$w%.3f").mkString(", ")} s " +
       s"(over $timed run(s); ${rows.size} stages)")
     println(f"${"stage"}%5s ${"wall_ms"}%8s ${"run_ms"}%8s ${"gc_ms"}%6s " +
       f"${"in_MB"}%8s ${"in_rows"}%10s ${"shR_MB"}%8s ${"shW_MB"}%8s " +

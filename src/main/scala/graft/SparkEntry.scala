@@ -26,6 +26,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.Financial.abcAnalysis(spark, "/root/testdata/sf0.001")
 
+  /** The registered queries a main was asked to run, in registry order:
+    * every query when `names` is None, else exactly the comma-separated
+    * names. Names match exactly (a prefix like "q5" selects nothing), and
+    * an unknown name or an empty list fails with the offending names, so
+    * a typo can never run zero queries and read as a pass. */
+  def select(names: Option[String]): Seq[Query] = names.fold(registry) { spec =>
+    val wanted = spec.split(',').map(_.trim).filter(_.nonEmpty).toSet
+    require(wanted.nonEmpty, s"empty query selection \"$spec\"")
+    val unknown = wanted -- registry.map(_.name)
+    require(unknown.isEmpty, "query names not in the registry: " +
+      unknown.toSeq.sorted.mkString(", "))
+    registry.filter(q => wanted(q.name))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.fn).toMap

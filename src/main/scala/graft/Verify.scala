@@ -5,25 +5,23 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Optional subset for local iteration (comma-separated exact names,
+    // SparkEntry.select); unset, the dump is the full registry.
+    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
+    val selected = SparkEntry.select(only)
     val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Optional subset for local iteration (comma-separated names); the
-    // driver never sets it, so the driver dump stays the full registry.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.filter {
-      case (name, _) => only.forall(_.contains(name))
-    }
     // Per-query dump status, recorded for the durable machine-readable
     // result file below: a log tail can be truncated away, a FILE cannot.
     // Row counts are counted on the dump write itself
     // ([[sources.Sinks.counted]], below the coalesce so it runs in the
     // write's one result stage); no dump is read back to count it.
     val status = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    selected.foreach { case (name, fn) =>
+    selected.foreach { q =>
+      val name = q.name
       try {
-        val (counted, rows) = sources.Sinks.counted(fn(spark, sfDir))
+        val (counted, rows) = sources.Sinks.counted(q.fn(spark, sfDir))
         counted.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         status(name) = s"""{"status":"dumped","rows":${rows.value}}"""
       } catch { case e: Throwable =>

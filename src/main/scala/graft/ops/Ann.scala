@@ -4,6 +4,7 @@ import graft.{Dx, Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Similarity search over the `embeddings` table (vec_id,
   * embedding: array<float>, label) — approximate-nearest-neighbor
@@ -350,7 +351,8 @@ object Ann {
   /** Embedding-cosine near-duplicate pairs — the dedup-by-embedding mode
     * of the brief: pairs whose SRP-LSH buckets differ by ≤ 1 bit (own
     * bucket + single-bit probes, same planes as [[lshTopK]]) reranked with
-    * the decimal-exact cosine, kept at ≥ `threshold`.
+    * the decimal-exact cosine, kept at ≥ `threshold`: the unbounded
+    * [[Scale.cappedPairs]] run of [[embeddingNearDupCapped]].
     *
     * Plan shape: only the LEFT side explodes its probe list; the probe
     * values of one vector are distinct, so each qualifying (a < b) pair
@@ -360,43 +362,31 @@ object Ann {
   def embeddingNearDup(
       spark: SparkSession, dir: String,
       threshold: Double = NEARDUP_COS, dim: Int = EMBED_DIM,
-      nplanes: Int = NPLANES): DataFrame = {
-    import spark.implicits._
-    val base = withNorm(spark, dir).withColumn("bucket", bucketCol(dim, nplanes))
-    val probes = array(
-      col("bucket") +:
-        (0 until nplanes).map(p => col("bucket").bitwiseXOR(lit(1L << p))): _*)
-    val a = base.select(
-      $"vec_id".as("vec_a"), $"embedding".as("emb_a"),
-      $"nrm_dec".as("nrm_a"), explode(probes).as("bucket"))
-    val b = base.select(
-      $"vec_id".as("vec_b"), $"embedding".as("emb_b"),
-      $"nrm_dec".as("nrm_b"), $"bucket")
-    // merge hint: both sides are the full vector table (fact-sized) — the
-    // bucket join must co-partition, never broadcast; materialized shuffle
-    // stages also keep the final sort's range sampling off the scan.
-    rerankPairs(a.join(b.hint("merge"), Seq("bucket"))
-      .filter($"vec_a" < $"vec_b"), threshold, dim)
-  }
+      nplanes: Int = NPLANES): DataFrame =
+    embeddingNearDupCapped(spark, dir, threshold, dim, nplanes,
+      occCap = Int.MaxValue)
 
-  /** Two-stage rerank shared by the exact and capped near-dup paths: the
-    * codegen'd DotProduct scores every candidate pair (the hot path — one
-    * primitive loop each), and only pairs within the DERIVED error margin
-    * of the threshold boundary pay the decimal-exact formulation that the
-    * emitted cosine column requires ([[cosineMargin]] — sound by
-    * accumulation-error analysis, not by a fixture measurement; round-4
-    * advice). Measured 8.6 s → decimal work on ~0.04% of candidates at
-    * sf0.1. Input: (vec_a, emb_a, nrm_a, vec_b, emb_b, nrm_b) with
-    * vec_a < vec_b already oriented (cosine is symmetric in a/b, so the
-    * emb/nrm roles need not follow the id order). */
+  /** Two-stage rerank of every near-dup pair stream: a fast double dot
+    * product scores every candidate pair (the hot path), and only pairs
+    * within the DERIVED error margin of the threshold boundary pay the
+    * decimal-exact formulation that the emitted cosine column requires
+    * ([[cosineMargin]] — sound by accumulation-error analysis, not by a
+    * fixture measurement). Measured 8.6 s → decimal work on ~0.04% of
+    * candidates at sf0.1. The fast dot follows the embedding column's
+    * element type: the codegen'd DotProduct for `array<float>`, [[dotDbl]]
+    * for the double-lifted arrays the quantizer path carries. Input:
+    * (vec_a, emb_a, nrm_a, vec_b, emb_b, nrm_b), vec_a < vec_b; output:
+    * (vec_a, vec_b, cosine) at cosine ≥ `threshold`. */
   private def rerankPairs(pairs: DataFrame, threshold: Double,
       dim: Int): DataFrame = {
     import pairs.sparkSession.implicits._
-    import graft.functions.DotProduct
+    val dot = pairs.schema("emb_a").dataType match {
+      case ArrayType(DoubleType, _) => dotDbl("emb_a", "emb_b")
+      case _ => graft.functions.DotProduct($"emb_a", $"emb_b")
+    }
     pairs
-      .withColumn("cos_fast",
-        DotProduct($"emb_a", $"emb_b") /
-          (sqrt($"nrm_a".cast("double")) * sqrt($"nrm_b".cast("double"))))
+      .withColumn("cos_fast", dot /
+        (sqrt($"nrm_a".cast("double")) * sqrt($"nrm_b".cast("double"))))
       .filter($"cos_fast" >=
         lit(threshold) - cosineMargin(dim, $"nrm_a", $"nrm_b"))
       .withColumn("cosine",
@@ -404,15 +394,13 @@ object Ann {
           (sqrt($"nrm_a".cast("double")) * sqrt($"nrm_b".cast("double"))))
       .filter($"cosine" >= threshold)
       .select($"vec_a", $"vec_b", $"cosine")
-      .orderBy($"vec_a", $"vec_b")
   }
 
-  /** Per-bucket delegate budget for the capped near-dup path (round-9
-    * verdict item 1). 32× the `targetBucket = 8` expected occupancy, so
-    * only genuinely skewed buckets — a dense duplicate cluster the planes
-    * cannot split, since near-identical vectors agree on almost every
-    * hyperplane sign — are ever capped; every healthy bucket keeps exact
-    * all-pairs semantics. */
+  /** Per-bucket delegate budget for the capped near-dup path. 32× the
+    * `targetBucket = 8` expected occupancy, so only genuinely skewed
+    * buckets — a dense duplicate cluster the planes cannot split, since
+    * near-identical vectors agree on almost every hyperplane sign — are
+    * ever capped; every healthy bucket keeps exact all-pairs semantics. */
   val OCC_CAP = 256
 
   /** Rank-chain width: every member of an over-cap bucket is still
@@ -427,9 +415,10 @@ object Ann {
     * a cluster of near-identical vectors agrees on (almost) every plane
     * sign, so one adversarially dense cluster still lands in one bucket
     * and the all-pairs rerank there is O(occupancy²) no matter how many
-    * planes are added (round-9: max_occ 1910 at 200k rows → 1.8M pairs
-    * from one bucket). This path bounds rerank volume to
-    * ((nplanes+1)·occCap + chainW)·n — HARD-LINEAR in corpus size:
+    * planes are added (max_occ 1910 measured at 200k rows → 1.8M pairs
+    * from one bucket). The bucket pairs come from [[Scale.cappedPairs]],
+    * which bounds rerank volume to ((nplanes+1)·occCap + chainW)·n —
+    * HARD-LINEAR in corpus size:
     *
     *  - members of each bucket get a deterministic rank ordered by their
     *    REFINEMENT CODE — the next 16 hyperplane signs from the same LCG
@@ -437,20 +426,15 @@ object Ann {
     *    buckets) — with vec_id as tie-break. The ordering is locality-
     *    sensitive: near-identical vectors agree on the refinement signs
     *    too, so a duplicate pair sits at NEIGHBORING ranks and the chain
-    *    window below finds it regardless of bucket occupancy (a random
-    *    hash rank would scatter a dup pair across the bucket and lose it
-    *    once both members fall outside the delegate budget);
-    *  - DELEGATES (rank ≤ occCap) keep the exact semantics: delegate×
-    *    delegate pairs via the same own-bucket + 1-bit-probe join, so a
-    *    bucket at-or-under its budget is byte-identical to the uncapped
-    *    plan — at fixture occupancies the cap never fires and the q88/q89
-    *    oracles stay exact;
-    *  - every over-cap member (rank > occCap) is still compared with its
-    *    chainW rank-predecessors IN its bucket, so consecutive-rank pairs
-    *    all exist above the boundary and a dense mutual-dup cluster forms
-    *    one connected component (the keep-list downstream loses nothing);
-    *    what is dropped is only the TRANSITIVELY IMPLIED remainder of the
-    *    in-bucket clique, plus cross-bucket probes of non-delegates.
+    *    window finds it regardless of bucket occupancy (a random hash
+    *    rank would scatter a dup pair across the bucket and lose it once
+    *    both members fall outside the delegate budget);
+    *  - DELEGATES (rank ≤ occCap) pair through the same own-bucket +
+    *    1-bit-probe join as the unbounded run — at fixture occupancies
+    *    the cap never fires and the q88/q89 oracles stay exact; the rank
+    *    chain keeps a dense mutual-dup cluster one connected component,
+    *    and what is dropped is only the TRANSITIVELY IMPLIED remainder of
+    *    the in-bucket clique, plus cross-bucket probes of non-delegates.
     *
     * Recall accounting (documented trade, not hidden): within an
     * over-cap bucket of occupancy m, emitted in-bucket pairs fall from
@@ -464,59 +448,39 @@ object Ann {
     * Plan shape: ONE corpus scan + ONE bucket-keyed window produce the
     * ranked working set, persisted ([[graft.Caches]]) because four
     * subtrees (delegate a/b, chain a/b) consume it — the same
-    * one-scan-feeds-all-evidence device as q57/q85. */
+    * one-scan-feeds-all-evidence device as q57/q85. The b side of the
+    * bucket join carries a `merge` hint: both sides are the full vector
+    * table (fact-sized), so the join must co-partition, never broadcast,
+    * and materialized shuffle stages keep the final sort's range
+    * sampling off the scan. */
   def embeddingNearDupCapped(
       spark: SparkSession, dir: String,
       threshold: Double = NEARDUP_COS, dim: Int = EMBED_DIM,
       nplanes: Int = NPLANES,
       occCap: Int = OCC_CAP, chainW: Int = CHAIN_W): DataFrame = {
     import spark.implicits._
-    require(occCap >= chainW, s"occCap $occCap must be >= chainW $chainW")
     // refinement code = the bucket id under 16 EXTRA planes; its low
     // `nplanes` bits are constant within a bucket, so ordering by it
     // within the bucket window orders by the refinement signs alone
     val rplanes = math.min(62, nplanes + 16)
-    val byBucket = Window.partitionBy($"bucket")
-      .orderBy($"rcode", $"vec_id")
-    val ranked = graft.Caches.track(s"ann.neardup_ranked.$nplanes.$dir",
-      withNorm(spark, dir)
-        .withColumn("bucket", bucketCol(dim, nplanes))
+    def ranked(members: DataFrame): DataFrame =
+      graft.Caches.track(s"ann.neardup_ranked:$dir#planes=$nplanes", members
         .withColumn("rcode", bucketCol(dim, rplanes))
-        .withColumn("rk", row_number().over(byBucket))
+        .withColumn("rk", row_number().over(
+          Window.partitionBy($"bucket").orderBy($"rcode", $"vec_id")))
         .drop("rcode"))
     val probes = array(
       col("bucket") +:
         (0 until nplanes).map(p => col("bucket").bitwiseXOR(lit(1L << p))): _*)
-    val aDel = ranked.filter($"rk" <= occCap).select(
-      $"vec_id".as("vec_a"), $"embedding".as("emb_a"),
-      $"nrm_dec".as("nrm_a"), explode(probes).as("bucket"))
-    val bDel = ranked.filter($"rk" <= occCap).select(
-      $"vec_id".as("vec_b"), $"embedding".as("emb_b"),
-      $"nrm_dec".as("nrm_b"), $"bucket")
-    val delegatePairs = aDel.join(bDel.hint("merge"), Seq("bucket"))
-      .filter($"vec_a" < $"vec_b")
-      .select($"vec_a", $"emb_a", $"nrm_a", $"vec_b", $"emb_b", $"nrm_b")
-    // chain leg: (rk, rk+d) pairs with the SUCCESSOR above the cap —
-    // disjoint from the delegate leg by construction (its b-member has
-    // rk > occCap), each unordered pair generated at most once (ranks
-    // strictly increase along a chain edge).
-    val aCh = ranked.filter($"rk" > occCap - chainW).select(
-      $"vec_id".as("id_a"), $"embedding".as("e_a"), $"nrm_dec".as("n_a"),
-      $"bucket", $"rk",
-      explode(array((1 to chainW).map(lit): _*)).as("d"))
-      .withColumn("rk_b", $"rk" + $"d")
-      .filter($"rk_b" > occCap)
-    val bCh = ranked.select(
-      $"vec_id".as("id_b"), $"embedding".as("e_b"), $"nrm_dec".as("n_b"),
-      $"bucket", $"rk".as("rk_b"))
-    val chainPairs = aCh.join(bCh, Seq("bucket", "rk_b"))
-      .select(
-        least($"id_a", $"id_b").as("vec_a"), $"e_a".as("emb_a"),
-        $"n_a".as("nrm_a"),
-        greatest($"id_a", $"id_b").as("vec_b"), $"e_b".as("emb_b"),
-        $"n_b".as("nrm_b"))
-    rerankPairs(delegatePairs.unionByName(chainPairs), threshold, dim)
+    val pairs = Scale.cappedPairs(
+      withNorm(spark, dir).withColumn("bucket", bucketCol(dim, nplanes)),
+      "bucket", embPair, occCap, chainW, ranked, Some(probes), Some("merge"))
+    rerankPairs(pairs, threshold, dim).orderBy($"vec_a", $"vec_b")
   }
+
+  /** The columns a near-dup pair carries: id, embedding, decimal norm. */
+  private val embPair =
+    Seq("vec_id" -> "vec", "embedding" -> "emb", "nrm_dec" -> "nrm")
 
   /** [[embeddingNearDup]] with the plane count SIZED BY THE SIZING RULE:
     * `planesFor(n, targetBucket)` from the corpus row count, so bucket
@@ -726,27 +690,6 @@ object Ann {
   private def vecs(spark: SparkSession, dir: String): DataFrame =
     graft.Caches.track(vecsTag(dir), lifted(embeddings(spark, dir)))
 
-  /** One Lloyd iteration: assign every vector to its nearest centroid,
-    * then recompute each centroid as the elementwise mean of its cell.
-    *
-    * Assignment metric: argmin over `‖c‖² − 2·v·c` — squared euclidean
-    * with the per-vector `‖v‖²` dropped (constant within a vector's
-    * argmin, the same norm-drop as [[ivfTopK]]'s affinity). Both terms
-    * are fixed-point decimals, so the argmin (tie → lowest cent_id, via
-    * `min_by` over a (metric, id) struct) is order-free and engine-exact.
-    *
-    * Shape: centroids broadcast (k rows); the argmin is a map-side-
-    * combining `min_by` hash agg keyed by vec_id — one row per vector
-    * reaches the exchange, never the k-fanout (the q48 lesson). The mean
-    * is a second hash agg over the posexploded cell members keyed by
-    * (cent_id, pos): k·dim output rows, partials combine map-side, so
-    * the explode's N·dim rows never shuffle raw. Empty cells drop (the
-    * standard Lloyd edge; both engines agree by construction).
-    *
-    * Exactness: elements lift through [[Dx.valDec]] before the mean's sum,
-    * division by the cell count happens in double after an exact decimal
-    * sum — deterministic at any parallelism, which is what lets q83's
-    * oracle replay BOTH rounds bit-for-bit. */
   /** Plain-double twin of [[Dx.dotDec]] — same index-ordered accumulation,
     * no fixed-point lift. The deploy metric: one IEEE multiply-add per
     * element instead of decimal arithmetic. */
@@ -891,6 +834,27 @@ object Ann {
         count(lit(1)).cast("long").as("n_assigned"))
   }
 
+  /** One Lloyd iteration: assign every vector to its nearest centroid,
+    * then recompute each centroid as the elementwise mean of its cell.
+    *
+    * Assignment metric: argmin over `‖c‖² − 2·v·c` — squared euclidean
+    * with the per-vector `‖v‖²` dropped (constant within a vector's
+    * argmin, the same norm-drop as [[ivfTopK]]'s affinity). Both terms
+    * are fixed-point decimals, so the argmin (tie → lowest cent_id, via
+    * `min_by` over a (metric, id) struct) is order-free and engine-exact.
+    *
+    * Shape: centroids broadcast (k rows); the argmin is a map-side-
+    * combining `min_by` hash agg keyed by vec_id — one row per vector
+    * reaches the exchange, never the k-fanout (the q48 lesson). The mean
+    * is a second hash agg over the posexploded cell members keyed by
+    * (cent_id, pos): k·dim output rows, partials combine map-side, so
+    * the explode's N·dim rows never shuffle raw. Empty cells drop (the
+    * standard Lloyd edge; both engines agree by construction).
+    *
+    * Exactness: elements lift through [[Dx.valDec]] before the mean's sum,
+    * division by the cell count happens in double after an exact decimal
+    * sum — deterministic at any parallelism, which is what lets q83's
+    * oracle replay BOTH rounds bit-for-bit. */
   def kmeansStep(vectors: DataFrame, cents: DataFrame,
       exactMetric: Boolean = true): DataFrame =
     cellMeans(assignCells(vectors, cents, exactMetric))
@@ -1524,13 +1488,13 @@ object Ann {
     * pair join is cell-keyed with E[occupancy] = n/k held constant by
     * sizing k via [[ncentroidsFor]] at deploy (k is fixture-pinned to
     * [[IVF_NCENTROIDS]] here for oracle replayability); a pathological
-    * cell composes with the q88 delegate-cap + rank-chain device. */
+    * cell is bounded by [[Scale.cappedPairs]]'s occupancy cap
+    * (`occCap`, the q88 device). */
   def semDedup(spark: SparkSession, dir: String, dim: Int = EMBED_DIM,
       k: Option[Int] = None,
       occCap: Int = Int.MaxValue, chainW: Int = CHAIN_W,
       hier: Boolean = false): DataFrame = {
     import spark.implicits._
-    require(occCap >= chainW, s"occCap $occCap must be >= chainW $chainW")
     val vecs = Ann.vecs(spark, dir)
     val kk = k.getOrElse(IVF_NCENTROIDS)
     val cents = trainedCents(spark, dir, kk, hier)
@@ -1540,85 +1504,29 @@ object Ann {
     val asg = assigned
       .select($"vec_id", $"embedding", $"cent_id", $"m_asg")
       .withColumn("nrm_dec", Dx.dotDec("embedding", "embedding"))
-    // Within-cell pair stage, HARD-CAPPED (round-12 verdict item 3 — the
-    // q88 delegate-budget + rank-chain device composed into the learned-
-    // cell path): members of each cell get a deterministic rank ordered
+    // Within-cell pair stage ([[Scale.cappedPairs]]), optionally
+    // HARD-CAPPED: members of each cell get a deterministic rank ordered
     // by (m_asg, vec_id) — the TRUE squared distance to the centroid
     // assignCells already computes, a LOCALITY-SENSITIVE key (a semantic
     // duplicate pair sits at near-identical distances, hence neighboring
     // ranks, so the chain window finds it regardless of cell occupancy).
-    //  - delegates (rk ≤ occCap) keep exact all-pairs semantics, so a
-    //    cell at-or-under budget is byte-identical to the uncapped plan
-    //    (the oracle-exactness condition at correctness scale);
-    //  - each over-cap member is compared with its chainW rank-
-    //    predecessors, keeping a dense mutual-dup cluster CONNECTED.
-    //    Documented trade (the q88 accounting): the greedy rule drops a
-    //    member iff some SURVIVING edge pairs it with a lower id, so a
-    //    member whose id is a local minimum among its chain neighbors can
-    //    survive as an extra representative — the cap can only KEEP more
-    //    rows, never lose a member, and pair recall degrades only inside
-    //    cells past the budget.
-    // Pair volume ≤ C(occCap,2)·cells + chainW·n ≤ (occCap + chainW)·n —
-    // hard-linear even under one adversarially dense cell, where the
-    // uncapped k≈√n sizing was n^1.5/2 (the round-12 scale flag).
-    val capped = occCap < Int.MaxValue
-    val ranked =
-      if (!capped) asg
-      else graft.Caches.track(s"ann.semdedup_ranked:$dir#k=$kk",
-        asg.withColumn("rk", row_number().over(
+    // Documented trade of the cap (the q88 accounting): the greedy rule
+    // drops a member iff some SURVIVING edge pairs it with a lower id, so
+    // a member whose id is a local minimum among its chain neighbors can
+    // survive as an extra representative — the cap can only KEEP more
+    // rows, never lose a member, and pair recall degrades only inside
+    // cells past the budget. Pair volume ≤ C(occCap,2)·cells + chainW·n
+    // ≤ (occCap + chainW)·n — hard-linear even under one adversarially
+    // dense cell, where the uncapped k≈√n sizing was n^1.5/2.
+    def ranked(members: DataFrame): DataFrame =
+      graft.Caches.track(s"ann.semdedup_ranked:$dir#k=$kk",
+        members.withColumn("rk", row_number().over(
           Window.partitionBy($"cent_id").orderBy($"m_asg", $"vec_id"))))
-    def sideA(df: DataFrame) = df.select($"cent_id", $"vec_id".as("vec_a"),
-      $"embedding".as("emb_a"), $"nrm_dec".as("nrm_a"))
-    def sideB(df: DataFrame) = df.select($"cent_id", $"vec_id".as("vec_b"),
-      $"embedding".as("emb_b"), $"nrm_dec".as("nrm_b"))
-    val pairs =
-      if (!capped)
-        sideA(ranked).join(sideB(ranked), Seq("cent_id"))
-          .filter($"vec_a" < $"vec_b")
-      else {
-        val delegates = sideA(ranked.filter($"rk" <= occCap))
-          .join(sideB(ranked.filter($"rk" <= occCap)), Seq("cent_id"))
-          .filter($"vec_a" < $"vec_b")
-        // chain leg: (rk, rk+d) pairs whose successor is above the cap —
-        // disjoint from the delegate leg by construction, each unordered
-        // pair generated once (ranks strictly increase along an edge)
-        val aCh = ranked.filter($"rk" > occCap - chainW).select(
-          $"vec_id".as("id_a"), $"embedding".as("e_a"),
-          $"nrm_dec".as("n_a"), $"cent_id", $"rk",
-          explode(array((1 to chainW).map(lit): _*)).as("d"))
-          .withColumn("rk_b", $"rk" + $"d")
-          .filter($"rk_b" > occCap)
-        val bCh = ranked.select(
-          $"vec_id".as("id_b"), $"embedding".as("e_b"),
-          $"nrm_dec".as("n_b"), $"cent_id", $"rk".as("rk_b"))
-        // ids along a chain edge are distinct (ranks strictly increase),
-        // so the swap predicate is total; embeddings/norms swap TOGETHER
-        // with the ids (round-13 ADVICE: a consumer reading emb_a as
-        // vec_a's embedding must not be lied to, even though the only
-        // consumer today — the symmetric cosine — cannot tell)
-        val chain = aCh.join(bCh, Seq("cent_id", "rk_b")).select(
-          $"cent_id",
-          least($"id_a", $"id_b").as("vec_a"),
-          when($"id_a" < $"id_b", $"e_a").otherwise($"e_b").as("emb_a"),
-          when($"id_a" < $"id_b", $"n_a").otherwise($"n_b").as("nrm_a"),
-          greatest($"id_a", $"id_b").as("vec_b"),
-          when($"id_a" < $"id_b", $"e_b").otherwise($"e_a").as("emb_b"),
-          when($"id_a" < $"id_b", $"n_b").otherwise($"n_a").as("nrm_b"))
-        delegates.unionByName(chain)
-      }
-    // double prescreen + margin, decimal only on survivors — the q47/q88
-    // rerank device ([[rerankPairs]]'s shape, restated over the double-
-    // lifted arrays the quantizer path carries: [[dotDbl]] instead of the
-    // float-typed native expression); the final predicate stays
-    // decimal-exact, so the prescreen cannot change the verdict
-    val dups = pairs
-      .withColumn("cos_fast", dotDbl("emb_a", "emb_b") /
-        (sqrt($"nrm_a".cast("double")) * sqrt($"nrm_b".cast("double"))))
-      .filter($"cos_fast" >=
-        lit(NEARDUP_COS) - cosineMargin(dim, $"nrm_a", $"nrm_b"))
-      .withColumn("cosine", Dx.dotDec("emb_a", "emb_b").cast("double") /
-        (sqrt($"nrm_a".cast("double")) * sqrt($"nrm_b".cast("double"))))
-      .filter($"cosine" >= NEARDUP_COS)
+    val pairs = Scale.cappedPairs(asg, "cent_id", embPair, occCap, chainW,
+      ranked)
+    // the final predicate stays decimal-exact, so the double prescreen
+    // cannot change the verdict
+    val dups = rerankPairs(pairs, NEARDUP_COS, dim)
       .select($"vec_b".as("vec_id")).distinct()
     asg.select($"vec_id", $"cent_id")
       .join(dups.withColumn("is_dup", lit(true)), Seq("vec_id"), "left")
@@ -1957,24 +1865,7 @@ object Ann {
        |             ORDER BY qscore DESC, neighbor_id) AS crnk
        |    FROM qdots)
        |  WHERE crnk <= $SQ_CAND),
-       |dots AS (
-       |  SELECT c.query_id, c.neighbor_id, c.qscore,
-       |         SUM(${Dx.sqlProdDec("q.x", "e.x")}) AS dot
-       |  FROM cand c
-       |       JOIN el q ON q.vec_id = c.query_id
-       |       JOIN el e ON e.vec_id = c.neighbor_id AND q.i = e.i
-       |  GROUP BY 1, 2, 3),
-       |cos AS (
-       |  SELECT query_id, neighbor_id, qscore,
-       |         CAST(dot AS DOUBLE)
-       |           / (sqrt(CAST(nq.nrm AS DOUBLE)) * sqrt(CAST(nn.nrm AS DOUBLE))) AS cosine
-       |  FROM dots JOIN norms nq ON nq.vec_id = query_id
-       |            JOIN norms nn ON nn.vec_id = neighbor_id)
-       |SELECT query_id, neighbor_id, qscore, cosine, rnk FROM (
-       |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |              ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
-       |  FROM cos)
-       |WHERE rnk <= $TOPK ORDER BY query_id, rnk""".stripMargin
+       |${rerankTopKSql("qscore", " qscore,", "qscore")}""".stripMargin
 
   // ---------------------------------------------------------------- q154
 
@@ -2285,22 +2176,30 @@ object Ann {
 
   /** The oracle tail of [[pqRankTail]]: exact decimal-cosine top-[[TOPK]]
     * of `cand`, carrying each candidate's ADC score. Needs `el`, `norms`. */
-  private def pqRerankSql: String =
+  private def pqRerankSql: String = rerankTopKSql("adc_dec",
+    "\n         CAST(adc_dec AS DOUBLE) AS adc,", "adc")
+
+  /** Oracle CTEs `dots`/`cos` and the final select of a quantized
+    * screen's rerank: the exact decimal cosine of every `cand` pair and
+    * each query's top-[[TOPK]] by it, carrying the candidate's screen
+    * score column `score` (`cosScore`: its projection in `cos`, layout
+    * included; `outScore`: its output name). Needs `el`, `norms`. */
+  private def rerankTopKSql(score: String, cosScore: String,
+      outScore: String): String =
     s"""dots AS (
-       |  SELECT c.query_id, c.neighbor_id, c.adc_dec,
+       |  SELECT c.query_id, c.neighbor_id, c.$score,
        |         SUM(${Dx.sqlProdDec("q.x", "e.x")}) AS dot
        |  FROM cand c
        |       JOIN el q ON q.vec_id = c.query_id
        |       JOIN el e ON e.vec_id = c.neighbor_id AND q.i = e.i
        |  GROUP BY 1, 2, 3),
        |cos AS (
-       |  SELECT query_id, neighbor_id,
-       |         CAST(adc_dec AS DOUBLE) AS adc,
+       |  SELECT query_id, neighbor_id,$cosScore
        |         CAST(dot AS DOUBLE)
        |           / (sqrt(CAST(nq.nrm AS DOUBLE)) * sqrt(CAST(nn.nrm AS DOUBLE))) AS cosine
        |  FROM dots JOIN norms nq ON nq.vec_id = query_id
        |            JOIN norms nn ON nn.vec_id = neighbor_id)
-       |SELECT query_id, neighbor_id, adc, cosine, rnk FROM (
+       |SELECT query_id, neighbor_id, $outScore, cosine, rnk FROM (
        |  SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
        |              ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rnk
        |  FROM cos)

@@ -408,6 +408,15 @@ object Classify {
   private def ln(a: String, b: String): String =
     graft.functions.PinnedMath.lnRatioSql(a, b)
 
+  /** Oracle CTEs after `ct` (class, term, c_ct): `ct2` adds each class's
+    * term total `t_c`, `v` is the vocabulary size. */
+  private val nbTotalsSql =
+    """), ct2 AS (
+      |  SELECT cls, term, c_ct,
+      |         CAST(SUM(c_ct) OVER (PARTITION BY cls) AS BIGINT) AS t_c
+      |  FROM ct
+      |), v AS (SELECT CAST(COUNT(DISTINCT term) AS BIGINT) AS v FROM ct),""".stripMargin
+
   /** Shared CTE chain: doc-term counts, the smoothed model over the
     * `trainWhere` side, and per-(doc, class) scores + argmax rank over
     * the `scoreWhere` side — the SQL mirror of [[scoredBest]]. */
@@ -425,11 +434,7 @@ object Classify {
        |ct AS (
        |  SELECT lang AS cls, term, CAST(SUM(n) AS BIGINT) AS c_ct
        |  FROM train GROUP BY 1, 2
-       |), ct2 AS (
-       |  SELECT cls, term, c_ct,
-       |         CAST(SUM(c_ct) OVER (PARTITION BY cls) AS BIGINT) AS t_c
-       |  FROM ct
-       |), v AS (SELECT CAST(COUNT(DISTINCT term) AS BIGINT) AS v FROM ct),
+       |$nbTotalsSql
        |prior AS (
        |  SELECT lang AS cls, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_c
        |  FROM train GROUP BY 1
@@ -517,11 +522,7 @@ object Classify {
        |), ct AS (
        |  SELECT cls, term, CAST(COUNT(*) AS BIGINT) AS c_ct
        |  FROM dt GROUP BY 1, 2
-       |), ct2 AS (
-       |  SELECT cls, term, c_ct,
-       |         CAST(SUM(c_ct) OVER (PARTITION BY cls) AS BIGINT) AS t_c
-       |  FROM ct
-       |), v AS (SELECT CAST(COUNT(DISTINCT term) AS BIGINT) AS v FROM ct),
+       |$nbTotalsSql
        |prior AS (
        |  SELECT lang AS cls, CAST(COUNT(*) AS BIGINT) AS n_c
        |  FROM documents GROUP BY 1

@@ -93,15 +93,20 @@ object Inventory {
       .orderBy($"part_id", $"supplier_id")
   }
 
+  /** Oracle CTE `last_move`: each (part, supplier) cell's last A/R
+    * movement date. */
+  private val lastMoveSql =
+    """), last_move AS (
+      |  SELECT l_partkey AS part_id, l_suppkey AS supplier_id,
+      |         MAX(l_shipdate) AS last_movement_date
+      |  FROM lineitem WHERE l_returnflag IN ('A','R') GROUP BY 1, 2""".stripMargin
+
   private val deadStockSql =
     s"""WITH cells AS (
        |  SELECT l_partkey AS part_id, l_suppkey AS supplier_id,
        |         ${Dx.sqlDsum("l_quantity")} AS quantity_on_hand
        |  FROM lineitem GROUP BY 1, 2
-       |), last_move AS (
-       |  SELECT l_partkey AS part_id, l_suppkey AS supplier_id,
-       |         MAX(l_shipdate) AS last_movement_date
-       |  FROM lineitem WHERE l_returnflag IN ('A','R') GROUP BY 1, 2
+       |$lastMoveSql
        |), flagged AS (
        |  SELECT cells.part_id, cells.supplier_id, cells.quantity_on_hand,
        |         last_move.last_movement_date,
@@ -247,10 +252,7 @@ object Inventory {
        |         ${Dx.sqlDecSum("l_quantity")} AS qty_dec,
        |         ${Dx.sqlDecSum("l_extendedprice")} AS cost_dec
        |  FROM lineitem GROUP BY 1, 2
-       |), last_move AS (
-       |  SELECT l_partkey AS part_id, l_suppkey AS supplier_id,
-       |         MAX(l_shipdate) AS last_movement_date
-       |  FROM lineitem WHERE l_returnflag IN ('A','R') GROUP BY 1, 2
+       |$lastMoveSql
        |), flagged AS (
        |  SELECT cells.qty_dec, cells.cost_dec,
        |         COALESCE(date_diff('day',

@@ -196,6 +196,73 @@ object Scale {
       .drop("__pid", "__off", "__tot")
   }
 
+  /** Candidate pairs of members sharing a key, with an optional
+    * per-key occupancy cap: the one pair device of the near-dup
+    * generators (SRP buckets, IVF cells, hot shingle buckets).
+    *
+    * `members` holds one row per (key, member). `cols` names the columns
+    * a pair carries as (column, stem); the head is the member id. Output:
+    * `<stem>_a` for every stem, then `<stem>_b` for every stem, one row
+    * per pair, with id_a < id_b. Every carried column comes back beside
+    * its own id.
+    *
+    *  - `occCap == Int.MaxValue` (unbounded): every pair inside a key, as
+    *    the plain key self-join. `rank` is not called, so no rank is
+    *    computed.
+    *  - finite cap: `rank(members)` adds each member's 1-based in-key
+    *    rank `rk`, in a locality-sensitive order the caller chooses so
+    *    that near-duplicates sit at neighboring ranks. The output is
+    *    every pair among the delegates (rk ≤ occCap), so a key at or
+    *    under its budget yields exactly its unbounded pairs, plus each
+    *    member's `chainW` rank successors past the cap, joined on the key
+    *    itself. The chain keeps a dense cluster connected while the pair
+    *    volume stays ≤ C(occCap, 2) per key + chainW·n. The two legs are
+    *    disjoint (a chain pair's successor has rk > occCap), and a chain
+    *    pair is generated once (ranks strictly increase along it).
+    *
+    * `probe`: the keys a member joins the delegate join on from the a
+    * side (SRP's own bucket plus its 1-bit flips); by default its own
+    * key. `bHint`: a join-strategy hint on the delegate join's b side.
+    * The device persists nothing: a caller whose rank is worth reusing
+    * tracks it inside `rank`. */
+  def cappedPairs(
+      members: DataFrame,
+      key: String,
+      cols: Seq[(String, String)],
+      occCap: Int,
+      chainW: Int,
+      rank: DataFrame => DataFrame,
+      probe: Option[Column] = None,
+      bHint: Option[String] = None): DataFrame = {
+    require(occCap >= chainW, s"occCap $occCap must be >= chainW $chainW")
+    def side(s: String): Seq[Column] =
+      cols.map { case (c, stem) => col(c).as(s"${stem}_$s") }
+    def out(s: String): Seq[String] = cols.map { case (_, stem) => s"${stem}_$s" }
+    val (idA, idB) = (col(out("a").head), col(out("b").head))
+    def allPairs(m: DataFrame): DataFrame = {
+      val b = m.select(side("b") :+ col(key): _*)
+      m.select(side("a") :+ probe.fold(col(key))(explode(_)).as(key): _*)
+        .join(bHint.fold(b)(b.hint(_)), Seq(key))
+        .filter(idA < idB)
+        .select((out("a") ++ out("b")).map(col): _*)
+    }
+    if (occCap == Int.MaxValue) return allPairs(members)
+    val ranked = rank(members)
+    val aCh = ranked.filter(col("rk") > occCap - chainW)
+      .select(side("a") ++ Seq(col(key), col("rk"),
+        explode(array((1 to chainW).map(lit): _*)).as("d")): _*)
+      .withColumn("rk_b", col("rk") + col("d"))
+      .filter(col("rk_b") > occCap)
+    val bCh = ranked.select(side("b") ++ Seq(col(key), col("rk").as("rk_b")): _*)
+    // ids along a chain edge are distinct, so the orientation is total
+    def oriented(s: String, t: String): Seq[Column] =
+      out(s).zip(out(t)).map { case (x, y) =>
+        when(idA < idB, col(x)).otherwise(col(y)).as(x) }
+    allPairs(ranked.filter(col("rk") <= occCap)).unionByName(
+      aCh.join(bCh, Seq(key, "rk_b"))
+        .select(oriented("a", "b") ++ oriented("b", "a"): _*))
+  }
+
   /** SALTED shuffle join — the skew treatment for a fact⋈dim join whose
     * key distribution is pathological AND whose dim side is too large to
     * broadcast (the broadcast join is always the first resort; AQE's

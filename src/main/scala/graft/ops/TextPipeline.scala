@@ -1027,6 +1027,72 @@ object TextPipeline {
       docs(spark, dir).count()
     }
 
+  /** The in-bucket rank of the capped hot fallback ([[shingleEvidence]]):
+    * hot probes `(doc_id, sh)` with `rk`, 1-based within each probe
+    * shingle `sh`. A planted mega-cluster makes every probe bucket's
+    * occupancy = cluster size d, and the pair-complete join there is
+    * C(d,2) per bucket — required output for q27, but pure waste for the
+    * q60/q93/q138 components, which only need each cluster CONNECTED;
+    * [[Scale.cappedPairs]] keeps delegates' all-pairs and an over-cap
+    * rank chain:
+    *  - the rank is LOCALITY-SENSITIVE: order by the doc's full sorted
+    *    probe-hash signature (near-dup docs have near-identical probe
+    *    sets, so they share a long signature prefix and sit at
+    *    neighboring ranks), doc_id tie-break — deterministic,
+    *    engine-independent;
+    *  - for a homogeneous duplicate cluster every chain edge passes the
+    *    exact-Jaccard rerank, so the component — and therefore the keep
+    *    list — is identical to the pair-complete result (and a
+    *    heterogeneous bucket mixing two clusters stays exact too:
+    *    near-identical signatures sort each cluster contiguous, and each
+    *    cluster's run chains internally — spec-pinned). What a
+    *    CHAIN-similarity cluster loses is real: rank order is
+    *    signature-lexicographic, not similarity-adjacent, so its verified
+    *    edges may not bridge the bucket and the component can SPLIT —
+    *    never merge (every emitted edge is verified), i.e. capped
+    *    components REFINE pair-complete components; TextPipelineSpec pins
+    *    the exact counterexample and the refinement invariant.
+    *
+    * TWO-STAGE rank: the direct
+    * `row_number over (partition by sh order by sig, doc_id)` puts ALL d
+    * members of a hot bucket in ONE task — id-sized rows and fine at the
+    * measured d = 50k, but a 10⁹-member cluster at real scale would be
+    * one task ranking 10⁹ rows. The [[Scale.prefixSum]] device instead:
+    * range-partition by the FULL sort key (so a bucket's members span
+    * partitions in key order and partition ids are ordered), local rank
+    * within (pid, sh), then a per-(sh, pid) COUNT rollup — ≤
+    * shuffle-partition rows per bucket, config-bounded — supplies each
+    * slice's exclusive offset. global rk = local rk + offset,
+    * bit-identical to the single-task rank for any data (the forced-cap
+    * specs and the q60/q93/q138 oracles run this rank). NO persist here:
+    * a cache build is its own query execution, so persisting this
+    * subtree re-runs the corpus shingle explosion OUTSIDE the shared
+    * window exchange — measured 1.9× on the whole evidence leg at
+    * megadup 100× (the same lore as the pair-frame persist note in
+    * [[shingleNearDup]]). Un-persisted, the range sampler's extra pass
+    * and every member consumer re-derive through the ONE reused exchange
+    * under the df window — shuffle-file reads, not rescans. */
+  private def hotRank(probes: DataFrame): DataFrame = {
+    import probes.sparkSession.implicits._
+    val sig = probes.groupBy($"doc_id")
+      .agg(sort_array(collect_list(xxhash64($"sh"))).as("sig"))
+    val ranged = probes.join(sig, Seq("doc_id"))
+      .repartitionByRange($"sh", $"sig", $"doc_id")
+      .withColumn("__pid", spark_partition_id())
+    val offs = ranged.groupBy($"sh", $"__pid")
+      .agg(count(lit(1)).as("__c"))
+      .withColumn("__off", coalesce(sum($"__c").over(
+        Window.partitionBy($"sh").orderBy($"__pid")
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select($"sh", $"__pid", $"__off")
+    ranged
+      .withColumn("__lrk", row_number().over(
+        Window.partitionBy($"__pid", $"sh").orderBy($"sig", $"doc_id")))
+      .join(offs, Seq("sh", "__pid"))
+      .withColumn("rk", $"__lrk" + $"__off")
+      .drop("__pid", "__lrk", "__off")
+  }
+
   /** Near-duplicate pairs by exact 3-shingle Jaccard ≥ 0.8, candidates
     * from the df-bounded inverted index — NEVER all-pairs: the self-join
     * is keyed by shingle, so only docs with overlapping RARE content ever
@@ -1129,102 +1195,10 @@ object TextPipeline {
         s"docs=$nDocs minDocs=$gateVal " +
         s"path=${if (useSketch) "sketched" else "direct"}")
     val (docStats, _, probes) = hotProbes(shDf, maxDf)
-    val candHot =
-      if (hotOccCap == Int.MaxValue)
-        // pair-complete (q27's contract): every qualifying pair meets
-        probes.select($"doc_id".as("doc_a"), $"sh")
-          .join(probes.select($"doc_id".as("doc_b"), $"sh"), Seq("sh"))
-          .filter($"doc_a" < $"doc_b")
-          .select($"doc_a", $"doc_b").distinct()
-      else {
-        // CAPPED (components-evidence mode): a planted mega-cluster makes
-        // every probe bucket's occupancy = cluster size d, and the
-        // pair-complete join there is C(d,2) per bucket — required output
-        // for q27, but pure waste for the q60/q93/q138 components, which
-        // only need each cluster CONNECTED. The embeddingNearDupCapped
-        // device, re-keyed to probe shingles:
-        //  - members of each bucket get a LOCALITY-SENSITIVE rank: order
-        //    by the doc's full sorted probe-hash signature (near-dup docs
-        //    have near-identical probe sets, so they share a long
-        //    signature prefix and sit at neighboring ranks), doc_id
-        //    tie-break — deterministic, engine-independent;
-        //  - delegates (rank ≤ cap) keep exact all-pairs, so a bucket at
-        //    or under its budget is byte-identical to the uncapped join
-        //    (fixture occupancies never reach the cap → oracles exact);
-        //  - every over-cap member still meets its chainW rank
-        //    predecessors, so consecutive-rank pairs all exist and the
-        //    bucket's member set stays ONE connected CANDIDATE set; for a
-        //    homogeneous duplicate cluster every chain edge passes the
-        //    exact-Jaccard rerank, so the component — and therefore the
-        //    keep list — is identical to the pair-complete result (and a
-        //    heterogeneous bucket mixing two clusters stays exact too:
-        //    near-identical signatures sort each cluster contiguous, and
-        //    each cluster's run chains internally — spec-pinned). What a
-        //    CHAIN-similarity cluster loses is real: rank order is
-        //    signature-lexicographic, not similarity-adjacent, so its
-        //    verified edges may not bridge the bucket and the component
-        //    can SPLIT — never merge (every emitted edge is verified),
-        //    i.e. capped components REFINE pair-complete components;
-        //    TextPipelineSpec pins the exact counterexample and the
-        //    refinement invariant.
-        require(hotOccCap >= hotChainW,
-          s"hotOccCap $hotOccCap must be >= hotChainW $hotChainW")
-        val sig = probes.groupBy($"doc_id")
-          .agg(sort_array(collect_list(xxhash64($"sh"))).as("sig"))
-        // TWO-STAGE in-bucket rank: the direct
-        // `row_number over (partition by sh order by sig, doc_id)` puts
-        // ALL d members of a hot bucket in ONE task — id-sized rows and
-        // fine at the measured d = 50k, but a 10⁹-member cluster at real
-        // scale would be one task ranking 10⁹ rows. The Scale.prefixSum
-        // device instead: range-partition by the FULL sort key (so a
-        // bucket's members span partitions in key order and partition
-        // ids are ordered), local rank within (pid, sh), then a
-        // per-(sh, pid) COUNT rollup — ≤ shuffle-partition rows per
-        // bucket, config-bounded — supplies each slice's exclusive
-        // offset. global rk = local rk + offset, bit-identical to the
-        // single-task rank for any data (the forced-cap specs and the
-        // q60/q93/q138 oracles run this branch). NO persist here: a
-        // cache build is its own query execution, so persisting this
-        // subtree re-runs the corpus shingle explosion OUTSIDE the
-        // shared window exchange — measured 1.9× on the whole evidence
-        // leg at megadup 100× (the same lore as the pair-frame persist
-        // note above). Un-persisted, the range sampler's extra pass and
-        // every member consumer re-derive through the ONE reused
-        // exchange under shDf — shuffle-file reads, not rescans.
-        val member0 = probes.join(sig, Seq("doc_id"))
-        val ranged = member0
-          .repartitionByRange($"sh", $"sig", $"doc_id")
-          .withColumn("__pid", spark_partition_id())
-        val offs = ranged.groupBy($"sh", $"__pid")
-          .agg(count(lit(1)).as("__c"))
-          .withColumn("__off", coalesce(sum($"__c").over(
-            Window.partitionBy($"sh").orderBy($"__pid")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select($"sh", $"__pid", $"__off")
-        val member = ranged
-          .withColumn("__lrk", row_number().over(
-            Window.partitionBy($"__pid", $"sh")
-              .orderBy($"sig", $"doc_id")))
-          .join(offs, Seq("sh", "__pid"))
-          .withColumn("rk", $"__lrk" + $"__off")
-          .drop("__pid", "__lrk", "__off")
-        val del = member.filter($"rk" <= hotOccCap)
-        val delPairs = del.select($"doc_id".as("doc_a"), $"sh")
-          .join(del.select($"doc_id".as("doc_b"), $"sh"), Seq("sh"))
-          .filter($"doc_a" < $"doc_b")
-          .select($"doc_a", $"doc_b")
-        val aCh = member.filter($"rk" > hotOccCap - hotChainW)
-          .select($"doc_id".as("id_a"), $"sh", $"rk",
-            explode(array((1 to hotChainW).map(lit): _*)).as("d"))
-          .withColumn("rk_b", $"rk" + $"d")
-          .filter($"rk_b" > hotOccCap)
-        val bCh = member.select($"doc_id".as("id_b"), $"sh",
-          $"rk".as("rk_b"))
-        val chPairs = aCh.join(bCh, Seq("sh", "rk_b"))
-          .select(least($"id_a", $"id_b").as("doc_a"),
-            greatest($"id_a", $"id_b").as("doc_b"))
-        delPairs.unionByName(chPairs).distinct()
-      }
+    // unbounded (q27's contract): every qualifying pair meets; capped
+    // (components evidence): [[hotRank]] orders each probe bucket
+    val candHot = Scale.cappedPairs(probes, "sh", Seq("doc_id" -> "doc"),
+      hotOccCap, hotChainW, hotRank).distinct()
     // Candidate pairs with their exact shared_rare count, by strategy
     // (scaladoc above). Either way the frame is (doc_a, doc_b,
     // shared_rare) and everything downstream is identical.
@@ -2560,14 +2534,20 @@ object TextPipeline {
       .orderBy($"doc_a", $"doc_b")
   }
 
+  /** Oracle CTEs `t` (each doc's tokens) and `s` (its distinct
+    * 3-shingles), in the wrapped layout of the MinHash-estimate and
+    * n-gram novelty oracles. */
+  private val wrappedShinglesSql =
+    """t AS (SELECT doc_id, string_split(text, ' ') AS ws
+      |           FROM documents),
+      |s AS (SELECT DISTINCT doc_id, sh FROM (
+      |        SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1),
+      |                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))
+      |                 AS sh
+      |        FROM t WHERE len(ws) >= 3)),""".stripMargin
+
   private def minhashEstimateOracle: String =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
-       |           FROM documents),
-       |s AS (SELECT DISTINCT doc_id, sh FROM (
-       |        SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1),
-       |                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))
-       |                 AS sh
-       |        FROM t WHERE len(ws) >= 3)),
+    s"""WITH $wrappedShinglesSql
        |n AS (SELECT doc_id, COUNT(*) AS n_sh FROM s GROUP BY 1),
        |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |                 COUNT(*) AS shared
@@ -2642,13 +2622,7 @@ object TextPipeline {
   }
 
   private val gramNoveltyOracle =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws
-       |           FROM documents),
-       |s AS (SELECT DISTINCT doc_id, sh FROM (
-       |        SELECT doc_id, unnest(list_transform(range(1, len(ws) - 1),
-       |                 i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]))
-       |                 AS sh
-       |        FROM t WHERE len(ws) >= 3)),
+    s"""WITH $wrappedShinglesSql
        |d AS (SELECT doc_id, COUNT(*) OVER (PARTITION BY sh) AS df FROM s)
        |SELECT doc_id,
        |       CAST(COUNT(*) AS BIGINT) AS n_grams,

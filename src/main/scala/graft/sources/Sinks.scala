@@ -69,20 +69,25 @@ object Sinks {
       .option("batchsize", batchSize)
       .mode(mode).save()
 
-  /** In-place refresh of a report that is being UPDATED from its own
-    * previous contents (the incremental-delta path reads `path` lazily
-    * while producing its replacement): materialize to a staging dir
-    * first, then swap — the read and the overwrite never race. The
+  /** Atomic overwrite of the parquet output at `path`: materialize to a
+    * staging dir first, then swap. A write whose job fails leaves `path`
+    * as it was (a plain overwrite deletes it before the write's final
+    * stage runs, so a failure there leaves no output at all), and an
+    * output UPDATED from its own previous contents (the incremental-delta
+    * path reads `path` lazily while producing its replacement) never
+    * races its own read. `partitionBy` lays out the staged write. The
     * rename is atomic on HDFS; on object stores it's a copy, which is
-    * fine for the calendar-bounded reports this serves. */
-  def overwriteInPlace(df: DataFrame, path: String): Unit = {
+    * fine for the report-sized outputs this serves. */
+  def overwriteInPlace(df: DataFrame, path: String,
+      partitionBy: Seq[String] = Nil): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val staging = new org.apache.hadoop.fs.Path(path + ".staging")
     val old = new org.apache.hadoop.fs.Path(path + ".old")
     val fs = p.getFileSystem(
       df.sparkSession.sparkContext.hadoopConfiguration)
     recoverSwap(fs, path) // finish any interrupted previous swap first
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*)
+      .parquet(staging.toString)
     // Swap via rename-aside, never delete-then-rename: at every crash
     // point either `path` still holds the old report or `.staging` holds
     // the complete new one, and [[recoverSwap]] rolls the swap forward —
@@ -203,10 +208,10 @@ object Sinks {
     * in their own directory and the valid stream is a partition-PRUNED
     * read — no second scan of the source to separate valid from
     * quarantined (the two-query shape the Quality module uses for its
-    * oracle entries costs one scan per output; this is the deploy path). */
+    * oracle entries costs one scan per output; this is the deploy path).
+    * The write is a staged swap ([[overwriteInPlace]]). */
   def writeDqFanout(tagged: DataFrame, path: String): Unit =
-    tagged.write.mode(SaveMode.Overwrite)
-      .partitionBy("dq_issue").parquet(path)
+    overwriteInPlace(tagged, path, Seq("dq_issue"))
 
   /** Bucketed co-located write — the storage-layout half of the 100 TB
     * join strategy: both sides of a recurring equi-join written with the

@@ -47,20 +47,15 @@ final case class StreamVec(
   */
 object StreamingAnn {
 
-  /** Assign one (micro-)batch to the trained centroids — `(vec_id,
-    * cent_id)`. Exposed for the spec's batch-equivalence pin.
-    * `exactMetric`: false (default) scores the argmin in double — deploy
-    * ingest throughput; true runs the decimal leg (the metric q90/q91's
-    * oracles replay — see [[graft.ops.Ann.assignTo]]'s flag contract). */
-  def assignBatch(batch: DataFrame, centroids: DataFrame,
-      exactMetric: Boolean = false): DataFrame =
-    graft.ops.Ann.assignTo(batch, centroids, exactMetric)
-
-  /** [[assignBatch]] carrying the vector payload — `(vec_id, embedding,
-    * cent_id)`, the SELF-CONTAINED index row [[ingestStream]] appends:
-    * the serve path reranks straight from the pruned cell read, no join
-    * back to a corpus table. q91 writes its index through THIS function
-    * (decimal leg) and oracle-proves the result end to end. */
+  /** One (micro-)batch assigned to the trained centroids with its vector
+    * payload — `(vec_id, embedding, cent_id)`, the SELF-CONTAINED index
+    * row [[ingestStream]] appends: the serve path reranks straight from
+    * the pruned cell read, no join back to a corpus table. `exactMetric`:
+    * false (default) scores the argmin in double — deploy ingest
+    * throughput; true runs the decimal leg (see
+    * [[graft.ops.Ann.assignTo]]'s flag contract). q91 writes its index
+    * through THIS function (decimal leg) and oracle-proves the result end
+    * to end. */
   def indexBatch(batch: DataFrame, centroids: DataFrame,
       exactMetric: Boolean = false): DataFrame =
     graft.ops.Ann.assignVectors(batch, centroids, exactMetric)

@@ -140,9 +140,12 @@ class CachesSpec extends SparkSpec {
   test("operators in graft/ops hold no memo map of their own") {
     // a driver-side artifact goes through Caches.memo, which keys it by
     // the input files; a private map keyed by dir serves a stale value
-    // once the corpus is rewritten in place
+    // once the corpus is rewritten in place. A map under any spelling
+    // (imported or fully qualified, with type arguments or without) is
+    // caught; a concurrent key set (a log-once guard) is not a memo.
     val hits = SessionsSpec.codeHits(
-      """computeIfAbsent|new ConcurrentHashMap""".r, _.startsWith("graft/ops"))
+      """ConcurrentHashMap[\[(]|TrieMap|computeIfAbsent""".r,
+      _.startsWith("graft/ops"))
     if (hits.nonEmpty) fail(s"${hits.size} code lines in graft/ops build " +
       "a memo map; route the artifact through Caches.memo:\n" +
       hits.mkString("\n"))

@@ -48,6 +48,13 @@ class CurationPipelineSpec extends SparkSpec {
     }
   }
 
+  test("a curation run resolves documents once: one schema inference") {
+    val dir = fixtureDir("documents" -> corpus())
+    val out = Files.createTempDirectory("graft-curation").toString
+    val n = schemaInferences(CurationPipeline.run(spark, dir, out, nShards = 4))
+    assert(n == 1, n)
+  }
+
   test("curation pipeline: re-run reproduces identical shard membership") {
     val dir = fixtureDir("documents" -> corpus())
     val out1 = Files.createTempDirectory("graft-curation").toString

@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
   * `src/main/scala`. */
 class OracleSqlSpec extends AnyFunSuite {
 
-  private val MinRun = 8
+  private val MinRun = 6
 
   test(s"no run of $MinRun stripMargin lines appears twice in src/main") {
     // each maximal block of consecutive margin lines is one segment

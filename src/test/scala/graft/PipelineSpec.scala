@@ -272,30 +272,11 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("a run resolves each input table once: derived reads start no schema inference") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions.{col, lit, to_timestamp}
-    // a job outside any SQL execution is a parquet schema inference
-    val inferences = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.sql.execution.id") == null)
-          inferences.incrementAndGet()
-    }
     val out = java.nio.file.Files.createTempDirectory("graft-pipe-once").toString
-    val sc = spark.sparkContext
-    /** Schema-inference jobs started by `run`. */
-    def counted(run: => Unit): Int = {
-      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-      inferences.set(0)
-      sc.addSparkListener(listener)
-      try {
-        bounded(run)
-        org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-      } finally sc.removeSparkListener(listener)
-      inferences.get
-    }
     // events and lineitem, once each
-    val full = counted(Pipeline.run(spark, src, out, dqFanout = true))
+    val full = schemaInferences(bounded(
+      Pipeline.run(spark, src, out, dqFanout = true)))
     assert(full == 2, full)
     // an incremental run over an output written from the ledger as of the
     // checkpoint: the three stored trend reports take the delta path and
@@ -309,8 +290,8 @@ class PipelineSpec extends SparkSpec {
     val prev = java.nio.file.Files.createTempDirectory("graft-pipe-once-inc")
       .toString
     Pipeline.run(spark, asOfCut, prev)
-    val incremental = counted(assert(Pipeline.run(spark, src, prev,
-      incrementalSince = Some(cut)).nonEmpty))
+    val incremental = schemaInferences(bounded(assert(Pipeline.run(spark,
+      src, prev, incrementalSince = Some(cut)).nonEmpty)))
     assert(incremental == 2, incremental)
     val loadTypes = spark.read.parquet(s"$prev/analytics_daily_summary")
       .select("load_type").collect().map(_.getString(0)).toSet
@@ -351,6 +332,26 @@ class PipelineSpec extends SparkSpec {
         Map("financial_summary" -> "stock_value_report")))
     assert(missing.getMessage.contains("stock_value_report"),
       missing.getMessage)
+  }
+
+  test("a report whose job fails while executing keeps its previous output") {
+    import org.apache.spark.sql.functions.lit
+    val out = java.nio.file.Files.createTempDirectory("graft-pipe-atomic").toString
+    Pipeline.run(spark, src, out)
+    val before = Pipeline.REPORTS.map { case (name, _) =>
+      name -> rowBag(spark.read.parquet(s"$out/$name")) }.toMap
+    // every discount 100 %: total revenue 0, so abc_analysis's revenue
+    // share divides by zero (an ANSI error) in the write's own final stage,
+    // after a plain overwrite has deleted the old report
+    val hostile = copyTree(java.nio.file.Paths.get(src)).toString
+    Tables(spark, src, "lineitem").withColumn("l_discount", lit(1.0))
+      .write.mode("overwrite").parquet(s"$hostile/lineitem.parquet")
+    val err = intercept[RuntimeException](
+      bounded(Pipeline.run(spark, hostile, out)))
+    assert(err.getMessage.contains("abc_analysis"), err.getMessage)
+    Pipeline.REPORTS.map(_._1).filter(err.getMessage.contains).foreach { name =>
+      assert(rowBag(spark.read.parquet(s"$out/$name")) == before(name), name)
+    }
   }
 
   test("a failed run waits for in-flight reports, names the failures, appends no summary") {

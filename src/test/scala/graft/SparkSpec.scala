@@ -25,6 +25,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.catalog.clearCache()
 
+  /** Parquet schema-inference jobs `run` starts: the jobs outside any SQL
+    * execution. */
+  def schemaInferences(run: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val inferences = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.sql.execution.id") == null)
+          inferences.incrementAndGet()
+    }
+    org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      run
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    inferences.get
+  }
+
   /** Write fixture tables into a fresh dir laid out like an sfDir
     * (`<dir>/<table>.parquet`), return the dir path. */
   def fixtureDir(tables: (String, DataFrame)*): String = {
