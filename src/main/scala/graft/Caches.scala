@@ -25,7 +25,7 @@ import org.apache.spark.storage.StorageLevel
   * session's cached frames over those roots.
   *
   * [[memo]] is the driver-side twin for small build-once artifacts (a
-  * trained quantizer, a PQ codebook, a corpus count): values held on the
+  * trained quantizer, a PQ codebook): values held on the
   * driver, not persisted frames, keyed by the input files they were
   * built from.
   */

@@ -784,12 +784,11 @@ object TextPipeline {
   /** Shingles with document frequency above this bound are excluded from
     * CANDIDATE GENERATION (never from the Jaccard rerank): a boilerplate
     * shingle shared by d documents contributes O(d²) candidate pairs while
-    * discriminating nothing — the one skew that kills the inverted index
-    * at 100 TB. A true near-dup pair (Jaccard ≥ 0.8) shares most of its
-    * shingles, so losing its hot ones still leaves rare ones to meet on;
-    * the fixture's max df is 7, far under the bound, so the cutoff is
-    * behavior-neutral on the oracle and exercised by the planted-
-    * boilerplate unit test instead. */
+    * discriminating nothing, so the bound caps what any one shingle adds
+    * to the pair join at C(maxDf, 2). A true near-dup pair (Jaccard ≥ 0.8)
+    * shares most of its shingles, so losing its hot ones still leaves
+    * rare ones to meet on; a pair with no rare shingle in common meets
+    * through the mostly-hot fallback instead ([[shingleNearDup]]). */
   val MAX_SHINGLE_DF = 64
 
   /** Scale drivers for the MOSTLY-HOT FALLBACK under adversarial skew
@@ -843,7 +842,7 @@ object TextPipeline {
     * frequency `df` by ONE count window over ONE shuffle, so every
     * consumer (rare index, hot postings, per-doc stats) branches above
     * one exchange and the shingle explosion runs once. */
-  private def dfTagged(sh: DataFrame): DataFrame =
+  private[graft] def dfTagged(sh: DataFrame): DataFrame =
     sh.withColumn("df", count(lit(1)).over(Window.partitionBy(col("sh"))))
 
   /** The mostly-hot fallback's selection over [[dfTagged]] postings:
@@ -879,34 +878,21 @@ object TextPipeline {
     (docStats, mostlyHot, probes)
   }
 
-  /** Candidate near-dup pairs from the SKETCHED df-bounded inverted
-    * index (the [[shingleNearDup]] round-10 generation): pairs whose
-    * bottom-[[RARE_PROBES]]-by-hash rare-shingle sketches intersect. */
-  def shingleCandidates(sh: DataFrame, maxDf: Int = MAX_SHINGLE_DF,
-      probes: Int = RARE_PROBES): DataFrame = {
-    import sh.sparkSession.implicits._
-    val rare = sh.groupBy($"sh").agg(count(lit(1)).as("df"))
-      .filter($"df" <= maxDf)
-      .select($"sh")
-    val post = sketchPostings(sh.join(rare, Seq("sh")), probes)
-    post.select($"doc_id".as("doc_a"), $"sh")
-      .join(post.select($"doc_id".as("doc_b"), $"sh"), Seq("sh"))
+  /** Candidate near-dup pairs `(doc_a, doc_b, shared_rare)` from the
+    * df-bounded inverted index over [[dfTagged]] postings: every pair
+    * (doc_a < doc_b) that shares a shingle of df ≤ `maxDf`, with
+    * `shared_rare` the exact number of such shingles it shares. The count
+    * is the pair join's own group count, so the exact-Jaccard intersection
+    * needs no rare top-up join. A rare shingle contributes at most
+    * C(maxDf, 2) pairs. */
+  def shingleCandidates(shDf: DataFrame, maxDf: Int): DataFrame = {
+    import shDf.sparkSession.implicits._
+    val shRare = shDf.filter($"df" <= maxDf).select($"doc_id", $"sh")
+    shRare.select($"doc_id".as("doc_a"), $"sh")
+      .join(shRare.select($"doc_id".as("doc_b"), $"sh"), Seq("sh"))
       .filter($"doc_a" < $"doc_b")
-      .select($"doc_a", $"doc_b").distinct()
-  }
-
-  /** Bottom-`probes`-by-hash posting sketch: each doc posts only its
-    * `probes` smallest-by-xxhash64 shingles of `post` into the pair-join
-    * index — the winnowing-style sparsification of round-9 verdict
-    * item 4. Deterministic (hash order, ties by shingle text): the same
-    * sketch every run and every engine. */
-  private def sketchPostings(post: DataFrame, probes: Int): DataFrame = {
-    import post.sparkSession.implicits._
-    post
-      .withColumn("srnk", row_number().over(
-        Window.partitionBy($"doc_id").orderBy(xxhash64($"sh"), $"sh")))
-      .filter($"srnk" <= probes)
-      .select($"doc_id", $"sh")
+      .groupBy($"doc_a", $"doc_b")
+      .agg(count(lit(1)).as("shared_rare"))
   }
 
   /** Exact-Jaccard rerank of candidate pairs over the FULL shingle sets
@@ -968,64 +954,13 @@ object TextPipeline {
     * clusters; a CHAIN-similarity cluster crossing the cap can split
     * (TextPipelineSpec pins the exact counterexample). The trade buys
     * Σ [C(cap,2) + (occ−cap)·chainW] edges instead of Σ C(occ,2) on a
-    * planted 10%-of-corpus mega-cluster (round-16 verdict item 3;
-    * measured in SCALING.md's megadup rows). At fixture occupancies the
-    * cap never fires and the output is byte-identical to
+    * planted 10%-of-corpus mega-cluster (measured in SCALING.md's
+    * megadup rows). At fixture occupancies the cap never fires and the
+    * output is byte-identical to
     * [[shingleNearDup]] — the q60/q93/q138 oracles stay the exact
     * pair-complete closure. */
   def shingleEvidence(spark: SparkSession, dir: String): DataFrame =
     shingleNearDup(spark, dir, hotOccCap = HOT_OCC_CAP)
-
-  /** Bottom-K sketch width for the RARE pair-join index (round-9 verdict
-    * item 4): the df ceiling bounds per-shingle posting pairs, but
-    * candidates-PER-DOC still grew with corpus density (measured 14.9×
-    * candidates / 15.4× rerank rows in the second decade against 10×
-    * docs). Posting only each doc's [[RARE_PROBES]] smallest-by-hash rare
-    * shingles bounds candidates per doc at probes·(maxDf−1) — hard-linear
-    * total — by the same bottom-K MinHash argument as [[ALLHOT_PROBES]],
-    * with double the width because the rare index is the PRIMARY path:
-    * a true pair at Jaccard ≥ 0.8 has each probe land in the shared set
-    * w.p. ≥ 0.44, so 16 probes miss with odds < (1−0.44)¹⁶ ≈ 1e-4 (the
-    * planted fixtures are far above 0.8 and effectively never miss). */
-  val RARE_PROBES = 16
-
-  /** Corpus size (docs) at which [[shingleNearDup]] switches its rare-
-    * index candidate generation from the DIRECT df-bounded inverted index
-    * to the bottom-[[RARE_PROBES]] sketch — the round-11 re-tune of the
-    * round-10 sketch rewrite, which bought 100× asymptotics (13.0× vs
-    * 17.8×/decade) at a 1.7–1.8× constant-factor cost to the whole dedup
-    * family AT REFERENCE SCALE (q62 3.87→6.99 s sf0.1): below the gate
-    * the direct pair join is both cheaper (exact `shared_rare` falls out
-    * of the join in passing — one whole top-up join saved) and still
-    * linear-in-driver (measured r09: densification starts in the SECOND
-    * decade, ~14.9×/decade candidate growth above ~10× = 50k docs).
-    * 20k docs = 4× reference scale, safely under the measured knee; the
-    * scale fixtures (50k/500k docs) stay on the sketch path, so the 100×
-    * curve is unchanged. The decision input is one parquet-footer
-    * count-star — O(files), not O(rows), noise at any scale (the same
-    * class of runtime statistic AQE replans on). [[shingleNearDup]]'s
-    * `sketchGate` overrides it per call (0 forces the sketch everywhere —
-    * how the equivalence unit test pins both paths to identical output
-    * on one fixture). */
-  val SKETCH_MIN_DOCS: Long = 20000L
-
-  private val gateLogged =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The size gate's corpus count, memoized on the driver
-    * ([[graft.Caches.memo]], keyed by the documents' file fingerprint):
-    * without it every [[shingleNearDup]] CALL — and every composition that
-    * embeds one (keep lists, components, the curation verdict) — re-ran
-    * the count-star eagerly at plan-build time. For parquet dirs the
-    * count is an O(files) footer read, recounted only when the corpus is
-    * rewritten. For `jdbc:` dirs the count is a REMOTE `count(*)` that may
-    * scan the table when aggregate pushdown is unavailable; the memo
-    * bounds that cost to once per session, which is the honest cost of a
-    * runtime-statistics gate over a source with no cheap statistics. */
-  private def gateDocCount(spark: SparkSession, dir: String): Long =
-    graft.Caches.memo(spark, "textpipeline.doc_count", dir, Seq("documents")) {
-      docs(spark, dir).count()
-    }
 
   /** The in-bucket rank of the capped hot fallback ([[shingleEvidence]]):
     * hot probes `(doc_id, sh)` with `rk`, 1-based within each probe
@@ -1055,9 +990,8 @@ object TextPipeline {
     *
     * TWO-STAGE rank: the direct
     * `row_number over (partition by sh order by sig, doc_id)` puts ALL d
-    * members of a hot bucket in ONE task — id-sized rows and fine at the
-    * measured d = 50k, but a 10⁹-member cluster at real scale would be
-    * one task ranking 10⁹ rows. The [[Scale.prefixSum]] device instead:
+    * members of a hot bucket in ONE task, so one task's work would grow
+    * with the largest cluster. The [[Scale.prefixSum]] device instead:
     * range-partition by the FULL sort key (so a bucket's members span
     * partitions in key order and partition ids are ordered), local rank
     * within (pid, sh), then a per-(sh, pid) COUNT rollup — ≤
@@ -1066,12 +1000,12 @@ object TextPipeline {
     * bit-identical to the single-task rank for any data (the forced-cap
     * specs and the q60/q93/q138 oracles run this rank). NO persist here:
     * a cache build is its own query execution, so persisting this
-    * subtree re-runs the corpus shingle explosion OUTSIDE the shared
-    * window exchange — measured 1.9× on the whole evidence leg at
-    * megadup 100× (the same lore as the pair-frame persist note in
-    * [[shingleNearDup]]). Un-persisted, the range sampler's extra pass
-    * and every member consumer re-derive through the ONE reused exchange
-    * under the df window — shuffle-file reads, not rescans. */
+    * subtree would run the corpus shingle explosion a second time,
+    * OUTSIDE the shared window exchange (measured 1.9× on the whole
+    * evidence leg at megadup 100×). Un-persisted, the range sampler's
+    * extra pass and every member consumer re-derive through the ONE
+    * reused exchange under the df window — shuffle-file reads, not
+    * rescans. */
   private def hotRank(probes: DataFrame): DataFrame = {
     import probes.sparkSession.implicits._
     val sig = probes.groupBy($"doc_id")
@@ -1100,35 +1034,13 @@ object TextPipeline {
     * inverted index is too dense.
     *
     * Exact-Jaccard decomposition: every common shingle is rare or hot, so
-    * |A∩B| = shared_rare + shared_hot, each counted by a top-up join that
-    * runs THROUGH the candidate pairs — O(candidates × doc size), with
-    * candidates hard-bounded by the sketch (below); on a corpus with no
-    * hot shingles the hot top-up is empty.
-    *
-    * SIZE-GATED CANDIDATE GENERATION:
-    * two rare-index strategies, chosen by corpus size
-    * ([[SKETCH_MIN_DOCS]]) the way AQE picks join strategies by runtime
-    * statistics —
-    *  - DIRECT (corpus < gate): pair join over the FULL df-bounded rare
-    *    index; exact `shared_rare` falls out of the pair join in
-    *    passing, so no rare top-up join runs. Candidate volume is
-    *    linear-in-driver at reference scale (measured through r09);
-    *    this is the cheapest correct plan there.
-    *  - SKETCHED (corpus ≥ gate): the
-    *    pair join reads only each doc's [[RARE_PROBES]] smallest-by-
-    *    xxhash64 rare shingles ([[sketchPostings]] — winnowing-style
-    *    sparsification). The df ceiling alone bounded per-SHINGLE pairs
-    *    but candidates-per-DOC still grew with corpus density
-    *    (14.9×/decade measured at 100×); the sketch caps candidates per
-    *    doc at probes·(maxDf−1), making total candidate volume
-    *    hard-linear in the corpus. Bottom-K sketches of two Jaccard
-    *    ≥ 0.8 sets intersect with odds ≥ 1−(1−0.44)¹⁶ (see
-    *    [[RARE_PROBES]]), and the Jaccard score of every met pair is
-    *    still EXACT over full shingle sets — sketching changes who
-    *    MEETS, never a met pair's score; `shared_rare` comes from a
-    *    candidate-bounded top-up join instead.
-    * TextPipelineSpec pins the two paths to identical output on a mixed
-    * fixture (forced via the `sketchGate` parameter).
+    * |A∩B| = shared_rare + shared_hot. [[shingleCandidates]] counts
+    * shared_rare in the rare pair join itself; shared_hot is counted by a
+    * top-up join that runs THROUGH the candidate pairs — O(candidates ×
+    * doc size); on a corpus with no hot shingles the hot top-up is empty.
+    * Every pair sharing a rare shingle is a candidate, so the candidate
+    * set is exact at any corpus size; its volume grows with how densely
+    * the corpus shares rare shingles.
     *
     * MOSTLY-HOT FALLBACK ([[hotProbes]]): a cluster
     * duplicated more than maxDf times makes EVERY one of its shingles
@@ -1150,18 +1062,15 @@ object TextPipeline {
     * qualifying docs the min-K-by-hash posting is a MinHash signature,
     * so collisions are similarity-driven, not df-driven — a bucket of d
     * true duplicates yields O(d²) candidates, the size of the required
-    * OUTPUT, the same acceptance class as [[minhashNearDup]]. Both
-    * candidate streams emit bare id pairs; the rare and hot top-up
-    * joins then complete the exact intersection for whoever met. */
+    * OUTPUT, the same acceptance class as [[minhashNearDup]]. The
+    * fallback emits bare id pairs with shared_rare = 0, and the hot
+    * top-up join completes the exact intersection for whoever met. */
   def shingleNearDup(spark: SparkSession, dir: String,
       maxDf: Int = MAX_SHINGLE_DF,
-      /** Gate override for callers and tests; None = the default
-        * gate, [[SKETCH_MIN_DOCS]]. */
-      sketchGate: Option[Long] = None,
       /** Per-probe-bucket delegate budget for the hot-fallback candidate
         * join (the megadup sub-quadratic bound). The default
         * Int.MaxValue keeps the PAIR-COMPLETE semantics — q27's contract
-        * is every qualifying pair, and its plan is byte-unchanged. A
+        * is every qualifying pair, and no rank is computed. A
         * finite cap ([[HOT_OCC_CAP]] via [[shingleEvidence]]) bounds the
         * in-bucket pair volume the way [[graft.ops.Ann.OCC_CAP]] bounds
         * the SRP buckets: delegates keep all-pairs, over-cap members keep
@@ -1171,78 +1080,26 @@ object TextPipeline {
       hotOccCap: Int = Int.MaxValue,
       hotChainW: Int = HOT_CHAIN_W): DataFrame = {
     import spark.implicits._
-    // Scan sharing comes from exchange reuse above the one df window,
-    // not caching: a persist of the pair frame measured 4× slower than
+    // The shingle explosion runs once: every consumer below branches
+    // above the one df window exchange and reuses it. Nothing is
+    // persisted: a persist of the pair frame measured 4× slower than
     // recomputing (columnar round-trip of 10M-row pairs loses to codegen
     // re-derivation).
     val shDf = dfTagged(shingles(spark, dir))
-    val shRare = shDf.filter($"df" <= maxDf).select($"doc_id", $"sh")
     val shHot = shDf.filter($"df" > maxDf).select($"doc_id", $"sh")
-    // Size gate: the sketch's candidate cap matters only once
-    // corpus density makes the direct index's candidate stream
-    // super-linear (measured knee ≈ 10× reference scale); below the gate
-    // the direct pair join is strictly cheaper — exact shared_rare falls
-    // out of it in passing and the rare top-up join never runs. The
-    // decision input is a parquet-footer count-star: O(files), the same
-    // runtime-statistic class AQE replans on.
-    val gateVal = sketchGate.getOrElse(SKETCH_MIN_DOCS)
-    val nDocs = gateDocCount(spark, dir)
-    val useSketch = nDocs >= gateVal
-    // one decision log per (dir, gate): the SCALING artifacts record
-    // which path each measured point executed
-    if (gateLogged.add(s"$dir#$gateVal"))
-      System.err.println(s"[graft] shingleNearDup gate: dir=$dir " +
-        s"docs=$nDocs minDocs=$gateVal " +
-        s"path=${if (useSketch) "sketched" else "direct"}")
     val (docStats, _, probes) = hotProbes(shDf, maxDf)
     // unbounded (q27's contract): every qualifying pair meets; capped
     // (components evidence): [[hotRank]] orders each probe bucket
     val candHot = Scale.cappedPairs(probes, "sh", Seq("doc_id" -> "doc"),
       hotOccCap, hotChainW, hotRank).distinct()
-    // Candidate pairs with their exact shared_rare count, by strategy
-    // (scaladoc above). Either way the frame is (doc_a, doc_b,
-    // shared_rare) and everything downstream is identical.
-    val candShared =
-      if (!useSketch) {
-        // DIRECT: full df-bounded rare pair join — shared_rare is the
-        // pair join's own group count, no top-up needed. A pair may also
-        // arrive from the hot fallback (two mostly-hot docs CAN share a
-        // rare tail shingle); dedupe by max(shared_rare) — the rare-index
-        // row carries the exact count, the fallback row 0 (a
-        // fallback-ONLY pair shares no rare shingle by construction,
-        // else the rare join would have emitted it).
-        val candRare = shRare.select($"doc_id".as("doc_a"), $"sh")
-          .join(shRare.select($"doc_id".as("doc_b"), $"sh"), Seq("sh"))
-          .filter($"doc_a" < $"doc_b")
-          .groupBy($"doc_a", $"doc_b")
-          .agg(count(lit(1)).as("shared_rare"))
-        candRare
-          .unionByName(candHot.withColumn("shared_rare", lit(0L)))
-          .groupBy($"doc_a", $"doc_b")
-          .agg(max($"shared_rare").as("shared_rare"))
-      } else {
-        // SKETCHED: both candidate streams are bare (doc_a, doc_b) id
-        // pairs — the sketched rare join cannot count the full rare
-        // intersection in passing, so shared_rare comes from a
-        // candidate-bounded top-up join over the FULL rare postings
-        // (never a free self-join, which would reintroduce the fan-out
-        // the sketch exists to stop). distinct() dedupes pairs arriving
-        // from both indexes before the top-up.
-        val rarePost = sketchPostings(shRare, RARE_PROBES)
-        val cand0 = rarePost.select($"doc_id".as("doc_a"), $"sh")
-          .join(rarePost.select($"doc_id".as("doc_b"), $"sh"), Seq("sh"))
-          .filter($"doc_a" < $"doc_b")
-          .select($"doc_a", $"doc_b").distinct()
-        val cand = cand0.unionByName(candHot).distinct()
-        val sharedRare = cand
-          .join(shRare.select($"doc_id".as("doc_a"), $"sh"), Seq("doc_a"))
-          .join(shRare.select($"doc_id".as("doc_b"), $"sh"),
-            Seq("doc_b", "sh"))
-          .groupBy($"doc_a", $"doc_b")
-          .agg(count(lit(1)).as("shared_rare"))
-        cand.join(sharedRare, Seq("doc_a", "doc_b"), "left")
-          .withColumn("shared_rare", coalesce($"shared_rare", lit(0L)))
-      }
+    // A pair may arrive from both indexes (two mostly-hot docs CAN share
+    // a rare tail shingle); dedupe by max(shared_rare): the rare-index
+    // row carries the exact count, the fallback row 0 (a fallback-ONLY
+    // pair shares no rare shingle, else the rare join would emit it).
+    val candShared = shingleCandidates(shDf, maxDf)
+      .unionByName(candHot.withColumn("shared_rare", lit(0L)))
+      .groupBy($"doc_a", $"doc_b")
+      .agg(max($"shared_rare").as("shared_rare"))
     // hot top-up THROUGH the candidate pairs (never a free hot⋈hot
     // self-join, which would reintroduce the df² fan-out the cutoff
     // exists to stop)
@@ -2083,9 +1940,9 @@ object TextPipeline {
     * legs all branch above the one df-window exchange (the q27 device).
     * Per-doc postings are ≤ (1−t)·n+1 ≈ 10% of the doc, each joining
     * ≤ maxDf postings of its shingle: candidate volume is
-    * Σ_doc p_doc·(maxDf−1) — hard-linear in the corpus, the same budget
-    * class as q27's sketched path. `shared` then comes from a
-    * candidate-bounded top-up join, never a free rare⋈rare self-join. */
+    * Σ_doc p_doc·(maxDf−1) — hard-linear in the corpus. `shared` then
+    * comes from a candidate-bounded top-up join, never a free rare⋈rare
+    * self-join. */
   def containmentNearDup(spark: SparkSession, dir: String,
       maxDf: Int = MAX_SHINGLE_DF): DataFrame = {
     import spark.implicits._

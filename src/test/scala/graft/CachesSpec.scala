@@ -142,7 +142,7 @@ class CachesSpec extends SparkSpec {
     // the input files; a private map keyed by dir serves a stale value
     // once the corpus is rewritten in place. A map under any spelling
     // (imported or fully qualified, with type arguments or without) is
-    // caught; a concurrent key set (a log-once guard) is not a memo.
+    // caught; a concurrent key set is not a memo.
     val hits = SessionsSpec.codeHits(
       """ConcurrentHashMap[\[(]|TrieMap|computeIfAbsent""".r,
       _.startsWith("graft/ops"))

@@ -250,11 +250,12 @@ class PipelineSpec extends SparkSpec {
     }.toMap
     val order = Pipeline.REPORTS.map(_._1)
     Pipeline.DERIVED.foreach { case (name, (source, _)) =>
-      // over a copy of the stale output, rewriting `source` stalls until
-      // the report after `name` in REPORTS starts writing: the stall
-      // holds one pool thread, so every report queued ahead of that one,
-      // including a `name` that did not wait for its source, runs against
-      // the stale `source`
+      // over a copy of the stale output, swapping the rewritten `source`
+      // in stalls until the report after `name` in REPORTS starts
+      // writing: the stall holds one pool thread, so every report queued
+      // ahead of that one, including a `name` that did not wait for its
+      // source, runs against the stale `source` (or, once the swap has
+      // moved it aside, against none)
       val out = copyTree(staleOut)
       StallFs.arm(source, order(order.indexOf(name) + 1))
       Pipeline.run(spark, src, s"stallfs://$out")
@@ -379,18 +380,21 @@ class PipelineSpec extends SparkSpec {
 }
 
 /** The local filesystem under the `stallfs:` scheme, with one stall once
-  * [[StallFs.arm]]`(source, releaser)` has been called: the delete an
-  * overwrite of a `source` directory starts with waits until a `releaser`
-  * directory is created (or a minute passes). */
+  * [[StallFs.arm]]`(source, releaser)` has been called: the rename that
+  * swaps a staged `source` report in (`source.staging` → `source`, the
+  * last step of [[graft.sources.Sinks.overwriteInPlace]]) waits until the
+  * `releaser` report's staged write creates its first directory (or a
+  * minute passes). */
 class StallFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   import org.apache.hadoop.fs.Path
   import org.apache.hadoop.fs.permission.FsPermission
   override def getScheme: String = "stallfs"
   override def getUri: java.net.URI = java.net.URI.create("stallfs:///")
-  override def delete(p: Path, recursive: Boolean): Boolean = {
-    if (p.getName == StallFs.source)
+  override def rename(src: Path, dst: Path): Boolean = {
+    if (dst.getName == StallFs.source &&
+        src.getName == s"${StallFs.source}.staging")
       StallFs.gate.await(1, java.util.concurrent.TimeUnit.MINUTES)
-    super.delete(p, recursive)
+    super.rename(src, dst)
   }
   // a write's job setup calls the one-argument mkdirs, which does not
   // delegate to the two-argument one
@@ -403,7 +407,7 @@ class StallFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     super.mkdirs(p, perm)
   }
   private def release(p: Path): Unit =
-    if (p.toUri.getPath.contains(s"/${StallFs.releaser}/"))
+    if (p.toUri.getPath.contains(s"/${StallFs.releaser}.staging/"))
       StallFs.gate.countDown()
 }
 

@@ -21,6 +21,16 @@ class SessionsSpec extends AnyFunSuite {
       s"$call outside Sessions.scala; route these through " +
         s"Sessions.builder(): ${callers.filterNot(_ == "graft/Sessions.scala")}")
   }
+
+  test("operators, streaming maintainers and sinks print nothing") {
+    // they report through their return values and Metrics; a console line
+    // from library code reaches every embedding application's stderr
+    val hits = SessionsSpec.codeHits("""System\.(err|out)|\bprint(ln|f)?\(""".r,
+      p => Seq("graft/ops", "graft/streaming", "graft/sources")
+        .exists(d => p.startsWith(d)))
+    assert(hits.isEmpty, s"${hits.size} code lines print:\n" +
+      hits.mkString("\n"))
+  }
 }
 
 object SessionsSpec {

@@ -181,11 +181,32 @@ class TextPipelineSpec extends SparkSpec {
     val boiler = fixtureDir(
       "documents" -> (1 to 10).map(i =>
         Doc(i, s"copyright acme corp u$i v$i w$i x$i")).toDF())
-    val sh = TextPipeline.shingles(spark, boiler)
+    val sh = TextPipeline.dfTagged(TextPipeline.shingles(spark, boiler))
     assert(TextPipeline.shingleCandidates(sh, maxDf = 5).count() == 0)
     // sanity: with the cutoff above the planted df the pairs DO meet (and
     // are then correctly rejected by the Jaccard rerank, not the index).
     assert(TextPipeline.shingleCandidates(sh, maxDf = 64).count() == 45)
+  }
+
+  test("building a near-dup plan starts no Spark job") {
+    // A fresh dir, so nothing about it is memoized. The snapshot resolves
+    // documents (its schema inference is a job) before the group opens;
+    // any job in the group then comes from building the plans.
+    val d = fixtureDir("documents" -> (1 to 6).map(i =>
+      Doc(i, s"alpha beta gamma delta epsilon u$i")).toDF())
+    val snap = new Tables.Snapshot(spark, d)
+    snap(Tables(spark, d, "documents"))
+    val sc = spark.sparkContext
+    val group = s"neardup-plan-${System.nanoTime}"
+    sc.setJobGroup(group, "build near-dup plans")
+    try snap {
+      TextPipeline.shingleNearDup(spark, d)
+      TextPipeline.curationVerdict(spark, d)
+    } finally sc.clearJobGroup()
+    org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    try assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "building the plans ran Spark jobs")
+    finally Caches.release(TextPipeline.dedupBaseTag(d))
   }
 
   test("hot shingles excluded from candidacy still count toward Jaccard") {
@@ -454,72 +475,6 @@ class TextPipelineSpec extends SparkSpec {
     assert(cCapped.groupBy(_._2).values.map(_.keySet).toSet ==
       Set(Set(1L, 2L), (3L to 12L).toSet),
       s"the documented chain split, exactly: $cCapped")
-  }
-
-  test("sketched rare index bounds candidates per doc and keeps true pairs") {
-    // 12 docs share a moderately-rare 4-token prefix (its shingles have
-    // df = 12, under maxDf = 64, so the FULL rare index would join all
-    // C(12,2) = 66 pairs) and are otherwise unique. With probes = 2 each
-    // doc posts only its 2 smallest-by-hash shingles, so the sketch can
-    // generate at most probes·(df−1)·n/2 pairs and in practice far fewer
-    // — the per-doc bound the round-10 sparsification exists for. Docs
-    // 100/101 are near-identical (one-token tail difference): their
-    // sketches must still intersect and the pair must surface with its
-    // EXACT full-set Jaccard.
-    val t = (1 to 12).map(i => s"t$i").mkString(" ")
-    val d = fixtureDir("documents" -> (
-      (1 to 12).map(i => Doc(i, s"p1 p2 p3 p4 u${i}a u${i}b u${i}c")) ++
-        Seq(Doc(100, s"$t end1"), Doc(101, s"$t end2"))).toDF())
-    val sh = TextPipeline.shingles(spark, d)
-    val full = 12 * 11 / 2
-    val sketched = TextPipeline.shingleCandidates(sh, maxDf = 64, probes = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(sketched.size < full,
-      s"sketch must thin the ${full}-pair prefix clique, got ${sketched.size}")
-    // per-doc candidate bound: probes · (maxDf − 1) with df = 12 ⇒ ≤ 22
-    val perDoc = sketched.toSeq.flatMap(p => Seq(p._1, p._2))
-      .groupBy(identity).map(_._2.size)
-    assert(perDoc.forall(_ <= 2 * 11), s"per-doc bound violated: $perDoc")
-    val pairs = TextPipeline.shingleNearDup(spark, d).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(pairs.contains((100L, 101L)),
-      s"near-identical pair lost by the sketch: ${pairs.keySet}")
-    // 11 shared of 13 union (12-token run + distinct tails ⇒ 10+1+1... the
-    // exact value the full-set top-up must reproduce: shared/(na+nb-shared)
-    val j = pairs((100L, 101L))
-    assert(j >= 0.8 && j < 1.0, s"jaccard $j")
-  }
-
-  test("size gate: direct and sketched candidate paths agree exactly") {
-    // The round-11 corpus-size gate picks the DIRECT df-bounded index
-    // below SKETCH_MIN_DOCS and the round-10 sketch above it. Both paths
-    // must produce the same pair set with the same exact Jaccard on a
-    // fixture that exercises every candidate source at once: a rare
-    // near-dup pair (8,9), a >maxDf hot cluster (1..5, zero-rare), a
-    // rare-tailed twin for the mostly-hot gate, and independent docs.
-    val t12 = (1 to 12).map(i => s"p$i")
-    val d = fixtureDir("documents" -> (
-      (1 to 5).map(i => Doc(i, "dup dup2 dup3 dup4 dup5 dup6")) ++ Seq(
-        Doc(6, "six alpha beta gamma"),
-        Doc(7, "seven delta epsilon zeta"),
-        Doc(8, t12.mkString(" ")),
-        Doc(9, (t12.init :+ "OTHER").mkString(" ")),
-        Doc(10, "dup dup2 dup3 dup4 dup5 dup6 uniquetail"))).toDF())
-    // explicit gate parameter (ADVICE round 11: no global
-    // System.setProperty toggle — parallel-suite-safe by construction)
-    def run(gate: Long): Seq[((Long, Long), Double)] =
-      TextPipeline.shingleNearDup(spark, d, maxDf = 2,
-        sketchGate = Some(gate)).collect().toSeq
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-    val direct = run(Long.MaxValue) // gate never met → direct index
-    val sketched = run(0L) // gate always met → sketched postings
-    assert(direct.nonEmpty, "fixture must produce pairs")
-    assert(direct == sketched,
-      s"paths disagree:\n direct  $direct\n sketched $sketched")
-    // and the default gate on a 10-doc fixture takes the direct path,
-    // producing the same result as the forced-direct run
-    assert(TextPipeline.shingleNearDup(spark, d, maxDf = 2).collect().toSeq
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)) == direct)
   }
 
   test("component representatives elect the longest member, not the min id") {
