@@ -42,8 +42,8 @@ object CurationPipeline {
     new Tables.Snapshot(spark, dir).apply {
       // the verdict is the pipeline's dominant plan (the q62 dedup
       // composition) and is consumed twice — by the shard write and by the
-      // manifest count — so it is cached for the run's duration; id-and-
-      // metadata-sized, never the text
+      // manifest's per-source count — so it is cached for the run's
+      // duration; id-and-metadata-sized, never the text
       val verdictTag = s"curationpipeline.verdict:$dir"
       val verdict = Caches.track(verdictTag, ops.TextPipeline.curationVerdict(spark, dir))
       try {
@@ -59,10 +59,14 @@ object CurationPipeline {
         val nSharded =
           Sinks.writeShards(shardInput, s"$outDir/shards", "doc_id", nShards)
         val nCorpus = Tables(spark, dir, "documents").count()
-        val nCurated = verdict.count()
-        val nCapped = capped.count()
+        // both stage counts from one aggregate over the cached verdict:
+        // capFilter's row_number keeps exactly min(nₛ, cap) of a source's
+        // nₛ curated rows, so n_curated = Σ nₛ and n_capped = Σ min(nₛ, cap)
+        val counts = verdict.groupBy($"source").agg(count(lit(1)).as("n"))
+          .agg(sum($"n"), sum(least($"n", lit(sourceCap.toLong))))
+          .na.fill(0L).head()
         val manifest = Seq(
-          (nCorpus, nCurated, nCapped, nSharded, nShards.toLong)
+          (nCorpus, counts.getLong(0), counts.getLong(1), nSharded, nShards.toLong)
         ).toDF("n_corpus", "n_curated", "n_capped", "n_sampled", "n_shards")
         manifest.coalesce(1).write.mode(SaveMode.Overwrite)
           .parquet(s"$outDir/manifest")

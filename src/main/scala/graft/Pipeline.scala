@@ -34,7 +34,7 @@ import graft.sources.Sinks
   *    its schema inferred once per run, and `hasNewData` and every report
   *    read the same file set. No other read infers a schema: a derived
   *    report reads its source with the schema it was written with, and
-  *    the delta path reads a stored trend report with the schema of the
+  *    the delta path reads the stored daily report with the schema of the
   *    run's own trend plan;
   *  - each report's row count is counted on its own write
   *    ([[sources.Sinks.counted]]); no output is read back to count it;
@@ -51,17 +51,18 @@ import graft.sources.Sinks
   *  - reports are LAZY DataFrame DAGs materialized by their writes (the
   *    reference materializes every intermediate eagerly in RAM);
   *  - `incrementalSince` honors the T1 empty-batch short-circuit
-  *    (`main.py:68-70`). When new data exists, the three calendar-trend
-  *    reports take the TRUE row-subset delta path when their previous
-  *    output exists at `outDir`: [[ops.Movement.trendDelta]] merges the
-  *    stored report with only the post-checkpoint buckets (pushed-down
-  *    predicate scan) and re-densifies — oracle-proven ≡ the full
-  *    recompute (q56). Every other report RECOMPUTES in full:
+  *    (`main.py:68-70`). When new data exists, `daily_trends` takes the
+  *    TRUE row-subset delta path when its previous output exists at
+  *    `outDir`: [[ops.Movement.trendDelta]] merges the stored report with
+  *    only the post-checkpoint days (pushed-down predicate scan) and
+  *    re-densifies — oracle-proven ≡ the full recompute (q56). The
+  *    coarser calendars and the peaks derive from the daily report this
+  *    run wrote ([[DERIVED]]). Every other report RECOMPUTES in full:
   *    recompute-over-the-ledger is the engine's batch philosophy (A14)
   *    for reports whose delta is not cheaper than their aggregate
   *    (single-row summaries, full-ledger windows). The summary row
-  *    records `incremental_delta` when at least one report took the
-  *    delta path, `incremental_recompute` otherwise — the mode is never
+  *    records `incremental_delta` when the daily report took the delta
+  *    path, `incremental_recompute` otherwise — the mode is never
   *    misrepresented. The row-subset scan itself is also exposed as
   *    [[ops.Incremental.incrementalEvents]] (q37) and the streaming
   *    ledger (T3);
@@ -77,15 +78,10 @@ import graft.sources.Sinks
   */
 object Pipeline {
 
-  /** The calendar-trend reports and their (unit, step), in report
-    * order — the reports with a genuine row-subset delta (merging new
-    * buckets into a stored calendar is cheaper than rescanning the
-    * ledger; for everything else delta ≈ recompute). */
-  val TREND_REPORTS: Map[String, (String, String)] =
-    scala.collection.immutable.ListMap(
-      "daily_trends" -> (("day", "1 day")),
-      "weekly_trends" -> (("week", "1 week")),
-      "monthly_trends" -> (("month", "1 month")))
+  /** The reports with a genuine row-subset delta: the daily calendar
+    * (merging new days into it is cheaper than rescanning the ledger). */
+  val TREND_REPORTS: Map[String, (SparkSession, String) => DataFrame] =
+    Map("daily_trends" -> (ops.Movement.trend(_, _)))
 
   /** The reference's twelve named reports
     * (`wsm/etl_pipeline/load/data_loader.py:33-38`) → engine queries. */
@@ -93,10 +89,11 @@ object Pipeline {
     Seq[(String, (SparkSession, String) => DataFrame)](
       "dead_stock_report" -> (ops.Inventory.deadStockReport(_, _)),
       "inventory_summary" -> (ops.Inventory.inventorySummary(_, _))) ++
-    TREND_REPORTS.toSeq.map { case (name, (unit, step)) =>
-      name -> ((s: SparkSession, d: String) =>
-        ops.Movement.trend(s, d, unit, step))
-    } ++ Seq[(String, (SparkSession, String) => DataFrame)](
+    TREND_REPORTS.toSeq ++ Seq[(String, (SparkSession, String) => DataFrame)](
+      "weekly_trends" -> ((s, d) =>
+        ops.Movement.rollUp(ops.Movement.trend(s, d), "week")),
+      "monthly_trends" -> ((s, d) =>
+        ops.Movement.rollUp(ops.Movement.trend(s, d), "month")),
       "peak_day_of_week" -> (ops.Movement.peakDayOfWeek(_, _)),
       "peak_month" -> (ops.Movement.peakMonth(_, _)),
       "abc_analysis" -> (ops.Financial.abcAnalysis(_, _)),
@@ -106,12 +103,15 @@ object Pipeline {
       "warehouse_io_summary" -> (ops.Warehouse.ioPivot(_, _)))
 
   /** Reports that are pure aggregations of another report written earlier
-    * in the SAME run: derived from the just-written output (a calendar or
-    * a per-cell valuation, far smaller than the fact) instead of
-    * re-scanning the fact. Each waits for its source's write ([[run]]). */
+    * in the SAME run: derived from the just-written output (the daily
+    * calendar or a per-cell valuation, far smaller than the fact) instead
+    * of re-scanning the fact. Each waits for its source's write ([[run]]);
+    * no source is itself derived. */
   val DERIVED: Map[String, (String, DataFrame => DataFrame)] = Map(
+    "weekly_trends" -> (("daily_trends", ops.Movement.rollUp(_, "week"))),
+    "monthly_trends" -> (("daily_trends", ops.Movement.rollUp(_, "month"))),
     "peak_day_of_week" -> (("daily_trends", ops.Movement.peakFromDaily _)),
-    "peak_month" -> (("monthly_trends", ops.Movement.peakFromMonthly _)),
+    "peak_month" -> (("daily_trends", ops.Movement.peakMonthFromDaily _)),
     "financial_summary" -> (("stock_value_report", ops.Financial.summaryOf _)))
 
   requireSourcesFirst(REPORTS.map(_._1),
@@ -136,11 +136,11 @@ object Pipeline {
     * Incremental caller contract: `incrementalSince` is the checkpoint
     * the PREVIOUS run covered (its reports hold exactly the events ≤
     * that timestamp) and the event ledger is append-only — then the
-    * trend delta path is exact (see [[ops.Movement.trendDelta]]). A
-    * stored trend report holding a bucket after the checkpoint's own
-    * bucket fails the run, naming the report and the checkpoint. Events
-    * after the checkpoint that fall inside its own bucket cannot be seen
-    * from the report; they are merged a second time. */
+    * daily trend delta path is exact (see [[ops.Movement.trendDelta]]).
+    * A stored daily report holding a day after the checkpoint's own day
+    * fails the run, naming the report and the checkpoint. Events after
+    * the checkpoint that fall inside its own day cannot be seen from the
+    * report; they are merged a second time. */
   def run(
       spark: SparkSession,
       dataDir: String,
@@ -158,8 +158,8 @@ object Pipeline {
     // Postgres). The trend delta path stays parquet-only (it re-reads its
     // own previous output; a warehouse-side merge is the warehouse's job).
     val jdbcOut = outDir.startsWith("jdbc:")
-    // the trend reports that merge into their previous output, decided
-    // before this run writes anything
+    // the reports that merge into their previous output, decided before
+    // this run writes anything
     val deltas: Set[String] = incrementalSince match {
       case Some(_) if !jdbcOut =>
         val fs = new Path(outDir).getFileSystem(
@@ -183,15 +183,14 @@ object Pipeline {
             if (jdbcOut) written(spark, outDir, src)
             else stored(src, wroteSchema.get(src)))
         case (None, Some(since)) if deltas(name) =>
-          // row-subset path: stored report ⊎ post-checkpoint buckets, the
+          // row-subset path: stored report ⊎ post-checkpoint days, the
           // stored report read with this run's own trend schema (analysis
-          // only: the snapshot has resolved `events`); a stored bucket
-          // past the checkpoint's own fails the write (no extra job)
-          val (unit, step) = TREND_REPORTS(name)
+          // only: the snapshot has resolved `events`); a stored day past
+          // the checkpoint's own fails the write (no extra job)
           val b = col("bucket")
-          ops.Movement.trendDelta(spark, dataDir, unit, step, since,
+          ops.Movement.trendDelta(spark, dataDir, since,
             stored(name, fn(spark, dataDir).schema).withColumn("bucket",
-              when(b > date_trunc(unit, to_timestamp(lit(since))), raise_error(lit(
+              when(b > date_trunc("day", to_timestamp(lit(since))), raise_error(lit(
                 s"Pipeline.run: stored $name holds a bucket after the " +
                   s"incremental checkpoint $since"))).otherwise(b)))
         case _ => fn(spark, dataDir)

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.{Dx, Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -153,32 +152,20 @@ object Financial {
 
   /** Stock valuation per (part, supplier) cell: quantity-on-hand proxy ×
     * per-part weighted cost (C8; the reference joins a cost table, J3 —
-    * here both sides derive from the same fact, so a SINGLE scan computes
-    * cell sums and a per-part window rolls them up; the genuine left-join +
-    * coalesce-0 J3 shape lives in [[Udtf.calculateStockValue]], where the
-    * cost pool comes from a different table).
+    * here both sides derive from the same fact, so the cell aggregate
+    * [[Inventory.cellStats]] is valued in place by [[Inventory.valued]]'s
+    * per-part window; the genuine left-join + coalesce-0 J3 shape lives in
+    * [[Udtf.calculateStockValue]], where the cost pool comes from a
+    * different table).
     *
     * 100 TB plan: one scan of lineitem → partial+final hash agg keyed
-    * (part, supplier) → window partitionBy(part) over the already-aggregated
-    * cells (same key prefix, a dimension-sized exchange, no fact re-scan, no
-    * broadcast of a fact-derived aggregate, which would not scale). All
-    * sums stay DECIMAL inside the window so the rollup is order-independent
-    * and equals the oracle's direct per-part aggregation exactly. */
+    * (part, supplier), the cell columns this report does not read pruned
+    * away → window partitionBy(part) over the already-aggregated cells
+    * (same key prefix, a dimension-sized exchange, no fact re-scan, no
+    * broadcast of a fact-derived aggregate, which would not scale). */
   def stockValue(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val cells = Tables(spark, dir, "lineitem")
-      .groupBy($"l_partkey".as("part_id"), $"l_suppkey".as("supplier_id"))
-      .agg(
-        Dx.decSum(expr("l_quantity")).as("qty_dec"),
-        Dx.decSum(expr("l_extendedprice")).as("cost_dec"))
-    val perPart = Window.partitionBy($"part_id")
-    cells
-      .withColumn("part_qty", sum($"qty_dec").over(perPart).cast("double"))
-      .withColumn("part_cost", sum($"cost_dec").over(perPart).cast("double"))
-      .withColumn("avg_cost",
-        when($"part_qty" === 0.0, 0.0).otherwise($"part_cost" / $"part_qty"))
-      .withColumn("quantity_on_hand", $"qty_dec".cast("double"))
-      .withColumn("stock_value", $"quantity_on_hand" * $"avg_cost")
+    Inventory.valued(Inventory.cellStats(spark, dir), $"qty_dec".cast("double"))
       .select("part_id", "supplier_id", "quantity_on_hand", "avg_cost", "stock_value")
       .orderBy($"part_id", $"supplier_id")
   }

@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.{Dx, Query, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Inventory metrics — the reference's inventory_metrics module (its
@@ -28,9 +29,10 @@ import org.apache.spark.sql.functions._
   * reference's separate last-movement aggregate and J1 left join collapse
   * into `max(when(logged, date))` over the same hash agg (null where no
   * logged movement, exactly the left-join-miss semantics). Every consumer
-  * in this module (q09 and all four q10 inputs) derives from that one
-  * aggregate, and Spark's ReuseExchange collapses the shared subtree, so
-  * q10's physical plan reads the fact ONCE.
+  * in this module (q09 and all four q10 inputs) and q05's valuation
+  * ([[Financial.stockValue]]) derive from that one aggregate, and Spark's
+  * ReuseExchange collapses the shared subtree, so q10's physical plan
+  * reads the fact ONCE.
   * Scalars are 1-row aggs cross-joined (auto-broadcast).
   */
 object Inventory {
@@ -64,11 +66,26 @@ object Inventory {
         min(when(logged, $"l_shipdate")).as("first_logged_date"))
   }
 
+  /** The valuation of [[cellStats]] cells (q05, q10): `quantity_on_hand`
+    * := `quantity`; `avg_cost` := the part's Σcost / Σqty (0 where Σqty is
+    * 0), summed DECIMAL in the window, so exact and order-independent;
+    * `stock_value` := quantity_on_hand × avg_cost. */
+  private[ops] def valued(cells: DataFrame, quantity: Column): DataFrame = {
+    val perPart = Window.partitionBy(col("part_id"))
+    cells
+      .withColumn("part_qty", sum(col("qty_dec")).over(perPart).cast("double"))
+      .withColumn("part_cost", sum(col("cost_dec")).over(perPart).cast("double"))
+      .withColumn("avg_cost", when(col("part_qty") === 0.0, 0.0)
+        .otherwise(col("part_cost") / col("part_qty")))
+      .withColumn("quantity_on_hand", quantity)
+      .withColumn("stock_value", col("quantity_on_hand") * col("avg_cost"))
+  }
+
   /** All stock cells flagged with is_dead_stock (the pre-filter table).
     * `asOf` is any date-castable Column — defaults to the pinned [[AS_OF]];
     * pass `current_date()` for live now() semantics. */
   def deadStockFlags(spark: SparkSession, dir: String,
-      asOf: org.apache.spark.sql.Column = lit(AS_OF)): DataFrame = {
+      asOf: Column = lit(AS_OF)): DataFrame = {
     import spark.implicits._
     cellStats(spark, dir)
       .withColumn("quantity_on_hand", $"qty_dec".cast("double"))
@@ -84,7 +101,7 @@ object Inventory {
   /** q09: the dead-stock report (only dead rows, like the reference's
     * `data_frames['dead_stock_report']`). */
   def deadStockReport(spark: SparkSession, dir: String,
-      asOf: org.apache.spark.sql.Column = lit(AS_OF)): DataFrame = {
+      asOf: Column = lit(AS_OF)): DataFrame = {
     import spark.implicits._
     deadStockFlags(spark, dir, asOf)
       .filter($"is_dead_stock")
@@ -129,7 +146,7 @@ object Inventory {
     * reference's div-0 guards and two-decimal presentation
     * (`inventory_metrics.py:48-74`). */
   def inventorySummary(spark: SparkSession, dir: String,
-      asOf: org.apache.spark.sql.Column = lit(AS_OF)): DataFrame = {
+      asOf: Column = lit(AS_OF)): DataFrame = {
     import spark.implicits._
     // J4: the reference prices dead stock by joining the valuation table on
     // the cell key; here the valuation derives from the SAME cell aggregate,
@@ -141,13 +158,7 @@ object Inventory {
     // separate scalar aggs would re-scan the fact per branch, because
     // column pruning makes each branch's aggregate canonically different —
     // conditional aggregation over one pass is the scale-correct shape.
-    val perPart = org.apache.spark.sql.expressions.Window.partitionBy($"part_id")
-    deadStockFlags(spark, dir, asOf)
-      .withColumn("part_qty", sum($"qty_dec").over(perPart).cast("double"))
-      .withColumn("part_cost", sum($"cost_dec").over(perPart).cast("double"))
-      .withColumn("stock_value",
-        $"quantity_on_hand" *
-          when($"part_qty" === 0.0, 0.0).otherwise($"part_cost" / $"part_qty"))
+    valued(deadStockFlags(spark, dir, asOf), $"quantity_on_hand")
       .agg(
         count(when($"is_dead_stock", lit(1))).cast("long")
           .as("total_dead_stock_items"),
@@ -228,7 +239,7 @@ object Inventory {
     * agg; the bucket rollup collapses cell-grain to ≤5 rows, decimals
     * stay decimal until the final cast. */
   def stockAging(spark: SparkSession, dir: String,
-      asOf: org.apache.spark.sql.Column = lit(AS_OF)): DataFrame = {
+      asOf: Column = lit(AS_OF)): DataFrame = {
     import spark.implicits._
     deadStockFlags(spark, dir, asOf)
       .filter($"quantity_on_hand" > 0.0)

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** Movement analytics — the reference's movement_analytics module
   * (`wsm/etl_pipeline/transform/movement_analytics.py:15-36`): resample the
-  * OUT-movement stream into calendar Daily/Weekly/Monthly buckets, then rank
+  * OUT-movement stream into one gap-filled Daily calendar, roll that up
+  * into the Weekly and Monthly calendars ([[Movement.rollUp]]), then rank
   * day-of-week / month averages.
   *
   * Operators covered (SURVEY.md §2): F5 type filter, A11 calendar bucket
@@ -29,11 +30,9 @@ import org.apache.spark.sql.functions._
   * default locale — determinism across heterogeneous clusters.
   *
   * 100 TB plan: ONE scan of the fact feeds a partial+final hash agg keyed by
-  * the truncated bucket — bucket cardinality is calendar-bounded (≤ a few
-  * thousand rows for decades of data), so everything after the first
-  * aggregation is dimension-sized: the calendar spine (`sequence`+`explode`
-  * of a 1-row min/max agg) and the gap-fill left join are broadcast-sized,
-  * no second fact scan, no unpartitioned window.
+  * the day — calendar-bounded (≤ a few thousand rows for decades of data),
+  * so the gap-fill, the roll-ups and the peak tables are dimension-sized
+  * work over the daily calendar, never over events.
   */
 object Movement {
 
@@ -50,65 +49,56 @@ object Movement {
   private val hotSql =
     s"SELECT * FROM events WHERE event_type = '$HOT_TYPE' AND value >= $HOT_MIN_VALUE"
 
-  /** Calendar-bucketed counts with gap-fill (A11): truncate to `unit`,
-    * aggregate, then densify — each bucket learns its successor via a
-    * `lead` window and emits itself plus a zero row for every missing
-    * calendar step up to (not including) the successor. ONE pass over the
-    * aggregate: no persist, no spine self-join, no cache-lifetime caller
-    * contract that a caller could leak. The `lead` window is
-    * unpartitioned but runs over the AGGREGATED buckets, whose cardinality
-    * is calendar-bounded (≤ a few thousand rows for decades of data at any
-    * fact scale). */
-  def trend(spark: SparkSession, dir: String, unit: String, step: String): DataFrame =
-    trendOfEvents(hot(spark, dir), unit, step)
+  /** Gap-filled daily counts (A11): truncate to the day, aggregate, then
+    * densify — each bucket learns its successor via a `lead` window and
+    * emits itself plus a zero row for every missing day up to (not
+    * including) the successor. ONE pass over the aggregate: no persist,
+    * no spine self-join. The `lead` window is unpartitioned but runs over
+    * the AGGREGATED, calendar-bounded buckets. */
+  def trend(spark: SparkSession, dir: String): DataFrame =
+    trendOfEvents(hot(spark, dir))
 
   /** The stored-report simulation for the delta test/query: the trend a
     * previous pipeline run would have written from events ≤ `until` —
     * the complement of the T1 `ts > checkpoint` delta scan. */
-  def trendUntil(spark: SparkSession, dir: String,
-      unit: String, step: String, until: String): DataFrame = {
-    import spark.implicits._
-    trendOfEvents(hot(spark, dir).filter($"ts" <= to_timestamp(lit(until))),
-      unit, step)
-  }
+  def trendUntil(spark: SparkSession, dir: String, until: String): DataFrame =
+    trendOfEvents(hot(spark, dir).filter(col("ts") <= to_timestamp(lit(until))))
 
   /** [[trend]] over an arbitrary event frame (ts, value) — also the entry
     * for tests and streaming callers that already hold the filtered
     * stream. */
-  def trendOfEvents(events: DataFrame, unit: String, step: String): DataFrame =
-    gapFill(buckets(events, unit), step)
+  def trendOfEvents(events: DataFrame): DataFrame = gapFill(buckets(events))
 
-  /** The calendar-bucket aggregate of an event frame (ts, value):
-    * (b, n_events, v_dec DECIMAL) per `date_trunc(unit, ts)` — the one
+  /** The daily aggregate of an event frame (ts, value):
+    * (b, n_events, v_dec DECIMAL) per `date_trunc('day', ts)` — the one
     * aggregation both the full recompute and the delta merge fold. */
-  private def buckets(events: DataFrame, unit: String): DataFrame = {
+  private def buckets(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     events
-      .groupBy(date_trunc(unit, $"ts").as("b"))
+      .groupBy(date_trunc("day", $"ts").as("b"))
       .agg(
         count(lit(1)).cast("long").as("n_events"),
         Dx.dec(Dx.decSum($"value")).as("v_dec"))
   }
 
-  /** The densify half of A11 over an aggregated bucket frame
+  /** The densify half of A11 over an aggregated daily frame
     * (b, n_events, v_dec DECIMAL) — shared by the full recompute and the
     * delta merge. Emits BOTH value representations: `total_value_dec`
     * ([[Dx.Dec]]: 24 integer digits hold any realizable value
-    * magnitude; the exact stored truth every later merge consumes —
-    * this is what removes the old ~1e9 double round-trip bound) and
-    * `total_value` (the presentation double the reports and oracles
-    * compare). Registered queries drop the decimal twin; WRITTEN reports
-    * keep it. */
-  private def gapFill(buckets: DataFrame, step: String): DataFrame = {
+    * magnitude; the exact stored truth every later merge and roll-up
+    * consumes) and `total_value` (the presentation double the reports
+    * and oracles compare). Registered queries drop the decimal twin;
+    * WRITTEN reports keep it. */
+  private def gapFill(buckets: DataFrame): DataFrame = {
     import buckets.sparkSession.implicits._
-    val stepI = expr(s"interval $step")
+    val day = expr("interval 1 day")
     buckets
       .withColumn("next_b", lead($"b", 1).over(Window.orderBy($"b")))
       .select(
         $"b", $"n_events", $"v_dec",
-        // [b, next_b) stepped by the calendar unit; the final bucket
-        // (next_b null) emits only itself.
-        explode(sequence($"b", coalesce($"next_b" - stepI, $"b"), stepI))
+        // [b, next_b) stepped by one day; the final bucket (next_b null)
+        // emits only itself.
+        explode(sequence($"b", coalesce($"next_b" - day, $"b"), day))
           .as("bucket"))
       .select(
         $"bucket",
@@ -119,15 +109,31 @@ object Movement {
       .orderBy($"bucket")
   }
 
-  /** T1 row-subset incremental transform for the trend reports: merge the
-    * PREVIOUSLY-STORED gap-filled report with the buckets of only the
-    * events newer than `checkpoint` (a pushed-down predicate scan — the
-    * fact is never rescanned below the checkpoint), then re-densify.
-    * Result ≡ the full recompute (q56's oracle IS the full-recompute
-    * SQL), because the stored report carries exact per-bucket partial
-    * sums for everything ≤ checkpoint — including its explicit zero
-    * rows — and the gap-fill closes any calendar hole between the old
-    * span and the new buckets.
+  /** The weekly or monthly calendar (A11) of a gap-filled daily frame, in
+    * the daily frame's columns and types — exactly the gap-filled `unit`
+    * calendar: decimal sums add without rounding, and the daily calendar
+    * has a row for every day between the first and last event, so every
+    * week or month in that range, empty ones included, gets one row. */
+  def rollUp(daily: DataFrame, unit: String): DataFrame = {
+    import daily.sparkSession.implicits._
+    daily
+      .groupBy(date_trunc(unit, $"bucket").as("bucket"))
+      .agg(
+        sum($"n_events").cast("long").as("n_events"),
+        Dx.dec(sum($"total_value_dec")).as("total_value_dec"))
+      .withColumn("total_value", $"total_value_dec".cast("double"))
+      .orderBy($"bucket")
+  }
+
+  /** T1 row-subset incremental transform for the daily trend report:
+    * merge the PREVIOUSLY-STORED gap-filled report with the buckets of
+    * only the events newer than `checkpoint` (a pushed-down predicate
+    * scan — the fact is never rescanned below the checkpoint), then
+    * re-densify. Result ≡ the full recompute (q56's oracle IS the
+    * full-recompute SQL), because the stored report carries exact
+    * per-day partial sums for everything ≤ checkpoint — including its
+    * explicit zero rows — and the gap-fill closes any calendar hole
+    * between the old span and the new buckets.
     *
     * Caller contract (the reference's checkpoint semantics,
     * `config.yaml:15`): `stored` was built from exactly the events with
@@ -136,24 +142,22 @@ object Movement {
     * merge consumes it — exact at ANY magnitude. A stored report holding
     * only the presentation double (foreign writers) falls back to the
     * double→decimal cast, exact while magnitude stays under ~10⁹. */
-  def trendDelta(spark: SparkSession, dir: String, unit: String, step: String,
+  def trendDelta(spark: SparkSession, dir: String,
       checkpoint: String, stored: DataFrame): DataFrame = {
     import spark.implicits._
     mergeTrend(stored,
-      hot(spark, dir).filter($"ts" > to_timestamp(lit(checkpoint))),
-      unit, step)
+      hot(spark, dir).filter($"ts" > to_timestamp(lit(checkpoint))))
   }
 
   /** The merge core shared by the batch delta path and the streaming
     * foreachBatch report sink: fold an arbitrary frame of NEW events
-    * (ts, value) into a stored gap-filled trend report and re-densify.
+    * (ts, value) into a stored gap-filled daily report and re-densify.
     * Exact for ANY arrival order — a late event lands in its true
-    * calendar bucket because the stored report keeps exact per-bucket
-    * partial sums, where a watermarked window would have dropped it. */
-  def mergeTrend(stored: DataFrame, newEvents: DataFrame,
-      unit: String, step: String): DataFrame = {
+    * day because the stored report keeps exact per-day partial sums,
+    * where a watermarked window would have dropped it. */
+  def mergeTrend(stored: DataFrame, newEvents: DataFrame): DataFrame = {
     import stored.sparkSession.implicits._
-    val delta = buckets(newEvents, unit)
+    val delta = buckets(newEvents)
     // prefer the exact decimal column engine-written reports persist;
     // fall back to the presentation double for foreign reports, whether
     // the column is absent or, read under a declared schema, NULL
@@ -168,7 +172,7 @@ object Movement {
       .agg(
         sum($"n_events").cast("long").as("n_events"),
         Dx.dec(sum($"v_dec")).as("v_dec"))
-    gapFill(merged, step)
+    gapFill(merged)
   }
 
   private def trendSql(unit: String, step: String): String =
@@ -214,7 +218,7 @@ object Movement {
     * gap-filled daily series (empty days pull the mean down, exactly like
     * pandas `resample('D').count().groupby(day_name).mean()`). */
   def peakDayOfWeek(spark: SparkSession, dir: String): DataFrame =
-    peakFromDaily(trend(spark, dir, "day", "1 day"))
+    peakFromDaily(trend(spark, dir))
 
   /** A12 from an ALREADY-MATERIALIZED gap-filled daily frame (the stored
     * `daily_trends` report): the peak table is definitionally an
@@ -239,12 +243,13 @@ object Movement {
 
   /** Peak month (A13): average monthly event count per month name. */
   def peakMonth(spark: SparkSession, dir: String): DataFrame =
-    peakFromMonthly(trend(spark, dir, "month", "1 month"))
+    peakMonthFromDaily(trend(spark, dir))
 
-  /** A13 from an already-materialized monthly frame (see [[peakFromDaily]]). */
-  def peakFromMonthly(monthly: DataFrame): DataFrame = {
-    import monthly.sparkSession.implicits._
-    monthly
+  /** A13 from an already-materialized gap-filled daily frame, through its
+    * monthly [[rollUp]] (see [[peakFromDaily]]). */
+  def peakMonthFromDaily(daily: DataFrame): DataFrame = {
+    import daily.sparkSession.implicits._
+    rollUp(daily, "month")
       .groupBy(monthName($"bucket").as("month_name"))
       .agg((sum($"n_events").cast("double") / count(lit(1))).as("avg_monthly_events"))
       .orderBy($"avg_monthly_events".desc, $"month_name".asc)
@@ -289,7 +294,7 @@ object Movement {
     * calendar-bounded (the gapFill precedent) — the stats windows run
     * over day-grain rows, never events. */
   def trendOutliers(spark: SparkSession, dir: String): DataFrame =
-    outliersOf(trend(spark, dir, "day", "1 day"))
+    outliersOf(trend(spark, dir))
 
   /** The reusable scoring core over ANY gap-filled daily frame
     * (bucket, n_events, …) — the full recompute feeds it above, and an
@@ -356,15 +361,15 @@ object Movement {
     // their later merges, not the oracle surface
     Query("q11_daily_trends",
       "gap-filled daily counts+value of high-value purchases (A11/F5, empty bins emitted)",
-      (s, d) => trend(s, d, "day", "1 day").drop("total_value_dec"),
+      (s, d) => trend(s, d).drop("total_value_dec"),
       Some(trendSql("day", "1 day"))),
     Query("q12_weekly_trends",
       "gap-filled ISO-Monday weekly buckets (A11, weekly anchor declared)",
-      (s, d) => trend(s, d, "week", "1 week").drop("total_value_dec"),
+      (s, d) => rollUp(trend(s, d), "week").drop("total_value_dec"),
       Some(trendSql("week", "1 week"))),
     Query("q13_monthly_trends",
       "gap-filled calendar-month buckets (A11)",
-      (s, d) => trend(s, d, "month", "1 month").drop("total_value_dec"),
+      (s, d) => rollUp(trend(s, d), "month").drop("total_value_dec"),
       Some(trendSql("month", "1 month"))),
     Query("q14_peak_day_of_week",
       "avg daily events per weekday over the gap-filled series, sorted desc (A12/C6/O2)",
@@ -380,8 +385,8 @@ object Movement {
       // stored := what a previous run persisted from events ≤ checkpoint;
       // the oracle is the FULL recompute — the delta must be
       // indistinguishable from it
-      (s, d) => trendDelta(s, d, "day", "1 day", Incremental.CHECKPOINT,
-        trendUntil(s, d, "day", "1 day", Incremental.CHECKPOINT))
+      (s, d) => trendDelta(s, d, Incremental.CHECKPOINT,
+        trendUntil(s, d, Incremental.CHECKPOINT))
         .drop("total_value_dec"),
       Some(trendSql("day", "1 day")), headline = false),
     Query("q111_trend_outliers",

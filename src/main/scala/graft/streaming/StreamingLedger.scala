@@ -163,17 +163,15 @@ object StreamingLedger {
       }
       .start()
 
-  /** One micro-batch of the trend-report sink: merge `batch` into the
-    * report at `path` via [[graft.ops.Movement.mergeTrend]] unless this
+  /** One micro-batch of the daily trend-report sink: merge `batch` into
+    * the report at `path` via [[graft.ops.Movement.mergeTrend]] unless this
     * batchId was already merged. Exactly-once without a sidecar: the
     * report carries a `_merged_through` batch-id column written
     * ATOMICALLY with the data (same parquet swap), so a replayed
     * micro-batch — failure between sink commit and offset commit — sees
     * its own id and skips; there is no window where data and progress
     * marker disagree. Returns whether a merge happened. */
-  def mergeBatchInto(
-      batch: DataFrame, batchId: Long, path: String,
-      unit: String = "day", step: String = "1 day"): Boolean = {
+  def mergeBatchInto(batch: DataFrame, batchId: Long, path: String): Boolean = {
     val spark = batch.sparkSession
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
@@ -185,8 +183,8 @@ object StreamingLedger {
     // Baseline (-1 = nothing merged) when the stored report is empty
     // (foreachBatch does fire zero-row first batches — max() is NULL) or
     // was seeded by the BATCH pipeline, which writes no `_merged_through`
-    // column: a batch-written report is an un-merged baseline, not a
-    // poison pill (round-6 advice).
+    // column: a batch-written report is an un-merged baseline that every
+    // batch id merges into, never a report that refuses all merges.
     val last = stored0
       .filter(_.columns.contains("_merged_through"))
       .map { df =>
@@ -195,27 +193,19 @@ object StreamingLedger {
       }
       .getOrElse(-1L)
     if (batchId <= last) return false
-    val stored = stored0
-      .map { df =>
-        // carry the exact decimal twin when the stored report has one
-        // (engine-written reports do) — mergeTrend prefers it, keeping
-        // the stream's accumulated value exact at any magnitude
-        val cols = Seq(col("bucket"), col("n_events"), col("total_value")) ++
-          (if (df.columns.contains("total_value_dec"))
-            Seq(col("total_value_dec")) else Nil)
-        df.select(cols: _*)
-      }
-      .getOrElse {
-        import org.apache.spark.sql.types._
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(
-            StructField("bucket", TimestampType),
-            StructField("n_events", LongType),
-            StructField("total_value", DoubleType))))
-      }
+    // mergeTrend reads the report's own columns, its exact decimal twin
+    // when it has one, and ignores `_merged_through`
+    val stored = stored0.getOrElse {
+      import org.apache.spark.sql.types._
+      spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        StructType(Seq(
+          StructField("bucket", TimestampType),
+          StructField("n_events", LongType),
+          StructField("total_value", DoubleType))))
+    }
     graft.sources.Sinks.overwriteInPlace(
-      graft.ops.Movement.mergeTrend(stored, batch, unit, step)
+      graft.ops.Movement.mergeTrend(stored, batch)
         .withColumn("_merged_through", lit(batchId)),
       path)
     true

@@ -101,7 +101,8 @@ class ChartsSpec extends SparkSpec {
   test("chartsFor renders the reference's four figures from written reports") {
     val dir = "/root/testdata/sf0.001"
     val reports = Map(
-      "monthly_trends" -> ops.Movement.trend(spark, dir, "month", "1 month"),
+      "monthly_trends" ->
+        ops.Movement.rollUp(ops.Movement.trend(spark, dir), "month"),
       "abc_analysis" -> ops.Financial.abcAnalysis(spark, dir),
       "warehouse_io_summary" -> ops.Warehouse.ioPivot(spark, dir),
       "stock_value_report" -> ops.Financial.stockValue(spark, dir))

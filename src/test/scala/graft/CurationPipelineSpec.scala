@@ -48,6 +48,26 @@ class CurationPipelineSpec extends SparkSpec {
     }
   }
 
+  test("manifest stage counts: per-source cap sums with one source over the cap and one under") {
+    // docs 40-44 form source "small" (under SOURCE_CAP), the rest "big"
+    val docs = corpus().as[Doc].collect().toSeq.map(d =>
+      d.copy(source = if (d.doc_id >= 40L && d.doc_id < 45L) "small" else "big"))
+    val dir = fixtureDir("documents" -> docs.toDF)
+    val out = Files.createTempDirectory("graft-curation").toString
+    val manifest = CurationPipeline.run(spark, dir, out, nShards = 4)
+      .collect().head
+    val verdict = ops.TextPipeline.curationVerdict(spark, dir)
+    try {
+      val perSource = verdict.groupBy("source").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(perSource("big") > ops.Sampling.SOURCE_CAP, perSource)
+      assert(perSource("small") < ops.Sampling.SOURCE_CAP, perSource)
+      assert(manifest.getAs[Long]("n_curated") == verdict.count())
+      assert(manifest.getAs[Long]("n_capped") ==
+        ops.Sampling.capFilter(verdict, $"n_tokens").count())
+    } finally Caches.release(ops.TextPipeline.dedupBaseTag(dir))
+  }
+
   test("a curation run resolves documents once: one schema inference") {
     val dir = fixtureDir("documents" -> corpus())
     val out = Files.createTempDirectory("graft-curation").toString

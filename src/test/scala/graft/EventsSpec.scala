@@ -289,8 +289,8 @@ class EventsSpec extends SparkSpec {
         "purchase", 200.0))
     val dir = fixtureDir("events" -> evs.toDF)
     val cp = "2024-01-04 00:00:00"
-    val stored = Movement.trendUntil(spark, dir, "day", "1 day", cp)
-    val merged = Movement.trendDelta(spark, dir, "day", "1 day", cp, stored)
+    val stored = Movement.trendUntil(spark, dir, cp)
+    val merged = Movement.trendDelta(spark, dir, cp, stored)
     val inc = Movement.outliersOf(merged).collect().map(_.toSeq)
     val full = Movement.trendOutliers(spark, dir).collect().map(_.toSeq)
     assert(inc.nonEmpty && inc.toSeq == full.toSeq)

@@ -108,6 +108,17 @@ class PipelineSpec extends SparkSpec {
       s"planted=$expected quarantined=$quarantined")
   }
 
+  /** Each calendar report and both peaks as written at `out` ≡ the
+    * report's constructor over `data`, the full recompute. */
+  private def assertCalendarsRecomputed(out: String, data: String): Unit =
+    Seq("daily_trends", "weekly_trends", "monthly_trends",
+        "peak_day_of_week", "peak_month").foreach { name =>
+      val full = Pipeline.REPORTS.toMap.apply(name)(spark, data)
+      val written = spark.read.parquet(s"$out/$name")
+        .selectExpr(full.columns.toIndexedSeq: _*)
+      assert(rowBag(written) == rowBag(full), s"$name: != full recompute")
+    }
+
   test("incremental delta: stored trends merge new buckets, ≡ full recompute") {
     import org.apache.spark.sql.functions.{lit, to_timestamp}
     import spark.implicits._
@@ -125,26 +136,44 @@ class PipelineSpec extends SparkSpec {
     // delta path (merge stored + post-checkpoint buckets in place)
     val counts2 = Pipeline.run(spark, src, out, incrementalSince = Some(cut))
     assert(counts2.nonEmpty)
-    Pipeline.TREND_REPORTS.foreach { case (name, (unit, step)) =>
-      val delta = spark.read.parquet(s"$out/$name")
-        .select("bucket", "n_events", "total_value").collect()
-        .map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2))).toSet
-      val full = graft.ops.Movement.trend(spark, src, unit, step)
-        .select("bucket", "n_events", "total_value").collect()
-        .map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(delta == full, s"$name: delta != full recompute")
-    }
-    // peak reports were derived from the merged trends (no fact rescan)
-    // and must still equal their full recompute
-    val peakDelta = spark.read.parquet(s"$out/peak_day_of_week").collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toSet
-    val peakFull = graft.ops.Movement.peakDayOfWeek(spark, src).collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toSet
-    assert(peakDelta == peakFull, "peak_day_of_week: derived != recompute")
+    // the daily calendar merged its new days; the weekly and monthly
+    // calendars and both peaks were derived from it (no fact rescan)
+    assertCalendarsRecomputed(out, src)
     // the summary row claims exactly what happened
     val loadTypes = spark.read.parquet(s"$out/analytics_daily_summary")
       .select("load_type").collect().map(_.getString(0)).toSet
     assert(loadTypes == Set("full", "incremental_delta"))
+  }
+
+  test("incremental run recomputes weekly and monthly from the merged daily calendar, not their stored reports") {
+    import org.apache.spark.sql.functions.{col, lit, min, to_timestamp, when}
+    val cut = "2024-01-15 00:00:00"
+    val dirA = fixtureDir(
+      "lineitem" -> Tables(spark, src, "lineitem"),
+      "events" -> Tables(spark, src, "events")
+        .filter(col("ts") <= to_timestamp(lit(cut))))
+    val out = java.nio.file.Files.createTempDirectory("graft-tamper").toString
+    Pipeline.run(spark, dirA, out)
+    // a stored weekly and monthly report whose first bucket (before the
+    // checkpoint) no longer matches the daily calendar it rolls up
+    Seq("weekly_trends", "monthly_trends").foreach { name =>
+      val stored = spark.read.parquet(s"$out/$name")
+      val first = stored.agg(min(col("bucket"))).head().getTimestamp(0)
+      assert(!first.after(java.sql.Timestamp.valueOf(cut)), name)
+      val tampered = java.nio.file.Files.createTempDirectory("graft-tamper-r")
+        .resolve(name).toString
+      stored.withColumn("n_events", when(col("bucket") === lit(first),
+          col("n_events") + 1000L).otherwise(col("n_events")))
+        .write.parquet(tampered)
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(s"$out/$name"))
+      java.nio.file.Files.move(java.nio.file.Paths.get(tampered),
+        java.nio.file.Paths.get(s"$out/$name"))
+      assert(rowBag(spark.read.parquet(s"$out/$name")) != rowBag(
+        Pipeline.REPORTS.toMap.apply(name)(spark, dirA)), name)
+    }
+    Pipeline.run(spark, src, out, incrementalSince = Some(cut))
+    assertCalendarsRecomputed(out, src)
   }
 
   test("incremental delta over a foreign trend report without total_value_dec ≡ full recompute") {
@@ -171,7 +200,7 @@ class PipelineSpec extends SparkSpec {
     Pipeline.run(spark, src, out, incrementalSince = Some(cut))
     val cols = Seq("bucket", "n_events", "total_value")
     val delta = spark.read.parquet(s"$out/daily_trends").select(cols.map(col): _*)
-    val full = graft.ops.Movement.trend(spark, src, "day", "1 day")
+    val full = graft.ops.Movement.trend(spark, src)
       .select(cols.map(col): _*)
     assert(rowBag(delta) == rowBag(full), "daily_trends: delta != full recompute")
   }
@@ -251,13 +280,16 @@ class PipelineSpec extends SparkSpec {
     val order = Pipeline.REPORTS.map(_._1)
     Pipeline.DERIVED.foreach { case (name, (source, _)) =>
       // over a copy of the stale output, swapping the rewritten `source`
-      // in stalls until the report after `name` in REPORTS starts
-      // writing: the stall holds one pool thread, so every report queued
-      // ahead of that one, including a `name` that did not wait for its
-      // source, runs against the stale `source` (or, once the swap has
-      // moved it aside, against none)
+      // in stalls until the first report after `name` in REPORTS that
+      // does not derive from `source` starts writing: the stall holds one
+      // pool thread, so every report queued ahead of that one, including
+      // a `name` that did not wait for its source, runs against the stale
+      // `source` (or, once the swap has moved it aside, against none)
       val out = copyTree(staleOut)
-      StallFs.arm(source, order(order.indexOf(name) + 1))
+      // (the releaser must not itself wait for the stalled source)
+      val releaser = order.drop(order.indexOf(name) + 1)
+        .find(r => !Pipeline.DERIVED.get(r).exists(_._1 == source)).get
+      StallFs.arm(source, releaser)
       Pipeline.run(spark, src, s"stallfs://$out")
       order.foreach { report =>
         val got = spark.read.parquet(s"$out/$report")
@@ -280,8 +312,8 @@ class PipelineSpec extends SparkSpec {
       Pipeline.run(spark, src, out, dqFanout = true)))
     assert(full == 2, full)
     // an incremental run over an output written from the ledger as of the
-    // checkpoint: the three stored trend reports take the delta path and
-    // are read without inference. Only the resolutions are counted here;
+    // checkpoint: the stored daily report takes the delta path and is
+    // read without inference. Only the resolutions are counted here;
     // the merged values are pinned by the incremental delta spec.
     val cut = "2024-01-15 00:00:00"
     val asOfCut = fixtureDir(
@@ -323,10 +355,10 @@ class PipelineSpec extends SparkSpec {
     Pipeline.requireSourcesFirst(Pipeline.REPORTS.map(_._1),
       Pipeline.DERIVED.map { case (name, (source, _)) => name -> source })
     val before = intercept[IllegalArgumentException](
-      Pipeline.requireSourcesFirst(Seq("peak_month", "monthly_trends"),
-        Map("peak_month" -> "monthly_trends")))
+      Pipeline.requireSourcesFirst(Seq("peak_month", "daily_trends"),
+        Map("peak_month" -> "daily_trends")))
     assert(before.getMessage.contains(
-      "derived report peak_month must come after its source monthly_trends"),
+      "derived report peak_month must come after its source daily_trends"),
       before.getMessage)
     val missing = intercept[IllegalArgumentException](
       Pipeline.requireSourcesFirst(Seq("financial_summary"),

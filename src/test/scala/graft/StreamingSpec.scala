@@ -279,7 +279,7 @@ class StreamingSpec extends SparkSpec {
         .select($"bucket", $"n_events", $"total_value").collect()
         .map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2))).toSet
       val expected = graft.ops.Movement.trendOfEvents(
-        (batch1 ++ batch2).toDF().select($"ts", $"value"), "day", "1 day")
+        (batch1 ++ batch2).toDF().select($"ts", $"value"))
         .select($"bucket", $"n_events", $"total_value").collect()
         .map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2))).toSet
       assert(stored == expected) // incl. gap-filled Jan 2/3 zero rows
@@ -318,7 +318,7 @@ class StreamingSpec extends SparkSpec {
     val seededPath = dir + "/seeded_report"
     graft.ops.Movement.trendOfEvents(
       Seq(Ev(2, ts("2024-01-01 09:00:00"), 1, "purchase", 5.0, "{}"))
-        .toDF().select($"ts", $"value"), "day", "1 day")
+        .toDF().select($"ts", $"value"))
       .write.parquet(seededPath)
     val b2 = Seq(Ev(3, ts("2024-01-01 10:00:00"), 1, "purchase", 7.0, "{}"))
       .toDF().select($"ts", $"value")
@@ -343,8 +343,7 @@ class StreamingSpec extends SparkSpec {
     val newEvents = Seq(
       Ev(1, ts("2024-01-01 10:00:00"), 1, "purchase", 1.0, "{}")
     ).toDF().select($"ts", $"value")
-    val merged = graft.ops.Movement
-      .mergeTrend(stored, newEvents, "day", "1 day")
+    val merged = graft.ops.Movement.mergeTrend(stored, newEvents)
     val r = merged.select($"total_value_dec").head.getDecimal(0)
     assert(r.compareTo(new java.math.BigDecimal("10000000001.000001")) == 0,
       s"expected exact 10000000001.000001, got $r")
